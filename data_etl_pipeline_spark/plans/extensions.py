@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from data_etl_pipeline_spark.functions import psl
 from data_etl_pipeline_spark.operators import multimodal
 from data_etl_pipeline_spark.plans.registry import query
-from data_etl_pipeline_spark.tables import load
+from data_etl_pipeline_spark.tables import load, one_slice_df
 
 
 def _write_single_parquet(df: DataFrame, table_dir: str, name: str) -> None:
@@ -1448,10 +1448,8 @@ def delta_interop_checkpoint_read(spark: SparkSession, sf_dir: str) -> DataFrame
     cp_rows = [({"minReaderVersion": 1}, None, None), (None, (meta["id"], meta["schemaString"], []), None)] + [
         (None, None, (f"s{v}.parquet", {}, True)) for v in range(11)
     ]
-    from data_etl_pipeline_spark.sources.delta_export import _one_slice_df
-
     tmp = os.path.join(tbl, "_cptmp")
-    _one_slice_df(spark, cp_rows, cp_schema).write.mode("overwrite").parquet(tmp)
+    one_slice_df(spark, cp_rows, cp_schema).write.mode("overwrite").parquet(tmp)
     part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
     os.rename(os.path.join(tmp, part), os.path.join(log_dir, f"{10:020d}.checkpoint.parquet"))
     shutil.rmtree(tmp)
@@ -1935,10 +1933,8 @@ def delta_interop_v2_checkpoint_read(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
     def one_parquet(rows, schema, dest: str) -> None:
-        from data_etl_pipeline_spark.sources.delta_export import _one_slice_df
-
         tmp = os.path.join(tbl, "_v2tmp")
-        _one_slice_df(spark, rows, schema).write.mode(
+        one_slice_df(spark, rows, schema).write.mode(
             "overwrite"
         ).parquet(tmp)
         part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))

@@ -23,6 +23,7 @@ downstream reader.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -31,6 +32,13 @@ from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame
 
+from data_etl_pipeline_spark.sources.footerprune import (
+    file_uri_path,
+    footer_stats,
+    hive_partition_values,
+)
+from data_etl_pipeline_spark.tables import one_slice_df
+
 
 class DeltaExportError(RuntimeError):
     pass
@@ -38,69 +46,33 @@ class DeltaExportError(RuntimeError):
 
 def _file_stats(full: str) -> str | None:
     """Delta-style per-file stats JSON from the parquet FOOTER (no data
-    read): numRecords plus min/max/nullCount for top-level int / float /
-    bool / string columns, aggregated across row groups. Columns whose
-    footer lacks usable bounds (nested, binary, temporal, NaN-poisoned)
-    are simply omitted — readers must treat absence as 'cannot skip'.
+    read, via ``footerprune.footer_stats``): numRecords plus
+    min/max/nullCount for top-level int / float / string columns.
+    Columns whose footer lacks usable bounds (nested, binary, temporal,
+    incomplete across row groups) are simply omitted — readers must treat
+    absence as 'cannot skip'.
     """
     try:
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(full).metadata
+        n_rows, cols = footer_stats(full)
     except Exception:
         return None
     mins: dict = {}
     maxs: dict = {}
     nulls: dict = {}
-    # Bounds (and null counts) must cover EVERY row group or be omitted:
-    # partial stats are TIGHTER than the file's true range, which makes
-    # data skipping silently drop files that contain matching rows. Once a
-    # column lands in a dropped set it never re-enters.
-    no_bounds: set = set()
-    no_nulls: set = set()
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            if "." in name:
+    for name, (mn, mx, nc) in cols.items():
+        if nc is not None:
+            nulls[name] = nc
+        if isinstance(mn, bytes):
+            try:
+                mn, mx = mn.decode(), mx.decode()
+            except UnicodeDecodeError:
                 continue
-            st = col.statistics
-            if st is None:
-                no_bounds.add(name)
-                no_nulls.add(name)
-                continue
-            if st.null_count is not None:
-                nulls[name] = nulls.get(name, 0) + st.null_count
-            else:
-                no_nulls.add(name)
-            if not st.has_min_max:
-                no_bounds.add(name)
-                continue
-            mn, mx = st.min, st.max
-            if isinstance(mn, bytes):
-                try:
-                    mn, mx = mn.decode(), mx.decode()
-                except UnicodeDecodeError:
-                    no_bounds.add(name)
-                    continue
-            if not isinstance(mn, (int, float, str)) or isinstance(mn, bool):
-                no_bounds.add(name)
-                continue
-            if name in mins:
-                mins[name] = min(mins[name], mn)
-                maxs[name] = max(maxs[name], mx)
-            elif rg == 0:
-                mins[name] = mn
-                maxs[name] = mx
-    for name in no_bounds:
-        mins.pop(name, None)
-        maxs.pop(name, None)
-    for name in no_nulls:
-        nulls.pop(name, None)
+        if isinstance(mn, (int, float, str)) and not isinstance(mn, bool):
+            mins[name] = mn
+            maxs[name] = mx
     return json.dumps(
         {
-            "numRecords": md.num_rows,
+            "numRecords": n_rows,
             "minValues": mins,
             "maxValues": maxs,
             "nullCount": nulls,
@@ -111,16 +83,11 @@ def _file_stats(full: str) -> str | None:
 def _add_action(dest: str, full: str, data_change: bool) -> tuple[dict, int]:
     """Build one protocol add action (path, Hive partition values, size,
     mtime, footer stats) for an on-disk data file; returns (action, size)."""
-    rel = os.path.relpath(full, dest)
-    pv = {}
-    for seg in rel.split(os.sep)[:-1]:
-        if "=" in seg:
-            k, v = seg.split("=", 1)
-            pv[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
+    rel = os.path.relpath(full, dest).replace(os.sep, "/")
     st = os.stat(full)
     add = {
-        "path": quote(rel.replace(os.sep, "/")),
-        "partitionValues": pv,
+        "path": quote(rel),
+        "partitionValues": hive_partition_values(rel),
         "size": st.st_size,
         "modificationTime": int(st.st_mtime * 1000),
         "dataChange": data_change,
@@ -129,15 +96,6 @@ def _add_action(dest: str, full: str, data_change: bool) -> tuple[dict, int]:
     if stats is not None:
         add["stats"] = stats
     return {"add": add}, st.st_size
-
-
-def _one_slice_df(spark, rows, schema):
-    """Single-partition DataFrame from a driver-built metadata row list
-    (bounded by FILE COUNT, never rows) — see tables.one_slice_df for why
-    createDataFrame + coalesce(1) costs ~5 s per tiny write at 32 cores."""
-    from data_etl_pipeline_spark.tables import one_slice_df
-
-    return one_slice_df(spark, rows, schema)
 
 
 def _data_files_on_disk(dest: str) -> set[str]:
@@ -232,17 +190,12 @@ def _write_cdc(dest: str, change_df, part_cols: list[str]) -> list[dict]:
     writer.parquet(cd)
     actions: list[dict] = []
     for rel in sorted(_cdc_files_on_disk(dest) - known):
-        pv = {}
-        for seg in rel.split("/")[:-1]:
-            if "=" in seg:
-                k, v = seg.split("=", 1)
-                pv[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
         size = os.path.getsize(os.path.join(cd, rel))
         actions.append(
             {
                 "cdc": {
                     "path": quote("_change_data/" + rel),
-                    "partitionValues": pv,
+                    "partitionValues": hive_partition_values(rel),
                     "size": size,
                     "dataChange": False,
                 }
@@ -757,7 +710,7 @@ def checkpoint_export(spark, dest: str, trim: bool = False) -> int:
         )
     log_dir = os.path.join(dest, "_delta_log")
     tmp = os.path.join(dest, "_cptmp")
-    _one_slice_df(spark, rows, cp_schema).write.mode("overwrite").parquet(tmp)
+    one_slice_df(spark, rows, cp_schema).write.mode("overwrite").parquet(tmp)
     part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
     os.rename(os.path.join(tmp, part), os.path.join(log_dir, f"{head:020d}.checkpoint.parquet"))
     import shutil
@@ -772,6 +725,52 @@ def checkpoint_export(spark, dest: str, trim: bool = False) -> int:
         for v in versions[:-1]:
             os.remove(os.path.join(log_dir, f"{v:020d}.json"))
     return head
+
+
+def _partition_groups(
+    files: dict[str, dict], part_cols: list[str]
+) -> dict[tuple, list[str]]:
+    """Live data files (decoded relative paths) keyed by their
+    partition-value tuple."""
+    groups: dict[tuple, list[str]] = {}
+    for p, a in files.items():
+        pv = a.get("partitionValues") or {}
+        groups.setdefault(tuple(pv.get(c) for c in part_cols), []).append(unquote(p))
+    return groups
+
+
+def _scan_group(
+    spark, dest: str, schema, part_cols: list[str], key: tuple, rels: list[str]
+) -> DataFrame:
+    """One partition group's files in the table schema: partition columns
+    re-attached as typed literals from ``key``, the file URI as ``__fp``."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    df = spark.read.schema(
+        T.StructType([f for f in schema.fields if f.name not in part_cols])
+    ).parquet(*[os.path.join(dest, r) for r in rels]).select(
+        "*", F.col("_metadata.file_path").alias("__fp")
+    )
+    types_map = {f.name: f.dataType for f in schema.fields}
+    for c, raw in zip(part_cols, key):
+        df = df.withColumn(c, F.lit(raw).cast(types_map[c]))
+    return df
+
+
+def _affected_files(
+    scan, dest: str, groups: dict[tuple, list[str]], match
+) -> dict[tuple, list[str]]:
+    """Per partition group, the live files (sorted relative paths) holding
+    at least one row ``match`` keeps: one pruned scan per group whose
+    collect is bounded by FILE count, never rows."""
+    affected: dict[tuple, list[str]] = {}
+    for key, rels in sorted(groups.items(), key=lambda kv: repr(kv[0])):
+        hit = match(scan(key, rels)).select("__fp").distinct().collect()
+        if hit:
+            by_abs = {os.path.abspath(os.path.join(dest, r)): r for r in rels}
+            affected[key] = sorted(by_abs[file_uri_path(r["__fp"])] for r in hit)
+    return affected
 
 
 def export_delta_delete(spark, dest: str, predicate: str) -> dict:
@@ -795,8 +794,6 @@ def export_delta_delete(spark, dest: str, predicate: str) -> dict:
     rows); the rewrite reads only affected files and writes survivors
     back into the same Hive partition directory.
     """
-    import re as _re
-
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -804,48 +801,17 @@ def export_delta_delete(spark, dest: str, predicate: str) -> dict:
     meta, versions, files, _txns = _read_own_log(dest)
     part_cols = list(meta.get("partitionColumns") or [])
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    types_map = {f.name: f.dataType for f in schema.fields}
     data_fields = [f for f in schema.fields if f.name not in part_cols]
-    file_schema = T.StructType(data_fields)
     pred = F.expr(predicate)
-
-    def canon_fs_path(file_uri: str) -> str:
-        # same normalization as the reader's DV anti-join: strip the
-        # file: scheme, protect literal '+', percent-decode
-        return unquote(_re.sub("^file:/*", "/", file_uri).replace("+", "%2B"))
-
-    groups: dict[tuple, list[str]] = {}
-    for p, a in files.items():
-        pv = a.get("partitionValues") or {}
-        groups.setdefault(tuple(pv.get(c) for c in part_cols), []).append(unquote(p))
-
-    def scan_group(key: tuple, rels: list[str]):
-        df = spark.read.schema(file_schema).parquet(
-            *[os.path.join(dest, r) for r in rels]
-        ).select("*", F.col("_metadata.file_path").alias("__fp"))
-        for c, raw in zip(part_cols, key):
-            df = df.withColumn(c, F.lit(raw).cast(types_map[c]))
-        return df
+    scan_group = functools.partial(_scan_group, spark, dest, schema, part_cols)
 
     # 1) discovery: which live files hold at least one matching row
-    affected: dict[tuple, list[str]] = {}
-    n_affected = 0
-    for key, rels in sorted(groups.items(), key=lambda kv: repr(kv[0])):
-        hit = (
-            scan_group(key, rels)
-            .where(pred)
-            .select("__fp")
-            .distinct()
-            .collect()
-        )
-        if not hit:
-            continue
-        by_abs = {os.path.abspath(os.path.join(dest, r)): r for r in rels}
-        aff = sorted(by_abs[canon_fs_path(r["__fp"])] for r in hit)
-        affected[key] = aff
-        n_affected += len(aff)
+    affected = _affected_files(
+        scan_group, dest, _partition_groups(files, part_cols), lambda g: g.where(pred)
+    )
     if not affected:
         return {"version": None, "removed_files": 0, "added_files": 0}
+    n_affected = sum(len(aff) for aff in affected.values())
 
     # 2) rewrite survivors per partition group, into the group's own dir;
     # 2b) change data feed: the deleted rows (matched rows live only in
@@ -869,7 +835,6 @@ def export_delta_delete(spark, dest: str, predicate: str) -> dict:
 
     cdc_actions: list[dict] = []
     if _cdf_enabled(meta):
-        import functools
         from concurrent.futures import ThreadPoolExecutor
 
         parts = [
@@ -938,8 +903,6 @@ def export_delta_merge(spark, df: DataFrame, dest: str, keys: list[str]) -> dict
     FILE count; the rewrite reads only affected files; the insert is one
     distributed partitioned write of the source.
     """
-    import re as _re
-
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -953,28 +916,19 @@ def export_delta_merge(spark, df: DataFrame, dest: str, keys: list[str]) -> dict
     for k in keys:
         if k not in df.columns:
             raise DeltaExportError(f"merge key {k!r} is not a source column")
+    # the change feed tags source rows with an internal `__m` column; a
+    # source that already has one would make the tag ambiguous after
+    # survivor files were written — refuse before writing a byte
+    if _cdf_enabled(meta) and "__m" in df.columns:
+        raise DeltaExportError(
+            "source column '__m' collides with the merge's internal change-"
+            "feed tag name; rename it before merging"
+        )
     _validate_constraints(df, _constraints(meta))
     part_cols = list(meta.get("partitionColumns") or [])
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    types_map = {f.name: f.dataType for f in schema.fields}
     data_fields = [f for f in schema.fields if f.name not in part_cols]
-    file_schema = T.StructType(data_fields)
-
-    def canon_fs_path(file_uri: str) -> str:
-        return unquote(_re.sub("^file:/*", "/", file_uri).replace("+", "%2B"))
-
-    groups: dict[tuple, list[str]] = {}
-    for p, a in files.items():
-        pv = a.get("partitionValues") or {}
-        groups.setdefault(tuple(pv.get(c) for c in part_cols), []).append(unquote(p))
-
-    def scan_group(key: tuple, rels: list[str]):
-        g = spark.read.schema(file_schema).parquet(
-            *[os.path.join(dest, r) for r in rels]
-        ).select("*", F.col("_metadata.file_path").alias("__fp"))
-        for c, raw in zip(part_cols, key):
-            g = g.withColumn(c, F.lit(raw).cast(types_map[c]))
-        return g
+    scan_group = functools.partial(_scan_group, spark, dest, schema, part_cols)
 
     # The source participates in discovery (its keys), the survivor
     #    anti-joins, and the final insert. The KEY SET is pinned with an
@@ -1014,22 +968,13 @@ def export_delta_merge(spark, df: DataFrame, dest: str, keys: list[str]) -> dict
     src_keys = src_keys.drop("__g")
     # 1) discovery: live files holding at least one matched key (semi-join
     #    against the source keys; collect bounded by file count)
-    affected: dict[tuple, list[str]] = {}
-    n_affected = 0
-    for key, rels in sorted(groups.items(), key=lambda kv: repr(kv[0])):
-        hit = (
-            scan_group(key, rels)
-            .join(src_keys, on=keys, how="left_semi")
-            .select("__fp")
-            .distinct()
-            .collect()
-        )
-        if not hit:
-            continue
-        by_abs = {os.path.abspath(os.path.join(dest, r)): r for r in rels}
-        aff = sorted(by_abs[canon_fs_path(r["__fp"])] for r in hit)
-        affected[key] = aff
-        n_affected += len(aff)
+    affected = _affected_files(
+        scan_group,
+        dest,
+        _partition_groups(files, part_cols),
+        lambda g: g.join(src_keys, on=keys, how="left_semi"),
+    )
+    n_affected = sum(len(aff) for aff in affected.values())
 
     known = _data_files_on_disk(dest)
     # 2) rewrite survivors (rows whose key is NOT in the source) of each
@@ -1058,8 +1003,6 @@ def export_delta_merge(spark, df: DataFrame, dest: str, keys: list[str]) -> dict
     cdc_actions: list[dict] = []
     changes = None
     if _cdf_enabled(meta):
-        import functools
-
         cols = [f.name for f in schema.fields]
         pre_parts = [
             scan_group(key, aff).join(src_keys, on=keys, how="left_semi").select(*cols)
@@ -1271,10 +1214,7 @@ def export_delta_optimize(spark, dest: str) -> dict:
     data_fields = [f for f in schema.fields if f.name not in part_cols]
     file_schema = T.StructType(data_fields)
 
-    groups: dict[tuple, list[str]] = {}
-    for p, a in files.items():
-        pv = a.get("partitionValues") or {}
-        groups.setdefault(tuple(pv.get(c) for c in part_cols), []).append(unquote(p))
+    groups = _partition_groups(files, part_cols)
     todo = {k: sorted(v) for k, v in groups.items() if len(v) > 1}
     if not todo:
         return {"version": None, "compacted_files": 0, "new_files": 0}
@@ -1396,10 +1336,7 @@ def export_delta_zorder(
     data_fields = [f for f in schema.fields if f.name not in part_cols]
     file_schema = T.StructType(data_fields)
 
-    groups: dict[tuple, list[str]] = {}
-    for p, a in files.items():
-        pv = a.get("partitionValues") or {}
-        groups.setdefault(tuple(pv.get(c) for c in part_cols), []).append(unquote(p))
+    groups = _partition_groups(files, part_cols)
 
     known = _data_files_on_disk(dest)
     removed: list[str] = []
@@ -1547,7 +1484,7 @@ def checkpoint_export_v2(
         ]
         name = f"{uuid_str}-{k:03d}.parquet"
         tmp = os.path.join(dest, f"_sctmp{k}")
-        _one_slice_df(spark, rows, sc_schema).write.mode(
+        one_slice_df(spark, rows, sc_schema).write.mode(
             "overwrite"
         ).parquet(tmp)
         pf = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
@@ -1768,7 +1705,7 @@ def checkpoint_export_v2_incremental(spark, dest: str) -> dict:
         ]
         name = f"{uuid_str}-{k:03d}.parquet"
         tmp = os.path.join(dest, f"_sctmp{k}")
-        _one_slice_df(spark, rows, sc_schema).write.mode(
+        one_slice_df(spark, rows, sc_schema).write.mode(
             "overwrite"
         ).parquet(tmp)
         pf = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))

@@ -56,10 +56,17 @@ from __future__ import annotations
 import json
 import os
 import re
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from data_etl_pipeline_spark.sources.footerprune import (
+    file_uri_path,
+    file_uri_path_col,
+    hive_partition_values,
+)
 
 
 class DeltaProtocolError(RuntimeError):
@@ -613,8 +620,6 @@ class DeltaLogReader:
     def live_files(self, version: int | None = None, filters=None) -> list[str]:
         """Decoded relative paths of the data files a (filtered) read
         would scan — the observable surface of data skipping."""
-        from urllib.parse import unquote
-
         meta, adds = self._replay(version)
         _schema, part_cols, phys, *_rest = self._schema_plan(meta)
         if filters:
@@ -678,8 +683,6 @@ class DeltaLogReader:
         # group files by their partition assignment; each group reads with
         # the file schema and re-attaches the partition literals, cast
         # through the table schema (Delta stores them only in the log)
-        from urllib.parse import unquote
-
         groups: dict[tuple, list[str]] = {}  # plain files, batched per partition
         dv_reads: list[tuple[tuple, str, list[int]]] = []  # (key, path, indexes)
         for add in adds:
@@ -873,8 +876,6 @@ class DeltaLogReader:
                     list(schema.fields) + [T.StructField("_commit_version", T.LongType())]
                 ),
             )
-        from urllib.parse import unquote
-
         paths: list[str] = []
         map_rows: list[tuple] = []
         for v, adds in batches:
@@ -885,17 +886,10 @@ class DeltaLogReader:
                 map_rows.append(
                     (os.path.abspath(full), v, *[pv.get(phys[c]) for c in part_cols])
                 )
-        canon = F.url_decode(
-            F.regexp_replace(
-                F.regexp_replace(F.col("__fp"), "^file:/*", "/"), r"\+", "%2B"
-            )
-        )
         df = (
             self._scan_spark.read.schema(file_schema)
             .parquet(*paths)
-            .select("*", F.col("_metadata.file_path").alias("__fp"))
-            .withColumn("__cf", canon)
-            .drop("__fp")
+            .select("*", file_uri_path_col(F.col("_metadata.file_path")).alias("__cf"))
         )
         map_schema = T.StructType(
             [
@@ -938,8 +932,6 @@ class DeltaLogReader:
         a broadcast keyed on the canonical decoded path, exactly like
         ``tail``.
         """
-        from urllib.parse import unquote
-
         commits, _cps = self._scan()
         if not commits:
             raise ValueError(f"no commit JSONs at {self.path}")
@@ -967,12 +959,9 @@ class DeltaLogReader:
             pv = action.get("partitionValues")
             if pv is None:
                 # removes may omit partitionValues; recover them from the
-                # Hive path segments (keyed by physical names, like the log)
-                pv = {}
-                for seg in unquote(action["path"]).split("/")[:-1]:
-                    if "=" in seg:
-                        k, val = seg.split("=", 1)
-                        pv[k] = None if val == "__HIVE_DEFAULT_PARTITION__" else val
+                # Hive path segments (keyed by physical names, like the
+                # log): URI-decode the log path, then Hive-unescape
+                pv = hive_partition_values(unquote(action["path"]))
             return tuple(pv.get(phys[c]) for c in part_cols)
 
         cdc_entries: list[tuple[str, int, tuple]] = []
@@ -1054,11 +1043,6 @@ class DeltaLogReader:
                 T.StructField("_commit_version", T.LongType()),
             ]
         )
-        canon = F.url_decode(
-            F.regexp_replace(
-                F.regexp_replace(F.col("__fp"), "^file:/*", "/"), r"\+", "%2B"
-            )
-        )
 
         def scan(entries: list[tuple[str, int, tuple]], ct: str | None) -> DataFrame:
             """One scan of a change kind; ``ct`` is the literal change
@@ -1075,9 +1059,7 @@ class DeltaLogReader:
             df = (
                 self._scan_spark.read.schema(fschema)
                 .parquet(*[e[0] for e in entries])
-                .select("*", F.col("_metadata.file_path").alias("__fp"))
-                .withColumn("__cf", canon)
-                .drop("__fp")
+                .select("*", file_uri_path_col(F.col("_metadata.file_path")).alias("__cf"))
             )
             map_schema = T.StructType(
                 [
@@ -1136,21 +1118,14 @@ class DeltaLogReader:
         side is already decoded (add.path is unquoted at join time).
         """
         spark = self._scan_spark
-        canon = F.url_decode(
-            F.regexp_replace(
-                F.regexp_replace(F.col("__fp"), "^file:/*", "/"), r"\+", "%2B"
-            )
-        )
         df = (
             spark.read.schema(file_schema)
             .parquet(*[p for _, p, _ in dv_reads])
             .select(
                 "*",
-                F.col("_metadata.file_path").alias("__fp"),
+                file_uri_path_col(F.col("_metadata.file_path")).alias("__cf"),
                 F.col("_metadata.row_index").alias("__ri"),
             )
-            .withColumn("__cf", canon)
-            .drop("__fp")
         )
         del_rows = [
             (os.path.abspath(p), int(i)) for _, p, idxs in dv_reads for i in idxs
@@ -1305,14 +1280,11 @@ def decode_inline_dv(encoded: str) -> list[int]:
 def dv_sidecar_path(table_path: str, dv: dict) -> str:
     """Absolute path of a file-based deletion vector's sidecar file."""
     import uuid as _uuid
-    from urllib.parse import unquote
 
     st = dv["storageType"]
     p = dv["pathOrInlineDv"]
     if st == "p":
-        if p.startswith("file:"):
-            p = unquote(re.sub("^file:/*", "/", p))
-        return p
+        return file_uri_path(p) if p.startswith("file:") else p
     if len(p) < 20:
         raise DeltaProtocolError(
             f"storageType 'u' pathOrInlineDv too short for a Z85 UUID: {p!r}"

@@ -1,27 +1,128 @@
-"""File-level min/max pruning over a RAW parquet directory.
+"""The on-disk parquet layout, read in ONE place for every table format.
 
-Plain-parquet data lakes (no Delta/Iceberg manifest, no Hive partition
-dirs) still carry per-row-group min/max statistics in every file footer.
-Spark's pushed filters use them ONLY inside files it has already
-scheduled — every file still becomes at least one task, gets opened, and
-has its footer parsed on an executor. For a selective predicate over a
-range-clustered layout, pruning at PLAN time from the footers cuts the
-task count and file opens to the matching files alone — the same
-skipping contract the VersionedTable manifest, the Delta stats, and the
-Iceberg manifests (sources/iceberg.py) provide, done with zero table
-format: the footer IS the metadata.
+``footer_stats`` is the only reader of parquet footer statistics in the
+engine: Delta export stats (``delta_export._file_stats``), Iceberg
+manifest bounds (``iceberg._file_stats``), the Iceberg delete-file row
+count, and the two raw-directory consumers below all call it and keep
+only their own encoding. The footer IS the metadata — but only when it
+is complete, so the reader applies one rule:
 
-Cost: one driver-side footer read per file, O(files) and bounded by the
-listing — at 100 TB with well-sized files (~1 GB) that is ~10^5 footer
-reads once per query plan, amortizable with any external file index.
-Row-group pushdown still applies INSIDE the selected files; this layer
-only decides which files are worth scheduling at all.
+    a top-level column keeps bounds (or a null count) only when EVERY
+    row group reports them usable; otherwise that part is dropped.
+
+Partial bounds are tighter than the file's true range, and every
+consumer prunes on them, so one stats-less row group must drop the
+file's bounds instead of being skipped. Two real writers produce such
+row groups for a long string (over ~4 KiB):
+
+* parquet-mr (Spark) writes no min/max for that row group at all;
+* Arrow writes the min but an EMPTY max, which pyarrow reports as
+  ``has_min_max=True, max=''``. A byte-array chunk with an empty max
+  therefore counts as lacking bounds — always safe, since it can only
+  keep a file that pruning would otherwise drop.
+
+``plan_parquet_files`` prunes a RAW parquet directory (no Delta/Iceberg
+manifest, no Hive partition dirs) at PLAN time from those bounds: Spark's
+pushed filters use footer stats only inside files it already scheduled,
+so every file would still become a task. ``agg_from_footers`` answers
+COUNT/MIN/MAX from footers alone. Cost: one driver-side footer read per
+file, O(files) and bounded by the listing.
+
+The same layout knowledge covers file paths: ``file_uri_path`` and its
+Column twin ``file_uri_path_col`` turn a ``file:`` URI (what
+``_metadata.file_path`` yields) into the decoded filesystem path every
+table format joins on, and ``hive_partition_values`` decodes the
+``col=value`` directory segments of a data-file path.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import re
+from urllib.parse import unquote
+
+_FILE_SCHEME = "^file:/*"
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+def footer_stats(path: str) -> tuple[int, dict[str, tuple]]:
+    """``(num_rows, {column: (min, max, null_count)})`` for every
+    top-level primitive column of one parquet file, from its footer
+    alone. ``min``/``max`` are None unless every row group reports
+    usable bounds; ``null_count`` is None unless every row group reports
+    one (see the module docstring). Values are pyarrow's logical-type
+    conversions (str for UTF-8, bytes for binary, datetime, ...)."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    paths = [md.schema.column(i).path for i in range(md.num_columns)]
+    top = {p: i for i, p in enumerate(paths) if "." not in p}
+    lo: dict = {}
+    hi: dict = {}
+    nulls = dict.fromkeys(top, 0)
+    no_bounds: set = set()
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+        for name, ci in top.items():
+            st = g.column(ci).statistics
+            if st is None or not st.has_null_count:
+                nulls[name] = None
+            elif nulls[name] is not None:
+                nulls[name] += st.null_count
+            if name in no_bounds:
+                continue
+            if (
+                st is None
+                or not st.has_min_max
+                or (isinstance(st.max, (bytes, str)) and not st.max)
+            ):
+                no_bounds.add(name)
+                lo.pop(name, None)
+                hi.pop(name, None)
+                continue
+            if name not in lo or st.min < lo[name]:
+                lo[name] = st.min
+            if name not in hi or st.max > hi[name]:
+                hi[name] = st.max
+    return md.num_rows, {n: (lo.get(n), hi.get(n), nulls[n]) for n in top}
+
+
+def file_uri_path(uri: str) -> str:
+    """Decoded filesystem path of a ``file:`` URI (``file:/p``,
+    ``file:///p``; percent-escapes decoded). The canonical file id every
+    path join uses on the driver side."""
+    return unquote(re.sub(_FILE_SCHEME, "/", uri))
+
+
+def file_uri_path_col(col):
+    """Column form of ``file_uri_path`` for ``_metadata.file_path``.
+    ``url_decode`` is form decoding, so a literal ``+`` is protected
+    first (it would otherwise become a space)."""
+    from pyspark.sql import functions as F
+
+    return F.url_decode(
+        F.regexp_replace(F.regexp_replace(col, _FILE_SCHEME, "/"), r"\+", "%2B")
+    )
+
+
+def hive_partition_values(rel_path: str) -> dict[str, str | None]:
+    """Partition values from the ``col=value`` directory segments of a
+    '/'-separated data-file path: each value is Hive-unescaped, and
+    ``__HIVE_DEFAULT_PARTITION__`` means NULL."""
+    pv: dict[str, str | None] = {}
+    for seg in rel_path.split("/")[:-1]:
+        if "=" in seg:
+            k, v = seg.split("=", 1)
+            pv[k] = None if v == _HIVE_NULL else unquote(v)
+    return pv
+
+
+def _parquet_files(data_dir: str) -> list[str]:
+    files = sorted(glob.glob(os.path.join(data_dir, "*.parquet")))
+    if not files:
+        raise FileNotFoundError(f"no parquet files under {data_dir}")
+    return files
 
 
 def plan_parquet_files(
@@ -31,30 +132,11 @@ def plan_parquet_files(
     [lo, hi], from footer statistics alone. Files with no usable stats
     for the column are KEPT (pruning must never drop unknowable files).
     Returns (selected_paths, total_file_count)."""
-    import pyarrow.parquet as pq
-
-    files = sorted(glob.glob(os.path.join(data_dir, "*.parquet")))
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {data_dir}")
+    files = _parquet_files(data_dir)
     selected = []
     for path in files:
-        md = pq.ParquetFile(path).metadata
-        mn = mx = None
-        known = True
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            col = next(
-                (g.column(c) for c in range(g.num_columns)
-                 if g.column(c).path_in_schema == column),
-                None,
-            )
-            st = col.statistics if col is not None else None
-            if st is None or not st.has_min_max:
-                known = False  # one stats-less row group poisons the file
-                break
-            mn = st.min if mn is None or st.min < mn else mn
-            mx = st.max if mx is None or st.max > mx else mx
-        if not known or mn is None or (mx >= lo and mn <= hi):
+        mn, mx, _ = footer_stats(path)[1].get(column, (None, None, None))
+        if mn is None or (mx >= lo and mn <= hi):
             selected.append(path)
     return selected, len(files)
 
@@ -68,49 +150,38 @@ def agg_from_footers(data_dir: str, column: str) -> dict:
     row-group headers (always exact), null counts and min/max from the
     column statistics. Cost is one footer read per file, O(files).
 
-    Exactness over silent wrongness: if ANY row group lacks statistics
-    for ``column`` (or pyarrow reports truncated/unsafe min-max, as it
-    can for long strings), the whole call raises — a footer-only answer
-    that might differ from the scan is never returned. COUNT(*) alone
-    never needs column stats; callers wanting just the row count pass
-    ``column=None``.
+    Exactness over silent wrongness: if any non-empty file lacks complete
+    statistics for ``column`` (``footer_stats`` drops them when a single
+    row group is stats-less or reports an empty string max), the whole
+    call raises — a footer-only answer that might differ from the scan
+    is never returned. COUNT(*) alone never needs column stats; callers
+    wanting just the row count pass ``column=None``.
 
     Returns {"n_rows", "n_values", "min", "max", "n_files"}
     (``n_values``/``min``/``max`` are None when ``column`` is None).
     """
-    import pyarrow.parquet as pq
-
-    files = sorted(glob.glob(os.path.join(data_dir, "*.parquet")))
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {data_dir}")
+    files = _parquet_files(data_dir)
     n_rows = 0
     n_nulls = 0
     mn = mx = None
     for path in files:
-        md = pq.ParquetFile(path).metadata
-        n_rows += md.num_rows
+        rows, cols = footer_stats(path)
+        n_rows += rows
         if column is None:
             continue
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            col = next(
-                (g.column(c) for c in range(g.num_columns)
-                 if g.column(c).path_in_schema == column),
-                None,
+        if column not in cols:
+            raise ValueError(f"{path}: column {column!r} not in parquet schema")
+        if rows == 0:
+            continue
+        f_mn, f_mx, f_nulls = cols[column]
+        if f_mn is None or f_nulls is None:
+            raise ValueError(
+                f"{path}: some row group lacks full statistics for "
+                f"{column!r} — footer-only aggregate would be a guess"
             )
-            if col is None:
-                raise ValueError(
-                    f"{path}: column {column!r} not in parquet schema"
-                )
-            st = col.statistics
-            if st is None or not st.has_min_max or st.null_count is None:
-                raise ValueError(
-                    f"{path}: row group {rg} lacks full statistics for "
-                    f"{column!r} — footer-only aggregate would be a guess"
-                )
-            n_nulls += st.null_count
-            mn = st.min if mn is None or st.min < mn else mn
-            mx = st.max if mx is None or st.max > mx else mx
+        n_nulls += f_nulls
+        mn = f_mn if mn is None or f_mn < mn else mn
+        mx = f_mx if mx is None or f_mx > mx else mx
     if column is None:
         return {"n_rows": n_rows, "n_values": None, "min": None,
                 "max": None, "n_files": len(files)}

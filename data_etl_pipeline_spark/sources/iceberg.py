@@ -133,6 +133,7 @@ from data_etl_pipeline_spark.sources.avro_ocf import (
     read_ocf_full,
     write_ocf,
 )
+from data_etl_pipeline_spark.sources.footerprune import file_uri_path_col, footer_stats
 
 
 class IcebergError(ValueError):
@@ -454,61 +455,42 @@ def _from_kv(v) -> dict[int, bytes]:
 
 def _file_stats(local_path: str, id_by_name: dict[str, int], ice_types: dict):
     """Per-file (rows, size, lower_bounds, upper_bounds) from the parquet
-    footer. ``id_by_name`` maps TOP-LEVEL PRIMITIVE column names to their
-    REAL schema field ids — positional 1..n stopped being correct the
-    moment nested schemas landed (nested fields consume ids in between,
-    so a primitive after a struct would otherwise record its bounds
-    under another field's id and corrupt pruning)."""
-    import pyarrow.parquet as pq
+    footer (``footerprune.footer_stats``: bounds only when every row
+    group has them). ``id_by_name`` maps TOP-LEVEL PRIMITIVE column names
+    to their REAL schema field ids — positional 1..n stopped being
+    correct the moment nested schemas landed (nested fields consume ids
+    in between, so a primitive after a struct would otherwise record its
+    bounds under another field's id and corrupt pruning)."""
+    import datetime as dt
 
-    f = pq.ParquetFile(local_path)
-    md = f.metadata
+    def _us(v):  # pyarrow datetimes -> micros since epoch
+        if isinstance(v, dt.datetime):
+            epoch = dt.datetime(1970, 1, 1, tzinfo=v.tzinfo)
+            return int((v - epoch).total_seconds() * 1_000_000)
+        return int(v)
+
+    def _days(v):  # pyarrow dates -> days since epoch
+        if isinstance(v, dt.date):
+            return (v - dt.date(1970, 1, 1)).days
+        return int(v)
+
+    n_rows, cols = footer_stats(local_path)
     lowers: dict[int, bytes] = {}
     uppers: dict[int, bytes] = {}
-    idx = {
-        n: i for n, i in id_by_name.items() if isinstance(ice_types.get(n), str)
-    }
-    per_col: dict[str, tuple] = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for c in range(g.num_columns):
-            col = g.column(c)
-            st = col.statistics
-            name = col.path_in_schema
-            if name not in idx or st is None or not st.has_min_max:
-                continue
-            mn, mx = st.min, st.max
-            if name in per_col:
-                omn, omx = per_col[name]
-                mn = mn if mn < omn else omn
-                mx = mx if mx > omx else omx
-            per_col[name] = (mn, mx)
-    for name, (mn, mx) in per_col.items():
-        t = ice_types[name]
-        if t in ("timestamp", "timestamptz"):  # pyarrow datetimes -> micros since epoch
-            import datetime as dt
-
-            def _us(v):
-                if isinstance(v, dt.datetime):
-                    epoch = dt.datetime(1970, 1, 1, tzinfo=v.tzinfo)
-                    return int((v - epoch).total_seconds() * 1_000_000)
-                return int(v)
-
+    for name, fid in id_by_name.items():
+        t = ice_types.get(name)
+        mn, mx, _ = cols.get(name, (None, None, None))
+        if not isinstance(t, str) or mn is None:
+            continue
+        if t in ("timestamp", "timestamptz"):
             mn, mx = _us(mn), _us(mx)
-        elif t == "date":  # pyarrow dates -> days since epoch
-            import datetime as dt
-
-            def _days(v):
-                if isinstance(v, dt.date):
-                    return (v - dt.date(1970, 1, 1)).days
-                return int(v)
-
+        elif t == "date":
             mn, mx = _days(mn), _days(mx)
         lo, hi = _encode_bound(mn, t), _encode_bound(mx, t)
         if lo is not None and hi is not None:
-            lowers[idx[name]] = lo
-            uppers[idx[name]] = hi
-    return md.num_rows, os.path.getsize(local_path), lowers, uppers
+            lowers[fid] = lo
+            uppers[fid] = hi
+    return n_rows, os.path.getsize(local_path), lowers, uppers
 
 
 # ---------------------------------------------------------------------------
@@ -1220,18 +1202,6 @@ def _commit_snapshot(
     )
 
 
-def _canon_path_col(col):
-    """Canonical decoded filesystem path for join keys, normalized the
-    same way on the data side (``_metadata.file_path`` is a percent-
-    encoded URI) and the metadata side (manifest-recorded paths): strip
-    the ``file:`` scheme, percent-decode (protecting literal ``+``,
-    which url_decode would otherwise turn into a space). Mirrors the
-    Delta reader's DV anti-join normalization (delta_reader.py)."""
-    return F.url_decode(
-        F.regexp_replace(F.regexp_replace(col, "^file:/*", "/"), r"\+", "%2B")
-    )
-
-
 def delete_rows_iceberg(
     spark: SparkSession,
     table_dir: str,
@@ -1321,7 +1291,7 @@ def delete_rows_iceberg(
     entries = []
     n_deleted = 0
     for p in dfiles:
-        n_rows, size, _, _ = _file_stats(p, {}, {})
+        n_rows, size = footer_stats(p)[0], os.path.getsize(p)
         n_deleted += n_rows
         entries.append(
             {
@@ -2554,7 +2524,7 @@ class IcebergTable:
         cols = df.columns
         return (
             df.select(
-                "*", _canon_path_col(F.col("_metadata.file_path")).alias("__cf")
+                "*", file_uri_path_col(F.col("_metadata.file_path")).alias("__cf")
             )
             .join(F.broadcast(tag), "__cf")
             .select(*cols, "_commit_snapshot")
@@ -2626,7 +2596,7 @@ class IcebergTable:
                 out_names = names
             if with_meta:
                 sel = sel + [
-                    _canon_path_col(F.col("_metadata.file_path")).alias("__cf"),
+                    file_uri_path_col(F.col("_metadata.file_path")).alias("__cf"),
                     F.col("_metadata.row_index").alias("__ri"),
                 ]
             frames.append(sdf.select(*sel))
@@ -2752,7 +2722,7 @@ class IcebergTable:
             dels = self.spark.read.parquet(
                 *[_local(d["path"], self.table_dir) for d in pos_dels]
             ).select(
-                _canon_path_col(F.col("file_path")).alias("__cf"),
+                file_uri_path_col(F.col("file_path")).alias("__cf"),
                 F.col("pos").cast("long").alias("__ri"),
             )
             # the combined key set is bounded by total delete cardinality;

@@ -647,6 +647,58 @@ class TestFooterStatsCompleteness:
         assert stats["nullCount"]["x"] == 0
 
 
+    LONG = "z" * 5000  # over 4 KiB: writers drop or blank its row group's max
+
+    @pytest.fixture(params=["arrow_row_groups", "spark_block_size"])
+    def long_string_dir(self, request, tmp_path):
+        """A one-file parquet directory whose string column ``s`` truly
+        reaches LONG, but one row group of which reports no usable max."""
+        import glob
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        d = tmp_path / request.param
+        if request.param == "arrow_row_groups":
+            # Arrow keeps the min of LONG's row group and writes max=''
+            d.mkdir()
+            pq.write_table(
+                pa.table({"s": ["a", "b", self.LONG, "d"]}),
+                str(d / "f.parquet"),
+                row_group_size=2,
+            )
+        else:
+            # parquet-mr writes no min/max for the row group holding LONG
+            from data_etl_pipeline_spark.tables import one_slice_df
+
+            rows = [("s%05d" % i,) for i in range(3000)]
+            rows.insert(1500, (self.LONG,))
+            one_slice_df(request.getfixturevalue("spark"), rows, "s string").write.option(
+                "parquet.block.size", 8192
+            ).parquet(str(d))
+        (path,) = glob.glob(str(d / "*.parquet"))
+        assert pq.read_metadata(path).num_row_groups > 1
+        return str(d), path
+
+    def test_long_string_row_group_drops_bounds_for_every_consumer(self, long_string_dir):
+        from data_etl_pipeline_spark.sources import iceberg
+        from data_etl_pipeline_spark.sources.delta_export import _file_stats
+        from data_etl_pipeline_spark.sources.footerprune import (
+            agg_from_footers,
+            plan_parquet_files,
+        )
+
+        d, path = long_string_dir
+        stats = json.loads(_file_stats(path))
+        assert "s" not in stats["minValues"] and "s" not in stats["maxValues"]
+        _n, _size, lowers, uppers = iceberg._file_stats(path, {"s": 1}, {"s": "string"})
+        assert 1 not in lowers and 1 not in uppers
+        # pruning for the long value must keep the file that holds it
+        assert plan_parquet_files(d, "s", self.LONG, self.LONG)[0] == [path]
+        with pytest.raises(ValueError, match="lacks full statistics"):
+            agg_from_footers(d, "s")
+
+
 class TestMergeUpsert:
     """export_delta_merge: keyed CoW MERGE — matched keys replaced, new
     keys inserted, only matched files rewritten, change-commit semantics
@@ -718,6 +770,16 @@ class TestMergeUpsert:
         ok = spark.createDataFrame([(1, "p0", 0.0)], "id long, part string, val double")
         with pytest.raises(DeltaExportError, match="not a source column"):
             export_delta_merge(spark, ok, dest, keys=["nope"])
+
+    def test_source_with_internal_tag_column_refuses(self, spark, tmp_path):
+        from data_etl_pipeline_spark.sources.delta_export import export_delta_merge
+
+        dest = str(tmp_path / "tagclash")
+        export_delta(spark.createDataFrame([(1, 0), (2, 0)], "id long, __m int"), dest, cdf=True)
+        src = spark.createDataFrame([(1, 5)], "id long, __m int")
+        with pytest.raises(DeltaExportError, match="__m"):
+            export_delta_merge(spark, src, dest, keys=["id"])
+        assert not os.path.exists(os.path.join(dest, "_delta_log", f"{1:020d}.json"))
 
     def test_merge_after_delete_never_resurrects(self, spark, tmp_path):
         from data_etl_pipeline_spark.sources.delta_export import (

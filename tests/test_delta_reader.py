@@ -177,6 +177,31 @@ def test_reader_protocol_v2_and_decodes_paths(spark, tmp_path):
     assert [r.id for r in DeltaLogReader(spark, tbl2).read().collect()] == [1]
 
 
+def test_change_feed_hive_unescapes_remove_without_partition_values(spark, tmp_path):
+    # a remove may omit partitionValues (the protocol allows it); the
+    # reader then recovers them from the path, which is URI-encoded in the
+    # log on top of the Hive escaping on disk: p='a:b' lives in p=a%3Ab/
+    tbl = str(tmp_path / "dlhive")
+    os.makedirs(os.path.join(tbl, "p=a%3Ab"))
+    _write_part(spark, tbl, "p=a%3Ab/f0.parquet", [(1, "a"), (2, "b")])
+    schema = T.StructType(SCHEMA.fields + [T.StructField("p", T.StringType())])
+    meta = {
+        "metaData": {
+            "id": "test-table",
+            "schemaString": schema.json(),
+            "partitionColumns": ["p"],
+            "format": {"provider": "parquet"},
+        }
+    }
+    _log(tbl, 0, [meta, _add("p=a%253Ab/f0.parquet", {"p": "a:b"})])
+    _log(tbl, 1, [{"remove": {"path": "p=a%253Ab/f0.parquet", "dataChange": True}}])
+    rows = DeltaLogReader(spark, tbl).table_changes(1, 1).collect()
+    assert sorted((r.id, r.p, r._change_type) for r in rows) == [
+        (1, "a:b", "delete"),
+        (2, "a:b", "delete"),
+    ]
+
+
 # ---------------------------------------------------------------------------
 # Column mapping, mode 'name': data files and partitionValues carry
 # PHYSICAL column names; logical names live only in the schemaString's
