@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Benchmark the headline queries.
+"""Benchmark the bench-tier queries (``QuerySpec.bench_tier``).
 
 Runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS]; prints ONE JSON line:
@@ -25,7 +25,6 @@ def main() -> None:
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.1
     _ensure_loaded()
     spark = get_spark("bench")
-    headline = [s for s in QUERIES.values() if s.headline]
 
     # Two totals per round (r4 verdict item 7): COLD = each query's first
     # execution (the earliest queries absorb JVM/codegen/parquet-footer
@@ -56,20 +55,16 @@ def main() -> None:
             spread[spec.name] = round(max(warm) - min(warm), 3)
         return timings, timings_cold, spread
 
-    timings, timings_cold, spread = run_tier(headline)
-    # tier 2 (round 10): heavies from the modern surface — Delta CDF
-    # lifecycle, semantic dedup, suffix-array repeated substrings, Merkle
-    # table diff — reported as a SEPARATE total so `value` stays
-    # comparable with the r1-anchored trend while the engine's center of
-    # mass is also watched per-round
-    tier2 = [s for s in QUERIES.values() if s.headline2]
-    timings2, timings2_cold, spread2 = run_tier(tier2)
-    # tier 3 (round 13, ADDITIVE ONLY — tier-1/tier-2 keys unchanged):
-    # the two slowest driver-visible rows the bench never timed
-    # (VERDICT r12 item 8): the ts-ordered stateful-TTL stream replay and
-    # the persisted-LSH-index GC lifecycle.
-    tier3 = [QUERIES[n] for n in ("stream_profile_state_ttl", "ann_lsh_gc_topk")]
-    timings3, timings3_cold, spread3 = run_tier(tier3)
+    # Each tier (QuerySpec.bench_tier) is its own total, so `value` (tier 1)
+    # stays comparable with the r1-anchored trend while tier 2 (heavies
+    # from the modern surface) and tier 3 (the slowest driver-visible
+    # rows) watch the engine's center of mass.
+    def tier(n: int):
+        return run_tier([s for s in QUERIES.values() if s.bench_tier == n])
+
+    timings, timings_cold, spread = tier(1)
+    timings2, timings2_cold, spread2 = tier(2)
+    timings3, timings3_cold, spread3 = tier(3)
 
     total = round(sum(timings.values()), 3)
     print(

@@ -9,6 +9,7 @@ driver's CORRECTNESS_r{N}.json run, but failing here means failing there.
 from __future__ import annotations
 
 import math
+import threading
 from typing import Any
 
 import duckdb
@@ -45,38 +46,31 @@ def compare_query(spark: SparkSession, con: duckdb.DuckDBPyConnection, name: str
     _ensure_loaded()
     spec = QUERIES[name]
     # Run the DuckDB side on a worker thread so the two engines overlap:
-    # only the worker touches `con` while it runs, and the heavy oracles
-    # (the LSH replays burn ~30 s of single-threaded list_reduce) no
-    # longer serialize behind the Spark side. Same comparisons, same
-    # result dict.
+    # the heavy oracles (the LSH replays burn ~30 s of single-threaded
+    # list_reduce) no longer serialize behind the Spark side. A DuckDB
+    # connection is not thread-safe, so the worker gets its own cursor
+    # (same database, same views), closed once the worker is done.
+    cur = con.cursor()
     duck: dict[str, Any] = {}
 
     def _run_duck() -> None:
         try:
-            rel = con.sql(spec.sql)
+            rel = cur.sql(spec.sql)
             duck["cols"] = [c.lower() for c in rel.columns]
             duck["rows"] = rel.fetchall()
         except BaseException as e:  # re-raised on the caller thread
             duck["err"] = e
 
-    t = None
-    if spec.sql is not None:
-        import threading
-
-        t = threading.Thread(target=_run_duck, daemon=True)
-        t.start()
+    t = threading.Thread(target=_run_duck, daemon=True)
+    t.start()
     try:
         sdf = spec.fn(spark, sf_dir)
         s_cols = [c.lower() for c in sdf.columns]
         s_rows = [tuple(r) for r in sdf.collect()]
     finally:
-        if t is not None:
-            t.join()
+        t.join()
+        cur.close()
     result: dict[str, Any] = {"name": name, "spark_rows": len(s_rows)}
-    if spec.sql is None:
-        result["status"] = "rows_only"
-        result["ok"] = len(s_rows) >= 0
-        return result
     if "err" in duck:
         raise duck["err"]
     d_cols = duck["cols"]

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from data_etl_pipeline_spark.operators.asof import asof_join
 from data_etl_pipeline_spark.plans.registry import query
+from data_etl_pipeline_spark.session import scratch_dir
 from data_etl_pipeline_spark.tables import load
 
 
@@ -47,7 +48,7 @@ def _one():
     ) t WHERE rn = 1
     """,
     doc="As-of (point-in-time) join via single-shuffle union+window.",
-    headline=True,
+    bench_tier=1,
 )
 def events_asof_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
@@ -105,7 +106,7 @@ _SESSIONS_SQL = """
     "user_sessions_gap",
     sql=_SESSIONS_SQL,
     doc="Gap-based sessionization (session_window vs lag/cumsum oracle).",
-    headline=True,
+    bench_tier=1,
 )
 def user_sessions_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
@@ -276,7 +277,7 @@ def returnflag_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, c_custkey LIMIT 20
     """,
     doc="Top-k revenue star join (TPC-H Q10 shape); broadcast dims.",
-    headline=True,
+    bench_tier=1,
 )
 def returned_items_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_nationkey")
@@ -746,10 +747,7 @@ def idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "back with schema, aggregate; lossy codecs would hash-mismatch.",
 )
 def csv_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid as _uuid
-
-    out = f"{tempfile.gettempdir()}/csv_rt_{_uuid.uuid4().hex[:8]}"
+    out = scratch_dir(spark, "csv_rt_")
     sliced = load(spark, sf_dir, "orders").where(F.col("o_custkey") % 10 == 0)
     # o_orderdate is TIMESTAMP_NTZ -> the NTZ-specific format option applies
     sliced.write.mode("overwrite").option("header", "true").option(
@@ -807,10 +805,7 @@ _ROUNDTRIP_SQL = """
     "ORC, read back, aggregate; typed columnar codec round-trips natively.",
 )
 def orc_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid as _uuid
-
-    out = f"{tempfile.gettempdir()}/orc_rt_{_uuid.uuid4().hex[:8]}"
+    out = scratch_dir(spark, "orc_rt_")
     load(spark, sf_dir, "orders").where(F.col("o_custkey") % 10 == 1).write.mode(
         "overwrite"
     ).orc(out)
@@ -825,10 +820,7 @@ def orc_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "format, aggregate; a lossy text codec would hash-mismatch.",
 )
 def json_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid as _uuid
-
-    out = f"{tempfile.gettempdir()}/json_rt_{_uuid.uuid4().hex[:8]}"
+    out = scratch_dir(spark, "json_rt_")
     sliced = load(spark, sf_dir, "orders").where(F.col("o_custkey") % 10 == 2)
     sliced.write.mode("overwrite").option(
         "timestampNTZFormat", "yyyy-MM-dd HH:mm:ss"
@@ -855,10 +847,7 @@ def json_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     round_added=9,
 )
 def xml_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    import uuid as _uuid
-
-    out = f"{tempfile.gettempdir()}/xml_rt_{_uuid.uuid4().hex[:8]}"
+    out = scratch_dir(spark, "xml_rt_")
     sliced = load(spark, sf_dir, "orders").where(F.col("o_custkey") % 10 == 3)
     sliced.write.mode("overwrite").format("xml").option("rowTag", "order").option(
         "timestampNTZFormat", "yyyy-MM-dd HH:mm:ss"
@@ -2353,6 +2342,7 @@ def pipe_syntax_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cleanly (asserted, with the timeout path proven to fire). Oracle: "
     "24h gaps-and-islands.",
     round_added=11,
+    bench_tier=3,
 )
 def stream_profile_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_etl_pipeline_spark.streaming.stateful import run_stream_episodes_ttl

@@ -18,6 +18,7 @@ from data_etl_pipeline_spark.etl import deferred, triples
 from data_etl_pipeline_spark.operators import blocks, records
 from data_etl_pipeline_spark.operators.chunker import chunk_even_chars
 from data_etl_pipeline_spark.plans.registry import query
+from data_etl_pipeline_spark.session import scratch_dir
 from data_etl_pipeline_spark.tables import load
 
 _HEADER = "NAV HOME ABOUT\nMENU\nSEARCH"
@@ -117,7 +118,7 @@ _DEFERRED_SQL = f"""
     "deferred_extraction_results",
     sql=_DEFERRED_SQL,
     doc="Full deferred-extraction pass: anti-join discovery, stub LLM, JSON repair, A1 rollup (SURVEY §3.3).",
-    headline=True,
+    bench_tier=1,
 )
 def deferred_extraction_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks = chunk_even_chars(load(spark, sf_dir, "documents"), size=200, overlap=50)
@@ -421,8 +422,6 @@ def stream_deferred_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     "recomputes the aggregate from the un-round-tripped rows.",
 )
 def jsonl_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources import jsonl
 
     requests = (
@@ -434,7 +433,7 @@ def jsonl_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderstatus").alias("context"),
         )
     )
-    out = tempfile.mkdtemp(prefix="jsonl_rt_")
+    out = scratch_dir(spark, "jsonl_rt_")
     jsonl.write_request_files(requests, out, max_requests=64, max_tokens=4000)
     back = spark.read.schema("custom_id string, body struct<context string>").json(
         f"{out}/file_id=*"
@@ -859,8 +858,6 @@ def stream_hopping_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     round_added=11,
 )
 def parquet_footer_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.footerprune import plan_parquet_files
 
     src = (
@@ -868,7 +865,7 @@ def parquet_footer_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") < 1400)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    data_dir = tempfile.mkdtemp(prefix="footer_skip_")
+    data_dir = scratch_dir(spark, "footer_skip_")
     src.repartitionByRange(6, "o_orderkey").write.mode("overwrite").parquet(data_dir)
 
     lo, hi = 300, 650
@@ -913,8 +910,6 @@ def parquet_footer_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     round_added=12,
 )
 def parquet_footer_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.footerprune import agg_from_footers
 
     src = (
@@ -922,7 +917,7 @@ def parquet_footer_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") < 1400)
         .select("o_orderkey", "o_custkey", "o_orderstatus")
     )
-    data_dir = tempfile.mkdtemp(prefix="footer_agg_")
+    data_dir = scratch_dir(spark, "footer_agg_")
     src.repartitionByRange(6, "o_orderkey").write.mode("overwrite").parquet(data_dir)
 
     stats = agg_from_footers(data_dir, "o_custkey")

@@ -4,12 +4,15 @@ validation (J9), token-budget guards (F11), percentile/approx aggregates.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from data_etl_pipeline_spark.functions import psl
 from data_etl_pipeline_spark.operators import multimodal
 from data_etl_pipeline_spark.plans.registry import query
+from data_etl_pipeline_spark.session import scratch_dir
 from data_etl_pipeline_spark.tables import load, one_slice_df
 
 
@@ -26,6 +29,29 @@ def _write_single_parquet(df: DataFrame, table_dir: str, name: str) -> None:
     part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
     os.rename(os.path.join(tmp, part), os.path.join(table_dir, name))
     shutil.rmtree(tmp)
+
+
+def _status_totals(df: DataFrame) -> DataFrame:
+    """Per-status order count and exact-decimal price total: what the
+    table-format lifecycle queries return for the table they built (their
+    oracle SQL runs the same GROUP BY over the rows it should hold)."""
+    return df.groupBy(F.col("o_orderstatus").alias("status")).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
+    )
+
+
+def _orders_slicer(spark: SparkSession, sf_dir: str) -> Callable[[int, int], DataFrame]:
+    """``sl(lo, hi)``: the orders (key, status, price) rows with
+    ``lo <= o_orderkey < hi`` — the key-range commits a lifecycle query
+    writes one after another."""
+    base = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
+
+    def sl(lo: int, hi: int) -> DataFrame:
+        return base.where((F.col("o_orderkey") >= lo) & (F.col("o_orderkey") < hi))
+
+    return sl
+
 
 _H60 = "(('0x' || substr(md5({x}), 1, 15))::BIGINT)"
 _H60_SPARK = "cast(conv(substr(md5({x}), 1, 15), 16, 10) as bigint)"
@@ -299,12 +325,10 @@ def supplier_host_etld1(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(Delta/Iceberg semantics over parquet snapshots); oracle recomputes both versions.",
 )
 def versioned_merge_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
 
     base = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-    t = VersionedTable(spark, tempfile.mkdtemp(prefix="vtbl_"))
+    t = VersionedTable(spark, scratch_dir(spark, "vtbl_"))
     t.write(base)
     updates = base.where(F.col("o_orderkey") % 7 == 0).withColumn("o_orderstatus", F.lit("X"))
     inserts = (
@@ -364,8 +388,6 @@ def versioned_merge_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the logical content (layout asserted separately in tests).",
 )
 def versioned_zorder_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
 
     base = (
@@ -373,7 +395,7 @@ def versioned_zorder_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") <= 4000)
         .select("o_orderkey", "o_custkey", "o_totalprice")
     )
-    t = VersionedTable(spark, tempfile.mkdtemp(prefix="ztbl_"))
+    t = VersionedTable(spark, scratch_dir(spark, "ztbl_"))
     t.write(base.repartition(5))  # arbitrary hash layout, nothing skippable
     t.optimize_zorder(["o_custkey", "o_orderkey"], n_files=4)
     updates = (
@@ -444,8 +466,6 @@ def versioned_zorder_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     "reading only removed/added files; oracle recomputes the logical diff.",
 )
 def versioned_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.versioned import VersionedTable, range_prune
 
     base = (
@@ -453,7 +473,7 @@ def versioned_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") <= 8000)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    t = VersionedTable(spark, tempfile.mkdtemp(prefix="cdf_tbl_"))
+    t = VersionedTable(spark, scratch_dir(spark, "cdf_tbl_"))
     # clustered layout -> the key-bounded MERGE and pruned DELETE carry the
     # untouched key-range files, which the feed then never reads
     t.write(base, cluster_by=["o_orderkey"], n_files=8)
@@ -509,8 +529,6 @@ def versioned_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "any delta-algebra drift fails the hash.",
 )
 def ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.operators.ivm import join_view_delta_versioned
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
 
@@ -518,8 +536,8 @@ def ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    a = VersionedTable(spark, tempfile.mkdtemp(prefix="ivm_a_"))
-    b = VersionedTable(spark, tempfile.mkdtemp(prefix="ivm_b_"))
+    a = VersionedTable(spark, scratch_dir(spark, "ivm_a_"))
+    b = VersionedTable(spark, scratch_dir(spark, "ivm_b_"))
     a.write(cust)
     b.write(orders.where(F.col("o_orderkey") < 1500))
 
@@ -596,8 +614,6 @@ def ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     "final state directly, so delta-math drift fails the hash.",
 )
 def cdc_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.versioned import VersionedTable, range_prune
 
     base = (
@@ -605,7 +621,7 @@ def cdc_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") <= 8000)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    t = VersionedTable(spark, tempfile.mkdtemp(prefix="mv_tbl_"))
+    t = VersionedTable(spark, scratch_dir(spark, "mv_tbl_"))
     t.write(base, cluster_by=["o_orderkey"], n_files=8)
     updates = (
         base.where((F.col("o_orderkey") % 7 == 0) & (F.col("o_orderkey") <= 3000))
@@ -783,12 +799,10 @@ def supplier_wkt_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     "relationally.",
 )
 def versioned_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
 
     base = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    t = VersionedTable(spark, tempfile.mkdtemp(prefix="scd2_"))
+    t = VersionedTable(spark, scratch_dir(spark, "scd2_"))
     t.write(base)
     t.merge(
         base.where(F.col("c_custkey") % 5 == 0).withColumn("c_mktsegment", F.lit("SEG-A")),
@@ -866,25 +880,16 @@ def versioned_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle recomputes the merged state relationally.",
 )
 def versioned_bloom_point_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
 
     base = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-    t = VersionedTable(spark, tempfile.mkdtemp(prefix="vbloom_"))
+    t = VersionedTable(spark, scratch_dir(spark, "vbloom_"))
     t.write(base, cluster_by=["o_orderkey"], n_files=8, bloom_cols=["o_orderkey"])
     updates = base.where(F.col("o_orderkey") % 97 == 0).withColumn(
         "o_orderstatus", F.lit("P")
     )
     t.merge(updates, keys=["o_orderkey"])
-    return (
-        t.read()
-        .groupBy(F.col("o_orderstatus").alias("status"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-        )
-    )
+    return _status_totals(t.read())
 
 
 # ---------------------------------------------------------------------------
@@ -930,8 +935,6 @@ def versioned_bloom_point_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     "versioned table; time travel reads the pre-delete snapshot.",
 )
 def versioned_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.versioned import VersionedTable, range_prune
 
     base = (
@@ -939,7 +942,7 @@ def versioned_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") <= 8000)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    t = VersionedTable(spark, tempfile.mkdtemp(prefix="dvtbl_"))
+    t = VersionedTable(spark, scratch_dir(spark, "dvtbl_"))
     t.write(base, cluster_by=["o_orderkey"], n_files=4)
     t.delete_where_dv(F.pmod(F.col("o_orderkey"), F.lit(97)) == 0)
     t.delete_where_dv(
@@ -996,8 +999,6 @@ def versioned_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     "of the exact counts the oracle computes.",
 )
 def hll_incremental_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
 
     ev = load(spark, sf_dir, "events").select(
@@ -1006,7 +1007,7 @@ def hll_incremental_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = F.lit("2024-01-15").cast("date")
     early, late = ev.where(F.col("day") < cutoff), ev.where(F.col("day") >= cutoff)
 
-    t = VersionedTable(spark, tempfile.mkdtemp(prefix="hll_state_"))
+    t = VersionedTable(spark, scratch_dir(spark, "hll_state_"))
     t.write(early.groupBy("day").agg(F.hll_sketch_agg("user_id").alias("sk")))
     batch = late.groupBy("day").agg(F.hll_sketch_agg("user_id").alias("sk"))
     old = t.read().select("day", F.col("sk").alias("sk_old"))
@@ -1242,8 +1243,6 @@ def orders_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
 def delta_interop_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import os
-    import shutil
-    import tempfile
 
     from data_etl_pipeline_spark.sources.delta_reader import DeltaLogReader
 
@@ -1252,7 +1251,7 @@ def delta_interop_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") <= 4000)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    tbl = tempfile.mkdtemp(prefix="delta_interop_")
+    tbl = scratch_dir(spark, "delta_interop_")
 
     def write_file(df: DataFrame, name: str) -> None:
         _write_single_parquet(df, tbl, name)
@@ -1330,8 +1329,6 @@ def delta_interop_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     "with no data files opened; oracle states the expected accounting.",
 )
 def versioned_metadata_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
 
     base = (
@@ -1339,7 +1336,7 @@ def versioned_metadata_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") <= 8000)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    t = VersionedTable(spark, tempfile.mkdtemp(prefix="metatbl_"))
+    t = VersionedTable(spark, scratch_dir(spark, "metatbl_"))
     t.write(base, cluster_by=["o_orderkey"], n_files=4)
     t.delete_where_dv(F.pmod(F.col("o_orderkey"), F.lit(97)) == 0)
     t.compact(target_rows=1_000_000)
@@ -1373,7 +1370,6 @@ def delta_interop_checkpoint_read(spark: SparkSession, sf_dir: str) -> DataFrame
     import json as _json
     import os
     import shutil
-    import tempfile
 
     from pyspark.sql import types as T
 
@@ -1384,7 +1380,7 @@ def delta_interop_checkpoint_read(spark: SparkSession, sf_dir: str) -> DataFrame
         .where(F.col("o_orderkey") < 4800)
         .select("o_orderkey", "o_totalprice")
     )
-    tbl = tempfile.mkdtemp(prefix="delta_cp_")
+    tbl = scratch_dir(spark, "delta_cp_")
     log_dir = os.path.join(tbl, "_delta_log")
     os.makedirs(log_dir)
 
@@ -1508,8 +1504,6 @@ def delta_interop_checkpoint_read(spark: SparkSession, sf_dir: str) -> DataFrame
 def delta_interop_dv_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os
-    import shutil
-    import tempfile
 
     from data_etl_pipeline_spark.sources.delta_reader import (
         DeltaLogReader,
@@ -1517,7 +1511,7 @@ def delta_interop_dv_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     base = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tbl = tempfile.mkdtemp(prefix="delta_dv_")
+    tbl = scratch_dir(spark, "delta_dv_")
     os.makedirs(os.path.join(tbl, "_delta_log"))
 
     def write_file(df: DataFrame, name: str) -> None:
@@ -1625,7 +1619,6 @@ def delta_interop_dv_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 def delta_interop_dv_file_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os
-    import tempfile
     import uuid as _uuid
 
     from data_etl_pipeline_spark.sources.delta_reader import (
@@ -1634,7 +1627,7 @@ def delta_interop_dv_file_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     base = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    tbl = tempfile.mkdtemp(prefix="delta_dvf_")
+    tbl = scratch_dir(spark, "delta_dvf_")
     os.makedirs(os.path.join(tbl, "_delta_log"))
 
     def sorted_slice(lo: int, hi: int) -> DataFrame:
@@ -1711,7 +1704,6 @@ def delta_interop_dv_file_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 def delta_interop_timestamp_ntz_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os
-    import tempfile
 
     from data_etl_pipeline_spark.sources.delta_reader import DeltaLogReader
 
@@ -1721,7 +1713,7 @@ def delta_interop_timestamp_ntz_read(spark: SparkSession, sf_dir: str) -> DataFr
         .select("o_orderkey", "o_orderdate")
     )
     assert dict(base.dtypes)["o_orderdate"] == "timestamp_ntz"
-    tbl = tempfile.mkdtemp(prefix="delta_ntz_")
+    tbl = scratch_dir(spark, "delta_ntz_")
     os.makedirs(os.path.join(tbl, "_delta_log"))
     _write_single_parquet(base, tbl, "f.parquet")
     with open(os.path.join(tbl, "_delta_log", f"{0:020d}.json"), "w") as fh:
@@ -1775,7 +1767,6 @@ def delta_interop_timestamp_ntz_read(spark: SparkSession, sf_dir: str) -> DataFr
 def delta_interop_column_mapping_id_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os
-    import tempfile
 
     from data_etl_pipeline_spark.sources.delta_reader import DeltaLogReader
 
@@ -1784,7 +1775,7 @@ def delta_interop_column_mapping_id_read(spark: SparkSession, sf_dir: str) -> Da
         .where(F.col("o_orderkey") <= 3000)
         .select("o_orderkey", "o_totalprice")
     )
-    tbl = tempfile.mkdtemp(prefix="delta_cmid_")
+    tbl = scratch_dir(spark, "delta_cmid_")
     os.makedirs(os.path.join(tbl, "_delta_log"))
     # scoped: the field-id write conf must not leak into the caller's
     # session (same isolation rule the reader applies on its read side)
@@ -1874,7 +1865,6 @@ def delta_interop_v2_checkpoint_read(spark: SparkSession, sf_dir: str) -> DataFr
     import json as _json
     import os
     import shutil
-    import tempfile
 
     from pyspark.sql import types as T
 
@@ -1885,7 +1875,7 @@ def delta_interop_v2_checkpoint_read(spark: SparkSession, sf_dir: str) -> DataFr
         .where(F.col("o_orderkey") < 1600)
         .select("o_orderkey", "o_totalprice")
     )
-    tbl = tempfile.mkdtemp(prefix="delta_v2cp_")
+    tbl = scratch_dir(spark, "delta_v2cp_")
     log_dir = os.path.join(tbl, "_delta_log")
     os.makedirs(os.path.join(log_dir, "_sidecars"))
 
@@ -2046,8 +2036,6 @@ def delta_interop_v2_checkpoint_read(spark: SparkSession, sf_dir: str) -> DataFr
     "clean batch merges under the table's CHECK constraint.",
 )
 def quality_gated_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.operators.profile import check_constraints, profile
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
 
@@ -2055,7 +2043,7 @@ def quality_gated_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     base = orders.where(F.col("o_orderkey") < 800)
-    t = VersionedTable(spark, tempfile.mkdtemp(prefix="qgate_"))
+    t = VersionedTable(spark, scratch_dir(spark, "qgate_"))
     t.write(base)
     # table-level CHECK validated inside every subsequent commit
     t.add_check("o_totalprice >= 0")
@@ -2155,8 +2143,6 @@ def quality_gated_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     "persisted histogram. Oracle rebuilds the sketch from raw rows.",
 )
 def quantile_sketch_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.operators.qsketch import (
         merge_sketches,
         quantile_sketch,
@@ -2165,7 +2151,7 @@ def quantile_sketch_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
 
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
-    t = VersionedTable(spark, tempfile.mkdtemp(prefix="qsketch_"))
+    t = VersionedTable(spark, scratch_dir(spark, "qsketch_"))
     for i in range(3):
         batch = li.where(F.pmod("l_orderkey", F.lit(3)) == i)
         sk = quantile_sketch(batch, "l_extendedprice")
@@ -2205,8 +2191,6 @@ def quantile_sketch_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle recomputes the surviving rows from raw orders.",
 )
 def delta_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.delta_export import export_delta
     from data_etl_pipeline_spark.sources.delta_reader import DeltaLogReader
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
@@ -2216,20 +2200,17 @@ def delta_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") < 1500)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    t = VersionedTable(spark, tempfile.mkdtemp(prefix="exp_src_"))
+    t = VersionedTable(spark, scratch_dir(spark, "exp_src_"))
     t.write(base)
     # merge-on-read delete: multiples of 7 die via a deletion-vector
     # sidecar, no data file rewritten
     t.delete_where_dv(F.pmod("o_orderkey", F.lit(7)) == 0)
 
-    dest = tempfile.mkdtemp(prefix="exp_dst_") + "/table"
+    dest = scratch_dir(spark, "exp_dst_") + "/table"
     export_delta(t.read(), dest, partition_by=["o_orderstatus"])
 
     back = DeltaLogReader(spark, dest).read()
-    return back.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(back)
 
 
 # ---------------------------------------------------------------------------
@@ -2254,8 +2235,6 @@ def delta_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "table. Also proves append refuses schema drift in-query.",
 )
 def delta_export_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.delta_export import (
         DeltaExportError,
         checkpoint_export,
@@ -2264,14 +2243,9 @@ def delta_export_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from data_etl_pipeline_spark.sources.delta_reader import DeltaLogReader
 
-    base = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
+    sl = _orders_slicer(spark, sf_dir)
 
-    def sl(lo: int, hi: int) -> DataFrame:
-        return base.where((F.col("o_orderkey") >= lo) & (F.col("o_orderkey") < hi))
-
-    dest = tempfile.mkdtemp(prefix="exp_inc_") + "/table"
+    dest = scratch_dir(spark, "exp_inc_") + "/table"
     export_delta(sl(0, 600), dest, partition_by=["o_orderstatus"])
     export_delta_append(sl(600, 1000), dest)
     export_delta_append(sl(1000, 1400), dest)
@@ -2283,10 +2257,7 @@ def delta_export_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         pass
     checkpoint_export(spark, dest, trim=True)
     back = DeltaLogReader(spark, dest).read()
-    return back.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(back)
 
 
 @query(
@@ -2317,8 +2288,6 @@ def delta_export_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     "from scratch.",
 )
 def delta_export_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.delta_export import (
         export_delta,
         export_delta_delete,
@@ -2333,7 +2302,7 @@ def delta_export_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     k = F.col("o_orderkey")
-    dest = tempfile.mkdtemp(prefix="exp_mrg_") + "/table"
+    dest = scratch_dir(spark, "exp_mrg_") + "/table"
     export_delta(base.where(k < 1000), dest, partition_by=["o_orderstatus"])
     export_delta_delete(spark, dest, "o_orderkey % 5 = 2")
     # second promotion: updates for surviving key%7=3 rows + new keys
@@ -2356,10 +2325,7 @@ def delta_export_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     except DeltaProtocolError:
         pass
     assert reader.tail(1, skip_change_commits=True).count() == 0
-    return back.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(back)
 
 
 @query(
@@ -2377,8 +2343,6 @@ def delta_export_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     "reproduces the filtered table.",
 )
 def delta_export_cow_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.delta_export import (
         export_delta,
         export_delta_delete,
@@ -2388,7 +2352,7 @@ def delta_export_cow_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    dest = tempfile.mkdtemp(prefix="exp_cow_") + "/table"
+    dest = scratch_dir(spark, "exp_cow_") + "/table"
     export_delta(
         base.where(F.col("o_orderkey") < 1000), dest, partition_by=["o_orderstatus"]
     )
@@ -2398,10 +2362,7 @@ def delta_export_cow_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     noop = export_delta_delete(spark, dest, "o_orderkey = -1")
     assert noop["version"] is None and noop["removed_files"] == 0
     back = DeltaLogReader(spark, dest).read()
-    return back.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(back)
 
 
 @query(
@@ -2431,8 +2392,6 @@ def delta_export_cow_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the aggregate hashes exactly the append commits 1, 2 and 4.",
 )
 def delta_interop_tail_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.delta_export import (
         export_delta,
         export_delta_append,
@@ -2443,14 +2402,9 @@ def delta_interop_tail_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         DeltaProtocolError,
     )
 
-    base = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
+    sl = _orders_slicer(spark, sf_dir)
 
-    def sl(lo: int, hi: int) -> DataFrame:
-        return base.where((F.col("o_orderkey") >= lo) & (F.col("o_orderkey") < hi))
-
-    dest = tempfile.mkdtemp(prefix="tail_") + "/table"
+    dest = scratch_dir(spark, "tail_") + "/table"
     export_delta(sl(0, 600), dest, partition_by=["o_orderstatus"])
     export_delta_append(sl(600, 1000), dest)
     export_delta_append(sl(1000, 1400), dest)
@@ -2497,7 +2451,6 @@ def delta_interop_tail_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 def delta_export_optimize_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os as _os
-    import tempfile
 
     from data_etl_pipeline_spark.sources.delta_export import (
         export_delta,
@@ -2506,14 +2459,9 @@ def delta_export_optimize_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from data_etl_pipeline_spark.sources.delta_reader import DeltaLogReader
 
-    base = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
+    sl = _orders_slicer(spark, sf_dir)
 
-    def sl(lo: int, hi: int) -> DataFrame:
-        return base.where((F.col("o_orderkey") >= lo) & (F.col("o_orderkey") < hi))
-
-    dest = tempfile.mkdtemp(prefix="opt_tail_") + "/table"
+    dest = scratch_dir(spark, "opt_tail_") + "/table"
     export_delta(sl(0, 400), dest, partition_by=["o_orderstatus"])
     export_delta_append(sl(400, 800), dest)
     res = export_delta_optimize(spark, dest)
@@ -2555,7 +2503,6 @@ def delta_export_optimize_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def delta_export_vacuum_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import tempfile
 
     from data_etl_pipeline_spark.sources.delta_export import (
         export_delta,
@@ -2566,14 +2513,9 @@ def delta_export_vacuum_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     from data_etl_pipeline_spark.sources.delta_reader import DeltaLogReader
 
-    base = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
+    sl = _orders_slicer(spark, sf_dir)
 
-    def sl(lo: int, hi: int) -> DataFrame:
-        return base.where((F.col("o_orderkey") >= lo) & (F.col("o_orderkey") < hi))
-
-    dest = tempfile.mkdtemp(prefix="vac_") + "/table"
+    dest = scratch_dir(spark, "vac_") + "/table"
     export_delta(sl(0, 600), dest, partition_by=["o_orderstatus"])
     export_delta_append(sl(600, 1200), dest)
     export_delta_delete(spark, dest, "o_orderkey % 6 = 1")
@@ -2595,10 +2537,7 @@ def delta_export_vacuum_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame
         raise AssertionError("vacuumed time travel must fail")
     except Exception as exc:
         assert not isinstance(exc, AssertionError)
-    return reader.read().groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(reader.read())
 
 
 @query(
@@ -2618,8 +2557,6 @@ def delta_export_vacuum_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame
     "tailing with the E75 consumed-version pattern.",
 )
 def stream_foreign_delta_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.delta_export import (
         export_delta,
         export_delta_append,
@@ -2627,15 +2564,10 @@ def stream_foreign_delta_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_etl_pipeline_spark.sources.delta_reader import DeltaLogReader
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
 
-    base = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
+    sl = _orders_slicer(spark, sf_dir)
 
-    def sl(lo: int, hi: int) -> DataFrame:
-        return base.where((F.col("o_orderkey") >= lo) & (F.col("o_orderkey") < hi))
-
-    src = tempfile.mkdtemp(prefix="fingest_src_") + "/table"
-    dst = VersionedTable(spark, tempfile.mkdtemp(prefix="fingest_dst_"))
+    src = scratch_dir(spark, "fingest_src_") + "/table"
+    dst = VersionedTable(spark, scratch_dir(spark, "fingest_dst_"))
     export_delta(sl(0, 500), src)
     reader = DeltaLogReader(spark, src)
 
@@ -2670,14 +2602,7 @@ def stream_foreign_delta_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if dst.latest_version() != before + 1:
         raise RuntimeError("replay did not commit; idempotence unproven")
-    return (
-        dst.read()
-        .groupBy(F.col("o_orderstatus").alias("status"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-        )
-    )
+    return _status_totals(dst.read())
 
 
 @query(
@@ -2697,24 +2622,18 @@ def stream_foreign_delta_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "same path.",
 )
 def delta_interop_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.delta_export import (
         export_delta,
         export_delta_append,
     )
     from data_etl_pipeline_spark.sources.delta_reader import DeltaLogReader
 
-    base = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
+    rows = _orders_slicer(spark, sf_dir)
 
     def sl(lo: int, hi: int) -> DataFrame:
-        return base.where(
-            (F.col("o_orderkey") >= lo) & (F.col("o_orderkey") < hi)
-        ).repartition(1)
+        return rows(lo, hi).repartition(1)
 
-    dest = tempfile.mkdtemp(prefix="skip_") + "/table"
+    dest = scratch_dir(spark, "skip_") + "/table"
     export_delta(sl(0, 300), dest)
     for lo in range(300, 1500, 300):
         export_delta_append(sl(lo, lo + 300), dest)
@@ -2724,10 +2643,7 @@ def delta_interop_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_hit = len(reader.live_files(filters=filters))
     assert n_all == 5 and n_hit == 1, (n_all, n_hit)
     got = reader.read(filters=filters)
-    return got.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(got)
 
 
 @query(
@@ -2748,8 +2664,6 @@ def delta_interop_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     "in-query); logical content provably unchanged by the oracle.",
 )
 def delta_export_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.delta_export import (
         export_delta,
         export_delta_zorder,
@@ -2761,7 +2675,7 @@ def delta_export_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
         .where(F.col("o_orderkey") < 1500)
     )
-    dest = tempfile.mkdtemp(prefix="zo_") + "/table"
+    dest = scratch_dir(spark, "zo_") + "/table"
     # round-robin layout: every file spans the full range of both
     # columns, so stats prune NOTHING before the rewrite
     export_delta(base.repartition(6), dest)
@@ -2776,10 +2690,7 @@ def delta_export_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     nb = len(reader.live_files(filters=fk + fp))
     assert n_all == 16 and nk < 16 and np_ < 16 and nb <= 4, (n_all, nk, np_, nb)
     got = reader.read(filters=fk + fp)
-    return got.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(got)
 
 
 @query(
@@ -2798,7 +2709,6 @@ def delta_export_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def delta_interop_timestamp_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import tempfile
 
     from data_etl_pipeline_spark.sources.delta_export import (
         export_delta,
@@ -2806,14 +2716,9 @@ def delta_interop_timestamp_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from data_etl_pipeline_spark.sources.delta_reader import DeltaLogReader
 
-    base = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
+    sl = _orders_slicer(spark, sf_dir)
 
-    def sl(lo: int, hi: int) -> DataFrame:
-        return base.where((F.col("o_orderkey") >= lo) & (F.col("o_orderkey") < hi))
-
-    dest = tempfile.mkdtemp(prefix="ts_read_") + "/table"
+    dest = scratch_dir(spark, "ts_read_") + "/table"
     export_delta(sl(0, 500), dest, partition_by=["o_orderstatus"])
     export_delta_append(sl(500, 900), dest)
     export_delta_append(sl(900, 1200), dest)
@@ -2830,10 +2735,7 @@ def delta_interop_timestamp_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     except ValueError:
         pass
     at_v1 = reader.read_as_of_timestamp((t0 + 1500) * 1000)
-    return at_v1.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(at_v1)
 
 
 # ---------------------------------------------------------------------------
@@ -2864,7 +2766,6 @@ def delta_interop_timestamp_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 def delta_interop_ict_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os as _os
-    import tempfile
 
     from data_etl_pipeline_spark.sources.delta_export import (
         export_delta,
@@ -2872,14 +2773,9 @@ def delta_interop_ict_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from data_etl_pipeline_spark.sources.delta_reader import DeltaLogReader
 
-    base = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
+    sl = _orders_slicer(spark, sf_dir)
 
-    def sl(lo: int, hi: int) -> DataFrame:
-        return base.where((F.col("o_orderkey") >= lo) & (F.col("o_orderkey") < hi))
-
-    dest = tempfile.mkdtemp(prefix="ict_read_") + "/table"
+    dest = scratch_dir(spark, "ict_read_") + "/table"
     export_delta(sl(0, 500), dest, ict=True)
     export_delta_append(sl(500, 900), dest)
     export_delta_append(sl(900, 1200), dest)
@@ -2913,10 +2809,7 @@ def delta_interop_ict_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     except ValueError:
         pass
     at_v1 = reader.read_as_of_timestamp(icts[1])
-    return at_v1.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(at_v1)
 
 
 # ---------------------------------------------------------------------------
@@ -2950,7 +2843,6 @@ def delta_interop_ict_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 def delta_interop_generated_partition_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os as _os
-    import tempfile
 
     from data_etl_pipeline_spark.sources.delta_export import (
         DeltaExportError,
@@ -2963,7 +2855,7 @@ def delta_interop_generated_partition_read(spark: SparkSession, sf_dir: str) -> 
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     ).where("o_orderkey < 2000")
     gen_expr = "CAST(date_trunc('month', o_orderdate) AS DATE)"
-    dest = tempfile.mkdtemp(prefix="genpart_") + "/table"
+    dest = scratch_dir(spark, "genpart_") + "/table"
     export_delta(
         base.where("o_orderkey < 1500"),
         dest,
@@ -3009,10 +2901,7 @@ def delta_interop_generated_partition_read(spark: SparkSession, sf_dir: str) -> 
     n_eq = len(reader.live_files(filters=[("o_orderdate", "=", "1996-06-15")]))
     assert n_eq < n_pruned, (n_eq, n_pruned)
     got = reader.read(filters=flt).drop("o_month")
-    return got.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(got)
 
 
 # ---------------------------------------------------------------------------
@@ -3037,8 +2926,6 @@ def delta_interop_generated_partition_read(spark: SparkSession, sf_dir: str) -> 
 def delta_interop_column_mapping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os
-    import shutil
-    import tempfile
 
     from data_etl_pipeline_spark.sources.delta_reader import DeltaLogReader
 
@@ -3047,7 +2934,7 @@ def delta_interop_column_mapping_read(spark: SparkSession, sf_dir: str) -> DataF
         .where(F.col("o_orderkey") < 1200)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    tbl = tempfile.mkdtemp(prefix="delta_cm_")
+    tbl = scratch_dir(spark, "delta_cm_")
     os.makedirs(os.path.join(tbl, "_delta_log"))
 
     # data files carry the PHYSICAL names; 'o_orderstatus' is a partition
@@ -3094,10 +2981,7 @@ def delta_interop_column_mapping_read(spark: SparkSession, sf_dir: str) -> DataF
             fh.write(_json.dumps(a) + "\n")
 
     back = DeltaLogReader(spark, tbl).read()
-    return back.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(back)
 
 
 # ---------------------------------------------------------------------------
@@ -3132,13 +3016,11 @@ def delta_interop_column_mapping_read(spark: SparkSession, sf_dir: str) -> DataF
     "commit (exactly-once; final tick replayed to prove idempotence).",
 )
 def stream_table_to_table_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
 
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    src = VersionedTable(spark, tempfile.mkdtemp(prefix="cdf_src_"))
-    dst = VersionedTable(spark, tempfile.mkdtemp(prefix="cdf_dst_"))
+    src = VersionedTable(spark, scratch_dir(spark, "cdf_src_"))
+    dst = VersionedTable(spark, scratch_dir(spark, "cdf_dst_"))
 
     sign = (
         F.when(F.col("change_type").isin("insert", "update_postimage"), F.lit(1))
@@ -3420,8 +3302,6 @@ def events_pit_dimension_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "original files reclaimed.",
 )
 def versioned_lifecycle_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
 
     base = (
@@ -3429,7 +3309,7 @@ def versioned_lifecycle_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
         .where(F.col("o_orderkey") < 1400)
         .select("o_orderkey", F.col("o_totalprice").cast("decimal(18,2)").alias("price"))
     )
-    t = VersionedTable(spark, tempfile.mkdtemp(prefix="lifecycle_"))
+    t = VersionedTable(spark, scratch_dir(spark, "lifecycle_"))
     t.write(base, cluster_by=["o_orderkey"], n_files=8)
     # update every 5th key (+1), MERGE rewrites only intersecting files
     t.merge(
@@ -3553,8 +3433,6 @@ def segment_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     "History is never rescanned: each batch hashes only its own rows.",
 )
 def kmv_sketch_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.operators import kmv
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
 
@@ -3564,7 +3442,7 @@ def kmv_sketch_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1 = orders.where(F.col("o_orderkey") <= half)
     b2 = orders.where(F.col("o_orderkey") > half)
 
-    state = VersionedTable(spark, tempfile.mkdtemp(prefix="kmv_"))
+    state = VersionedTable(spark, scratch_dir(spark, "kmv_"))
     state.write(kmv.kmv_sketch(b1, "o_custkey", k=K))
     merged = kmv.kmv_merge(state.read(), kmv.kmv_sketch(b2, "o_custkey", k=K), k=K)
     state.write(merged)  # next version of the sketch state
@@ -3668,8 +3546,6 @@ def event_type_value_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     "over the pruned frame hash-matches a from-scratch recompute.",
 )
 def delta_interop_column_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.delta_export import export_delta
     from data_etl_pipeline_spark.sources.delta_reader import DeltaLogReader
 
@@ -3677,7 +3553,7 @@ def delta_interop_column_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority",
     )
-    dest = tempfile.mkdtemp(prefix="exp_prune_") + "/table"
+    dest = scratch_dir(spark, "exp_prune_") + "/table"
     export_delta(base.where(F.col("o_orderkey") < 1200), dest)
     back = DeltaLogReader(spark, dest).read(
         columns=["o_orderstatus", "o_totalprice"],
@@ -3691,10 +3567,7 @@ def delta_interop_column_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     for col in ("o_custkey", "o_orderdate", "o_orderpriority"):
         assert col not in scanned, scanned
     assert "o_totalprice" in scanned and "o_orderkey" in scanned, scanned
-    return back.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(back)
 
 
 @query(
@@ -3719,8 +3592,6 @@ def delta_interop_column_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     "recomputes the post-replace state from scratch.",
 )
 def delta_export_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.delta_export import (
         DeltaExportError,
         export_delta,
@@ -3732,7 +3603,7 @@ def delta_export_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     k = F.col("o_orderkey")
-    dest = tempfile.mkdtemp(prefix="exp_rw_") + "/table"
+    dest = scratch_dir(spark, "exp_rw_") + "/table"
     export_delta(base.where(k < 1000), dest, partition_by=["o_orderstatus"])
     repub = base.where((k < 800) & (F.col("o_orderstatus") == "F")).withColumn(
         "o_totalprice", F.col("o_totalprice") * 2
@@ -3748,10 +3619,7 @@ def delta_export_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = export_delta_replace_where(spark, repub, dest, {"o_orderstatus": "F"})
     assert res["version"] == 1 and res["removed_files"] > 0, res
     back = DeltaLogReader(spark, dest).read()
-    return back.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(back)
 
 
 @query(
@@ -3770,23 +3638,15 @@ def delta_export_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     "deduplicated final state.",
 )
 def delta_export_txn_idempotence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.delta_export import (
         export_delta,
         export_delta_append,
     )
     from data_etl_pipeline_spark.sources.delta_reader import DeltaLogReader
 
-    base = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    k = F.col("o_orderkey")
+    sl = _orders_slicer(spark, sf_dir)
 
-    def sl(lo, hi):
-        return base.where((k >= lo) & (k < hi))
-
-    dest = tempfile.mkdtemp(prefix="exp_txn_") + "/table"
+    dest = scratch_dir(spark, "exp_txn_") + "/table"
     export_delta(sl(0, 600), dest)
     app = "orders-ingest"
     assert export_delta_append(sl(600, 900), dest, app_id=app, txn_version=0)[
@@ -3804,10 +3664,7 @@ def delta_export_txn_idempotence(spark: SparkSession, sf_dir: str) -> DataFrame:
         "skipped"
     ]
     back = DeltaLogReader(spark, dest).read()
-    return back.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(back)
 
 
 # ---------------------------------------------------------------------------
@@ -3860,8 +3717,6 @@ def delta_export_txn_idempotence(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Oracle rebuilds the exact feed from raw orders.",
 )
 def delta_export_cdf_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.delta_export import (
         export_delta,
         export_delta_append,
@@ -3874,7 +3729,7 @@ def delta_export_cdf_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     k = F.col("o_orderkey")
-    dest = tempfile.mkdtemp(prefix="exp_cdf_") + "/table"
+    dest = scratch_dir(spark, "exp_cdf_") + "/table"
     export_delta(base.where(k <= 400), dest, cdf=True)
     export_delta_append(base.where((k > 400) & (k <= 800)), dest)
     upd = base.where((k % 7 == 0) & (k <= 900)).withColumn(
@@ -3928,13 +3783,12 @@ def delta_export_cdf_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 def delta_interop_cdf_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os
-    import tempfile
 
     from data_etl_pipeline_spark.sources.delta_reader import DeltaLogReader
 
     base = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     k = F.col("o_orderkey")
-    tbl = tempfile.mkdtemp(prefix="delta_cdf_foreign_")
+    tbl = scratch_dir(spark, "delta_cdf_foreign_")
     os.makedirs(os.path.join(tbl, "_delta_log"))
     a = base.where(k <= 300)
     _write_single_parquet(a, tbl, "a.parquet")
@@ -4019,7 +3873,7 @@ def delta_interop_cdf_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "delta_cdf_materialized_view",
-    headline2=True,
+    bench_tier=2,
     sql="""
     WITH final AS (
         SELECT o_orderstatus,
@@ -4039,8 +3893,6 @@ def delta_interop_cdf_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     "v0. Oracle aggregates the final table state directly.",
 )
 def delta_cdf_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.delta_export import (
         export_delta,
         export_delta_delete,
@@ -4052,7 +3904,7 @@ def delta_cdf_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     k = F.col("o_orderkey")
-    dest = tempfile.mkdtemp(prefix="exp_cdf_mv_") + "/table"
+    dest = scratch_dir(spark, "exp_cdf_mv_") + "/table"
     export_delta(base.where(k <= 1200), dest, cdf=True)
     upd = base.where((k <= 1200) & (k % 11 == 3)).withColumn(
         "o_totalprice", F.col("o_totalprice") * 2
@@ -4118,8 +3970,6 @@ def delta_cdf_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     "raw orders.",
 )
 def stream_cdf_delta_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import Window as W
 
     from data_etl_pipeline_spark.sources.delta_export import (
@@ -4135,8 +3985,8 @@ def stream_cdf_delta_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     k = F.col("o_orderkey")
-    src = tempfile.mkdtemp(prefix="cdcmirror_src_") + "/table"
-    dst = VersionedTable(spark, tempfile.mkdtemp(prefix="cdcmirror_dst_"))
+    src = scratch_dir(spark, "cdcmirror_src_") + "/table"
+    dst = VersionedTable(spark, scratch_dir(spark, "cdcmirror_dst_"))
     export_delta(base.where(k < 700), src, cdf=True)
     reader = DeltaLogReader(spark, src)
     cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
@@ -4319,8 +4169,6 @@ def video_header_info_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     "merge attempts refuse in-query without moving the version.",
 )
 def delta_export_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.delta_export import (
         DeltaExportError,
         export_delta,
@@ -4337,7 +4185,7 @@ def delta_export_check_constraints(spark: SparkSession, sf_dir: str) -> DataFram
         "o_totalprice",
     )
     k = F.col("o_orderkey")
-    dest = tempfile.mkdtemp(prefix="exp_chk_") + "/table"
+    dest = scratch_dir(spark, "exp_chk_") + "/table"
     cons = {
         "price_positive": "o_totalprice > 0",
         "status_known": "o_orderstatus in ('O', 'F', 'P')",  # NULL passes
@@ -4413,8 +4261,6 @@ def delta_export_check_constraints(spark: SparkSession, sf_dir: str) -> DataFram
     "assignment in SQL.",
 )
 def pysource_batch_results(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql.datasource import EqualTo
 
     from data_etl_pipeline_spark.sources import pysource
@@ -4431,7 +4277,7 @@ def pysource_batch_results(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderkey")
         .collect()  # bounded: < 800 ids by construction
     ]
-    d = tempfile.mkdtemp(prefix="pysrc_results_")
+    d = scratch_dir(spark, "pysrc_results_")
     pysource.write_result_fixture(rows, d, n_shards=4)
 
     # planner-surface proof: a pushed shard equality prunes to ONE file
@@ -4559,7 +4405,6 @@ def observed_quality_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_pysource_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import shutil
-    import tempfile
 
     from data_etl_pipeline_spark.sources import pysource
 
@@ -4575,10 +4420,10 @@ def stream_pysource_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderkey")
         .collect()  # bounded: < 800 ids by construction
     ]
-    staging = tempfile.mkdtemp(prefix="pysrc_staging_")
+    staging = scratch_dir(spark, "pysrc_staging_")
     pysource.write_result_fixture(rows, staging, n_shards=4)
-    live = tempfile.mkdtemp(prefix="pysrc_live_")
-    sink = tempfile.mkdtemp(prefix="pysrc_sink_")
+    live = scratch_dir(spark, "pysrc_live_")
+    sink = scratch_dir(spark, "pysrc_sink_")
 
     def land(shards):
         for s in shards:
@@ -4642,7 +4487,6 @@ def stream_pysource_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def delta_export_v2_checkpoint_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import tempfile
 
     from data_etl_pipeline_spark.sources.delta_export import (
         checkpoint_export_v2,
@@ -4655,7 +4499,7 @@ def delta_export_v2_checkpoint_roundtrip(spark: SparkSession, sf_dir: str) -> Da
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     k = F.col("o_orderkey")
-    dest = tempfile.mkdtemp(prefix="v2cp_write_") + "/table"
+    dest = scratch_dir(spark, "v2cp_write_") + "/table"
     export_delta(base.where(k < 500).repartition(3), dest)
     export_delta_append(base.where((k >= 500) & (k < 900)).repartition(2), dest)
     export_delta_append(base.where((k >= 900) & (k < 1200)).repartition(2), dest)
@@ -4677,10 +4521,7 @@ def delta_export_v2_checkpoint_roundtrip(spark: SparkSession, sf_dir: str) -> Da
     reader = DeltaLogReader(spark, dest)
     assert len(reader.live_files()) == 7  # 3 + 2 + 2 files, all live
     got = reader.read()
-    return got.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(got)
 
 
 # ---------------------------------------------------------------------------
@@ -4710,7 +4551,6 @@ def delta_export_v2_checkpoint_roundtrip(spark: SparkSession, sf_dir: str) -> Da
 )
 def delta_export_v2_checkpoint_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import tempfile
 
     from data_etl_pipeline_spark.sources.delta_export import (
         checkpoint_export_v2,
@@ -4724,7 +4564,7 @@ def delta_export_v2_checkpoint_incremental(spark: SparkSession, sf_dir: str) -> 
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     k = F.col("o_orderkey")
-    dest = tempfile.mkdtemp(prefix="v2cp_incr_") + "/table"
+    dest = scratch_dir(spark, "v2cp_incr_") + "/table"
     export_delta(base.where(k < 500).repartition(3), dest)
     export_delta_append(base.where((k >= 500) & (k < 900)).repartition(2), dest)
     cp1 = checkpoint_export_v2(spark, dest, n_sidecars=2)  # upgrade commit = v2
@@ -4746,10 +4586,7 @@ def delta_export_v2_checkpoint_incremental(spark: SparkSession, sf_dir: str) -> 
     reader = DeltaLogReader(spark, dest)
     assert len(reader.live_files()) == 7  # 3 + 2 + 2, all live
     got = reader.read()
-    return got.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(got)
 
 
 # ---------------------------------------------------------------------------
@@ -4780,8 +4617,6 @@ def delta_export_v2_checkpoint_incremental(spark: SparkSession, sf_dir: str) -> 
     "refuse; merged snapshot oracle-checked.",
 )
 def delta_export_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.delta_export import (
         DeltaExportError,
         export_delta,
@@ -4792,7 +4627,7 @@ def delta_export_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
 
     base = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     k = F.col("o_orderkey")
-    dest = tempfile.mkdtemp(prefix="evolve_") + "/table"
+    dest = scratch_dir(spark, "evolve_") + "/table"
     export_delta(base.where(k < 600), dest)
     v = export_delta_evolve_add_column(spark, dest, "prio_flag", "bigint")
     assert v == 1
@@ -4890,7 +4725,6 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def delta_export_v2_checkpoint_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import tempfile
 
     import pyarrow.parquet as pq
 
@@ -4907,7 +4741,7 @@ def delta_export_v2_checkpoint_partitioned(spark: SparkSession, sf_dir: str) -> 
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     k = F.col("o_orderkey")
-    dest = tempfile.mkdtemp(prefix="v2cp_part_") + "/table"
+    dest = scratch_dir(spark, "v2cp_part_") + "/table"
     export_delta(
         base.where(k < 500).repartition(2), dest, partition_by=["o_orderstatus"]
     )
@@ -4940,10 +4774,7 @@ def delta_export_v2_checkpoint_partitioned(spark: SparkSession, sf_dir: str) -> 
 
     reader = DeltaLogReader(spark, dest)
     got = reader.read()
-    return got.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(got)
 
 
 # ---------------------------------------------------------------------------
@@ -4972,7 +4803,7 @@ _TDIFF_ROW = (
 
 @query(
     "table_diff_bucket_checksums",
-    headline2=True,
+    bench_tier=2,
     sql=f"""
     WITH src AS (
       SELECT o_orderkey, o_custkey, o_orderstatus, o_orderpriority,
@@ -5147,8 +4978,6 @@ def table_diff_bucket_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     round_added=11,
 )
 def iceberg_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.iceberg import (
         IcebergTable,
         append_iceberg,
@@ -5160,15 +4989,12 @@ def iceberg_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") < 1200)
         .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate")
     )
-    dest = tempfile.mkdtemp(prefix="ice_rt_") + "/table"
+    dest = scratch_dir(spark, "ice_rt_") + "/table"
     export_iceberg(src.where(F.col("o_orderkey") < 700), dest, n_files=2, range_by="o_orderkey")
     append_iceberg(src.where(F.col("o_orderkey") >= 700), dest, n_files=2, range_by="o_orderkey")
 
     back = IcebergTable(spark, dest).read()
-    return back.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(back)
 
 
 @query(
@@ -5189,8 +5015,6 @@ def iceberg_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     round_added=11,
 )
 def iceberg_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.iceberg import (
         IcebergTable,
         append_iceberg,
@@ -5202,7 +5026,7 @@ def iceberg_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") < 1100)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    dest = tempfile.mkdtemp(prefix="ice_tt_") + "/table"
+    dest = scratch_dir(spark, "ice_tt_") + "/table"
     s1 = export_iceberg(src.where(F.col("o_orderkey") < 600), dest, n_files=2, range_by="o_orderkey")
     s2 = append_iceberg(src.where(F.col("o_orderkey") >= 600), dest, n_files=2, range_by="o_orderkey")
 
@@ -5237,8 +5061,6 @@ def iceberg_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     round_added=11,
 )
 def iceberg_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.iceberg import IcebergTable, export_iceberg
 
     src = (
@@ -5246,7 +5068,7 @@ def iceberg_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("l_orderkey") < 1300)
         .select("l_orderkey", "l_returnflag", "l_extendedprice")
     )
-    dest = tempfile.mkdtemp(prefix="ice_skip_") + "/table"
+    dest = scratch_dir(spark, "ice_skip_") + "/table"
     export_iceberg(src, dest, n_files=8, range_by="l_orderkey")
 
     t = IcebergTable(spark, dest)
@@ -5293,8 +5115,6 @@ def iceberg_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     round_added=12,
 )
 def iceberg_positional_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.iceberg import (
         IcebergTable,
         delete_rows_iceberg,
@@ -5306,7 +5126,7 @@ def iceberg_positional_delete_read(spark: SparkSession, sf_dir: str) -> DataFram
         .where(F.col("o_orderkey") < 1200)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    dest = tempfile.mkdtemp(prefix="ice_del_") + "/table"
+    dest = scratch_dir(spark, "ice_del_") + "/table"
     s1 = export_iceberg(src, dest, n_files=4, range_by="o_orderkey")
     s2 = delete_rows_iceberg(
         spark, dest, "o_orderstatus = 'F' AND o_orderkey % 7 = 0"
@@ -5317,14 +5137,7 @@ def iceberg_positional_delete_read(spark: SparkSession, sf_dir: str) -> DataFram
     # snapshot is untouched (deletes live in snapshot 2's manifest list)
     assert len(t.delete_files(s2)) == 1 and t.delete_files(s1) == []
 
-    return (
-        t.read()
-        .groupBy(F.col("o_orderstatus").alias("status"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-        )
-    )
+    return _status_totals(t.read())
 
 
 @query(
@@ -5348,8 +5161,6 @@ def iceberg_positional_delete_read(spark: SparkSession, sf_dir: str) -> DataFram
     round_added=12,
 )
 def iceberg_incremental_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.iceberg import (
         IcebergTable,
         append_iceberg,
@@ -5361,7 +5172,7 @@ def iceberg_incremental_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") < 1200)
         .select("o_orderkey", "o_totalprice")
     )
-    dest = tempfile.mkdtemp(prefix="ice_tail_") + "/table"
+    dest = scratch_dir(spark, "ice_tail_") + "/table"
     s1 = export_iceberg(src.where(F.col("o_orderkey") < 400), dest, n_files=2, range_by="o_orderkey")
     append_iceberg(
         src.where((F.col("o_orderkey") >= 400) & (F.col("o_orderkey") < 800)),
@@ -5402,12 +5213,10 @@ def iceberg_incremental_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     round_added=12,
 )
 def iceberg_truncate_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.iceberg import IcebergTable, export_iceberg
 
     src = load(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_retailprice")
-    dest = tempfile.mkdtemp(prefix="ice_trunc_") + "/table"
+    dest = scratch_dir(spark, "ice_trunc_") + "/table"
     export_iceberg(src, dest, partition_by="p_brand", transform="truncate[7]")
 
     t = IcebergTable(spark, dest)
@@ -5451,7 +5260,6 @@ def iceberg_truncate_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def iceberg_year_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
-    import tempfile
 
     from data_etl_pipeline_spark.sources.iceberg import IcebergTable, export_iceberg
 
@@ -5460,7 +5268,7 @@ def iceberg_year_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") < 3000)
         .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate")
     )
-    dest = tempfile.mkdtemp(prefix="ice_year_") + "/table"
+    dest = scratch_dir(spark, "ice_year_") + "/table"
     export_iceberg(src, dest, partition_by="o_orderdate", transform="year")
 
     t = IcebergTable(spark, dest)
@@ -5469,16 +5277,11 @@ def iceberg_year_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert 0 < len(selected) < total, (len(selected), total)
     assert {f["partition"]["o_orderdate_year"] for f in selected} == {26, 27}
 
-    return (
+    return _status_totals(
         t.read(files=selected)
         .where(
             (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
             & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
-        )
-        .groupBy(F.col("o_orderstatus").alias("status"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
         )
     )
 
@@ -5501,8 +5304,6 @@ def iceberg_year_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
     round_added=12,
 )
 def iceberg_bucket_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.iceberg import IcebergTable, export_iceberg
 
     src = (
@@ -5510,7 +5311,7 @@ def iceberg_bucket_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") < 1500)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    dest = tempfile.mkdtemp(prefix="ice_bucket_") + "/table"
+    dest = scratch_dir(spark, "ice_bucket_") + "/table"
     export_iceberg(src, dest, partition_by="o_orderkey", transform="bucket[8]")
 
     t = IcebergTable(spark, dest)
@@ -5551,7 +5352,6 @@ def iceberg_bucket_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def iceberg_compact_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import tempfile
 
     from data_etl_pipeline_spark.sources.iceberg import (
         IcebergTable,
@@ -5566,7 +5366,7 @@ def iceberg_compact_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") < 1200)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    dest = tempfile.mkdtemp(prefix="ice_gc_") + "/table"
+    dest = scratch_dir(spark, "ice_gc_") + "/table"
     export_iceberg(src, dest, n_files=4, range_by="o_orderkey")
     delete_rows_iceberg(spark, dest, "o_orderstatus = 'O' AND o_orderkey % 9 = 4")
     old_files = [
@@ -5578,15 +5378,7 @@ def iceberg_compact_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert res["files_removed"] == 5 and res["expired_snapshots"] == [1, 2]
     assert all(not _os.path.exists(p) for p in old_files)
 
-    return (
-        IcebergTable(spark, dest)
-        .read()
-        .groupBy(F.col("o_orderstatus").alias("status"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-        )
-    )
+    return _status_totals(IcebergTable(spark, dest).read())
 
 
 @query(
@@ -5611,8 +5403,6 @@ def iceberg_compact_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     round_added=12,
 )
 def iceberg_equality_delete_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.iceberg import (
         IcebergTable,
         append_iceberg,
@@ -5625,7 +5415,7 @@ def iceberg_equality_delete_upsert(spark: SparkSession, sf_dir: str) -> DataFram
         .where(F.col("o_orderkey") < 1200)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    dest = tempfile.mkdtemp(prefix="ice_eq_") + "/table"
+    dest = scratch_dir(spark, "ice_eq_") + "/table"
     export_iceberg(src, dest, n_files=4, range_by="o_orderkey")
     delete_rows_iceberg(spark, dest, "o_orderkey % 11 = 3", equality_by=["o_orderkey"])
     # the upsert: re-insert a subset of the deleted keys AFTER the delete
@@ -5639,14 +5429,7 @@ def iceberg_equality_delete_upsert(spark: SparkSession, sf_dir: str) -> DataFram
     assert len(dels) == 1 and dels[0]["content"] == 2
     assert dels[0]["equality_ids"] == [1]  # o_orderkey's field id
 
-    return (
-        t.read()
-        .groupBy(F.col("o_orderstatus").alias("status"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-        )
-    )
+    return _status_totals(t.read())
 
 
 @query(
@@ -5669,8 +5452,6 @@ def iceberg_equality_delete_upsert(spark: SparkSession, sf_dir: str) -> DataFram
     round_added=12,
 )
 def iceberg_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.iceberg import IcebergTable, export_iceberg
 
     src = (
@@ -5686,7 +5467,7 @@ def iceberg_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.create_map(F.lit("price"), F.col("o_totalprice")).alias("kv"),
         )
     )
-    dest = tempfile.mkdtemp(prefix="ice_nested_") + "/table"
+    dest = scratch_dir(spark, "ice_nested_") + "/table"
     export_iceberg(src, dest, n_files=3, range_by="o_orderkey")
 
     t = IcebergTable(spark, dest)
@@ -5757,7 +5538,6 @@ def iceberg_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def iceberg_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
-    import tempfile
 
     from data_etl_pipeline_spark.sources.iceberg import (
         IcebergTable,
@@ -5771,7 +5551,7 @@ def iceberg_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") < 3000)
         .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate")
     )
-    dest = tempfile.mkdtemp(prefix="ice_specevo_") + "/table"
+    dest = scratch_dir(spark, "ice_specevo_") + "/table"
     # parity split so both halves are non-empty at every scale factor
     export_iceberg(
         src.where(F.col("o_orderkey") % 2 == 0), dest, partition_by="o_orderstatus"
@@ -5800,16 +5580,11 @@ def iceberg_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assert 0 < len(sel_d) < total
 
-    return (
+    return _status_totals(
         t.read(files=sel_d)
         .where(
             (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
             & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
-        )
-        .groupBy(F.col("o_orderstatus").alias("status"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
         )
     )
 
@@ -5839,8 +5614,6 @@ def iceberg_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     round_added=12,
 )
 def iceberg_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.iceberg import (
         IcebergTable,
         append_iceberg,
@@ -5853,7 +5626,7 @@ def iceberg_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") < 3000)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    dest = tempfile.mkdtemp(prefix="ice_wap_") + "/table"
+    dest = scratch_dir(spark, "ice_wap_") + "/table"
     export_iceberg(src.where(F.col("o_orderkey") % 2 == 0), dest, n_files=2)
     n_main = IcebergTable(spark, dest).read().count()
 
@@ -5870,15 +5643,7 @@ def iceberg_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # PUBLISH: metadata-only fast-forward of main to the audited head
     fast_forward_iceberg(dest, "audit")
-    return (
-        IcebergTable(spark, dest)
-        .read()
-        .groupBy(F.col("o_orderstatus").alias("status"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-        )
-    )
+    return _status_totals(IcebergTable(spark, dest).read())
 
 
 # ---------------------------------------------------------------------------
@@ -5908,7 +5673,6 @@ def iceberg_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def iceberg_to_delta_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
-    import tempfile
 
     from data_etl_pipeline_spark.sources.delta_export import (
         convert_iceberg_to_delta,
@@ -5925,7 +5689,7 @@ def iceberg_to_delta_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") < 2000)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    base = tempfile.mkdtemp(prefix="ice2delta_")
+    base = scratch_dir(spark, "ice2delta_")
     ice, delta = base + "/iceberg", base + "/delta"
     export_iceberg(src.where(F.col("o_orderkey") % 2 == 0), ice, n_files=2,
                    range_by="o_orderkey")
@@ -5940,10 +5704,7 @@ def iceberg_to_delta_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader = DeltaLogReader(spark, delta)
     got = reader.read()
     assert got.count() == IcebergTable(spark, ice).read().count()
-    return got.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(got)
 
 
 # ---------------------------------------------------------------------------
@@ -5973,8 +5734,6 @@ def iceberg_to_delta_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     round_added=12,
 )
 def stream_iceberg_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources import iceberg_stream
     from data_etl_pipeline_spark.sources.iceberg import (
         append_iceberg,
@@ -5986,7 +5745,7 @@ def stream_iceberg_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") < 2000)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    base = tempfile.mkdtemp(prefix="ice_stream_")
+    base = scratch_dir(spark, "ice_stream_")
     table, sink = base + "/table", base + "/sink"
     export_iceberg(
         src.where(F.col("o_orderkey") % 2 == 0), table, n_files=2,
@@ -6020,10 +5779,7 @@ def stream_iceberg_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("_commit_snapshot").distinct().collect()
     }
     assert first_snaps == {1}, first_snaps
-    return got.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(got)
 
 
 # ---------------------------------------------------------------------------
@@ -6051,7 +5807,6 @@ def stream_iceberg_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_iceberg_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from data_etl_pipeline_spark.sources import iceberg_stream
     from data_etl_pipeline_spark.sources.iceberg import (
@@ -6066,7 +5821,7 @@ def stream_iceberg_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") < 2000)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    base = tempfile.mkdtemp(prefix="ice_repl_")
+    base = scratch_dir(spark, "ice_repl_")
     upstream, replica = base + "/up", base + "/replica"
     export_iceberg(src.where(F.col("o_orderkey") % 2 == 0), upstream, n_files=2,
                    range_by="o_orderkey")
@@ -6104,10 +5859,7 @@ def stream_iceberg_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     got = IcebergTable(spark, replica).read()
     assert got.count() == IcebergTable(spark, upstream).read().count()
-    return got.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(got)
 
 
 # ---------------------------------------------------------------------------
@@ -6135,8 +5887,6 @@ def stream_iceberg_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
     round_added=12,
 )
 def iceberg_rewrite_manifests(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.iceberg import (
         IcebergTable,
         append_iceberg,
@@ -6149,7 +5899,7 @@ def iceberg_rewrite_manifests(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") < 2000)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    dest = tempfile.mkdtemp(prefix="ice_rwm_") + "/table"
+    dest = scratch_dir(spark, "ice_rwm_") + "/table"
     export_iceberg(src.where(F.col("o_orderkey") % 5 == 0), dest)
     for r in (1, 2, 3, 4):
         append_iceberg(src.where(F.col("o_orderkey") % 5 == r), dest)
@@ -6163,10 +5913,7 @@ def iceberg_rewrite_manifests(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert got.count() == before
     # the rewrite snapshot is invisible to the incremental tail
     assert all(sid != res["snapshot_id"] for sid, _ in t.added_files(1))
-    return got.groupBy(F.col("o_orderstatus").alias("status")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-    )
+    return _status_totals(got)
 
 
 # ---------------------------------------------------------------------------
@@ -6201,7 +5948,6 @@ def iceberg_rewrite_manifests(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pysource_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from data_etl_pipeline_spark.sources import pysource
 
@@ -6216,7 +5962,7 @@ def pysource_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "'resp-' || CAST(o_orderkey AS STRING) AS body",
         )
     )
-    d = tempfile.mkdtemp(prefix="pysrc_writer_") + "/out"
+    d = scratch_dir(spark, "pysrc_writer_") + "/out"
     src.repartition(4).write.format("batch_results").option("path", d).mode(
         "append"
     ).save()
@@ -6283,7 +6029,6 @@ def pysource_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_pysource_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
-    import tempfile
 
     from data_etl_pipeline_spark.sources import pysource
 
@@ -6299,11 +6044,11 @@ def stream_pysource_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderkey")
         .collect()  # bounded: < 800 ids by construction
     ]
-    staging = tempfile.mkdtemp(prefix="pypipe_fixture_")
+    staging = scratch_dir(spark, "pypipe_fixture_")
     pysource.write_result_fixture(rows, staging, n_shards=4)
-    live = tempfile.mkdtemp(prefix="pypipe_live_")
-    sink = tempfile.mkdtemp(prefix="pypipe_sink_") + "/out"
-    ckpt = tempfile.mkdtemp(prefix="pypipe_ckpt_")
+    live = scratch_dir(spark, "pypipe_live_")
+    sink = scratch_dir(spark, "pypipe_sink_") + "/out"
+    ckpt = scratch_dir(spark, "pypipe_ckpt_")
 
     def land(shards):
         for s in shards:
@@ -6383,8 +6128,6 @@ def stream_pysource_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     round_added=12,
 )
 def iceberg_partitions_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.iceberg import (
         IcebergTable,
         append_iceberg,
@@ -6397,7 +6140,7 @@ def iceberg_partitions_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") < 2000)
         .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate")
     )
-    dest = tempfile.mkdtemp(prefix="ice_meta_") + "/table"
+    dest = scratch_dir(spark, "ice_meta_") + "/table"
     export_iceberg(
         src.where(F.col("o_orderkey") % 2 == 0), dest, partition_by="o_orderstatus"
     )
@@ -6439,8 +6182,6 @@ def iceberg_partitions_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     round_added=12,
 )
 def iceberg_timestamp_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.iceberg import (
         IcebergTable,
         append_iceberg,
@@ -6452,7 +6193,7 @@ def iceberg_timestamp_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") < 2000)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    dest = tempfile.mkdtemp(prefix="ice_asof_") + "/table"
+    dest = scratch_dir(spark, "ice_asof_") + "/table"
     export_iceberg(src.where(F.col("o_orderkey") % 2 == 0), dest, n_files=2)
     ts1 = IcebergTable(spark, dest).meta["snapshot-log"][-1]["timestamp-ms"]
     append_iceberg(src.where(F.col("o_orderkey") % 2 == 1), dest)
@@ -6463,14 +6204,7 @@ def iceberg_timestamp_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert sid == 1, sid
     # the branch commit never entered the log: as-of-now is main's head
     assert len(t.meta["snapshot-log"]) == 2
-    return (
-        t.read(snapshot_id=sid)
-        .groupBy(F.col("o_orderstatus").alias("status"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-        )
-    )
+    return _status_totals(t.read(snapshot_id=sid))
 
 
 # ---------------------------------------------------------------------------
@@ -6501,8 +6235,6 @@ def iceberg_timestamp_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     round_added=12,
 )
 def iceberg_rollback_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.iceberg import (
         IcebergError,
         IcebergTable,
@@ -6517,7 +6249,7 @@ def iceberg_rollback_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") < 2000)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    dest = tempfile.mkdtemp(prefix="ice_rb_") + "/table"
+    dest = scratch_dir(spark, "ice_rb_") + "/table"
     export_iceberg(src.where(F.col("o_orderkey") % 3 == 0), dest, n_files=2)
     # the BAD wave: prices corrupted upstream
     append_iceberg(
@@ -6538,11 +6270,4 @@ def iceberg_rollback_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError("abandoned snapshot still readable")
     except IcebergError:
         pass
-    return (
-        t.read()
-        .groupBy(F.col("o_orderstatus").alias("status"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-        )
-    )
+    return _status_totals(t.read())

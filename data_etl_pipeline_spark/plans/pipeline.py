@@ -28,6 +28,7 @@ from data_etl_pipeline_spark.operators import (
     textstats,
 )
 from data_etl_pipeline_spark.plans.registry import query
+from data_etl_pipeline_spark.session import scratch_dir
 from data_etl_pipeline_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -99,7 +100,7 @@ def doc_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE ROUND(n_common / (sa.n_shingles + sb.n_shingles - n_common), 6) >= 0.8
     """,
     doc="Exact 3-gram Jaccard near-dup pairs via inverted-index self-join.",
-    headline=True,
+    bench_tier=1,
 )
 def doc_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.ngram_jaccard_pairs(load(spark, sf_dir, "documents"), threshold=0.8)
@@ -175,7 +176,7 @@ def doc_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE est_similarity >= 0.5
     """,
     doc="Banded MinHash-LSH near-dup candidates (the 100 TB-scale dedup path).",
-    headline=True,
+    bench_tier=1,
 )
 def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.lsh_candidate_pairs(load(spark, sf_dir, "documents"), bands=4, min_est=0.5)
@@ -497,7 +498,7 @@ def embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rank <= 5
     """,
     doc="Exact top-5 cosine neighbors for 10 query vectors (broadcast scan).",
-    headline=True,
+    bench_tier=1,
 )
 def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ann_topk_bruteforce(load(spark, sf_dir, "embeddings"), n_queries=10, k=5)
@@ -583,11 +584,9 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     "amortizes to once per corpus version, probes read pruned files.",
 )
 def ann_topk_lsh_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
 
-    idx = VersionedTable(spark, tempfile.mkdtemp(prefix="lsh-index-"))
+    idx = VersionedTable(spark, scratch_dir(spark, "lsh-index-"))
     similarity.build_lsh_index(load(spark, sf_dir, "embeddings"), idx)
     return similarity.lsh_probe_persisted(idx.read(), n_queries=10, k=5)
 
@@ -600,15 +599,14 @@ def ann_topk_lsh_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fresh), and the oracle is a from-scratch index over the survivors — "
     "a probe returning any deleted neighbor fails the hash. Same "
     "index-vs-corpus consistency contract as bm25_postings_gc_search.",
+    bench_tier=3,
 )
 def ann_lsh_gc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
 
-    corpus = VersionedTable(spark, tempfile.mkdtemp(prefix="lsh-corpus-"))
+    corpus = VersionedTable(spark, scratch_dir(spark, "lsh-corpus-"))
     corpus.write(load(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
-    idx = VersionedTable(spark, tempfile.mkdtemp(prefix="lsh-gc-index-"))
+    idx = VersionedTable(spark, scratch_dir(spark, "lsh-gc-index-"))
     similarity.build_lsh_index(corpus.read(), idx)
     v0 = corpus.latest_version()
     corpus.delete_where_dv(F.pmod("vec_id", F.lit(9)) == 4)
@@ -645,7 +643,7 @@ def ann_lsh_gc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="IVF ANN: stride-sampled centroids, nearest-cell assignment, "
     "nprobe-cell probing with exact rerank (the scale path where probing "
     "scans ~nprobe/n_centroids of the corpus).",
-    headline=True,
+    bench_tier=1,
 )
 def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ann_topk_ivf(
@@ -715,11 +713,9 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus-wide aggregation on the probe plan (asserted in tests).",
 )
 def ann_topk_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
 
-    idx = VersionedTable(spark, tempfile.mkdtemp(prefix="ivf-index-"))
+    idx = VersionedTable(spark, scratch_dir(spark, "ivf-index-"))
     similarity.build_ivf_index(load(spark, sf_dir, "embeddings"), idx, stride=25)
     return similarity.ivf_probe_persisted(idx.read(), n_queries=10, k=4, stride=25, nprobe=2)
 
@@ -1493,14 +1489,12 @@ def doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rescanned — the per-batch cost is the batch's own signatures.",
 )
 def incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
 
     docs = load(spark, sf_dir, "documents")
     old = docs.where(F.pmod(F.col("doc_id"), F.lit(5)) != 0)
     new = docs.where(F.pmod(F.col("doc_id"), F.lit(5)) == 0)
-    t = VersionedTable(spark, tempfile.mkdtemp(prefix="band-index-"))
+    t = VersionedTable(spark, scratch_dir(spark, "band-index-"))
     t.write(dedup.minhash_band_index(old), cluster_by=["band"])
     status, delta = dedup.incremental_minhash_dedup(t.read(), new)
     t.merge(delta, keys=["doc_id", "band"])  # next batch dedups against these too
@@ -2212,7 +2206,7 @@ def cross_source_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "doc_repeated_substrings",
-    headline2=True,
+    bench_tier=2,
     sql="""
     WITH words AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
     occ AS (
@@ -2345,7 +2339,7 @@ def doc_nb_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "semantic_dedup",
-    headline2=True,
+    bench_tier=2,
     sql=f"""
     WITH RECURSIVE e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     d1 AS (SELECT vec_id + 100000 AS vec_id, v FROM e WHERE vec_id % 25 = 0),
@@ -2566,8 +2560,6 @@ def embedding_norms_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     "replays packing, shard hashing, and the manifest aggregates.",
 )
 def training_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.functions.hashing import md5_int60
 
     packed = packing.pack_sequences(
@@ -2582,7 +2574,7 @@ def training_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             md5_int60("concat(source, ':', cast(bin as string))"), F.lit(16)
         ).alias("out_shard"),
     )
-    out = tempfile.mkdtemp(prefix="train_shards_")
+    out = scratch_dir(spark, "train_shards_")
     keyed.write.mode("overwrite").partitionBy("out_shard").parquet(out)
     back = spark.read.parquet(out)
     return back.groupBy(F.col("out_shard").cast("bigint").alias("out_shard")).agg(
@@ -3112,13 +3104,11 @@ def corpus_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     "postings and tokenizes nothing.",
 )
 def bm25_persisted_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.operators.search import bm25_search, build_postings
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
 
     docs = load(spark, sf_dir, "documents")
-    t = VersionedTable(spark, tempfile.mkdtemp(prefix="bm25_idx_"))
+    t = VersionedTable(spark, scratch_dir(spark, "bm25_idx_"))
     for b in range(3):
         batch = docs.where(F.pmod("doc_id", F.lit(3)) == b)
         postings = build_postings(batch)
@@ -3175,8 +3165,6 @@ def bm25_persisted_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     "and the oracle is a from-scratch rebuild over the survivors.",
 )
 def bm25_postings_gc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from data_etl_pipeline_spark.operators.search import (
         bm25_search,
         build_postings,
@@ -3185,9 +3173,9 @@ def bm25_postings_gc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = VersionedTable(spark, tempfile.mkdtemp(prefix="bm25_corpus_"))
+    corpus = VersionedTable(spark, scratch_dir(spark, "bm25_corpus_"))
     corpus.write(docs)
-    index = VersionedTable(spark, tempfile.mkdtemp(prefix="bm25_gc_idx_"))
+    index = VersionedTable(spark, scratch_dir(spark, "bm25_gc_idx_"))
     index.write(build_postings(corpus.read()), cluster_by=["term"])
     # a DV delete on the corpus: files keep their paths, deleted rows die
     # via the deletion-vector sidecar — the exact case that leaves stale

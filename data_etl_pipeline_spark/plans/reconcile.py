@@ -125,7 +125,7 @@ _V_ARR_SQL = "[" + _V_LIST + "]"
     FROM unioned GROUP BY doc_id
     """,
     doc="Two-phase concept pipeline: search -> J8 label match -> J9 mapping validation -> A1 merge (SURVEY §3.3/ST4).",
-    headline=True,
+    bench_tier=1,
 )
 def two_phase_concept_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")

@@ -4,8 +4,7 @@ SURVEY.md §2 plus the LLM-pipeline extensions.
 Each spec pairs
   * ``fn(spark, sf_dir) -> DataFrame`` — the Spark-first implementation, and
   * ``sql`` — the equivalent ANSI SQL the DuckDB oracle runs on the same
-    parquet tables (None for genuinely non-SQL-expressible ops; the driver
-    then records a weaker rows-only check).
+    parquet tables.
 
 Float determinism contract (the driver hash-compares values):
   * money/quantity sums go through exact DECIMAL accumulation and are cast
@@ -28,14 +27,15 @@ from pyspark.sql import DataFrame, SparkSession
 class QuerySpec:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
-    sql: str | None  # DuckDB oracle; None -> rows-only check
+    sql: str  # DuckDB oracle
     doc: str = ""
-    headline: bool = False  # bench.py tier 1: the round-1 twelve (trend anchor)
-    # bench.py tier 2 (round 10): heavies from the modern surface (Delta
-    # lifecycle, semantic dedup, suffix-array substrings, table diff),
-    # reported as a SEPARATE total so the r1-anchored tier-1 trend stays
-    # comparable across all rounds
-    headline2: bool = False
+    # bench.py tier, each reported as its own total so tier 1's trend stays
+    # comparable across rounds: 1 = the round-1 twelve (trend anchor);
+    # 2 = heavies from the modern surface (Delta lifecycle, semantic dedup,
+    # suffix-array substrings, table diff); 3 = the two slowest
+    # driver-visible rows (the ts-ordered stateful-TTL stream replay and
+    # the persisted-LSH-index GC lifecycle). None = not benched.
+    bench_tier: int | None = None
     # Round in which the query was first declared. Only set for queries
     # added from round 8 on (earlier ones default to 0); the rotation
     # script sorts never-driver-tested queries by this so NEW queries
@@ -48,10 +48,9 @@ QUERIES: dict[str, QuerySpec] = {}
 
 def query(
     name: str,
-    sql: str | None,
+    sql: str,
     doc: str = "",
-    headline: bool = False,
-    headline2: bool = False,
+    bench_tier: int | None = None,
     round_added: int = 0,
 ):
     """Decorator registering a declared query."""
@@ -62,8 +61,7 @@ def query(
             fn=fn,
             sql=sql,
             doc=doc,
-            headline=headline,
-            headline2=headline2,
+            bench_tier=bench_tier,
             round_added=round_added,
         )
         return fn
@@ -158,7 +156,7 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def all_oracle_sql() -> dict[str, str]:
     _ensure_loaded()
-    return {name: QUERIES[name].sql for name in _ordered() if QUERIES[name].sql is not None}
+    return {name: QUERIES[name].sql for name in _ordered()}
 
 
 _LOADED = False

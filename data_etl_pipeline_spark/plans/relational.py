@@ -26,6 +26,7 @@ from data_etl_pipeline_spark.plans.planassert import (
     optimized_plan,
 )
 from data_etl_pipeline_spark.plans.registry import query
+from data_etl_pipeline_spark.session import scratch_dir
 from data_etl_pipeline_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -66,7 +67,7 @@ def _one():
     GROUP BY l_returnflag, l_linestatus
     """,
     doc="TPC-H Q1 shape: multi-agg rollup with decimal-exact sums (SURVEY A5).",
-    headline=True,
+    bench_tier=1,
 )
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
@@ -188,7 +189,7 @@ def quantity_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n_name
     """,
     doc="Multi-hop composite equi-join star query (SURVEY J5) w/ broadcast dims.",
-    headline=True,
+    bench_tier=1,
 )
 def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load(spark, sf_dir, "customer")
@@ -558,7 +559,7 @@ def event_props_json_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY date_trunc('hour', ts), event_type
     """,
     doc="Tumbling time-window aggregation (SURVEY ST1 batch-equivalent).",
-    headline=True,
+    bench_tier=1,
 )
 def hourly_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
@@ -960,11 +961,10 @@ def bloom_prejoin_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "join shuffle at 100 TB.",
 )
 def bucketed_join_no_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
     import uuid
 
     tag = uuid.uuid4().hex[:10]
-    base_dir = tempfile.mkdtemp(prefix="bucketed_")
+    base_dir = scratch_dir(spark, "bucketed_")
     o = (
         load(spark, sf_dir, "orders")
         .where("o_orderkey < 3000")
@@ -1266,12 +1266,10 @@ def aqe_skew_join_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     round_added=9,
 )
 def dpp_partition_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     orders = load(spark, sf_dir, "orders").select(
         F.date_format("o_orderdate", "yyyy-MM").alias("mon"), "o_totalprice"
     )
-    fact_dir = tempfile.mkdtemp(prefix="dpp_fact_")
+    fact_dir = scratch_dir(spark, "dpp_fact_")
     orders.write.mode("overwrite").partitionBy("mon").parquet(fact_dir)
     fact = spark.read.parquet(fact_dir)
     # top-5 via rank-then-FILTER, not ORDER BY ... LIMIT: Spark's

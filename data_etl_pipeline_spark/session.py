@@ -3,12 +3,17 @@
 Local test/bench runs use local[$SPARK_GRAFT_CPUS]; the same config block
 is what we would ship to a real cluster (AQE on, skew-join handling on,
 UTC session timezone so results are comparable across engines).
+
+Every scratch table a query builds lives under the session's own root
+(``scratch_dir``), so it is removed when the session stops.
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
 
+from pyspark import SparkFiles
 from pyspark.sql import SparkSession
 
 
@@ -43,3 +48,16 @@ def get_spark(app_name: str = "data_etl_pipeline_spark", cpus: int | None = None
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def scratch_dir(spark: SparkSession, prefix: str) -> str:
+    """A fresh, empty directory for one scratch table of a query.
+
+    It sits under the driver's SparkFiles root, which Spark creates per
+    SparkContext under ``spark.local.dir`` / ``SPARK_LOCAL_DIRS`` and
+    deletes on ``SparkContext.stop()`` (and at JVM exit). The directory
+    therefore outlives the query's lazy DataFrame, which still reads it,
+    and dies with ``spark``, the one live session of this driver.
+    Driver-local, like the tables a query writes.
+    """
+    return tempfile.mkdtemp(prefix=prefix, dir=SparkFiles.getRootDirectory())

@@ -19,14 +19,12 @@ the Delta `llm_requests` table and the append+dedup becomes MERGE.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_etl_pipeline_spark.etl import deferred
 from data_etl_pipeline_spark.operators.chunker import chunk_even_chars
+from data_etl_pipeline_spark.session import scratch_dir
 from data_etl_pipeline_spark.tables import load
 
 
@@ -47,7 +45,7 @@ def run_stream_extraction(spark: SparkSession, sf_dir: str, n_parts: int = 3) ->
     """Stream overlapping document slices through the deferred state
     machine; return the reconciled (entity, field, results) table."""
     docs = load(spark, sf_dir, "documents")
-    run_dir = tempfile.mkdtemp(prefix=f"deferred_stream_{uuid.uuid4().hex[:8]}_")
+    run_dir = scratch_dir(spark, "deferred_stream_")
     src_dir = f"{run_dir}/src"
     state_dir = f"{run_dir}/state"
     _overlapping_parts(docs, src_dir, n_parts)

@@ -29,11 +29,11 @@ shuffles more than each micro-batch (state co-location is reused).  At
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_etl_pipeline_spark.session import scratch_dir
 from data_etl_pipeline_spark.tables import load
 
 _SCHEMA = "event_id long, ts timestamp, user_id long, event_type string"
@@ -48,7 +48,7 @@ def split_events_by_ts(
     [min_ts, max_ts] bounds as ISO strings) — the bounds let tests prove
     cross-batch joins actually happened.
     """
-    out = out_dir or tempfile.mkdtemp(prefix="ss_join_events_")
+    out = out_dir or scratch_dir(spark, "ss_join_events_")
     ev = (
         load(spark, sf_dir, "events")
         .where(F.col("event_type").isin("view", "purchase"))
@@ -119,7 +119,7 @@ def join_streams_over_dir(
         how,
     )
 
-    sink = tempfile.mkdtemp(prefix="ss_join_sink_")
+    sink = scratch_dir(spark, "ss_join_sink_")
 
     def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(f"{sink}/epoch={epoch_id}")
@@ -184,7 +184,7 @@ def append_flush_sentinel(
         [(-1, -1, "view"), (-2, -1, "purchase")],
         "event_id long, user_id long, event_type string",
     ).select("event_id", far.alias("ts"), "user_id", "event_type")
-    tmp = tempfile.mkdtemp(prefix="ss_join_sentinel_")
+    tmp = scratch_dir(spark, "ss_join_sentinel_")
     sent.write.mode("overwrite").parquet(tmp)
     part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
     dst = os.path.join(src, "zz_sentinel.parquet")

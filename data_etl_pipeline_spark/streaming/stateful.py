@@ -127,12 +127,12 @@ def _ts_ordered_batch_dir(
     ts-ordered micro-batches — the arrival order the profile operators'
     monotone-emission contract assumes."""
     import os
-    import tempfile
 
     import pyarrow.parquet as pq
 
     from pyspark.sql import functions as F
 
+    from data_etl_pipeline_spark.session import scratch_dir
     from data_etl_pipeline_spark.tables import load
 
     ev = load(spark, sf_dir, "events").select(
@@ -141,7 +141,7 @@ def _ts_ordered_batch_dir(
         F.col("ts").cast("timestamp").alias("ts"),
         "event_type",
     )
-    src = tempfile.mkdtemp(prefix=prefix)
+    src = scratch_dir(spark, prefix)
     ev.repartitionByRange(n_batches, "ts").write.mode("overwrite").parquet(src)
     parts = []
     for f in sorted(os.listdir(src)):

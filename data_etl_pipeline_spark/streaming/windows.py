@@ -19,12 +19,12 @@ from __future__ import annotations
 
 import datetime
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_etl_pipeline_spark.session import scratch_dir
 from data_etl_pipeline_spark.tables import load
 
 
@@ -144,7 +144,7 @@ def run_stream_enriched_counts(
     )
     enriched = _events_stream(spark, sf_dir).join(F.broadcast(customer), "user_id", "inner")
 
-    sink = sink_dir or tempfile.mkdtemp(prefix="enriched_sink_")
+    sink = sink_dir or scratch_dir(spark, "enriched_sink_")
     # epoch-keyed overwrite is idempotent for SAME-RUN redelivery only; a
     # reused sink dir from an earlier run could hold higher epochs the new
     # run never rewrites, silently inflating the final sum — start clean
@@ -223,7 +223,7 @@ def run_stream_update_merge_windows(
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    tbl = VersionedTable(spark, table_path or tempfile.mkdtemp(prefix="win_merge_tbl_"))
+    tbl = VersionedTable(spark, table_path or scratch_dir(spark, "win_merge_tbl_"))
     if tbl.latest_version() is None:
         tbl.write(spark.createDataFrame([], "window_start timestamp, event_type string, n long"))
 
@@ -249,7 +249,7 @@ def _dedup_replay_source(
     import os
 
     ev = load(spark, sf_dir, "events").select("event_id", "event_type")
-    src = source_dir or tempfile.mkdtemp(prefix=prefix)
+    src = source_dir or scratch_dir(spark, prefix)
     slices = [ev, ev, ev.where(F.col("event_id") % 3 == 0)]
     seen: set[str] = set()
     for i, sl in enumerate(slices):
@@ -292,7 +292,7 @@ def run_stream_dedup_counts(
     """
     src = _dedup_replay_source(spark, sf_dir, "dup_events_src_", source_dir)
     dedup = _dedup_replay_stream(spark, src)
-    sink = sink_dir or tempfile.mkdtemp(prefix="dedup_sink_")
+    sink = sink_dir or scratch_dir(spark, "dedup_sink_")
 
     def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(f"{sink}/epoch={epoch_id}")
@@ -325,7 +325,7 @@ def run_stream_dedup_counts_rocksdb(spark: SparkSession, sf_dir: str) -> DataFra
     counts, same as the heap-store twin.
     """
     src = _dedup_replay_source(spark, sf_dir, "rocksdb_dedup_src_")
-    sink = tempfile.mkdtemp(prefix="rocksdb_dedup_sink_")
+    sink = scratch_dir(spark, "rocksdb_dedup_sink_")
 
     def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(f"{sink}/epoch={epoch_id}")
@@ -381,8 +381,8 @@ def run_statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load(spark, sf_dir, "events").select("event_id", "event_type")
     src = _dedup_replay_source(spark, sf_dir, "ssreader_src_")
-    ckpt = tempfile.mkdtemp(prefix="ssreader_ckpt_")
-    sink = tempfile.mkdtemp(prefix="ssreader_sink_")
+    ckpt = scratch_dir(spark, "ssreader_ckpt_")
+    sink = scratch_dir(spark, "ssreader_sink_")
     dedup = _dedup_replay_stream(spark, src)
     q = (
         dedup.writeStream.outputMode("append")
@@ -440,7 +440,7 @@ def run_stream_merge_versioned(
     )
     enriched = _events_stream(spark, sf_dir).join(F.broadcast(customer), "user_id", "inner")
 
-    tbl = VersionedTable(spark, table_path or tempfile.mkdtemp(prefix="stream_merge_tbl_"))
+    tbl = VersionedTable(spark, table_path or scratch_dir(spark, "stream_merge_tbl_"))
     if tbl.latest_version() is None:
         tbl.write(spark.createDataFrame(
             [], "epoch long, c_mktsegment string, event_type string, n long"
@@ -521,7 +521,7 @@ def run_stream_dedup_within_watermark(
     tail30 = ev.where(F.unix_timestamp("ts") > mx - 1800)
     restamped = day1.withColumn("ts", F.col("ts") + F.expr("interval 30 days"))
 
-    src = tempfile.mkdtemp(prefix="wm_dedup_src_")
+    src = scratch_dir(spark, "wm_dedup_src_")
     # pin each slice's mtime AS IT IS WRITTEN: sorting freshly-written
     # files by their own mtimes would tie on coarse-granularity
     # filesystems and scramble the intended batch order (the watermark
@@ -541,7 +541,7 @@ def run_stream_dedup_within_watermark(
         .withWatermark("ts", "30 minutes")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    sink = tempfile.mkdtemp(prefix="wm_dedup_sink_")
+    sink = scratch_dir(spark, "wm_dedup_sink_")
 
     def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.take(1):
@@ -616,7 +616,7 @@ def run_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("ts") >= F.lit("2024-01-08").cast("timestamp"))
         .select("ts", F.col("value").cast("double").alias("value"))
     )
-    src = tempfile.mkdtemp(prefix="psi_stream_src_")
+    src = scratch_dir(spark, "psi_stream_src_")
     mon_batch.repartitionByRange(3, "ts").write.mode("overwrite").parquet(src)
     for extra in os.listdir(src):  # keep only data files in the source dir
         if not extra.endswith(".parquet"):
@@ -642,7 +642,7 @@ def run_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     sent = one_slice_df(
         spark, [(max_ts, 0.0)], "ts timestamp, value double"
     ).select((F.col("ts") + F.expr("interval 30 days")).alias("ts"), "value")
-    tmp = tempfile.mkdtemp(prefix="psi_sentinel_")
+    tmp = scratch_dir(spark, "psi_sentinel_")
     sent.write.mode("overwrite").parquet(tmp)
     part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
     dst = os.path.join(src, "zz_sentinel.parquet")

@@ -13,22 +13,17 @@ from data_etl_pipeline_spark.plans.registry import QUERIES, _ensure_loaded
 
 def main() -> None:
     _ensure_loaded()
-    n_oracle = sum(1 for s in QUERIES.values() if s.sql is not None)
     lines = [
         "# QUERIES — declared-query catalog\n",
-        f"{len(QUERIES)} queries ({n_oracle} DuckDB-oracle-checked, "
-        f"{len(QUERIES) - n_oracle} rows-only). Generated by "
+        f"{len(QUERIES)} queries, each DuckDB-oracle-checked. Generated by "
         "`python scripts/dump_catalog.py`; each runs as "
         "`queries()[name](spark, sf_dir)` from `__spark_entry__.py`.\n",
-        "| query | oracle | headline | what it covers |",
-        "|---|---|---|---|",
+        "| query | bench tier | what it covers |",
+        "|---|---|---|",
     ]
     for name in sorted(QUERIES):
         s = QUERIES[name]
-        lines.append(
-            f"| `{name}` | {'sql' if s.sql else 'rows-only'} | "
-            f"{'yes' if s.headline else ''} | {s.doc} |"
-        )
+        lines.append(f"| `{name}` | {s.bench_tier or ''} | {s.doc} |")
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(root, "QUERIES.md"), "w") as f:
         f.write("\n".join(lines) + "\n")

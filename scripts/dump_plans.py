@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Dump formatted physical plans for the headline queries to EXPLAINS.md
+"""Dump formatted physical plans for the tier-1 bench queries to EXPLAINS.md
 so plan shapes (pushdown, broadcasts, single-shuffle windows, partial
 aggregation) are inspectable without running Spark."""
 
@@ -19,7 +19,7 @@ def main() -> None:
     _ensure_loaded()
     spark = get_spark("explain", cpus=8)
     out = [
-        "# EXPLAINS — formatted physical plans (headline queries)\n",
+        "# EXPLAINS — formatted physical plans (tier-1 bench queries)\n",
         f"Generated by `python scripts/dump_plans.py` at {sf_dir}. The scale-",
         "relevant markers: `PushedFilters`/`ReadSchema` (scan pushdown),",
         "`BroadcastHashJoin` (dimension broadcasts), `HashAggregate` pairs",
@@ -27,7 +27,7 @@ def main() -> None:
         "a single `Exchange` (as-of / range-frame rewrites), `Expand`",
         "(grouping sets).\n",
     ]
-    # non-headline queries whose plan shape carries the scale argument
+    # non-tier-1 queries whose plan shape carries the scale argument
     extras = {
         "ann_topk_lsh",          # broadcast equi-join candidates, no cross join
         "ann_topk_lsh_persisted",  # persisted-index probe: no hyperplane eval
@@ -150,7 +150,7 @@ def main() -> None:
         "iceberg_equality_delete_upsert",  # seq-aware null-safe anti-join mask
     }
     for name, spec in QUERIES.items():
-        if not spec.headline and name not in extras:
+        if spec.bench_tier != 1 and name not in extras:
             continue
         df = spec.fn(spark, sf_dir)
         from data_etl_pipeline_spark.plans.planassert import formatted_plan

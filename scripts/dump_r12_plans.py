@@ -25,7 +25,7 @@ def main() -> None:
     spark = get_spark("dump-r12-plans")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r12")
     os.makedirs(out_dir, exist_ok=True)
-    names = [s.name for s in QUERIES.values() if s.headline or s.headline2] + extras
+    names = [s.name for s in QUERIES.values() if s.bench_tier in (1, 2)] + extras
     for name in names:
         spec = QUERIES[name]
         df = spec.fn(spark, sf_dir)

@@ -27,7 +27,7 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     # with explicit names, dump ONLY those (per-change evidence); with no
     # names, dump the full benched set (round start/end snapshots)
-    names = extras or [s.name for s in QUERIES.values() if s.headline or s.headline2]
+    names = extras or [s.name for s in QUERIES.values() if s.bench_tier in (1, 2)]
     for name in names:
         spec = QUERIES[name]
         df = spec.fn(spark, sf_dir)

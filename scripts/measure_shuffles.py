@@ -1,9 +1,9 @@
 #!/usr/bin/env python
-"""Measure ACTUAL shuffle volume per headline query via the Spark REST API.
+"""Measure ACTUAL shuffle volume per bench-tier query via the Spark REST API.
 
 SCALE.md's shuffle-budget table states how many exchanges each query family
 pays; this script turns that from a claim into a measurement: it runs each
-headline query in a UI-enabled session and diffs the application's
+bench-tier query in a UI-enabled session and diffs the application's
 cumulative stage-level shuffle read/write bytes around each one.
 
 Usage: python scripts/measure_shuffles.py [sf_dir]   (writes SHUFFLES.md)
@@ -52,10 +52,10 @@ def main() -> None:
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
 
-    def measure(tier_pred):
+    def measure(tier: int):
         rows = []
         for name, spec in QUERIES.items():
-            if not tier_pred(spec):
+            if spec.bench_tier != tier:
                 continue
             spec.fn(spark, sf_dir).collect()  # warm (cache plans, JIT)
             w0, r0, i0 = _stage_totals(ui, app_id)
@@ -65,11 +65,11 @@ def main() -> None:
             print(f"{name}: rows={n} shuffle_write={w1-w0:,} B read={r1-r0:,} B input={i1-i0:,} B")
         return rows
 
-    rows = measure(lambda s: s.headline)
-    rows2 = measure(lambda s: s.headline2)
+    rows = measure(1)
+    rows2 = measure(2)
 
     out = [
-        "# SHUFFLES — measured shuffle volume per headline query\n",
+        "# SHUFFLES — measured shuffle volume per bench-tier query\n",
         f"Generated by `python scripts/measure_shuffles.py {sf_dir}` "
         "(second run of each query; Spark REST stage totals diffed around it).",
         "",

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,13 +23,15 @@ def _base(spark, sf_dir):
     )
 
 
-def _fresh(prefix="cdf_t_"):
-    return tempfile.mkdtemp(prefix=prefix) + "/t"
+@pytest.fixture
+def fresh(tmp_path_factory):
+    """``fresh(prefix)``: the path of a new table in a fresh directory."""
+    return lambda prefix="cdf_t_": str(tmp_path_factory.mktemp(prefix)) + "/t"
 
 
-def test_non_cdf_rewrite_refuses_changes(spark, sf_dir):
+def test_non_cdf_rewrite_refuses_changes(spark, sf_dir, fresh):
     b = _base(spark, sf_dir)
-    dest = _fresh()
+    dest = fresh()
     de.export_delta(b.where(F.col("o_orderkey") <= 300), dest)  # cdf off
     de.export_delta_delete(spark, dest, "o_orderkey % 5 = 0")
     r = DeltaLogReader(spark, dest)
@@ -40,9 +41,9 @@ def test_non_cdf_rewrite_refuses_changes(spark, sf_dir):
     assert r.table_changes(0, 0).count() == b.where(F.col("o_orderkey") <= 300).count()
 
 
-def test_optimize_commit_contributes_nothing(spark, sf_dir):
+def test_optimize_commit_contributes_nothing(spark, sf_dir, fresh):
     b = _base(spark, sf_dir)
-    dest = _fresh()
+    dest = fresh()
     de.export_delta(b.where(F.col("o_orderkey") <= 200), dest, cdf=True)
     de.export_delta_append(
         b.where((F.col("o_orderkey") > 200) & (F.col("o_orderkey") <= 400)), dest
@@ -54,9 +55,9 @@ def test_optimize_commit_contributes_nothing(spark, sf_dir):
     assert ch.where(F.col("_commit_version") == 2).count() == 0
 
 
-def test_vacuum_retains_change_data(spark, sf_dir):
+def test_vacuum_retains_change_data(spark, sf_dir, fresh):
     b = _base(spark, sf_dir)
-    dest = _fresh()
+    dest = fresh()
     de.export_delta(b.where(F.col("o_orderkey") <= 300), dest, cdf=True)
     res = de.export_delta_delete(spark, dest, "o_orderkey % 3 = 0")
     assert res["cdc_files"] > 0
@@ -73,10 +74,10 @@ def test_vacuum_retains_change_data(spark, sf_dir):
         DeltaLogReader(spark, dest).table_changes(0).collect()
 
 
-def test_cdc_files_never_become_table_adds(spark, sf_dir):
+def test_cdc_files_never_become_table_adds(spark, sf_dir, fresh):
     """The walk-diff that builds add actions must not see _change_data."""
     b = _base(spark, sf_dir)
-    dest = _fresh()
+    dest = fresh()
     de.export_delta(b.where(F.col("o_orderkey") <= 300), dest, cdf=True)
     de.export_delta_delete(spark, dest, "o_orderkey % 3 = 0")
     de.export_delta_append(
@@ -91,13 +92,13 @@ def test_cdc_files_never_become_table_adds(spark, sf_dir):
     assert snap.count() == survivors.count()
 
 
-def test_remove_only_commit_derives_deletes(spark, sf_dir):
+def test_remove_only_commit_derives_deletes(spark, sf_dir, tmp_path):
     """A foreign remove-only commit (no cdc) yields the removed file's
     rows as deletes — and refuses if the pre-image file was vacuumed."""
     from data_etl_pipeline_spark.plans.extensions import _write_single_parquet
 
     b = _base(spark, sf_dir).where(F.col("o_orderkey") <= 100)
-    tbl = tempfile.mkdtemp(prefix="cdf_rm_")
+    tbl = str(tmp_path)
     os.makedirs(os.path.join(tbl, "_delta_log"))
     _write_single_parquet(b, tbl, "a.parquet")
 
@@ -137,9 +138,9 @@ def test_remove_only_commit_derives_deletes(spark, sf_dir):
         DeltaLogReader(spark, tbl).table_changes(1, 1).collect()
 
 
-def test_partitioned_cdf_partition_values(spark, sf_dir):
+def test_partitioned_cdf_partition_values(spark, sf_dir, fresh):
     b = _base(spark, sf_dir).where(F.col("o_orderkey") <= 400)
-    dest = _fresh("cdf_part_")
+    dest = fresh("cdf_part_")
     de.export_delta(b, dest, partition_by=["o_orderstatus"], cdf=True)
     de.export_delta_delete(spark, dest, "o_orderkey % 4 = 1")
     ch = DeltaLogReader(spark, dest).table_changes(1, 1)
@@ -157,17 +158,17 @@ def test_partitioned_cdf_partition_values(spark, sf_dir):
     assert got == want
 
 
-def test_replace_where_refuses_on_cdf_table(spark, sf_dir):
+def test_replace_where_refuses_on_cdf_table(spark, sf_dir, fresh):
     b = _base(spark, sf_dir).where(F.col("o_orderkey") <= 200)
-    dest = _fresh("cdf_rw_")
+    dest = fresh("cdf_rw_")
     de.export_delta(b, dest, partition_by=["o_orderstatus"], cdf=True)
     with pytest.raises(de.DeltaExportError, match="change data"):
         de.export_delta_replace_where(spark, b, dest, {"o_orderstatus": "O"})
 
 
-def test_range_validation(spark, sf_dir):
+def test_range_validation(spark, sf_dir, fresh):
     b = _base(spark, sf_dir).where(F.col("o_orderkey") <= 100)
-    dest = _fresh("cdf_rng_")
+    dest = fresh("cdf_rng_")
     de.export_delta(b, dest, cdf=True)
     r = DeltaLogReader(spark, dest)
     with pytest.raises(ValueError, match="invalid change range"):
@@ -176,13 +177,11 @@ def test_range_validation(spark, sf_dir):
         r.table_changes(-1)
 
 
-def test_delete_keys_skips_disjoint_files_and_is_idempotent(spark, sf_dir):
-    import tempfile
-
+def test_delete_keys_skips_disjoint_files_and_is_idempotent(spark, sf_dir, tmp_path):
     from data_etl_pipeline_spark.sources.versioned import VersionedTable
 
     b = _base(spark, sf_dir).where(F.col("o_orderkey") <= 1000)
-    t = VersionedTable(spark, tempfile.mkdtemp(prefix="delkeys_"))
+    t = VersionedTable(spark, str(tmp_path))
     t.write(b, cluster_by=["o_orderkey"], n_files=8)
     tomb = b.where(F.col("o_orderkey") <= 100).select("o_orderkey")
     v1 = t.delete_keys(tomb, keys=["o_orderkey"])
@@ -202,16 +201,16 @@ def test_delete_keys_skips_disjoint_files_and_is_idempotent(spark, sf_dir):
 
 
 class TestCheckConstraints:
-    def test_initial_export_validates(self, spark, sf_dir):
+    def test_initial_export_validates(self, spark, sf_dir, fresh):
         b = _base(spark, sf_dir).where(F.col("o_orderkey") <= 100)
         with pytest.raises(de.DeltaExportError, match="price_positive"):
             de.export_delta(
                 b.withColumn("o_totalprice", -F.col("o_totalprice")),
-                _fresh("chk_init_"),
+                fresh("chk_init_"),
                 constraints={"price_positive": "o_totalprice > 0"},
             )
 
-    def test_null_rows_pass_and_writer_version(self, spark, sf_dir):
+    def test_null_rows_pass_and_writer_version(self, spark, sf_dir, fresh):
         import json as _json
         import os as _os
 
@@ -221,7 +220,7 @@ class TestCheckConstraints:
                 F.col("o_orderstatus")
             ),
         )
-        dest = _fresh("chk_null_")
+        dest = fresh("chk_null_")
         de.export_delta(
             b, dest, constraints={"status_known": "o_orderstatus in ('O','F','P')"}
         )
@@ -239,9 +238,9 @@ class TestCheckConstraints:
                 dest,
             )
 
-    def test_cdf_and_constraints_compose(self, spark, sf_dir):
+    def test_cdf_and_constraints_compose(self, spark, sf_dir, fresh):
         b = _base(spark, sf_dir).where(F.col("o_orderkey") <= 200)
-        dest = _fresh("chk_cdf_")
+        dest = fresh("chk_cdf_")
         de.export_delta(
             b, dest, cdf=True, constraints={"pp": "o_totalprice > 0"}
         )

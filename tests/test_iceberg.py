@@ -8,7 +8,6 @@ from __future__ import annotations
 import io
 import json
 import os
-import tempfile
 import zlib
 
 import pytest
@@ -112,9 +111,9 @@ def test_ocf_foreign_codec_refuses(tmp_path):
 
 
 @pytest.fixture(scope="module")
-def ice_table(spark):
+def ice_table(spark, tmp_path_factory):
     src = spark.range(0, 100).selectExpr("id AS k", "CAST(id * 1.5 AS DOUBLE) AS v")
-    d = tempfile.mkdtemp(prefix="ice_ut_") + "/t"
+    d = str(tmp_path_factory.mktemp("ice_ut")) + "/t"
     export_iceberg(src.where("k < 60"), d, n_files=3, range_by="k")
     append_iceberg(src.where("k >= 60"), d, n_files=2, range_by="k")
     return d
@@ -345,13 +344,13 @@ class TestIdentityPartitioning:
     partition pruning, and the bounded-cardinality / null refusals."""
 
     @pytest.fixture(scope="class")
-    def ptable(self, spark):
+    def ptable(self, spark, tmp_path_factory):
         src = spark.range(0, 90).selectExpr(
             "id AS k",
             "CASE WHEN id % 3 = 0 THEN 'bronze' WHEN id % 3 = 1 THEN 'silver' "
             "ELSE 'gold' END AS tier",
         )
-        d = tempfile.mkdtemp(prefix="ice_part_") + "/t"
+        d = str(tmp_path_factory.mktemp("ice_part")) + "/t"
         export_iceberg(src.where("k < 60"), d, partition_by="tier")
         append_iceberg(src.where("k >= 60"), d)
         return d
@@ -426,11 +425,11 @@ def test_avro_missing_defaultless_record_field_raises():
 
 class TestPositionDeletes:
     @pytest.fixture(scope="class")
-    def dtable(self, spark):
+    def dtable(self, spark, tmp_path_factory):
         from data_etl_pipeline_spark.sources.iceberg import delete_rows_iceberg
 
         src = spark.range(0, 100).selectExpr("id AS k", "CAST(id * 2 AS DOUBLE) AS v")
-        d = tempfile.mkdtemp(prefix="ice_del_") + "/t"
+        d = str(tmp_path_factory.mktemp("ice_del")) + "/t"
         export_iceberg(src.where("k < 60"), d, n_files=3, range_by="k")
         append_iceberg(src.where("k >= 60"), d, n_files=2, range_by="k")
         delete_rows_iceberg(spark, d, "k % 10 = 3")  # 10 rows across files
@@ -535,9 +534,9 @@ class TestPositionDeletes:
 
 class TestIncrementalTail:
     @pytest.fixture(scope="class")
-    def ttable(self, spark):
+    def ttable(self, spark, tmp_path_factory):
         src = spark.range(0, 90).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
-        d = tempfile.mkdtemp(prefix="ice_tail_") + "/t"
+        d = str(tmp_path_factory.mktemp("ice_tail")) + "/t"
         export_iceberg(src.where("k < 30"), d, n_files=2, range_by="k")
         append_iceberg(src.where("k >= 30 AND k < 60"), d, n_files=2, range_by="k")
         append_iceberg(src.where("k >= 60"), d, n_files=3, range_by="k")
@@ -584,12 +583,12 @@ class TestIncrementalTail:
 
 class TestTruncateTransform:
     @pytest.fixture(scope="class")
-    def trunc_table(self, spark):
+    def trunc_table(self, spark, tmp_path_factory):
         src = spark.range(0, 100).selectExpr(
             "id AS k",
             "concat('grp', CAST(id % 4 AS STRING), '_tail', CAST(id AS STRING)) AS s",
         )
-        d = tempfile.mkdtemp(prefix="ice_trunc_") + "/t"
+        d = str(tmp_path_factory.mktemp("ice_trunc")) + "/t"
         export_iceberg(src.where("k < 60"), d, partition_by="k", transform="truncate[20]")
         append_iceberg(src.where("k >= 60"), d)  # inherits truncate spec
         return d
@@ -697,9 +696,9 @@ def test_murmur3_spec_vectors():
 
 class TestBucketTransform:
     @pytest.fixture(scope="class")
-    def btable(self, spark):
+    def btable(self, spark, tmp_path_factory):
         src = spark.range(0, 200).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
-        d = tempfile.mkdtemp(prefix="ice_bucket_") + "/t"
+        d = str(tmp_path_factory.mktemp("ice_bucket")) + "/t"
         export_iceberg(src.where("k < 120"), d, partition_by="k", transform="bucket[8]")
         append_iceberg(src.where("k >= 120"), d)  # inherits the bucket spec
         return d
@@ -734,12 +733,12 @@ class TestBucketTransform:
 
 class TestTimeTransforms:
     @pytest.fixture(scope="class")
-    def ytable(self, spark):
+    def ytable(self, spark, tmp_path_factory):
         src = spark.range(0, 48).selectExpr(
             "id AS k",
             "add_months(DATE '1994-01-15', CAST(id AS INT)) AS d",  # 4 years
         )
-        d = tempfile.mkdtemp(prefix="ice_year_") + "/t"
+        d = str(tmp_path_factory.mktemp("ice_year")) + "/t"
         export_iceberg(src, d, partition_by="d", transform="year")
         return d
 
@@ -930,11 +929,11 @@ class TestExpireSnapshots:
 
 class TestEqualityDeletes:
     @pytest.fixture(scope="class")
-    def etable(self, spark):
+    def etable(self, spark, tmp_path_factory):
         from data_etl_pipeline_spark.sources.iceberg import delete_rows_iceberg
 
         src = spark.range(0, 100).selectExpr("id AS k", "CAST(id * 3 AS DOUBLE) AS v")
-        d = tempfile.mkdtemp(prefix="ice_eq_") + "/t"
+        d = str(tmp_path_factory.mktemp("ice_eq")) + "/t"
         export_iceberg(src.where("k < 80"), d, n_files=3, range_by="k")
         delete_rows_iceberg(spark, d, "k % 10 = 4", equality_by=["k"])
         # re-append three previously-deleted keys AFTER the delete: the
@@ -1303,7 +1302,7 @@ class TestPartitionSpecEvolution:
     their original spec's tuples and prune through their OWN spec."""
 
     @pytest.fixture(scope="class")
-    def etable(self, spark):
+    def etable(self, spark, tmp_path_factory):
         import datetime
 
         rows = [
@@ -1311,7 +1310,7 @@ class TestPartitionSpecEvolution:
             for i in range(80)
         ]
         src = spark.createDataFrame(rows, "k long, status string, d date")
-        d = tempfile.mkdtemp(prefix="ice_specevo_") + "/t"
+        d = str(tmp_path_factory.mktemp("ice_specevo")) + "/t"
         export_iceberg(src.where("k < 40"), d, partition_by="status")
         sid = evolve_partition_spec_iceberg(d, "d", "year")
         assert sid == 1

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import tempfile
+
 import pytest
 
 from data_etl_pipeline_spark.oracle import compare_query, duckdb_connection
@@ -18,9 +20,16 @@ def con(sf_dir):
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(spark, con, sf_dir, name):
+def test_query_matches_oracle(spark, con, sf_dir, name, tmp_path, monkeypatch):
+    # Python's temp root is a private, empty directory while the query
+    # runs: a scratch table made anywhere but under the session's own
+    # root (session.scratch_dir) lands here and outlives the session.
+    tmp_root = tmp_path / "tmp"
+    tmp_root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_root))
     result = compare_query(spark, con, name, sf_dir)
     assert result["ok"], result
+    assert not any(tmp_root.iterdir()), sorted(p.name for p in tmp_root.iterdir())
 
 
 def test_entry_smoke(spark):

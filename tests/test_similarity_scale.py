@@ -357,12 +357,10 @@ def test_generated_literals_render_as_one_folded_node(spark, sf_dir):
     assert len(rendered) < 200_000, f"plan string blew up: {len(rendered)} chars"
 
 
-def test_merged_ivf_index_keeps_original_centroid_set(spark, sf_dir):
+def test_merged_ivf_index_keeps_original_centroid_set(spark, sf_dir, tmp_path_factory):
     """Regression: on an incrementally-grown index, stride-sampled DELTA
     ids must NOT surface as centroids — the probe would rank phantom
     cells with zero assigned rows and burn nprobe on them."""
-    import tempfile
-
     from data_etl_pipeline_spark.operators.similarity import (
         build_ivf_index,
         ivf_index_centroids,
@@ -376,7 +374,7 @@ def test_merged_ivf_index_keeps_original_centroid_set(spark, sf_dir):
     part = emb.where(F.col("vec_id") < 400)
     delta = emb.where(F.col("vec_id") >= 400)  # contains ids 400, 425, 450, 475
 
-    t = VersionedTable(spark, tempfile.mkdtemp(prefix="ivf_inc_"))
+    t = VersionedTable(spark, str(tmp_path_factory.mktemp("ivf_inc")))
     build_ivf_index(part, t, stride=25)
     cents0 = {r.c_id for r in ivf_index_centroids(t.read()).collect()}
     build_ivf_index(delta, t, centroids=ivf_index_centroids(t.read()))
@@ -386,12 +384,12 @@ def test_merged_ivf_index_keeps_original_centroid_set(spark, sf_dir):
     merged_cents = {r.c_id for r in ivf_index_centroids(t.read()).collect()}
     assert merged_cents == set(), "delta-only snapshot has no centroid rows"
     # full flow: original + delta rows merged
-    t2 = VersionedTable(spark, tempfile.mkdtemp(prefix="ivf_inc2_"))
+    t2 = VersionedTable(spark, str(tmp_path_factory.mktemp("ivf_inc2")))
     build_ivf_index(part, t2, stride=25)
     from data_etl_pipeline_spark.operators.similarity import _with_norm  # noqa: F401
 
     # assign delta against the ORIGINAL centroids and merge
-    delta_cells_t = VersionedTable(spark, tempfile.mkdtemp(prefix="ivf_delta_"))
+    delta_cells_t = VersionedTable(spark, str(tmp_path_factory.mktemp("ivf_delta")))
     build_ivf_index(delta, delta_cells_t, centroids=ivf_index_centroids(t2.read()))
     t2.merge(delta_cells_t.read(), keys=["vec_id"])
 
@@ -445,17 +443,15 @@ def test_lsh_multiprobe_knob_sweep_tradeoff_table(spark, sf_dir, capsys):
 
 
 class TestIndexGC:
-    def test_ivf_refresh_matches_same_centroid_rebuild(self, spark, sf_dir):
-        import tempfile
-
+    def test_ivf_refresh_matches_same_centroid_rebuild(self, spark, sf_dir, tmp_path_factory):
         from data_etl_pipeline_spark.operators import similarity
         from data_etl_pipeline_spark.sources.versioned import VersionedTable
         from data_etl_pipeline_spark.tables import load
 
         emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        corpus = VersionedTable(spark, tempfile.mkdtemp(prefix="ivfgc_c_"))
+        corpus = VersionedTable(spark, str(tmp_path_factory.mktemp("ivfgc_c")))
         corpus.write(emb)
-        idx = VersionedTable(spark, tempfile.mkdtemp(prefix="ivfgc_i_"))
+        idx = VersionedTable(spark, str(tmp_path_factory.mktemp("ivfgc_i")))
         similarity.build_ivf_index(corpus.read(), idx)
         v0 = corpus.latest_version()
         # delete NON-centroid ids only (centroids are stride multiples)
@@ -482,7 +478,7 @@ class TestIndexGC:
         # from-scratch rebuild over the survivors picks the SAME stride
         # centroids (only non-centroid ids were deleted), so the refreshed
         # probe must equal the rebuilt probe exactly
-        idx2 = VersionedTable(spark, tempfile.mkdtemp(prefix="ivfgc_r_"))
+        idx2 = VersionedTable(spark, str(tmp_path_factory.mktemp("ivfgc_r")))
         similarity.build_ivf_index(corpus.read(), idx2)
         want = {
             tuple(r)
@@ -492,9 +488,7 @@ class TestIndexGC:
         }
         assert got == want
 
-    def test_ivf_refresh_refuses_centroid_delete(self, spark, sf_dir):
-        import tempfile
-
+    def test_ivf_refresh_refuses_centroid_delete(self, spark, sf_dir, tmp_path_factory):
         import pytest
         from pyspark.sql import functions as F
 
@@ -503,9 +497,9 @@ class TestIndexGC:
         from data_etl_pipeline_spark.tables import load
 
         emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        corpus = VersionedTable(spark, tempfile.mkdtemp(prefix="ivfgc2_c_"))
+        corpus = VersionedTable(spark, str(tmp_path_factory.mktemp("ivfgc2_c")))
         corpus.write(emb)
-        idx = VersionedTable(spark, tempfile.mkdtemp(prefix="ivfgc2_i_"))
+        idx = VersionedTable(spark, str(tmp_path_factory.mktemp("ivfgc2_i")))
         similarity.build_ivf_index(corpus.read(), idx)
         v0 = corpus.latest_version()
         corpus.delete_where_dv(F.col("vec_id") == 50)  # a stride centroid

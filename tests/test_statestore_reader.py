@@ -10,17 +10,16 @@ did the operator know after batch N?" without replaying the stream.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 
-def test_statestore_batchid_time_travel(spark):
+def test_statestore_batchid_time_travel(spark, tmp_path_factory):
     ids = list(range(100))
     from data_etl_pipeline_spark.tables import one_slice_df
 
     df = one_slice_df(spark, [(i,) for i in ids], "k long")
-    src = tempfile.mkdtemp(prefix="ss_tt_src_")
+    src = str(tmp_path_factory.mktemp("ss_tt_src"))
     seen: set[str] = set()
     for m in range(3):  # three disjoint slices -> three micro-batches
         df.where(F.col("k") % 3 == m).write.mode("append").parquet(src)
@@ -33,8 +32,8 @@ def test_statestore_batchid_time_travel(spark):
         os.utime(os.path.join(src, new[0]), (1_600_000_000 + m * 10,) * 2)
         seen.update(new)
 
-    ckpt = tempfile.mkdtemp(prefix="ss_tt_ckpt_")
-    sink = tempfile.mkdtemp(prefix="ss_tt_sink_")
+    ckpt = str(tmp_path_factory.mktemp("ss_tt_ckpt"))
+    sink = str(tmp_path_factory.mktemp("ss_tt_sink"))
     q = (
         spark.readStream.schema("k long")
         .option("maxFilesPerTrigger", "1")
