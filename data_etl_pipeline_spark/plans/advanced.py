@@ -2176,20 +2176,22 @@ def mad_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     round_added=10,
 )
 def concept_ancestor_closure_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load(spark, sf_dir, "part").createOrReplaceTempView("__rc_part")
+    # spark.sql registers each keyword frame as a temp view only while it
+    # analyses the text, so the session catalog is left as it was
     return spark.sql(
         """
         WITH RECURSIVE anc AS (
             SELECT p_partkey AS node, p_partkey DIV 2 AS ancestor, 1 AS depth
-            FROM __rc_part WHERE p_partkey BETWEEN 2 AND 126
+            FROM {part} WHERE p_partkey BETWEEN 2 AND 126
             UNION ALL
             SELECT a.node, e.p_partkey DIV 2, a.depth + 1
-            FROM anc a JOIN __rc_part e ON a.ancestor = e.p_partkey
+            FROM anc a JOIN {part} e ON a.ancestor = e.p_partkey
             WHERE e.p_partkey BETWEEN 2 AND 126
         )
         SELECT node, ancestor, CAST(MIN(depth) AS INT) AS depth
         FROM anc GROUP BY node, ancestor
-        """
+        """,
+        part=load(spark, sf_dir, "part"),
     )
 
 
@@ -2222,16 +2224,16 @@ def concept_ancestor_closure_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lateral_top_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_etl_pipeline_spark.plans.planassert import formatted_plan
 
-    load(spark, sf_dir, "customer").createOrReplaceTempView("__lt_customer")
-    load(spark, sf_dir, "nation").createOrReplaceTempView("__lt_nation")
     out = spark.sql(
         """
         SELECT n_name, t.c_name, t.c_acctbal
-        FROM __lt_nation, LATERAL (
-            SELECT c_name, c_acctbal FROM __lt_customer
+        FROM {nation}, LATERAL (
+            SELECT c_name, c_acctbal FROM {customer}
             WHERE c_nationkey = n_nationkey
             ORDER BY c_acctbal DESC, c_name LIMIT 2) t
-        """
+        """,
+        nation=load(spark, sf_dir, "nation"),
+        customer=load(spark, sf_dir, "customer"),
     )
     plan = formatted_plan(out, "simple")
     assert "WindowGroupLimit" in plan, plan
@@ -2271,19 +2273,19 @@ def lateral_top_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFr
 def pipe_syntax_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
-    orders.createOrReplaceTempView("pipe_orders")
-    cust.createOrReplaceTempView("pipe_customer")
     df = spark.sql(
         """
-        FROM pipe_orders
+        FROM {orders}
         |> WHERE o_orderdate >= DATE '1997-01-01'
-        |> JOIN pipe_customer ON o_custkey = c_custkey
+        |> JOIN {customer} ON o_custkey = c_custkey
         |> AGGREGATE COUNT(*) AS n_orders,
                      CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
                          AS revenue
            GROUP BY c_mktsegment AS segment
         |> SELECT segment, n_orders, revenue
-        """
+        """,
+        orders=orders,
+        customer=cust,
     )
     dataframe_form = (
         orders.where(F.col("o_orderdate") >= F.lit("1997-01-01").cast("date"))

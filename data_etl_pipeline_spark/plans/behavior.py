@@ -400,14 +400,16 @@ def _session_counter_udtf():
 )
 def udtf_partitioned_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.udtf.register("session_counter_udtf", _session_counter_udtf())
-    load(spark, sf_dir, "events").select(
-        "user_id", F.col("ts").cast("timestamp").alias("ts"), "event_id"
-    ).createOrReplaceTempView("udtf_sessions_events")
+    # spark.sql registers each keyword frame as a temp view only while it
+    # analyses the text, so the session catalog is left as it was
     return spark.sql(
         """
         SELECT user_id, n_events, n_sessions
         FROM session_counter_udtf(
-            TABLE(udtf_sessions_events)
+            TABLE({events})
             PARTITION BY user_id ORDER BY (ts, event_id))
-        """
+        """,
+        events=load(spark, sf_dir, "events").select(
+            "user_id", F.col("ts").cast("timestamp").alias("ts"), "event_id"
+        ),
     )

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from data_etl_pipeline_spark.functions import psl
 from data_etl_pipeline_spark.operators import multimodal
 from data_etl_pipeline_spark.plans.registry import query
-from data_etl_pipeline_spark.session import scratch_dir
+from data_etl_pipeline_spark.session import conf_scope, scratch_dir
 from data_etl_pipeline_spark.tables import load, one_slice_df
 
 
@@ -1779,19 +1779,12 @@ def delta_interop_column_mapping_id_read(spark: SparkSession, sf_dir: str) -> Da
     os.makedirs(os.path.join(tbl, "_delta_log"))
     # scoped: the field-id write conf must not leak into the caller's
     # session (same isolation rule the reader applies on its read side)
-    saved = spark.conf.get("spark.sql.parquet.fieldId.write.enabled", None)
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    try:
+    with conf_scope(spark, {"spark.sql.parquet.fieldId.write.enabled": "true"}):
         phys = base.select(
             F.col("o_orderkey").alias("col-9f2a", metadata={"parquet.field.id": 1}),
             F.col("o_totalprice").alias("col-77b1", metadata={"parquet.field.id": 2}),
         )
         _write_single_parquet(phys, tbl, "f.parquet")
-    finally:
-        if saved is None:
-            spark.conf.unset("spark.sql.parquet.fieldId.write.enabled")
-        else:
-            spark.conf.set("spark.sql.parquet.fieldId.write.enabled", saved)
     schema_fields = [
         {
             "name": "o_orderkey",
@@ -4293,16 +4286,7 @@ def pysource_batch_results(spark: SparkSession, sf_dir: str) -> DataFrame:
         # with the full-scan aggregate
         return spark.read.format("batch_results").option("path", d).load()
 
-    # Scoped knob: Spark 4.1 REFUSES to plan a Python source that
-    # implements pushFilters() unless this conf is on (it defaults to
-    # false and the caller's session may not set it — the repo factory
-    # does, a vanilla session does not). Every action on this source
-    # must run inside the scope, so the tiny (shard × status ≤ 8 row)
-    # aggregate is materialized here and returned as a local frame.
-    knob = "spark.sql.python.filterPushdown.enabled"
-    saved = spark.conf.get(knob, None)
-    try:
-        spark.conf.set(knob, "true")
+    with conf_scope(spark, _PUSHDOWN):
         # end-to-end: the same pruning runs inside Spark's planner, and
         # the full read agrees with the fixture row count
         assert fresh().where("shard = 2").count() == sum(
@@ -4311,18 +4295,31 @@ def pysource_batch_results(spark: SparkSession, sf_dir: str) -> DataFrame:
             if int(__import__("hashlib").md5(cid.encode()).hexdigest()[:8], 16) % 4
             == 2
         )
-        agg = fresh().groupBy("shard", "status").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("n_tokens").cast("bigint").alias("total_tokens"),
+    return _batch_results_summary(spark, d)
+
+
+# Spark 4.1 REFUSES to plan a Python source that implements pushFilters()
+# unless this conf is on (it defaults to false and the caller's session
+# may not set it: the repo factory does, a vanilla session does not).
+# Every action on such a source runs inside conf_scope(spark, _PUSHDOWN).
+_PUSHDOWN = {"spark.sql.python.filterPushdown.enabled": "true"}
+
+
+def _batch_results_summary(spark: SparkSession, path: str) -> DataFrame:
+    """Per-(shard, status) row and token counts of a ``batch_results``
+    table, materialized inside the pushdown scope and returned as a local
+    frame (bounded: 4 shards x 2 statuses)."""
+    with conf_scope(spark, _PUSHDOWN):
+        agg = (
+            spark.read.format("batch_results").option("path", path).load()
+            .groupBy("shard", "status")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum("n_tokens").cast("bigint").alias("total_tokens"),
+            )
         )
-        out = agg.collect()  # bounded: 4 shards × 2 statuses
-        schema = agg.schema
-    finally:
-        if saved is None:
-            spark.conf.unset(knob)
-        else:
-            spark.conf.set(knob, saved)
-    return spark.createDataFrame(out, schema)
+        out = agg.collect()
+    return spark.createDataFrame(out, agg.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -5968,30 +5965,7 @@ def pysource_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).save()
     assert not os.path.isdir(os.path.join(d, "_staging"))  # commit cleaned up
 
-    # Scoped knob (same rationale as pysource_batch_results): Spark 4.1
-    # refuses to plan a pushFilters() Python source without this conf; a
-    # vanilla session does not set it, so the bounded (shard x status)
-    # aggregate materializes inside the scope.
-    knob = "spark.sql.python.filterPushdown.enabled"
-    saved = spark.conf.get(knob, None)
-    try:
-        spark.conf.set(knob, "true")
-        agg = (
-            spark.read.format("batch_results").option("path", d).load()
-            .groupBy("shard", "status")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("n_tokens").cast("bigint").alias("total_tokens"),
-            )
-        )
-        out = agg.collect()  # bounded: 4 shards x 2 statuses
-        schema = agg.schema
-    finally:
-        if saved is None:
-            spark.conf.unset(knob)
-        else:
-            spark.conf.set(knob, saved)
-    return spark.createDataFrame(out, schema)
+    return _batch_results_summary(spark, d)
 
 
 # ---------------------------------------------------------------------------
@@ -6074,26 +6048,7 @@ def stream_pysource_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.stop()
     assert len(os.listdir(os.path.join(sink, "_commits"))) >= 2
 
-    knob = "spark.sql.python.filterPushdown.enabled"
-    saved = spark.conf.get(knob, None)
-    try:
-        spark.conf.set(knob, "true")
-        agg = (
-            spark.read.format("batch_results").option("path", sink).load()
-            .groupBy("shard", "status")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("n_tokens").cast("bigint").alias("total_tokens"),
-            )
-        )
-        out = agg.collect()  # bounded: 4 shards x 2 statuses
-        schema = agg.schema
-    finally:
-        if saved is None:
-            spark.conf.unset(knob)
-        else:
-            spark.conf.set(knob, saved)
-    return spark.createDataFrame(out, schema)
+    return _batch_results_summary(spark, sink)
 
 
 # ---------------------------------------------------------------------------

@@ -17,6 +17,8 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -26,7 +28,7 @@ from data_etl_pipeline_spark.plans.planassert import (
     optimized_plan,
 )
 from data_etl_pipeline_spark.plans.registry import query
-from data_etl_pipeline_spark.session import scratch_dir
+from data_etl_pipeline_spark.session import conf_scope, scratch_dir
 from data_etl_pipeline_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -1001,12 +1003,18 @@ def bucketed_join_no_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assert above measures bucketing, not accidental plan shape
     plain = li.hint("merge").join(o, li.l_orderkey == o.o_orderkey)
     assert "Exchange" in plan_of(plain)
-    return joined.groupBy(F.col("o_orderstatus").alias("status")).agg(
+    out = joined.groupBy(F.col("o_orderstatus").alias("status")).agg(
         F.count(F.lit(1)).alias("n_items"),
         F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
         .cast("double")
         .alias("total_price"),
     )
+    # The analysed frame holds the resolved file relations, so the two
+    # catalog entries can go; their files are external (under base_dir)
+    # and stay until the session stops.
+    for name in ("b_orders", "b_lineitem"):
+        spark.sql(f"DROP TABLE {name}_{tag}")
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1034,17 +1042,19 @@ def bucketed_join_no_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     "subtotal rows from genuine NULL groups.",
 )
 def grouping_sets_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load(spark, sf_dir, "orders").createOrReplaceTempView("__gs_orders")
+    # spark.sql registers each keyword frame as a temp view only while it
+    # analyses the text, so the session catalog is left as it was
     return spark.sql(
         """
         SELECT o_orderstatus AS status, o_orderpriority AS priority,
                grouping_id(o_orderstatus, o_orderpriority) AS gid,
                COUNT(*) AS n,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        FROM __gs_orders
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority),
                                 (o_orderstatus, o_orderpriority), ())
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
     )
 
 
@@ -1084,38 +1094,61 @@ def aqe_runtime_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total"),
         )
 
-    # THE two knobs this query demonstrates (scoped save/restore): the
+    # THE two knobs this query demonstrates (scoped by conf_scope): the
     # STATIC threshold off => the planner must pick SortMergeJoin (an
     # explicit `merge` hint would instead BIND AQE too — user hints are
     # honored through re-planning, so that formulation can never convert);
     # the ADAPTIVE threshold on => runtime shuffle sizes may re-plan to
     # broadcast once the filtered dim turns out tiny.
-    saved = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-        )
-    }
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "10m")
-    try:
+    with conf_scope(
+        spark,
+        {
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold": "10m",
+        },
+    ):
         df = agg()
         static_plan = formatted_plan(df)
         assert "SortMergeJoin" in static_plan, static_plan
         rows = df.collect()  # run, so AQE finalizes the adaptive plan
         final_plan = executed_plan(df)
         assert "BroadcastHashJoin" in final_plan, final_plan[:2000]
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     # The join ran exactly once (inside the conf scope, where the AQE
     # assertion is valid); hand back its materialized result — a
     # status-grouped frame of at most a few rows — rather than
     # re-building and re-executing the aggregate.
+    return spark.createDataFrame(rows, df.schema)
+
+
+def _runtime_contract(
+    spark: SparkSession,
+    build: Callable[[], DataFrame],
+    confs: dict[str, str],
+    control: dict[str, str],
+    marker: str,
+    plan_of: Callable[[DataFrame], str] = executed_plan,
+) -> DataFrame:
+    """A runtime optimization, asserted with a control run.
+
+    Under ``confs``, ``build()`` runs (so AQE finalizes its adaptive plan)
+    and ``plan_of`` its plan must carry ``marker``. With ``control``
+    layered on top, the same build must NOT carry it and must return the
+    same rows. That proves the assertion tests the optimizer's decision,
+    not a string that always prints. The plan is only valid inside the
+    conf scope, so the first run's rows come back as a local frame;
+    every caller's result is a handful of grouped rows.
+    """
+    with conf_scope(spark, confs):
+        df = build()
+        rows = df.collect()
+        plan = plan_of(df)
+        assert marker in plan, plan[:2000]
+        with conf_scope(spark, control):
+            ctl = build()
+            ctl_rows = ctl.collect()
+            ctl_plan = plan_of(ctl)
+        assert marker not in ctl_plan, ctl_plan[:2000]
+        assert sorted(map(tuple, rows)) == sorted(map(tuple, ctl_rows))
     return spark.createDataFrame(rows, df.schema)
 
 
@@ -1202,30 +1235,14 @@ def aqe_skew_join_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "8k",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4k",
     }
-    saved = {k: spark.conf.get(k, None) for k in knobs}
-    try:
-        for k, v in knobs.items():
-            spark.conf.set(k, v)
-        df = agg()
-        rows = df.collect()  # AQE finalizes the adaptive plan
-        final_plan = executed_plan(df)
-        assert "skew=true" in final_plan, final_plan[:2000]
-        # control: same join with skew handling off must NOT carry the
-        # marker — proves the assertion tests AQE's decision, not a
-        # string that happens to always print
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        ctl = agg()
-        ctl_rows = ctl.collect()
-        ctl_plan = executed_plan(ctl)
-        assert "skew=true" not in ctl_plan, ctl_plan[:2000]
-        assert sorted(map(tuple, rows)) == sorted(map(tuple, ctl_rows))
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return spark.createDataFrame(rows, df.schema)
+    # control: same join with skew handling off must NOT carry the marker
+    return _runtime_contract(
+        spark,
+        agg,
+        knobs,
+        {"spark.sql.adaptive.skewJoin.enabled": "false"},
+        "skew=true",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1299,28 +1316,17 @@ def dpp_partition_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
+    # bounded: 5 months; control: DPP off must drop the runtime filter
+    # but not change results
     knob = "spark.sql.optimizer.dynamicPartitionPruning.enabled"
-    saved = spark.conf.get(knob, None)
-    try:
-        spark.conf.set(knob, "true")
-        df = agg()
-        rows = df.collect()  # bounded: 5 months
-        plan = executed_plan(df)
-        assert "dynamicpruningexpression" in plan.lower(), plan[:2000]
-        # control: DPP off must drop the runtime filter but not change
-        # results — proves the assertion tests the optimizer's decision
-        spark.conf.set(knob, "false")
-        ctl = agg()
-        ctl_rows = ctl.collect()
-        ctl_plan = executed_plan(ctl)
-        assert "dynamicpruningexpression" not in ctl_plan.lower(), ctl_plan[:2000]
-        assert sorted(map(tuple, rows)) == sorted(map(tuple, ctl_rows))
-    finally:
-        if saved is None:
-            spark.conf.unset(knob)
-        else:
-            spark.conf.set(knob, saved)
-    return spark.createDataFrame(rows, df.schema)
+    return _runtime_contract(
+        spark,
+        agg,
+        {knob: "true"},
+        {knob: "false"},
+        "dynamicpruningexpression",
+        plan_of=lambda df: executed_plan(df).lower(),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1372,26 +1378,11 @@ def reused_exchange_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("b.rev") - F.col("a.rev")).cast("double").alias("rev_gap"),
         )
 
+    # bounded: O(priorities^2) = 10 rows
     knob = "spark.sql.exchange.reuse"
-    saved = spark.conf.get(knob, None)
-    try:
-        spark.conf.set(knob, "true")
-        df = pairs()
-        rows = df.collect()  # bounded: O(priorities^2) = 10 rows
-        plan = executed_plan(df)
-        assert "ReusedExchange" in plan, plan[:2000]
-        spark.conf.set(knob, "false")
-        ctl = pairs()
-        ctl_rows = ctl.collect()
-        ctl_plan = executed_plan(ctl)
-        assert "ReusedExchange" not in ctl_plan, ctl_plan[:2000]
-        assert sorted(map(tuple, rows)) == sorted(map(tuple, ctl_rows))
-    finally:
-        if saved is None:
-            spark.conf.unset(knob)
-        else:
-            spark.conf.set(knob, saved)
-    return spark.createDataFrame(rows, df.schema)
+    return _runtime_contract(
+        spark, pairs, {knob: "true"}, {knob: "false"}, "ReusedExchange"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1587,27 +1578,15 @@ def runtime_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
     }
-    saved = {k: spark.conf.get(k, None) for k in knobs}
-    try:
-        for k, v in knobs.items():
-            spark.conf.set(k, v)
-        df = agg()
-        plan = optimized_plan(df)
-        assert "might_contain" in plan, plan[:2000]
-        rows = df.collect()  # bounded: O(linestatus) = 2 rows
-        spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-        ctl = agg()
-        ctl_plan = optimized_plan(ctl)
-        assert "might_contain" not in ctl_plan, ctl_plan[:2000]
-        ctl_rows = ctl.collect()
-        assert sorted(map(tuple, rows)) == sorted(map(tuple, ctl_rows))
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return spark.createDataFrame(rows, df.schema)
+    # bounded: O(linestatus) = 2 rows
+    return _runtime_contract(
+        spark,
+        agg,
+        knobs,
+        {"spark.sql.optimizer.runtime.bloomFilter.enabled": "false"},
+        "might_contain",
+        plan_of=optimized_plan,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1699,25 +1678,28 @@ def nation_top_customer_roster(spark: SparkSession, sf_dir: str) -> DataFrame:
     round_added=11,
 )
 def not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load(spark, sf_dir, "customer").createOrReplaceTempView("_nin_customer")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("_nin_orders")
-
+    tables = {
+        "customer": load(spark, sf_dir, "customer"),
+        "orders": load(spark, sf_dir, "orders"),
+    }
     clean = spark.sql(
         """
         SELECT 'clean_subquery' AS variant, COUNT(*) AS n_customers
-        FROM _nin_customer
+        FROM {customer}
         WHERE c_custkey NOT IN (
-            SELECT o_custkey FROM _nin_orders WHERE o_orderkey < 900)
-        """
+            SELECT o_custkey FROM {orders} WHERE o_orderkey < 900)
+        """,
+        **tables,
     )
     poisoned = spark.sql(
         """
         SELECT 'null_poisoned' AS variant, COUNT(*) AS n_customers
-        FROM _nin_customer
+        FROM {customer}
         WHERE c_custkey NOT IN (
             SELECT CASE WHEN o_orderkey % 250 = 0 THEN NULL ELSE o_custkey END
-            FROM _nin_orders WHERE o_orderkey < 900)
-        """
+            FROM {orders} WHERE o_orderkey < 900)
+        """,
+        **tables,
     )
     # the poisoned variant must carry the null-aware join condition —
     # a plain anti join here would silently return the clean answer

@@ -5,13 +5,18 @@ is what we would ship to a real cluster (AQE on, skew-join handling on,
 UTC session timezone so results are comparable across engines).
 
 Every scratch table a query builds lives under the session's own root
-(``scratch_dir``), so it is removed when the session stops.
+(``scratch_dir``), so it is removed when the session stops. A query that
+needs a different SQL conf for part of its work changes it through
+``conf_scope``, so the session's conf is the same after the query as
+before it.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark import SparkFiles
 from pyspark.sql import SparkSession
@@ -61,3 +66,26 @@ def scratch_dir(spark: SparkSession, prefix: str) -> str:
     Driver-local, like the tables a query writes.
     """
     return tempfile.mkdtemp(prefix=prefix, dir=SparkFiles.getRootDirectory())
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set SQL confs for the duration of a block, then put back what was there.
+
+    On exit every key gets its old value again, and a key that was absent
+    before is unset (not set to its default), so ``spark.conf.getAll`` is
+    the same after the block as before it. Scopes nest. A lazy frame
+    runs under the conf in force when it executes, so whatever must see
+    the scoped confs is executed inside the block.
+    """
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -127,6 +127,36 @@ def _adds_for_new_files(
     return adds, total
 
 
+def _commit_rewrite(
+    dest: str,
+    versions: list[int],
+    removed: list[str],
+    known: set[str],
+    data_change: bool = True,
+    extra: list[dict] | None = None,
+) -> tuple[int, list[dict], int]:
+    """Publish one copy-on-write rewrite as the next commit: a ``remove``
+    for each of ``removed`` (decoded relative paths, in the given order),
+    an ``add`` for every data file the walk-diff finds since ``known`` was
+    snapshotted, then ``extra`` (change-data actions). Returns (version,
+    add actions, bytes added)."""
+    now_ms = int(time.time() * 1000)
+    actions = [
+        {
+            "remove": {
+                "path": quote(rel.replace(os.sep, "/")),
+                "deletionTimestamp": now_ms,
+                "dataChange": data_change,
+            }
+        }
+        for rel in removed
+    ]
+    adds, total = _adds_for_new_files(dest, known, data_change)
+    version = versions[-1] + 1
+    _write_commit(dest, version, [*actions, *adds, *(extra or [])])
+    return version, adds, total
+
+
 def _constraints(meta: dict) -> dict[str, str]:
     """CHECK constraints from the metaData configuration (the protocol's
     ``delta.constraints.<name>`` keys, writer feature checkConstraints)."""
@@ -854,21 +884,10 @@ def export_delta_delete(spark, dest: str, predicate: str) -> dict:
         _survivor_writes()
 
     # 3) commit: remove rewritten files, add their survivor files
-    now_ms = int(__import__("time").time() * 1000)
-    actions = [
-        {
-            "remove": {
-                "path": quote(rel.replace(os.sep, "/")),
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-            }
-        }
-        for aff in affected.values()
-        for rel in sorted(aff)
-    ]
-    adds, _ = _adds_for_new_files(dest, known)
-    version = versions[-1] + 1
-    _write_commit(dest, version, [*actions, *adds, *cdc_actions])
+    rewritten = [rel for aff in affected.values() for rel in sorted(aff)]
+    version, adds, _ = _commit_rewrite(
+        dest, versions, rewritten, known, extra=cdc_actions
+    )
     return {
         "version": version,
         "removed_files": n_affected,
@@ -1067,21 +1086,10 @@ def export_delta_merge(spark, df: DataFrame, dest: str, keys: list[str]) -> dict
         _insert_write()
 
     # 4) commit: remove rewritten files, add every file the walk-diff finds
-    now_ms = int(__import__("time").time() * 1000)
-    actions = [
-        {
-            "remove": {
-                "path": quote(rel.replace(os.sep, "/")),
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-            }
-        }
-        for aff in affected.values()
-        for rel in sorted(aff)
-    ]
-    adds, total = _adds_for_new_files(dest, known)
-    version = versions[-1] + 1
-    _write_commit(dest, version, [*actions, *adds, *cdc_actions])
+    rewritten = [rel for aff in affected.values() for rel in sorted(aff)]
+    version, adds, total = _commit_rewrite(
+        dest, versions, rewritten, known, extra=cdc_actions
+    )
     return {
         "version": version,
         "removed_files": n_affected,
@@ -1175,20 +1183,9 @@ def export_delta_replace_where(
     if part_cols:
         writer = writer.partitionBy(*part_cols)
     writer.parquet(dest)
-    now_ms = int(__import__("time").time() * 1000)
-    actions = [
-        {
-            "remove": {
-                "path": p,
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-            }
-        }
-        for p in sorted(doomed)
-    ]
-    adds, total = _adds_for_new_files(dest, known)
-    version = versions[-1] + 1
-    _write_commit(dest, version, [*actions, *adds])
+    version, adds, total = _commit_rewrite(
+        dest, versions, [unquote(p) for p in sorted(doomed)], known
+    )
     return {
         "version": version,
         "removed_files": len(doomed),
@@ -1229,20 +1226,9 @@ def export_delta_optimize(spark, dest: str) -> dict:
         df.coalesce(1).write.mode("append").parquet(out_dir)
         removed.extend(rels)
 
-    now_ms = int(__import__("time").time() * 1000)
-    actions = [
-        {
-            "remove": {
-                "path": quote(rel.replace(os.sep, "/")),
-                "deletionTimestamp": now_ms,
-                "dataChange": False,
-            }
-        }
-        for rel in sorted(removed)
-    ]
-    adds, _ = _adds_for_new_files(dest, known, data_change=False)
-    version = versions[-1] + 1
-    _write_commit(dest, version, [*actions, *adds])
+    version, adds, _ = _commit_rewrite(
+        dest, versions, sorted(removed), known, data_change=False
+    )
     return {"version": version, "compacted_files": len(removed), "new_files": len(adds)}
 
 
@@ -1371,20 +1357,9 @@ def export_delta_zorder(
         out.write.mode("append").parquet(out_dir)
         removed.extend(rels)
 
-    now_ms = int(__import__("time").time() * 1000)
-    actions = [
-        {
-            "remove": {
-                "path": quote(rel.replace(os.sep, "/")),
-                "deletionTimestamp": now_ms,
-                "dataChange": False,
-            }
-        }
-        for rel in sorted(removed)
-    ]
-    adds, _ = _adds_for_new_files(dest, known, data_change=False)
-    version = versions[-1] + 1
-    _write_commit(dest, version, [*actions, *adds])
+    version, adds, _ = _commit_rewrite(
+        dest, versions, sorted(removed), known, data_change=False
+    )
     return {"version": version, "rewritten_files": len(removed), "new_files": len(adds)}
 
 

@@ -961,12 +961,7 @@ class _CommitCtx:
             "snapshot-log": log,
             "metadata-log": [],
         }
-        meta_path = os.path.join(self.meta_dir, f"v{self.version}.metadata.json")
-        with open(meta_path + ".tmp", "w") as f:
-            json.dump(meta, f)
-        os.replace(meta_path + ".tmp", meta_path)
-        with open(os.path.join(self.meta_dir, "version-hint.text"), "w") as f:
-            f.write(str(self.version))
+        _write_metadata(self.meta_dir, self.version, meta)
         return self.snapshot_id
 
 
@@ -1562,21 +1557,13 @@ def expire_snapshots_iceberg(table_dir: str, keep_last: int = 1) -> dict:
             os.remove(p)
             removed_manifests += 1
 
-    version = prev["_version"] + 1
-    meta = {k: v for k, v in prev.items() if not k.startswith("_")}
-    meta["snapshots"] = kept
-    meta["snapshot-log"] = [
+    snapshot_log = [
         {"snapshot-id": s["snapshot-id"], "timestamp-ms": s["timestamp-ms"]}
         for s in kept
     ]
-    meta["last-updated-ms"] = int(time.time() * 1000)
-    meta_dir = os.path.join(table_dir, "metadata")
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    with open(meta_path + ".tmp", "w") as f:
-        json.dump(meta, f)
-    os.replace(meta_path + ".tmp", meta_path)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as f:
-        f.write(str(version))
+    _write_metadata_update(
+        table_dir, prev, {"snapshots": kept, "snapshot-log": snapshot_log}
+    )
     return {
         "expired_snapshots": [s["snapshot-id"] for s in expired],
         "files_removed": removed_files,
@@ -1674,37 +1661,52 @@ def evolve_schema_iceberg(
     ]
     new_sid = max(sc.get("schema-id", 0) for sc in schemas_out) + 1
     new_schema = {"type": "struct", "schema-id": new_sid, "fields": new_fields}
-    version = prev["_version"] + 1
-    meta = {k: v for k, v in prev.items() if not k.startswith("_")}
-    meta["schemas"] = schemas_out + [new_schema]
-    meta["current-schema-id"] = new_sid
-    meta["last-column-id"] = max(prev.get("last-column-id", 0), next_id - 1)
-    meta["last-updated-ms"] = int(time.time() * 1000)
-    meta_dir = os.path.join(table_dir, "metadata")
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    with open(meta_path + ".tmp", "w") as f:
-        json.dump(meta, f)
-    os.replace(meta_path + ".tmp", meta_path)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as f:
-        f.write(str(version))
+    _write_metadata_update(
+        table_dir,
+        prev,
+        {
+            "schemas": schemas_out + [new_schema],
+            "current-schema-id": new_sid,
+            "last-column-id": max(prev.get("last-column-id", 0), next_id - 1),
+        },
+    )
     return new_sid
 
 
-def _write_metadata_update(table_dir: str, prev: dict, mutate) -> None:
-    """Commit a metadata-only change: copy the previous metadata, apply
-    ``mutate(meta)``, bump the version, refresh the hint. (The shared
-    tail of every snapshot-less commit: schema/spec evolution, refs.)"""
-    version = prev["_version"] + 1
-    meta = {k: v for k, v in prev.items() if not k.startswith("_")}
-    mutate(meta)
-    meta["last-updated-ms"] = int(time.time() * 1000)
-    meta_dir = os.path.join(table_dir, "metadata")
+def _write_metadata(meta_dir: str, version: int, meta: dict) -> None:
+    """Publish ``vN.metadata.json`` atomically (tmp write + rename), then
+    point ``version-hint.text`` at it. The shared tail of every commit."""
     meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
     with open(meta_path + ".tmp", "w") as f:
         json.dump(meta, f)
     os.replace(meta_path + ".tmp", meta_path)
     with open(os.path.join(meta_dir, "version-hint.text"), "w") as f:
         f.write(str(version))
+
+
+def _write_metadata_update(table_dir: str, prev: dict, updates: dict) -> None:
+    """Commit a metadata-only change: copy the previous metadata, replace
+    the top-level ``updates``, bump the version, refresh the hint. (The
+    shared tail of every snapshot-less commit: expiry, schema/spec
+    evolution, refs.)"""
+    meta = {k: v for k, v in prev.items() if not k.startswith("_")}
+    meta.update(updates)
+    meta["last-updated-ms"] = int(time.time() * 1000)
+    _write_metadata(os.path.join(table_dir, "metadata"), prev["_version"] + 1, meta)
+
+
+def _move_main(prev: dict, snapshot_id: int) -> dict:
+    """Metadata updates that point main (the current snapshot and its
+    branch ref) at ``snapshot_id`` and log the move."""
+    return {
+        "current-snapshot-id": snapshot_id,
+        "refs": {
+            **(prev.get("refs") or {}),
+            "main": {"snapshot-id": snapshot_id, "type": "branch"},
+        },
+        "snapshot-log": list(prev.get("snapshot-log") or [])
+        + [{"snapshot-id": snapshot_id, "timestamp-ms": int(time.time() * 1000)}],
+    }
 
 
 def tag_iceberg(table_dir: str, name: str, snapshot_id: int | None = None) -> int:
@@ -1722,13 +1724,8 @@ def tag_iceberg(table_dir: str, name: str, snapshot_id: int | None = None) -> in
     sid = snapshot_id if snapshot_id is not None else prev["current-snapshot-id"]
     if sid not in {s["snapshot-id"] for s in prev["snapshots"]}:
         raise IcebergError(f"snapshot {sid} not in table — cannot tag it")
-
-    def mutate(meta):
-        refs = dict(meta.get("refs") or {})
-        refs[name] = {"snapshot-id": sid, "type": "tag"}
-        meta["refs"] = refs
-
-    _write_metadata_update(table_dir, prev, mutate)
+    refs = {**(prev.get("refs") or {}), name: {"snapshot-id": sid, "type": "tag"}}
+    _write_metadata_update(table_dir, prev, {"refs": refs})
     return sid
 
 
@@ -1740,13 +1737,8 @@ def drop_ref_iceberg(table_dir: str, name: str) -> None:
         raise IcebergError("cannot drop 'main'")
     if name not in (prev.get("refs") or {}):
         raise IcebergError(f"ref {name!r} does not exist")
-
-    def mutate(meta):
-        refs = dict(meta.get("refs") or {})
-        del refs[name]
-        meta["refs"] = refs
-
-    _write_metadata_update(table_dir, prev, mutate)
+    refs = {k: v for k, v in prev["refs"].items() if k != name}
+    _write_metadata_update(table_dir, prev, {"refs": refs})
 
 
 def fast_forward_iceberg(table_dir: str, branch: str) -> int:
@@ -1775,17 +1767,7 @@ def fast_forward_iceberg(table_dir: str, branch: str) -> int:
         )
     if head == cur:
         raise IcebergError(f"branch {branch!r} is already at main — nothing to publish")
-
-    def mutate(meta):
-        meta["current-snapshot-id"] = head
-        refs = dict(meta.get("refs") or {})
-        refs["main"] = {"snapshot-id": head, "type": "branch"}
-        meta["refs"] = refs
-        meta["snapshot-log"] = list(meta.get("snapshot-log") or []) + [
-            {"snapshot-id": head, "timestamp-ms": int(time.time() * 1000)}
-        ]
-
-    _write_metadata_update(table_dir, prev, mutate)
+    _write_metadata_update(table_dir, prev, _move_main(prev, head))
     return head
 
 
@@ -1813,17 +1795,7 @@ def rollback_iceberg(table_dir: str, snapshot_id: int) -> int:
             f"snapshot {snapshot_id} is not an ancestor of the current "
             f"snapshot {cur} — rollback follows the main time line only"
         )
-
-    def mutate(meta):
-        meta["current-snapshot-id"] = snapshot_id
-        refs = dict(meta.get("refs") or {})
-        refs["main"] = {"snapshot-id": snapshot_id, "type": "branch"}
-        meta["refs"] = refs
-        meta["snapshot-log"] = list(meta.get("snapshot-log") or []) + [
-            {"snapshot-id": snapshot_id, "timestamp-ms": int(time.time() * 1000)}
-        ]
-
-    _write_metadata_update(table_dir, prev, mutate)
+    _write_metadata_update(table_dir, prev, _move_main(prev, snapshot_id))
     return snapshot_id
 
 
@@ -1903,19 +1875,15 @@ def evolve_partition_spec_iceberg(
         specs_out = specs + [{"spec-id": new_sid, "fields": new_fields}]
         last_pid = max([last_pid] + [f["field-id"] for f in new_fields])
 
-    version = prev["_version"] + 1
-    meta = {k: v for k, v in prev.items() if not k.startswith("_")}
-    meta["partition-specs"] = specs_out
-    meta["default-spec-id"] = new_sid
-    meta["last-partition-id"] = last_pid
-    meta["last-updated-ms"] = int(time.time() * 1000)
-    meta_dir = os.path.join(table_dir, "metadata")
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    with open(meta_path + ".tmp", "w") as f:
-        json.dump(meta, f)
-    os.replace(meta_path + ".tmp", meta_path)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as f:
-        f.write(str(version))
+    _write_metadata_update(
+        table_dir,
+        prev,
+        {
+            "partition-specs": specs_out,
+            "default-spec-id": new_sid,
+            "last-partition-id": last_pid,
+        },
+    )
     return new_sid
 
 

@@ -33,7 +33,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_etl_pipeline_spark.session import scratch_dir
+from data_etl_pipeline_spark.session import conf_scope, scratch_dir
 from data_etl_pipeline_spark.tables import load
 
 _SCHEMA = "event_id long, ts timestamp, user_id long, event_type string"
@@ -129,17 +129,13 @@ def join_streams_over_dir(
     # join sides — with micro-batches this small the default (= core
     # count) is pure overhead (measured: 22 s -> 4.4 s warm at 4
     # partitions, flat across sf). On a real cluster this knob is sized to state
-    # volume, not cores; scoped save/restore so batch queries keep theirs.
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    # volume, not cores; scoped (conf_scope) so batch queries keep theirs.
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": "4"}):
         q = joined.writeStream.outputMode("append").foreachBatch(write_epoch).start()
         try:
             q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
     return spark.read.option("basePath", sink).parquet(f"{sink}/epoch=*")
 
 

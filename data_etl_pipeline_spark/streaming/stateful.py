@@ -17,11 +17,10 @@ is deterministic and oracle-checkable.
 
 from __future__ import annotations
 
-import uuid
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
@@ -30,6 +29,15 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from data_etl_pipeline_spark.session import conf_scope, scratch_dir
+from data_etl_pipeline_spark.streaming.windows import (
+    ROCKSDB_STATE_STORE,
+    _align_ts_cols,
+    _events_stream,
+    drain_to_memory,
+)
+from data_etl_pipeline_spark.tables import load
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -97,9 +105,6 @@ def run_stream_dedup_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream the events table and emit only the first (by ts, event_id)
     event of each (user_id, event_type), with the seen-set carried in
     keyed state across micro-batches."""
-    from data_etl_pipeline_spark.streaming.windows import _events_stream
-
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
     deduped = (
         _events_stream(spark, sf_dir)
         .groupBy("user_id")
@@ -111,12 +116,7 @@ def run_stream_dedup_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    q = deduped.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_to_memory(deduped, "update", "dedup")
 
 
 def _ts_ordered_batch_dir(
@@ -129,11 +129,6 @@ def _ts_ordered_batch_dir(
     import os
 
     import pyarrow.parquet as pq
-
-    from pyspark.sql import functions as F
-
-    from data_etl_pipeline_spark.session import scratch_dir
-    from data_etl_pipeline_spark.tables import load
 
     ev = load(spark, sf_dir, "events").select(
         "user_id",
@@ -215,12 +210,7 @@ def run_stream_user_profile_apws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user profile via ``applyInPandasWithState`` over three
     ts-ordered micro-batches; drained update-mode emissions rolled up by
     max-per-user (every field monotone) to the final state."""
-    from data_etl_pipeline_spark.streaming.windows import _align_ts_cols
-
-    from pyspark.sql import functions as F
-
     src = _ts_ordered_batch_dir(spark, sf_dir, n_batches=3, prefix="apws_src_")
-    name = f"apws_{uuid.uuid4().hex[:8]}"
     profiles = (
         spark.readStream.schema(
             "user_id long, event_id long, ts timestamp, event_type string"
@@ -236,16 +226,10 @@ def run_stream_user_profile_apws(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    q = profiles.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-        # the operator's point is CROSS-batch state: prove the stream
-        # actually ran as multiple micro-batches, not one collapsed batch
-        n_batches = q.lastProgress["batchId"] + 1
-        assert n_batches >= 3, q.lastProgress
-    finally:
-        q.stop()
-    drained = spark.table(name).groupBy("user_id").agg(
+    # the operator's point is CROSS-batch state: prove the stream
+    # actually ran as multiple micro-batches, not one collapsed batch
+    drained = drain_to_memory(profiles, "update", "apws", min_batches=3)
+    drained = drained.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.max("n_types").alias("n_types"),
         F.max("last_ts").alias("last_ts"),
@@ -346,16 +330,7 @@ def run_stream_user_profile_twstate(spark: SparkSession, sf_dir: str) -> DataFra
             "state-protocol messages; not available in this environment"
         ) from e
     src = _ts_ordered_batch_dir(spark, sf_dir, n_batches=3, prefix="twstate_src_")
-
-    name = f"twstate_{uuid.uuid4().hex[:8]}"
-    knob = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(knob, None)
-    try:
-        spark.conf.set(
-            knob,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
+    with conf_scope(spark, ROCKSDB_STATE_STORE):
         profiles = (
             spark.readStream.schema(
                 "user_id long, event_id long, ts timestamp, event_type string"
@@ -370,27 +345,14 @@ def run_stream_user_profile_twstate(spark: SparkSession, sf_dir: str) -> DataFra
                 timeMode="none",
             )
         )
-        q = profiles.writeStream.outputMode("append").format("memory").queryName(
-            name
-        ).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        if saved is None:
-            spark.conf.unset(knob)
-        else:
-            spark.conf.set(knob, saved)
-    # the memory sink table is already materialized in-session; the
-    # post-drain rollup is a plain batch plan needing no special confs
-    drained = spark.table(name).groupBy("user_id").agg(
+        emitted = drain_to_memory(profiles, "append", "twstate")
+    # the memory sink is already materialized in-session; the post-drain
+    # rollup is a plain batch plan needing no special confs
+    drained = emitted.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.max("n_types").alias("n_types"),
         F.max("last_ts").alias("last_ts"),
     )
-    from data_etl_pipeline_spark.streaming.windows import _align_ts_cols
-
     return _align_ts_cols(spark, sf_dir, drained, ["last_ts"])
 
 
@@ -553,10 +515,6 @@ def run_stream_episodes_ttl(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pyspark.sql import functions as F
-
-    from data_etl_pipeline_spark.streaming.windows import _align_ts_cols
-
     src = _ts_ordered_batch_dir(spark, sf_dir, n_batches=4, prefix="ttl_src_")
     # flush sentinel: ts far beyond max_ts + TTL, mtime-ordered last so
     # it forms the final micro-batch and pushes the watermark over every
@@ -581,7 +539,6 @@ def run_stream_episodes_ttl(
     pq.write_table(sentinel, sent_path)
     os.utime(sent_path, (files[-1][0] + 10,) * 2)
 
-    name = f"ttl_{uuid.uuid4().hex[:8]}"
     episodes = (
         spark.readStream.schema(
             "user_id long, event_id long, ts timestamp, event_type string"
@@ -598,12 +555,7 @@ def run_stream_episodes_ttl(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-    q = episodes.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = spark.table(name).where(F.col("user_id") >= 0)
+    out = drain_to_memory(episodes, "append", "ttl").where(F.col("user_id") >= 0)
     # eviction really happened: the timeout path closed >= 1 episode
     n_timeout = out.where(F.col("closed_by") == "timeout").count()
     assert n_timeout >= 1, "event-time timeout never fired"

@@ -24,12 +24,19 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_etl_pipeline_spark.session import scratch_dir
+from data_etl_pipeline_spark.session import conf_scope, scratch_dir
 from data_etl_pipeline_spark.tables import load
+
+# The state-store provider is read at stream start, so a query scopes it
+# around the start with conf_scope(spark, ROCKSDB_STATE_STORE).
+ROCKSDB_STATE_STORE = {
+    "spark.sql.streaming.stateStore.providerClass": "org.apache.spark.sql."
+    "execution.streaming.state.RocksDBStateStoreProvider"
+}
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    batch = load(spark, sf_dir, "events")  # sets nanosAsLong + ts conversion
+    load(spark, sf_dir, "events")  # sets nanosAsLong first for a NANOS ts
     raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     # the file stream source requires a directory: stream the sf dir with a
     # glob filter selecting only the events file
@@ -47,8 +54,29 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # back to the batch ts type so stream/batch twins stay comparable.
     if dict(stream.dtypes).get("ts") == "timestamp_ntz":
         stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    _ = batch
     return stream
+
+
+def drain_to_memory(
+    stream: DataFrame, output_mode: str, prefix: str, min_batches: int = 1
+) -> DataFrame:
+    """Run ``stream`` to completion into a memory sink; return its rows.
+
+    The sink registers a uuid-named temp view. The returned frame is
+    analysed before that view is dropped, so it reads the sink itself and
+    the session catalog is left as it was. ``min_batches`` asserts the
+    stream really ran as that many micro-batches.
+    """
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    q = stream.writeStream.outputMode(output_mode).format("memory").queryName(name).start()
+    try:
+        q.processAllAvailable()
+        assert q.lastProgress["batchId"] + 1 >= min_batches, q.lastProgress
+    finally:
+        q.stop()
+    out = stream.sparkSession.table(name)
+    stream.sparkSession.catalog.dropTempView(name)
+    return out
 
 
 def _batch_ts_type(spark: SparkSession, sf_dir: str) -> str:
@@ -75,19 +103,14 @@ def run_stream_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch DataFrame once the stream drains. Matches the batch plan
     hourly_event_stats (same grouping) — the equivalence the tests assert.
     """
-    name = f"hourly_{uuid.uuid4().hex[:8]}"
     agg = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").getField("start").alias("window_start"), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return _align_ts_cols(spark, sf_dir, spark.table(name), ["window_start"])
+    drained = drain_to_memory(agg, "complete", "hourly")
+    return _align_ts_cols(spark, sf_dir, drained, ["window_start"])
 
 
 def run_stream_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -101,7 +124,6 @@ def run_stream_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     state retention so a 100 TB/day stream evicts closed sessions instead
     of accumulating them.
     """
-    name = f"sessions_{uuid.uuid4().hex[:8]}"
     agg = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -114,13 +136,11 @@ def run_stream_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("user_id", "session_start", "session_end", "n_events", "session_value")
     )
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return _align_ts_cols(
-        spark, sf_dir, spark.table(name), ["session_start", "session_end"]
+        spark,
+        sf_dir,
+        drain_to_memory(agg, "complete", "sessions"),
+        ["session_start", "session_end"],
     )
 
 
@@ -316,8 +336,8 @@ def run_stream_dedup_counts_rocksdb(spark: SparkSession, sf_dir: str) -> DataFra
     block cache, so state size is bounded by disk, not heap — the
     provider Spark itself recommends for large state.
 
-    The provider conf is read at STREAM START, so it is scoped
-    save/restore around the query (the driver's session keeps its
+    The provider conf is read at STREAM START, so it is scoped around
+    the query with ``conf_scope`` (the driver's session keeps its
     default); the in-query assert reads the executed query's progress
     and requires rocksdb* custom metrics on the dedup state operator —
     proof the store actually ran RocksDB, not a conf that silently
@@ -330,14 +350,7 @@ def run_stream_dedup_counts_rocksdb(spark: SparkSession, sf_dir: str) -> DataFra
     def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(f"{sink}/epoch={epoch_id}")
 
-    knob = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(knob, None)
-    try:
-        spark.conf.set(
-            knob,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
+    with conf_scope(spark, ROCKSDB_STATE_STORE):
         dedup = _dedup_replay_stream(spark, src)
         q = dedup.writeStream.outputMode("append").foreachBatch(write_epoch).start()
         try:
@@ -345,11 +358,6 @@ def run_stream_dedup_counts_rocksdb(spark: SparkSession, sf_dir: str) -> DataFra
             progress = q.lastProgress
         finally:
             q.stop()
-    finally:
-        if saved is None:
-            spark.conf.unset(knob)
-        else:
-            spark.conf.set(knob, saved)
     # provider proof from the EXECUTED query, not the conf: the dedup
     # state operator must report RocksDB-specific custom metrics
     metrics = progress["stateOperators"][0]["customMetrics"]
@@ -471,7 +479,6 @@ def run_stream_hopping_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     query: the sliding TimeWindow fans each event into its 4 covering
     windows inside the streaming aggregation, watermark-bounded state.
     Batch twin: hopping_event_stats (same grouping, count only)."""
-    name = f"hopping_{uuid.uuid4().hex[:8]}"
     agg = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "2 hours")
@@ -483,12 +490,8 @@ def run_stream_hopping_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return _align_ts_cols(spark, sf_dir, spark.table(name), ["window_start"])
+    drained = drain_to_memory(agg, "complete", "hopping")
+    return _align_ts_cols(spark, sf_dir, drained, ["window_start"])
 
 
 def run_stream_dedup_within_watermark(
@@ -586,7 +589,6 @@ def run_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch counts, so the oracle recomputes the same PSI from the
     raw table.
     """
-    name = f"psi_{uuid.uuid4().hex[:8]}"
     ref = (
         load(spark, sf_dir, "events")
         .where(F.col("ts") < F.lit("2024-01-08").cast("timestamp"))
@@ -668,19 +670,13 @@ def run_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
         .select(F.col("win").getField("start").alias("w"), "bin", "c")
     )
-    q = agg.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    drained = (
-        spark.table(name)
-        .select(F.to_date("w").alias("day"), "bin", "c")
-        .where(F.col("day") != F.lit(sentinel_day))
+    emitted = drain_to_memory(agg, "append", "psi")
+    drained = emitted.select(F.to_date("w").alias("day"), "bin", "c").where(
+        F.col("day") != F.lit(sentinel_day)
     )
     # append-mode contract: each closed (window, bin) emitted exactly once
-    n_all = spark.table(name).count()
-    n_distinct = spark.table(name).select("w", "bin").distinct().count()
+    n_all = emitted.count()
+    n_distinct = emitted.select("w", "bin").distinct().count()
     assert n_all == n_distinct, (n_all, n_distinct)
 
     # batch post-processing on the O(days x 5) drained frame

@@ -73,21 +73,36 @@ def one_slice_df(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
 
+def _ts_is_nanos(path: str) -> bool:
+    """Whether the parquet footer types the file's ``ts`` column as
+    TIMESTAMP(NANOS)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pq.read_schema(path)
+    if "ts" not in schema.names:
+        return False
+    t = schema.field("ts").type
+    return pa.types.is_timestamp(t) and t.unit == "ns"
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    if name == "events":
-        # events.ts is parquet TIMESTAMP(NANOS), which Spark 4 rejects by
-        # default; read nanos as long and floor-convert to a micros timestamp
-        # (same truncation DuckDB applies when casting ns -> timestamp).
+    path = f"{sf_dir}/{name}.parquet"
+    if name == "events" and _ts_is_nanos(path):
+        # Spark 4 rejects parquet TIMESTAMP(NANOS) by default: read nanos
+        # as long and floor-convert to a micros timestamp (the truncation
+        # DuckDB applies when casting ns -> timestamp). The flag must stay
+        # set for the session, since the lazy scan reads it when it runs.
+        # Every generated fixture writes TIMESTAMP(MICROS), which needs
+        # neither.
         from pyspark.sql import functions as F
 
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = spark.read.parquet(path)
+        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    return spark.read.parquet(path)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -22,20 +22,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from data_etl_pipeline_spark.session import get_spark
+from data_etl_pipeline_spark.session import conf_scope, get_spark
+from data_etl_pipeline_spark.streaming.windows import ROCKSDB_STATE_STORE
 
 
 def run(provider: str, src: str, n_batches: int) -> dict:
     spark = get_spark(f"state-ab-{provider}")
-    knob = "spark.sql.streaming.stateStore.providerClass"
-    if provider == "rocksdb":
-        spark.conf.set(
-            knob,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    else:
-        spark.conf.unset(knob) if spark.conf.get(knob, None) else None
     sink = tempfile.mkdtemp(prefix=f"state_ab_sink_{provider}_")
     stream = (
         spark.readStream.schema("k long")
@@ -48,12 +40,14 @@ def run(provider: str, src: str, n_batches: int) -> dict:
     def write_epoch(batch_df, epoch_id):
         batch_df.write.mode("overwrite").parquet(f"{sink}/epoch={epoch_id}")
 
-    q = stream.writeStream.outputMode("append").foreachBatch(write_epoch).start()
-    try:
-        q.processAllAvailable()
-        progress = [json.loads(str(p)) for p in q.recentProgress]
-    finally:
-        q.stop()
+    # the provider is read at stream start; the heap store is the default
+    with conf_scope(spark, ROCKSDB_STATE_STORE if provider == "rocksdb" else {}):
+        q = stream.writeStream.outputMode("append").foreachBatch(write_epoch).start()
+        try:
+            q.processAllAvailable()
+            progress = [json.loads(str(p)) for p in q.recentProgress]
+        finally:
+            q.stop()
     spark.stop()
     out = {"provider": provider, "batches": []}
     for p in progress:
@@ -86,13 +80,7 @@ def main() -> None:
             .write.mode("append")
             .parquet(src)
         )
-        for f in os.listdir(src):
-            p = os.path.join(src, f)
-            if f.endswith(".parquet"):
-                st = os.stat(p)
-                if st.st_mtime < 1_700_000_000:
-                    continue
-        # pin increasing mtimes so (mtime, path) batch order is stable
+    # pin increasing mtimes so (mtime, path) batch order is stable
     files = sorted(
         f for f in os.listdir(src) if f.endswith(".parquet")
     )

@@ -1,22 +1,49 @@
 #!/usr/bin/env python
-"""Dump formatted physical plans for the tier-1 bench queries to EXPLAINS.md
-so plan shapes (pushdown, broadcasts, single-shuffle windows, partial
-aggregation) are inspectable without running Spark."""
+"""Dump formatted physical plans of declared queries.
+
+With no arguments, writes EXPLAINS.md: the operator trees of the tier-1
+bench queries and of the queries listed below, so plan shapes (pushdown,
+broadcasts, single-shuffle windows, partial aggregation) are inspectable
+without running Spark (sf dir: $SPARK_GRAFT_SF_DIR, default sf0.01).
+
+With a round, writes the full ``.explain('formatted')`` of each named
+query (default: every bench tier 1-2 query) to
+plans/<round>/<name>_<suffix>.txt, the before/after plan evidence of an
+optimization round (default sf dir sf0.1).
+
+Usage: python scripts/dump_plans.py
+       python scripts/dump_plans.py <round> <suffix> [query ...]
+"""
 
 from __future__ import annotations
 
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
+from data_etl_pipeline_spark.plans.planassert import formatted_plan
 from data_etl_pipeline_spark.plans.registry import QUERIES, _ensure_loaded
 from data_etl_pipeline_spark.session import get_spark
 
 
-def main() -> None:
+def dump_round(round_: str, suffix: str, names: list[str]) -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark(f"dump-{round_}-plans")
+    out_dir = os.path.join(ROOT, "plans", round_)
+    os.makedirs(out_dir, exist_ok=True)
+    names = names or [s.name for s in QUERIES.values() if s.bench_tier in (1, 2)]
+    for name in names:
+        plan = formatted_plan(QUERIES[name].fn(spark, sf_dir))
+        with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
+            f.write(plan)
+        print(f"dumped {name}_{suffix}.txt")
+    spark.stop()
+
+
+def write_explains() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    _ensure_loaded()
     spark = get_spark("explain", cpus=8)
     out = [
         "# EXPLAINS — formatted physical plans (tier-1 bench queries)\n",
@@ -152,10 +179,7 @@ def main() -> None:
     for name, spec in QUERIES.items():
         if spec.bench_tier != 1 and name not in extras:
             continue
-        df = spec.fn(spark, sf_dir)
-        from data_etl_pipeline_spark.plans.planassert import formatted_plan
-
-        plan = formatted_plan(df)
+        plan = formatted_plan(spec.fn(spark, sf_dir))
         # keep the operator tree, drop the verbose per-node detail section
         tree = plan.split("\n\n")[0]
         note = ""
@@ -185,10 +209,20 @@ def main() -> None:
                 "in-query on every run)\n"
             )
         out.append(f"\n## {name}\n\n```\n{tree}\n```\n{note}")
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "EXPLAINS.md"), "w") as f:
+    with open(os.path.join(ROOT, "EXPLAINS.md"), "w") as f:
         f.write("\n".join(out))
     spark.stop()
     print("wrote EXPLAINS.md")
+
+
+def main() -> None:
+    _ensure_loaded()
+    if len(sys.argv) == 1:
+        write_explains()
+    elif len(sys.argv) >= 3:
+        dump_round(sys.argv[1], sys.argv[2], sys.argv[3:])
+    else:
+        sys.exit(__doc__)
 
 
 if __name__ == "__main__":

@@ -25,6 +25,11 @@ session.py conf audit (why each is safe to drop, or why not):
   (Spark refuses to plan pushFilters() sources without it): the r8
   failure. Now self-scoped inside pysource_batch_results.
 
+This is the one script that builds its own SparkSession instead of
+calling ``get_spark``, and it keeps it on purpose: the default-conf
+session is what it tests. Every other script (profiling included) runs
+the engine's own session so it measures what the bench runs.
+
 Usage: python scripts/vanilla_parity.py [sf_dir] [query ...]
        (default queries: the committed _VERIFY_FIRST front-50)
 """

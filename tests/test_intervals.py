@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from data_etl_pipeline_spark.operators.intervals import interval_join
 from data_etl_pipeline_spark.plans.planassert import executed_plan, formatted_plan
+from data_etl_pipeline_spark.session import conf_scope
 
 
 def _ts(s: str) -> datetime:
@@ -130,9 +131,7 @@ def test_interval_join_falls_back_to_shuffled_join_past_broadcast(spark):
     """The designed scale path: when the interval side outgrows the
     broadcast threshold the bucket equi-join becomes a shuffled
     SortMergeJoin — never a nested loop."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         out = interval_join(
             _points(spark), _intervals(spark), "p_ts", "start", "end", 600
         )
@@ -146,8 +145,6 @@ def test_interval_join_falls_back_to_shuffled_join_past_broadcast(spark):
                 (F.col("start") <= F.col("p_ts")) & (F.col("p_ts") < F.col("end")),
             )
         )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_adversarial_boundaries_match_bruteforce(spark):

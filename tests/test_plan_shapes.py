@@ -11,6 +11,7 @@ from data_etl_pipeline_spark.plans.planassert import (
     formatted_plan,
     optimized_plan,
 )
+from data_etl_pipeline_spark.session import conf_scope
 
 _ensure_loaded()
 
@@ -211,18 +212,11 @@ def test_runtime_bloom_filter_join_pruning(spark, sf_dir):
 
     from data_etl_pipeline_spark.tables import load
 
-    saved = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        )
+    knobs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
     }
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0"
-        )
+    with conf_scope(spark, knobs):
         orders = (
             load(spark, sf_dir, "orders")
             .where(F.col("o_totalprice") > 500000)
@@ -232,9 +226,3 @@ def test_runtime_bloom_filter_join_pruning(spark, sf_dir):
         j = lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
         plan = optimized_plan(j)
         assert "might_contain" in plan
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)

@@ -14,6 +14,7 @@ from data_etl_pipeline_spark.operators.skew import salted_set_rollup
 from data_etl_pipeline_spark.sources.bucketed import colocated_join, write_bucketed
 from data_etl_pipeline_spark.tables import load
 from data_etl_pipeline_spark.plans.planassert import executed_plan, formatted_plan
+from data_etl_pipeline_spark.session import conf_scope
 
 
 class TestBucketedJoin:
@@ -23,21 +24,20 @@ class TestBucketedJoin:
         li = load(spark, sf_dir, "lineitem").select(
             F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
         )
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        # force a non-broadcast join so the shuffle question is real
+        no_broadcast = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
         try:
-            # force a non-broadcast join so the shuffle question is real
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            write_bucketed(orders, "b_orders", "o_orderkey", 4, sort_key="o_orderkey", path=f"{wh}/b_orders")
-            write_bucketed(li, "b_lineitem", "o_orderkey", 4, sort_key="o_orderkey", path=f"{wh}/b_lineitem")
-            joined = colocated_join(spark, "b_orders", "b_lineitem", "o_orderkey")
-            plan = formatted_plan(joined)
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan  # co-located buckets: no shuffle
-            # and the join is still correct
-            expected = orders.join(li, "o_orderkey").count()
-            assert joined.count() == expected
+            with conf_scope(spark, no_broadcast):
+                write_bucketed(orders, "b_orders", "o_orderkey", 4, sort_key="o_orderkey", path=f"{wh}/b_orders")
+                write_bucketed(li, "b_lineitem", "o_orderkey", 4, sort_key="o_orderkey", path=f"{wh}/b_lineitem")
+                joined = colocated_join(spark, "b_orders", "b_lineitem", "o_orderkey")
+                plan = formatted_plan(joined)
+                assert "SortMergeJoin" in plan
+                assert "Exchange" not in plan  # co-located buckets: no shuffle
+                # and the join is still correct
+                expected = orders.join(li, "o_orderkey").count()
+                assert joined.count() == expected
         finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
             spark.sql("DROP TABLE IF EXISTS b_orders")
             spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
