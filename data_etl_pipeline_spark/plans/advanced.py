@@ -168,8 +168,7 @@ def stream_dedup_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     "state tuple per user accreting n_events / distinct-type set / last_ts "
     "across three ts-ordered micro-batches); every emitted field is "
     "monotone per user, so the max-per-user drain equals the final state "
-    "and the batch COUNT/COUNT DISTINCT/MAX oracle checks it exactly. "
-    "Unblocked twin of the transformWithState operator below.",
+    "and the batch COUNT/COUNT DISTINCT/MAX oracle checks it exactly.",
     round_added=10,
 )
 def stream_user_profile_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -180,14 +179,10 @@ def stream_user_profile_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_user_profile_apws(spark, sf_dir)
 
 
-# NOTE: streaming/stateful.py ALSO implements the profile operator above on
-# transformWithStateInPandas (Spark 4's typed-state successor API), but
-# its Python worker needs the `protobuf` runtime, which this container
-# lacks — so that variant is NOT a declared query (a driver row could
-# never run). tests/test_stateful_twstate.py runs it when protobuf is
-# importable and skips otherwise; the oracle contract is the same
-# COUNT/COUNT DISTINCT/MAX-per-user rollup the declared
-# applyInPandasWithState twin proves.
+# NOTE: the profile operator above runs on applyInPandasWithState, not
+# on transformWithStateInPandas (Spark 4's typed-state successor API),
+# whose Python worker needs the `protobuf` runtime; that variant was
+# never a declared query and is not kept.
 
 
 # ---------------------------------------------------------------------------

@@ -4,6 +4,7 @@ validation (J9), token-budget guards (F11), percentile/approx aggregates.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
@@ -13,22 +14,8 @@ from data_etl_pipeline_spark.functions import psl
 from data_etl_pipeline_spark.operators import multimodal
 from data_etl_pipeline_spark.plans.registry import query
 from data_etl_pipeline_spark.session import conf_scope, scratch_dir
+from data_etl_pipeline_spark.sources.commit import write_single_parquet
 from data_etl_pipeline_spark.tables import load, one_slice_df
-
-
-def _write_single_parquet(df: DataFrame, table_dir: str, name: str) -> None:
-    """Write ``df`` as ONE parquet file at ``table_dir/name`` (Delta
-    fixture builder): coalesce(1) into a temp dir, move the part file,
-    drop the temp — shared by every interop fixture below so the
-    rename/cleanup dance exists once."""
-    import os
-    import shutil
-
-    tmp = os.path.join(table_dir, "_tmp")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    os.rename(os.path.join(tmp, part), os.path.join(table_dir, name))
-    shutil.rmtree(tmp)
 
 
 def _status_totals(df: DataFrame) -> DataFrame:
@@ -1254,7 +1241,7 @@ def delta_interop_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tbl = scratch_dir(spark, "delta_interop_")
 
     def write_file(df: DataFrame, name: str) -> None:
-        _write_single_parquet(df, tbl, name)
+        write_single_parquet(df, os.path.join(tbl, name))
 
     low = base.where(F.col("o_orderkey") <= 1000)
     high = base.where(F.col("o_orderkey") > 1000)
@@ -1369,7 +1356,6 @@ def versioned_metadata_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
 def delta_interop_checkpoint_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os
-    import shutil
 
     from pyspark.sql import types as T
 
@@ -1385,7 +1371,7 @@ def delta_interop_checkpoint_read(spark: SparkSession, sf_dir: str) -> DataFrame
     os.makedirs(log_dir)
 
     def write_file(df: DataFrame, name: str) -> None:
-        _write_single_parquet(df, tbl, name)
+        write_single_parquet(df, os.path.join(tbl, name))
 
     meta = {
         "id": "interop-cp",
@@ -1444,11 +1430,10 @@ def delta_interop_checkpoint_read(spark: SparkSession, sf_dir: str) -> DataFrame
     cp_rows = [({"minReaderVersion": 1}, None, None), (None, (meta["id"], meta["schemaString"], []), None)] + [
         (None, None, (f"s{v}.parquet", {}, True)) for v in range(11)
     ]
-    tmp = os.path.join(tbl, "_cptmp")
-    one_slice_df(spark, cp_rows, cp_schema).write.mode("overwrite").parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    os.rename(os.path.join(tmp, part), os.path.join(log_dir, f"{10:020d}.checkpoint.parquet"))
-    shutil.rmtree(tmp)
+    write_single_parquet(
+        one_slice_df(spark, cp_rows, cp_schema),
+        os.path.join(log_dir, f"{10:020d}.checkpoint.parquet"),
+    )
     with open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
         fh.write(_json.dumps({"version": 10, "size": len(cp_rows)}))
     # vacuum: delete every JSON the checkpoint covers — replay MUST come
@@ -1515,7 +1500,7 @@ def delta_interop_dv_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(os.path.join(tbl, "_delta_log"))
 
     def write_file(df: DataFrame, name: str) -> None:
-        _write_single_parquet(df, tbl, name)
+        write_single_parquet(df, os.path.join(tbl, name))
 
     # the DV masks row POSITIONS, so the low file's on-disk order must be
     # deterministic: single partition sorted by key — position == key rank
@@ -1640,9 +1625,9 @@ def delta_interop_dv_file_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = sorted_slice(-1, 1000)
     b = sorted_slice(1000, 2000)
     c = base.where((F.col("o_orderkey") > 2000) & (F.col("o_orderkey") <= 3000))
-    _write_single_parquet(a, tbl, "a.parquet")
-    _write_single_parquet(b, tbl, "b.parquet")
-    _write_single_parquet(c, tbl, "c.parquet")
+    write_single_parquet(a, os.path.join(tbl, "a.parquet"))
+    write_single_parquet(b, os.path.join(tbl, "b.parquet"))
+    write_single_parquet(c, os.path.join(tbl, "c.parquet"))
     n_a = a.count()
     # deterministic UUIDs keep the fixture reproducible run-to-run
     dv_a = write_dv_file(
@@ -1715,7 +1700,7 @@ def delta_interop_timestamp_ntz_read(spark: SparkSession, sf_dir: str) -> DataFr
     assert dict(base.dtypes)["o_orderdate"] == "timestamp_ntz"
     tbl = scratch_dir(spark, "delta_ntz_")
     os.makedirs(os.path.join(tbl, "_delta_log"))
-    _write_single_parquet(base, tbl, "f.parquet")
+    write_single_parquet(base, os.path.join(tbl, "f.parquet"))
     with open(os.path.join(tbl, "_delta_log", f"{0:020d}.json"), "w") as fh:
         for act in [
             {
@@ -1784,7 +1769,7 @@ def delta_interop_column_mapping_id_read(spark: SparkSession, sf_dir: str) -> Da
             F.col("o_orderkey").alias("col-9f2a", metadata={"parquet.field.id": 1}),
             F.col("o_totalprice").alias("col-77b1", metadata={"parquet.field.id": 2}),
         )
-        _write_single_parquet(phys, tbl, "f.parquet")
+        write_single_parquet(phys, os.path.join(tbl, "f.parquet"))
     schema_fields = [
         {
             "name": "o_orderkey",
@@ -1857,7 +1842,6 @@ def delta_interop_column_mapping_id_read(spark: SparkSession, sf_dir: str) -> Da
 def delta_interop_v2_checkpoint_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os
-    import shutil
 
     from pyspark.sql import types as T
 
@@ -1887,10 +1871,9 @@ def delta_interop_v2_checkpoint_read(spark: SparkSession, sf_dir: str) -> DataFr
     # v0..v2: three 400-key slices; v3 adds a fourth after the checkpoint
     for v in range(4):
         lo, hi = v * 400, (v + 1) * 400
-        _write_single_parquet(
+        write_single_parquet(
             base.where((F.col("o_orderkey") >= lo) & (F.col("o_orderkey") < hi)),
-            tbl,
-            f"s{v}.parquet",
+            os.path.join(tbl, f"s{v}.parquet"),
         )
         actions = [
             {"add": {"path": f"s{v}.parquet", "partitionValues": {}, "size": 1, "dataChange": True}}
@@ -1916,13 +1899,7 @@ def delta_interop_v2_checkpoint_read(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
     def one_parquet(rows, schema, dest: str) -> None:
-        tmp = os.path.join(tbl, "_v2tmp")
-        one_slice_df(spark, rows, schema).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.rename(os.path.join(tmp, part), dest)
-        shutil.rmtree(tmp)
+        write_single_parquet(one_slice_df(spark, rows, schema), dest)
 
     # sidecar with the s1/s2 adds; s0's add rides inline in the manifest
     one_parquet(
@@ -2944,7 +2921,7 @@ def delta_interop_column_mapping_read(spark: SparkSession, sf_dir: str) -> DataF
             )
         )
         name = f"p{i}.parquet"
-        _write_single_parquet(part, tbl, name)
+        write_single_parquet(part, os.path.join(tbl, name))
         adds.append(
             {"add": {"path": name, "partitionValues": {"col-2": st}, "size": 1,
                      "dataChange": True}}
@@ -3784,15 +3761,14 @@ def delta_interop_cdf_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tbl = scratch_dir(spark, "delta_cdf_foreign_")
     os.makedirs(os.path.join(tbl, "_delta_log"))
     a = base.where(k <= 300)
-    _write_single_parquet(a, tbl, "a.parquet")
-    _write_single_parquet(a.where(k % 3 != 0), tbl, "a2.parquet")
+    write_single_parquet(a, os.path.join(tbl, "a.parquet"))
+    write_single_parquet(a.where(k % 3 != 0), os.path.join(tbl, "a2.parquet"))
     os.makedirs(os.path.join(tbl, "_change_data"))
-    _write_single_parquet(
+    write_single_parquet(
         a.where(k % 3 == 0).withColumn("_change_type", F.lit("delete")),
-        os.path.join(tbl, "_change_data"),
-        "cdc-0.parquet",
+        os.path.join(tbl, "_change_data", "cdc-0.parquet"),
     )
-    _write_single_parquet(base.where((k > 300) & (k <= 500)), tbl, "b.parquet")
+    write_single_parquet(base.where((k > 300) & (k <= 500)), os.path.join(tbl, "b.parquet"))
 
     def log(v: int, actions: list[dict]) -> None:
         with open(os.path.join(tbl, "_delta_log", f"{v:020d}.json"), "w") as fh:

@@ -31,9 +31,10 @@ from __future__ import annotations
 
 import io
 import json
-import os
 import struct
 import zlib
+
+from data_etl_pipeline_spark.sources.commit import replace_atomic
 
 MAGIC = b"Obj\x01"
 
@@ -320,11 +321,7 @@ def write_ocf(
         write_long(buf, len(payload))
         buf.write(payload)
         buf.write(sync)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "wb") as f:
-        f.write(buf.getvalue())
-    os.replace(tmp, path)
+    replace_atomic(path, buf.getvalue())
 
 
 def read_ocf(path: str) -> tuple[list, dict]:

@@ -19,6 +19,12 @@ Partitioned export writes the standard Hive layout (``col=value/part-*``)
 with partition values carried in the log, NOT in the data files — exactly
 how real Delta writers lay tables out, so partition pruning works for any
 downstream reader.
+
+Every commit goes through the commit kernel (``sources/commit.py``): the
+``NNN.json`` entry is an exclusive claim, and each operation's data and
+change files are written into its own attempt directory and then moved
+into the table's Hive layout (or under ``_change_data/``), so a commit's
+adds are exactly the files it wrote — never a listing of the table.
 """
 
 from __future__ import annotations
@@ -32,6 +38,7 @@ from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame
 
+from data_etl_pipeline_spark.sources import commit
 from data_etl_pipeline_spark.sources.footerprune import (
     file_uri_path,
     footer_stats,
@@ -98,48 +105,35 @@ def _add_action(dest: str, full: str, data_change: bool) -> tuple[dict, int]:
     return {"add": add}, st.st_size
 
 
-def _data_files_on_disk(dest: str) -> set[str]:
-    """Relative ('/'-separated) paths of every parquet data file under
-    ``dest`` — INCLUDING removed-but-unvacuumed files, which is exactly
-    what makes walk-diff appends resurrection-proof."""
-    return {
-        os.path.relpath(os.path.join(root, f), dest).replace(os.sep, "/")
-        for root, _d, fs in os.walk(dest)
-        if "_delta_log" not in root and "_change_data" not in root
-        for f in fs
-        if f.endswith(".parquet")
-    }
+def _adds(dest: str, files: list[str], data_change: bool = True) -> tuple[list[dict], int]:
+    """add actions (sorted by path) + total bytes for the data files one
+    attempt placed — a commit adds exactly what its own attempt wrote."""
+    pairs = [_add_action(dest, f, data_change) for f in files]
+    adds = sorted((a for a, _ in pairs), key=lambda a: a["add"]["path"])
+    return adds, sum(size for _, size in pairs)
 
 
-def _adds_for_new_files(
-    dest: str, known: set[str], data_change: bool = True
-) -> tuple[list[dict], int]:
-    """add actions (sorted) + total bytes for data files that appeared on
-    disk since ``known`` was snapshotted — the walk-diff every mutating
-    commit uses."""
-    adds: list[dict] = []
-    total = 0
-    for rel in sorted(_data_files_on_disk(dest) - known):
-        action, size = _add_action(dest, os.path.join(dest, rel), data_change)
-        adds.append(action)
-        total += size
-    adds.sort(key=lambda a: a["add"]["path"])
-    return adds, total
+def _stage_data(att: commit.Attempt, df: DataFrame, into: str, part_cols=()) -> list[str]:
+    """One distributed write of ``df`` through the attempt's staging
+    directory; its files land in the Hive layout under ``into``."""
+    writer = df.write.partitionBy(*part_cols) if part_cols else df.write
+    return att.stage_into(writer.parquet, into)
 
 
 def _commit_rewrite(
     dest: str,
     versions: list[int],
     removed: list[str],
-    known: set[str],
+    placed: list[str],
     data_change: bool = True,
     extra: list[dict] | None = None,
 ) -> tuple[int, list[dict], int]:
     """Publish one copy-on-write rewrite as the next commit: a ``remove``
     for each of ``removed`` (decoded relative paths, in the given order),
-    an ``add`` for every data file the walk-diff finds since ``known`` was
-    snapshotted, then ``extra`` (change-data actions). Returns (version,
-    add actions, bytes added)."""
+    an ``add`` for each file the attempt ``placed``, then ``extra``
+    (change-data actions). A lost claim retries the same actions only if
+    no winner removed one of ``removed``. Returns (version, add actions,
+    bytes added)."""
     now_ms = int(time.time() * 1000)
     actions = [
         {
@@ -151,9 +145,10 @@ def _commit_rewrite(
         }
         for rel in removed
     ]
-    adds, total = _adds_for_new_files(dest, known, data_change)
-    version = versions[-1] + 1
-    _write_commit(dest, version, [*actions, *adds, *(extra or [])])
+    adds, total = _adds(dest, placed, data_change)
+    version = _publish(
+        dest, versions[-1] + 1, [*actions, *adds, *(extra or [])], _rebase(dest, removed)
+    )
     return version, adds, total
 
 
@@ -193,40 +188,21 @@ def _cdf_enabled(meta: dict) -> bool:
     ) == "true"
 
 
-def _cdc_files_on_disk(dest: str) -> set[str]:
-    """Relative paths (under _change_data/) of every CDC parquet file."""
-    cd = os.path.join(dest, "_change_data")
-    if not os.path.isdir(cd):
-        return set()
-    return {
-        os.path.relpath(os.path.join(root, f), cd).replace(os.sep, "/")
-        for root, _d, fs in os.walk(cd)
-        for f in fs
-        if f.endswith(".parquet")
-    }
-
-
-def _write_cdc(dest: str, change_df, part_cols: list[str]) -> list[dict]:
+def _write_cdc(att: commit.Attempt, dest: str, change_df, part_cols: list[str]) -> list[dict]:
     """Write change rows (which must carry ``_change_type``) as
     ``_change_data/`` parquet and return their ``cdc`` actions
     (PROTOCOL.md "Add CDC File": path, partitionValues, size,
-    dataChange:false). One distributed write; the action list is a
-    walk-diff bounded by file count."""
+    dataChange:false), one per file the attempt placed."""
     cd = os.path.join(dest, "_change_data")
-    known = _cdc_files_on_disk(dest)
-    writer = change_df.write.mode("append")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(cd)
     actions: list[dict] = []
-    for rel in sorted(_cdc_files_on_disk(dest) - known):
-        size = os.path.getsize(os.path.join(cd, rel))
+    for full in sorted(_stage_data(att, change_df, cd, part_cols)):
+        rel = os.path.relpath(full, cd).replace(os.sep, "/")
         actions.append(
             {
                 "cdc": {
                     "path": quote("_change_data/" + rel),
                     "partitionValues": hive_partition_values(rel),
-                    "size": size,
+                    "size": os.path.getsize(full),
                     "dataChange": False,
                 }
             }
@@ -237,23 +213,21 @@ def _write_cdc(dest: str, change_df, part_cols: list[str]) -> list[dict]:
 def _prev_ict(dest: str, version: int) -> int | None:
     """The predecessor commit's inCommitTimestamp, or None if the table
     is not ICT (no commitInfo.inCommitTimestamp on version-1)."""
-    prev = os.path.join(dest, "_delta_log", f"{version - 1:020d}.json")
+    prev = _log_path(dest, version - 1)
     if not os.path.isfile(prev):
         return None
-    with open(prev) as fh:
-        for line in fh:
-            if not line.strip():
-                continue
-            a = json.loads(line)
-            if "commitInfo" in a:
-                ts = a["commitInfo"].get("inCommitTimestamp")
-                return int(ts) if ts is not None else None
-            return None  # ICT requires commitInfo FIRST; absent -> not ICT
-    return None
+    # ICT requires commitInfo FIRST; absent -> not ICT
+    first = next(iter(_log_actions(prev)), {})
+    ts = first.get("commitInfo", {}).get("inCommitTimestamp")
+    return int(ts) if ts is not None else None
 
 
-def _write_commit(dest: str, version: int, actions: list[dict]) -> None:
-    """Atomically publish one commit file (tmp write + rename).
+def _log_path(dest: str, version: int) -> str:
+    return os.path.join(dest, "_delta_log", f"{version:020d}.json")
+
+
+def _render_commit(dest: str, version: int, actions: list[dict]) -> str:
+    """The newline-delimited JSON of commit ``version``.
 
     IN-COMMIT TIMESTAMPS (delta.io PROTOCOL.md "In-Commit Timestamps",
     writer feature ``inCommitTimestamp``): when the table was created
@@ -262,7 +236,8 @@ def _write_commit(dest: str, version: int, actions: list[dict]) -> None:
     ``inCommitTimestamp``. The flag self-propagates here — version 0
     declares it via table configuration, and every later commit stamps
     itself iff its predecessor did — so no lifecycle call site needs to
-    thread the option."""
+    thread the option. Rendered per claim attempt, so a commit that lost
+    its first claim stamps itself after the winner it now follows."""
     if version == 0:
         ict = any(
             "metaData" in a
@@ -278,20 +253,52 @@ def _write_commit(dest: str, version: int, actions: list[dict]) -> None:
         ict, prev_ts = p is not None, (p if p is not None else -1)
     if ict:
         ts = max(int(time.time() * 1000), prev_ts + 1)
-        info = next((a for a in actions if "commitInfo" in a), None)
-        if info is None:
-            info = {"commitInfo": {}}
-        else:
-            actions = [a for a in actions if a is not info]
-        info["commitInfo"]["inCommitTimestamp"] = ts
-        info["commitInfo"].setdefault("timestamp", ts)
-        actions = [info, *actions]
-    commit = os.path.join(dest, "_delta_log", f"{version:020d}.json")
-    tmp = commit + ".tmp"
-    with open(tmp, "w") as fh:
-        for a in actions:
-            fh.write(json.dumps(a) + "\n")
-    os.rename(tmp, commit)
+        actions = [{"commitInfo": {"inCommitTimestamp": ts, "timestamp": ts}}, *actions]
+    return "".join(json.dumps(a) + "\n" for a in actions)
+
+
+def _publish(dest: str, version: int, actions: list[dict], rebase=None) -> int | None:
+    """Claim commit ``version`` (or, after ``rebase``, a later one) for
+    ``actions`` through the commit kernel."""
+    return commit.publish(
+        functools.partial(_log_path, dest),
+        version,
+        lambda v: _render_commit(dest, v, actions),
+        rebase,
+    )
+
+
+def _rebase(dest: str, removed, txn: tuple[str, int] | None = None):
+    """The kernel's ``rebase`` for a Delta commit that lost its claim: a
+    winner that changed ``metaData``/``protocol`` or removed a file in
+    ``removed`` raises ConcurrentCommitError, one that committed the
+    ``(appId, version)`` ``txn`` makes this commit a duplicate (None);
+    otherwise the next free version."""
+    removed = set(removed)
+
+    def rebase(lost: int) -> int | None:
+        v = lost
+        while os.path.exists(_log_path(dest, v)):
+            for a in _log_actions(_log_path(dest, v)):
+                if "metaData" in a or "protocol" in a or (
+                    "remove" in a and unquote(a["remove"]["path"]) in removed
+                ):
+                    raise commit.ConcurrentCommitError(
+                        f"{dest}: commit {v} changed the table this commit "
+                        f"was derived from ({sorted(a)[0]})"
+                    )
+                t = a.get("txn")
+                if txn and t and t.get("appId") == txn[0] and int(t.get("version", -1)) >= txn[1]:
+                    return None
+            v += 1
+        return v
+
+    return rebase
+
+
+def _log_actions(path: str) -> list[dict]:
+    with open(path) as fh:
+        return [json.loads(line) for line in fh if line.strip()]
 
 
 def _generation_exprs(meta: dict) -> dict[str, str]:
@@ -331,8 +338,8 @@ def export_delta(
     """Write ``df`` as a new single-commit Delta table at ``dest``.
 
     Returns {"n_files": ..., "bytes": ...} accounting. One distributed
-    parquet write; the log commit is a driver-side listing of the written
-    files (bounded by file count, never rows).
+    parquet write; the log commit lists the files that write produced
+    (bounded by file count, never rows).
 
     ``cdf=True`` enables the CHANGE DATA FEED (delta.io PROTOCOL.md
     "Add CDC File"): the table property
@@ -358,7 +365,7 @@ def export_delta(
     action, so ``timestampAsOf`` time travel no longer depends on log
     file modification times — which object stores and log copies do
     not preserve. Subsequent appends/merges stamp themselves
-    automatically (see ``_write_commit``).
+    automatically (see ``_render_commit``).
 
     ``generated`` declares GENERATED COLUMNS (PROTOCOL.md
     ``delta.generationExpression``, writer version >= 4): each
@@ -389,27 +396,6 @@ def export_delta(
             "existing Delta table's log (export creates NEW tables only)"
         )
     partition_by = list(partition_by or [])
-    writer = df.write.mode("errorifexists")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(dest)
-
-    # enumerate data files exactly as written; partition values come from
-    # the Hive path segments (the percent-encoded form Delta stores);
-    # per-file footer stats ride each add for reader-side data skipping
-    adds = []
-    total = 0
-    for root, _dirs, files in os.walk(dest):
-        if "_delta_log" in root or "_change_data" in root:
-            continue
-        for f in files:
-            if not f.endswith(".parquet"):
-                continue
-            action, size = _add_action(dest, os.path.join(root, f), True)
-            adds.append(action)
-            total += size
-    adds.sort(key=lambda a: a["add"]["path"])
-    os.makedirs(log_dir)
     cfg: dict[str, str] = {}
     if cdf:
         cfg["delta.enableChangeDataFeed"] = "true"
@@ -443,21 +429,19 @@ def export_delta(
                     f["name"]
                 ]
         schema_string = json.dumps(sch)
-    actions = [
-        {"protocol": protocol},
-        {
-            "metaData": {
-                "id": "export-" + hashlib.md5(dest.encode()).hexdigest()[:12],
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": schema_string,
-                "partitionColumns": partition_by,
-                "configuration": cfg,
-                "createdTime": int(os.stat(dest).st_mtime * 1000),
-            }
-        },
-        *adds,
-    ]
-    _write_commit(dest, 0, actions)
+    meta = {
+        "id": "export-" + hashlib.md5(dest.encode()).hexdigest()[:12],
+        "format": {"provider": "parquet", "options": {}},
+        "schemaString": schema_string,
+        "partitionColumns": partition_by,
+        "configuration": cfg,
+    }
+    # partition values come from the Hive path segments (the percent-
+    # encoded form Delta stores); per-file footer stats ride each add
+    with commit.Attempt(dest) as att:
+        adds, total = _adds(dest, _stage_data(att, df, dest, partition_by))
+        meta["createdTime"] = int(os.stat(dest).st_mtime * 1000)
+        _publish(dest, 0, [{"protocol": protocol}, {"metaData": meta}, *adds])
     return {"n_files": len(adds), "bytes": total}
 
 
@@ -531,77 +515,73 @@ def _read_own_log(dest: str) -> tuple[dict, list[int], dict[str, dict], dict[str
     if versions != list(range(len(versions))):
         raise DeltaExportError(f"{dest}: non-contiguous log {versions}")
     for v in versions:
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                if "protocol" in a:
-                    # writer 2 = plain, 3 = CHECK constraints, 4 = CDF;
-                    # writer 7 = table features, accepted only when every
-                    # listed feature is one this exporter itself writes
-                    p = a["protocol"]
-                    ok = p in (
-                        {"minReaderVersion": 1, "minWriterVersion": 2},
-                        {"minReaderVersion": 1, "minWriterVersion": 3},
-                        {"minReaderVersion": 1, "minWriterVersion": 4},
-                    ) or (
-                        p.get("minReaderVersion") == 1
-                        and p.get("minWriterVersion") == 7
-                        and set(p.get("writerFeatures") or [])
-                        <= {
-                            "inCommitTimestamp",
-                            "changeDataFeed",
-                            "checkConstraints",
-                            "generatedColumns",
-                        }
-                        and sorted(p) == ["minReaderVersion", "minWriterVersion", "writerFeatures"]
-                    ) or (
-                        # the v2Checkpoint upgrade THIS module's
-                        # checkpoint_export_v2 writes: appends to an
-                        # untrimmed v2-checkpointed table stay text-replayable
-                        p.get("minReaderVersion") == 3
-                        and p.get("minWriterVersion") == 7
-                        and list(p.get("readerFeatures") or []) == ["v2Checkpoint"]
-                        and set(p.get("writerFeatures") or [])
-                        <= {
-                            "v2Checkpoint",
-                            "inCommitTimestamp",
-                            "changeDataFeed",
-                            "checkConstraints",
-                            "generatedColumns",
-                        }
-                        and sorted(p)
-                        == [
-                            "minReaderVersion",
-                            "minWriterVersion",
-                            "readerFeatures",
-                            "writerFeatures",
-                        ]
-                    )
-                    if not ok:
-                        raise DeltaExportError(
-                            f"{dest} uses protocol {a['protocol']}; refusing to "
-                            "append to a table this exporter did not create"
-                        )
-                elif "metaData" in a:
-                    meta = a["metaData"]
-                elif "add" in a:
-                    files[a["add"]["path"]] = a["add"]
-                elif "remove" in a:
-                    files.pop(a["remove"]["path"], None)
-                elif "txn" in a:
-                    t = a["txn"]
-                    app = str(t.get("appId"))
-                    txns[app] = max(txns.get(app, -1), int(t.get("version", -1)))
-                elif "cdc" in a:
-                    pass  # change-data files are not table state
-                elif "commitInfo" in a:
-                    pass  # informational
-                else:
+        for a in _log_actions(_log_path(dest, v)):
+            if "protocol" in a:
+                # writer 2 = plain, 3 = CHECK constraints, 4 = CDF;
+                # writer 7 = table features, accepted only when every
+                # listed feature is one this exporter itself writes
+                p = a["protocol"]
+                ok = p in (
+                    {"minReaderVersion": 1, "minWriterVersion": 2},
+                    {"minReaderVersion": 1, "minWriterVersion": 3},
+                    {"minReaderVersion": 1, "minWriterVersion": 4},
+                ) or (
+                    p.get("minReaderVersion") == 1
+                    and p.get("minWriterVersion") == 7
+                    and set(p.get("writerFeatures") or [])
+                    <= {
+                        "inCommitTimestamp",
+                        "changeDataFeed",
+                        "checkConstraints",
+                        "generatedColumns",
+                    }
+                    and sorted(p) == ["minReaderVersion", "minWriterVersion", "writerFeatures"]
+                ) or (
+                    # the v2Checkpoint upgrade THIS module's
+                    # checkpoint_export_v2 writes: appends to an
+                    # untrimmed v2-checkpointed table stay text-replayable
+                    p.get("minReaderVersion") == 3
+                    and p.get("minWriterVersion") == 7
+                    and list(p.get("readerFeatures") or []) == ["v2Checkpoint"]
+                    and set(p.get("writerFeatures") or [])
+                    <= {
+                        "v2Checkpoint",
+                        "inCommitTimestamp",
+                        "changeDataFeed",
+                        "checkConstraints",
+                        "generatedColumns",
+                    }
+                    and sorted(p)
+                    == [
+                        "minReaderVersion",
+                        "minWriterVersion",
+                        "readerFeatures",
+                        "writerFeatures",
+                    ]
+                )
+                if not ok:
                     raise DeltaExportError(
-                        f"{dest}: unrecognized action {sorted(a)} — foreign writer?"
+                        f"{dest} uses protocol {a['protocol']}; refusing to "
+                        "append to a table this exporter did not create"
                     )
+            elif "metaData" in a:
+                meta = a["metaData"]
+            elif "add" in a:
+                files[a["add"]["path"]] = a["add"]
+            elif "remove" in a:
+                files.pop(a["remove"]["path"], None)
+            elif "txn" in a:
+                t = a["txn"]
+                app = str(t.get("appId"))
+                txns[app] = max(txns.get(app, -1), int(t.get("version", -1)))
+            elif "cdc" in a:
+                pass  # change-data files are not table state
+            elif "commitInfo" in a:
+                pass  # informational
+            else:
+                raise DeltaExportError(
+                    f"{dest}: unrecognized action {sorted(a)} — foreign writer?"
+                )
     if meta is None or not str(meta.get("id", "")).startswith("export-"):
         raise DeltaExportError(
             f"{dest} was not created by this exporter (metaData id "
@@ -659,20 +639,16 @@ def export_delta_append(
         )
     _validate_constraints(df, _constraints(meta))
     partition_by = list(meta.get("partitionColumns") or [])
-    # diff against everything ON DISK before the write, not just the live
-    # add set — files removed by a CoW delete/OPTIMIZE linger until a
-    # vacuum, and re-adding them would resurrect deleted rows
-    known = _data_files_on_disk(dest)
-    writer = df.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(dest)
-    adds, total = _adds_for_new_files(dest, known)
-    version = versions[-1] + 1
-    actions = list(adds)
-    if app_id is not None:
-        actions.insert(0, {"txn": {"appId": app_id, "version": int(txn_version)}})
-    _write_commit(dest, version, actions)
+    txn = (app_id, int(txn_version)) if app_id is not None else None
+    with commit.Attempt(dest) as att:
+        adds, total = _adds(dest, _stage_data(att, df, dest, partition_by))
+        actions = list(adds)
+        if txn:
+            actions.insert(0, {"txn": {"appId": app_id, "version": txn[1]}})
+        version = _publish(dest, versions[-1] + 1, actions, _rebase(dest, (), txn))
+        if version is None:  # a concurrent writer committed this batch
+            commit.drop(att.files)
+            return {"version": None, "n_files": 0, "bytes": 0, "skipped": True}
     return {"version": version, "n_files": len(adds), "bytes": total}
 
 
@@ -689,15 +665,6 @@ def checkpoint_export(spark, dest: str, trim: bool = False) -> int:
     dest = dest.rstrip("/")
     meta, versions, files, _txns = _read_own_log(dest)
     head = versions[-1]
-    add_struct = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("partitionValues", T.MapType(T.StringType(), T.StringType())),
-            T.StructField("size", T.LongType()),
-            T.StructField("modificationTime", T.LongType()),
-            T.StructField("dataChange", T.BooleanType()),
-        ]
-    )
     cp_schema = T.StructType(
         [
             T.StructField(
@@ -721,7 +688,7 @@ def checkpoint_export(spark, dest: str, trim: bool = False) -> int:
                     ]
                 ),
             ),
-            T.StructField("add", add_struct),
+            T.StructField("add", _add_struct()),
         ]
     )
     rows = [((1, 2), None, None),
@@ -730,27 +697,16 @@ def checkpoint_export(spark, dest: str, trim: bool = False) -> int:
               meta["schemaString"], list(meta.get("partitionColumns") or []),
               dict(meta.get("configuration") or {})),
              None)]
-    for p in sorted(files):
-        a = files[p]
-        rows.append(
-            (None, None,
-             (a["path"], dict(a.get("partitionValues") or {}),
-              int(a.get("size") or 0), int(a.get("modificationTime") or 0),
-              bool(a.get("dataChange", True))))
-        )
+    rows += [(None, None, _add_row(files[p])) for p in sorted(files)]
     log_dir = os.path.join(dest, "_delta_log")
-    tmp = os.path.join(dest, "_cptmp")
-    one_slice_df(spark, rows, cp_schema).write.mode("overwrite").parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    os.rename(os.path.join(tmp, part), os.path.join(log_dir, f"{head:020d}.checkpoint.parquet"))
-    import shutil
-
-    shutil.rmtree(tmp)
-    lc = os.path.join(log_dir, "_last_checkpoint")
-    lc_tmp = lc + ".tmp"
-    with open(lc_tmp, "w") as fh:
-        fh.write(json.dumps({"version": head, "size": len(rows)}))
-    os.rename(lc_tmp, lc)
+    commit.write_single_parquet(
+        one_slice_df(spark, rows, cp_schema),
+        os.path.join(log_dir, f"{head:020d}.checkpoint.parquet"),
+    )
+    commit.replace_atomic(
+        os.path.join(log_dir, "_last_checkpoint"),
+        json.dumps({"version": head, "size": len(rows)}),
+    )
     if trim:
         for v in versions[:-1]:
             os.remove(os.path.join(log_dir, f"{v:020d}.json"))
@@ -846,48 +802,49 @@ def export_delta_delete(spark, dest: str, predicate: str) -> dict:
     # 2) rewrite survivors per partition group, into the group's own dir;
     # 2b) change data feed: the deleted rows (matched rows live only in
     #     affected files by construction) as one _change_data write.
-    # Survivor writes (table root/partition dirs) and the CDC write
-    # (_change_data/) touch disjoint directories and both precede the
-    # walk-diff and the commit, so they run CONCURRENTLY (guide §2.6) —
-    # per-action driver gaps dominate a lifecycle commit's wall and now
-    # overlap. Failure in any aborts before the commit exists, exactly as
-    # in the sequential order.
-    known = _data_files_on_disk(dest)
+    # Each write stages in its own attempt directory and both precede the
+    # commit, so they run CONCURRENTLY (guide §2.6) — per-action driver
+    # gaps dominate a lifecycle commit's wall and now overlap. Failure in
+    # either drops the attempt's files before any commit exists.
     keep = ~F.coalesce(pred, F.lit(False))
+    groups = sorted(affected.items(), key=lambda kv: repr(kv[0]))
 
-    def _survivor_writes() -> None:
-        for key, aff in sorted(affected.items(), key=lambda kv: repr(kv[0])):
-            surv = (
-                scan_group(key, aff).where(keep).select(*[f.name for f in data_fields])
+    def _survivor_writes(att: commit.Attempt) -> list[str]:
+        return [
+            path
+            for key, aff in groups
+            for path in _stage_data(
+                att,
+                scan_group(key, aff).where(keep).select(*[f.name for f in data_fields]),
+                os.path.join(dest, os.path.dirname(aff[0])),
             )
-            out_dir = os.path.join(dest, os.path.dirname(aff[0]))
-            surv.write.mode("append").parquet(out_dir)
-
-    cdc_actions: list[dict] = []
-    if _cdf_enabled(meta):
-        from concurrent.futures import ThreadPoolExecutor
-
-        parts = [
-            scan_group(key, aff)
-            .where(pred)
-            .select(*[f.name for f in schema.fields])
-            .withColumn("_change_type", F.lit("delete"))
-            for key, aff in sorted(affected.items(), key=lambda kv: repr(kv[0]))
         ]
-        deleted = functools.reduce(lambda a, b: a.unionByName(b), parts)
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_cdc = pool.submit(_write_cdc, dest, deleted, part_cols)
-            fut_surv = pool.submit(_survivor_writes)
-            fut_surv.result()
-            cdc_actions = fut_cdc.result()
-    else:
-        _survivor_writes()
 
-    # 3) commit: remove rewritten files, add their survivor files
-    rewritten = [rel for aff in affected.values() for rel in sorted(aff)]
-    version, adds, _ = _commit_rewrite(
-        dest, versions, rewritten, known, extra=cdc_actions
-    )
+    with commit.Attempt(dest) as att:
+        cdc_actions: list[dict] = []
+        if _cdf_enabled(meta):
+            from concurrent.futures import ThreadPoolExecutor
+
+            parts = [
+                scan_group(key, aff)
+                .where(pred)
+                .select(*[f.name for f in schema.fields])
+                .withColumn("_change_type", F.lit("delete"))
+                for key, aff in groups
+            ]
+            deleted = functools.reduce(lambda a, b: a.unionByName(b), parts)
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                fut_cdc = pool.submit(_write_cdc, att, dest, deleted, part_cols)
+                placed = pool.submit(_survivor_writes, att).result()
+                cdc_actions = fut_cdc.result()
+        else:
+            placed = _survivor_writes(att)
+
+        # 3) commit: remove rewritten files, add their survivor files
+        rewritten = [rel for aff in affected.values() for rel in sorted(aff)]
+        version, adds, _ = _commit_rewrite(
+            dest, versions, rewritten, placed, extra=cdc_actions
+        )
     return {
         "version": version,
         "removed_files": n_affected,
@@ -921,6 +878,13 @@ def export_delta_merge(spark, df: DataFrame, dest: str, keys: list[str]) -> dict
     joined against the (distinct) source keys — collect is bounded by
     FILE count; the rewrite reads only affected files; the insert is one
     distributed partitioned write of the source.
+
+    A source read from the destination itself
+    (``DeltaLogReader(spark, dest).read().where(...)``) merges exactly as
+    a materialized copy would: it scans the files live at its snapshot,
+    and the concurrent insert and change-feed jobs write only into this
+    attempt's hidden ``_attempt-*`` directories, so neither job can see
+    the other's output.
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -995,28 +959,23 @@ def export_delta_merge(spark, df: DataFrame, dest: str, keys: list[str]) -> dict
     )
     n_affected = sum(len(aff) for aff in affected.values())
 
-    known = _data_files_on_disk(dest)
     # 2) rewrite survivors (rows whose key is NOT in the source) of each
     #    affected file back into its own partition directory. An
     #    UNPARTITIONED table has exactly one group writing into the table
-    #    root — the same directory step 3's insert appends to — so the two
-    #    writes fold into one (the commit's adds come from a walk-diff;
-    #    which rows share a file never mattered). Partitioned tables keep
-    #    the per-directory writes: the survivor path writes into the
-    #    EXISTING partition directory name rather than re-deriving it from
-    #    typed values through partitionBy.
-    surv_parts: list[DataFrame] = []
-    for key, aff in sorted(affected.items(), key=lambda kv: repr(kv[0])):
-        surv = (
+    #    root — the same directory step 3's insert lands in — so the two
+    #    writes fold into one (which rows share a file never mattered).
+    #    Partitioned tables keep the per-directory writes: the survivor
+    #    files land in the EXISTING partition directory name rather than
+    #    one re-derived from typed values through partitionBy.
+    surv_parts = [
+        (
             scan_group(key, aff)
             .join(src_keys, on=keys, how="left_anti")
-            .select(*[f.name for f in data_fields])
+            .select(*[f.name for f in data_fields]),
+            os.path.join(dest, os.path.dirname(aff[0])),
         )
-        if part_cols:
-            out_dir = os.path.join(dest, os.path.dirname(aff[0]))
-            surv.write.mode("append").parquet(out_dir)
-        else:
-            surv_parts.append(surv)
+        for key, aff in sorted(affected.items(), key=lambda kv: repr(kv[0]))
+    ]
     # 2b) change data feed: matched old rows are update_preimage, their
     #     source counterparts update_postimage, new-key source rows insert.
     cdc_actions: list[dict] = []
@@ -1055,41 +1014,42 @@ def export_delta_merge(spark, df: DataFrame, dest: str, keys: list[str]) -> dict
 
     # 3) insert ALL source rows (updates and new keys) as new files; on an
     #    unpartitioned table the deferred survivor rewrite rides the same
-    #    append (one write action instead of two)
-    def _insert_write() -> None:
+    #    write (one write action instead of two)
+    def _insert_write(att: commit.Attempt) -> list[str]:
         if part_cols:
-            df.write.mode("append").partitionBy(*part_cols).parquet(dest)
+            return _stage_data(att, df, dest, part_cols)
+        out = df.select(*[f.name for f in data_fields])
+        for surv, _dir in surv_parts:
+            out = out.unionByName(surv)
+        return _stage_data(att, out, dest)
+
+    # The CDC write and the data-file writes each stage in their own
+    # attempt directory and both happen strictly before the commit, so
+    # they run as two CONCURRENT jobs (guide §2.6: the scheduler overlaps
+    # independent actions; a lifecycle commit's wall is mostly per-action
+    # driver gaps, which now overlap). Failure in either drops the
+    # attempt's files before the commit is written.
+    with commit.Attempt(dest) as att:
+        placed = [
+            path
+            for surv, out_dir in (surv_parts if part_cols else [])
+            for path in _stage_data(att, surv, out_dir)
+        ]
+        if changes is not None:
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                fut_cdc = pool.submit(_write_cdc, att, dest, changes, part_cols)
+                placed += pool.submit(_insert_write, att).result()
+                cdc_actions = fut_cdc.result()
         else:
-            out = df.select(*[f.name for f in data_fields])
-            for s in surv_parts:
-                out = out.unionByName(s)
-            out.write.mode("append").parquet(dest)
+            placed += _insert_write(att)
 
-    # The CDC write (under _change_data/) and the data-file writes (under
-    # the table root) touch disjoint directories and both happen strictly
-    # before the walk-diff and the commit, so they run as two CONCURRENT
-    # jobs (guide §2.6: the scheduler overlaps independent actions; a
-    # lifecycle commit's wall is mostly per-action driver gaps, which now
-    # overlap). Failure in either aborts before the commit is written —
-    # identical crash surface to the sequential order (orphan files
-    # without a commit are invisible and never picked up by later
-    # walk-diffs, whose `known` snapshot predates their own writes).
-    if changes is not None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_cdc = pool.submit(_write_cdc, dest, changes, part_cols)
-            fut_ins = pool.submit(_insert_write)
-            fut_ins.result()
-            cdc_actions = fut_cdc.result()
-    else:
-        _insert_write()
-
-    # 4) commit: remove rewritten files, add every file the walk-diff finds
-    rewritten = [rel for aff in affected.values() for rel in sorted(aff)]
-    version, adds, total = _commit_rewrite(
-        dest, versions, rewritten, known, extra=cdc_actions
-    )
+        # 4) commit: remove rewritten files, add the files this attempt wrote
+        rewritten = [rel for aff in affected.values() for rel in sorted(aff)]
+        version, adds, total = _commit_rewrite(
+            dest, versions, rewritten, placed, extra=cdc_actions
+        )
     return {
         "version": version,
         "removed_files": n_affected,
@@ -1178,14 +1138,13 @@ def export_delta_replace_where(
             for c, v in partition_values.items()
         )
     ]
-    known = _data_files_on_disk(dest)
-    writer = df.write.mode("append")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(dest)
-    version, adds, total = _commit_rewrite(
-        dest, versions, [unquote(p) for p in sorted(doomed)], known
-    )
+    with commit.Attempt(dest) as att:
+        version, adds, total = _commit_rewrite(
+            dest,
+            versions,
+            [unquote(p) for p in sorted(doomed)],
+            _stage_data(att, df, dest, part_cols),
+        )
     return {
         "version": version,
         "removed_files": len(doomed),
@@ -1216,37 +1175,31 @@ def export_delta_optimize(spark, dest: str) -> dict:
     if not todo:
         return {"version": None, "compacted_files": 0, "new_files": 0}
 
-    known = _data_files_on_disk(dest)
-    removed: list[str] = []
-    for key, rels in sorted(todo.items(), key=lambda kv: repr(kv[0])):
-        df = spark.read.schema(file_schema).parquet(
-            *[os.path.join(dest, r) for r in rels]
-        )
-        out_dir = os.path.join(dest, os.path.dirname(rels[0]))
-        df.coalesce(1).write.mode("append").parquet(out_dir)
-        removed.extend(rels)
-
-    version, adds, _ = _commit_rewrite(
-        dest, versions, sorted(removed), known, data_change=False
-    )
+    removed = sorted(r for rels in todo.values() for r in rels)
+    with commit.Attempt(dest) as att:
+        placed = [
+            path
+            for _key, rels in sorted(todo.items(), key=lambda kv: repr(kv[0]))
+            for path in _stage_data(
+                att,
+                spark.read.schema(file_schema).parquet(*[os.path.join(dest, r) for r in rels]).coalesce(1),
+                os.path.join(dest, os.path.dirname(rels[0])),
+            )
+        ]
+        version, adds, _ = _commit_rewrite(dest, versions, removed, placed, data_change=False)
     return {"version": version, "compacted_files": len(removed), "new_files": len(adds)}
 
 
 def _live_at(dest: str, upto: int) -> set[str]:
     """Decoded relative paths of the data files LIVE at version ``upto``
     (pure text-log replay; checkpointed logs refuse upstream)."""
-    log_dir = os.path.join(dest, "_delta_log")
     files: set[str] = set()
     for v in range(0, upto + 1):
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                if "add" in a:
-                    files.add(unquote(a["add"]["path"]))
-                elif "remove" in a:
-                    files.discard(unquote(a["remove"]["path"]))
+        for a in _log_actions(_log_path(dest, v)):
+            if "add" in a:
+                files.add(unquote(a["add"]["path"]))
+            elif "remove" in a:
+                files.discard(unquote(a["remove"]["path"]))
     return files
 
 
@@ -1272,18 +1225,13 @@ def export_delta_vacuum(dest: str, keep_versions: int = 1) -> dict:
     reclaimed = 0
     # _change_data (CDC) files are never referenced by add actions but are
     # part of the change feed's retention — vacuum must not touch them
-    for root, _d, fs in os.walk(dest):
-        if "_delta_log" in root or "_change_data" in root:
+    for rel in commit.parquet_files(dest):
+        if rel.split("/")[0] in ("_delta_log", "_change_data") or rel in referenced:
             continue
-        for f in fs:
-            if not f.endswith(".parquet"):
-                continue
-            full = os.path.join(root, f)
-            rel = os.path.relpath(full, dest).replace(os.sep, "/")
-            if rel not in referenced:
-                reclaimed += os.path.getsize(full)
-                os.remove(full)
-                removed += 1
+        full = os.path.join(dest, rel)
+        reclaimed += os.path.getsize(full)
+        os.remove(full)
+        removed += 1
     return {
         "removed_files": removed,
         "reclaimed_bytes": reclaimed,
@@ -1324,8 +1272,8 @@ def export_delta_zorder(
 
     groups = _partition_groups(files, part_cols)
 
-    known = _data_files_on_disk(dest)
     removed: list[str] = []
+    rewrites: list[tuple[DataFrame, str]] = []
     n = 1 << bits
     probs = [i / n for i in range(1, n)]
     for key, rels in sorted(groups.items(), key=lambda kv: repr(kv[0])):
@@ -1353,13 +1301,14 @@ def export_delta_zorder(
         out = z.repartitionByRange(nf, F.col("__zkey")).drop(
             "__zkey", *[f"__r_{c}" for c in cols]
         )
-        out_dir = os.path.join(dest, os.path.dirname(sorted(rels)[0]))
-        out.write.mode("append").parquet(out_dir)
+        rewrites.append((out, os.path.join(dest, os.path.dirname(sorted(rels)[0]))))
         removed.extend(rels)
 
-    version, adds, _ = _commit_rewrite(
-        dest, versions, sorted(removed), known, data_change=False
-    )
+    with commit.Attempt(dest) as att:
+        placed = [p for out, out_dir in rewrites for p in _stage_data(att, out, out_dir)]
+        version, adds, _ = _commit_rewrite(
+            dest, versions, sorted(removed), placed, data_change=False
+        )
     return {"version": version, "rewritten_files": len(removed), "new_files": len(adds)}
 
 
@@ -1396,43 +1345,66 @@ def checkpoint_export_v2(
     UUID is derived deterministically from (dest, version) so re-runs
     reproduce the same sidecar layout byte-for-byte.
     """
-    from pyspark.sql import types as T
-
     dest = dest.rstrip("/")
     meta, versions, files, _txns = _read_own_log(dest)
-    log_dir = os.path.join(dest, "_delta_log")
-
-    # protocol upgrade commit: the reader-visible declaration that V2
-    # checkpoints exist. Writer features mirror what the table uses.
-    old_feats: list[str] = []
-    cfg = dict(meta.get("configuration") or {})
-    if cfg.get("delta.enableChangeDataFeed") == "true":
-        old_feats.append("changeDataFeed")
-    if any(k.startswith("delta.constraints.") for k in cfg):
-        old_feats.append("checkConstraints")
-    if cfg.get("delta.enableInCommitTimestamps") == "true":
-        old_feats.append("inCommitTimestamp")
-    if _generation_exprs(meta):
-        old_feats.append("generatedColumns")
-    upgrade = {
-        "protocol": {
-            "minReaderVersion": 3,
-            "minWriterVersion": 7,
-            "readerFeatures": ["v2Checkpoint"],
-            "writerFeatures": sorted({"v2Checkpoint", *old_feats}),
-        }
-    }
     if _stored_protocol_is_v2(dest):
         # already upgraded by an earlier checkpoint_export_v2: checkpoint
         # the current head, no duplicate protocol commit
         head = versions[-1]
     else:
-        head = versions[-1] + 1
-        _write_commit(dest, head, [upgrade])
+        # protocol upgrade commit: the reader-visible declaration that V2
+        # checkpoints exist
+        head = _publish(dest, versions[-1] + 1, [{"protocol": _v2_protocol(meta)}])
 
+    uuid_str = _v2_uuid(dest, head)
+    ordered = sorted(files)
+    n_sidecars = max(1, min(n_sidecars, len(ordered) or 1))
+    chunk = -(-len(ordered) // n_sidecars) if ordered else 1
+    sidecar_names = [
+        _write_sidecar(spark, dest, files, ordered[k * chunk : (k + 1) * chunk], f"{uuid_str}-{k:03d}.parquet")
+        for k in range(n_sidecars)
+    ]
+    _write_v2_manifest(dest, head, uuid_str, meta, sidecar_names, len(ordered))
+    if trim:
+        for v in [*versions, head]:
+            p = _log_path(dest, v)
+            if os.path.isfile(p):
+                os.remove(p)
+    return head
+
+
+def _v2_protocol(meta: dict) -> dict:
+    """The protocol of a V2-checkpointed export: reader feature
+    v2Checkpoint, writer features mirroring what the table uses."""
+    cfg = meta.get("configuration") or {}
+    feats = {"v2Checkpoint"}
+    if cfg.get("delta.enableChangeDataFeed") == "true":
+        feats.add("changeDataFeed")
+    if any(k.startswith("delta.constraints.") for k in cfg):
+        feats.add("checkConstraints")
+    if cfg.get("delta.enableInCommitTimestamps") == "true":
+        feats.add("inCommitTimestamp")
+    if _generation_exprs(meta):
+        feats.add("generatedColumns")
+    return {
+        "minReaderVersion": 3,
+        "minWriterVersion": 7,
+        "readerFeatures": ["v2Checkpoint"],
+        "writerFeatures": sorted(feats),
+    }
+
+
+def _v2_uuid(dest: str, head: int) -> str:
+    """Checkpoint UUID derived from (dest, version), so re-runs reproduce
+    the same sidecar layout byte-for-byte."""
     uid = hashlib.md5(f"{dest}@{head}".encode()).hexdigest()
-    uuid_str = f"{uid[:8]}-{uid[8:12]}-{uid[12:16]}-{uid[16:20]}-{uid[20:32]}"
-    add_struct = T.StructType(
+    return f"{uid[:8]}-{uid[8:12]}-{uid[12:16]}-{uid[16:20]}-{uid[20:32]}"
+
+
+def _add_struct():
+    from pyspark.sql import types as T
+
+    return T.StructType(
         [
             T.StructField("path", T.StringType()),
             T.StructField("partitionValues", T.MapType(T.StringType(), T.StringType())),
@@ -1441,96 +1413,82 @@ def checkpoint_export_v2(
             T.StructField("dataChange", T.BooleanType()),
         ]
     )
-    sc_schema = T.StructType([T.StructField("add", add_struct)])
-    side_dir = os.path.join(log_dir, "_sidecars")
-    os.makedirs(side_dir, exist_ok=True)
-    ordered = sorted(files)
-    n_sidecars = max(1, min(n_sidecars, len(ordered) or 1))
-    chunk = -(-len(ordered) // n_sidecars) if ordered else 1
-    sidecar_names = []
-    for k in range(n_sidecars):
-        part = ordered[k * chunk : (k + 1) * chunk]
-        rows = [
-            ((files[p]["path"], dict(files[p].get("partitionValues") or {}),
-              int(files[p].get("size") or 0),
-              int(files[p].get("modificationTime") or 0),
-              bool(files[p].get("dataChange", True))),)
-            for p in part
-        ]
-        name = f"{uuid_str}-{k:03d}.parquet"
-        tmp = os.path.join(dest, f"_sctmp{k}")
-        one_slice_df(spark, rows, sc_schema).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        pf = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.replace(os.path.join(tmp, pf), os.path.join(side_dir, name))
-        import shutil
 
-        shutil.rmtree(tmp)
-        sidecar_names.append(name)
 
+def _add_row(a: dict) -> tuple:
+    """One checkpoint ``add`` struct from a replayed add action."""
+    return (
+        a["path"],
+        dict(a.get("partitionValues") or {}),
+        int(a.get("size") or 0),
+        int(a.get("modificationTime") or 0),
+        bool(a.get("dataChange", True)),
+    )
+
+
+def _write_sidecar(spark, dest: str, files: dict, part: list[str], name: str) -> str:
+    """Write the adds of ``part`` as sidecar ``name``; returns the name."""
+    from pyspark.sql import types as T
+
+    commit.write_single_parquet(
+        one_slice_df(
+            spark,
+            [(_add_row(files[p]),) for p in part],
+            T.StructType([T.StructField("add", _add_struct())]),
+        ),
+        os.path.join(dest, "_delta_log", "_sidecars", name),
+    )
+    return name
+
+
+def _write_v2_manifest(
+    dest: str, head: int, uuid_str: str, meta: dict, sidecars: list[str], n_adds: int
+) -> None:
+    """Publish ``<head>.checkpoint.<uuid>.json`` (protocol, metaData, one
+    ``sidecar`` action per part file), then ``_last_checkpoint``."""
+    log_dir = os.path.join(dest, "_delta_log")
+    actions = [
+        {"protocol": _v2_protocol(meta)},
+        {
+            "metaData": {
+                "id": meta["id"],
+                "format": meta.get("format") or {"provider": "parquet", "options": {}},
+                "schemaString": meta["schemaString"],
+                "partitionColumns": list(meta.get("partitionColumns") or []),
+                "configuration": dict(meta.get("configuration") or {}),
+            }
+        },
+    ]
+    total_sidecar_bytes = 0
+    for name in sidecars:
+        st = os.stat(os.path.join(log_dir, "_sidecars", name))
+        total_sidecar_bytes += st.st_size
+        # PROTOCOL.md marks sizeInBytes required on the sidecar action;
+        # modificationTime is optional but cheap from the same stat call.
+        actions.append(
+            {
+                "sidecar": {
+                    "path": name,
+                    "sizeInBytes": st.st_size,
+                    "modificationTime": int(st.st_mtime * 1000),
+                }
+            }
+        )
     manifest = os.path.join(log_dir, f"{head:020d}.checkpoint.{uuid_str}.json")
-    mtmp = manifest + ".tmp"
-    with open(mtmp, "w") as fh:
-        fh.write(json.dumps(upgrade) + "\n")
-        fh.write(
-            json.dumps(
-                {
-                    "metaData": {
-                        "id": meta["id"],
-                        "format": meta.get("format")
-                        or {"provider": "parquet", "options": {}},
-                        "schemaString": meta["schemaString"],
-                        "partitionColumns": list(meta.get("partitionColumns") or []),
-                        "configuration": cfg,
-                    }
-                }
-            )
-            + "\n"
-        )
-        total_sidecar_bytes = 0
-        for name in sidecar_names:
-            st = os.stat(os.path.join(side_dir, name))
-            total_sidecar_bytes += st.st_size
-            # PROTOCOL.md marks sizeInBytes required on the sidecar
-            # action; modificationTime is optional but cheap from the
-            # same stat call.
-            fh.write(
-                json.dumps(
-                    {
-                        "sidecar": {
-                            "path": name,
-                            "sizeInBytes": st.st_size,
-                            "modificationTime": int(st.st_mtime * 1000),
-                        }
-                    }
-                )
-                + "\n"
-            )
-    os.rename(mtmp, manifest)
-    lc = os.path.join(log_dir, "_last_checkpoint")
-    lc_tmp = lc + ".tmp"
-    with open(lc_tmp, "w") as fh:
-        fh.write(
-            json.dumps(
-                {
-                    "version": head,
-                    "size": len(ordered) + 2,
-                    "sizeInBytes": total_sidecar_bytes
-                    + os.stat(manifest).st_size,
-                    "numOfAddFiles": len(ordered),
-                    "checkpointSchema": None,
-                    "tags": None,
-                }
-            )
-        )
-    os.rename(lc_tmp, lc)
-    if trim:
-        for v in [*versions, head]:
-            p = os.path.join(log_dir, f"{v:020d}.json")
-            if os.path.isfile(p):
-                os.remove(p)
-    return head
+    commit.replace_atomic(manifest, "".join(json.dumps(a) + "\n" for a in actions))
+    commit.replace_atomic(
+        os.path.join(log_dir, "_last_checkpoint"),
+        json.dumps(
+            {
+                "version": head,
+                "size": n_adds + 2,
+                "sizeInBytes": total_sidecar_bytes + os.stat(manifest).st_size,
+                "numOfAddFiles": n_adds,
+                "checkpointSchema": None,
+                "tags": None,
+            }
+        ),
+    )
 
 
 def _stored_protocol_is_v2(dest: str) -> bool:
@@ -1541,13 +1499,9 @@ def _stored_protocol_is_v2(dest: str) -> bool:
     for f in sorted(os.listdir(log_dir)):
         if not (f.endswith(".json") and f[:20].isdigit() and ".checkpoint." not in f):
             continue
-        with open(os.path.join(log_dir, f)) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                if "protocol" in a:
-                    is_v2 = "v2Checkpoint" in (a["protocol"].get("readerFeatures") or [])
+        for a in _log_actions(os.path.join(log_dir, f)):
+            if "protocol" in a:
+                is_v2 = "v2Checkpoint" in (a["protocol"].get("readerFeatures") or [])
     return is_v2
 
 
@@ -1594,7 +1548,6 @@ def checkpoint_export_v2_incremental(spark, dest: str) -> dict:
     ``export_delta_vacuum`` applies to data files).
     """
     import pyarrow.parquet as pq
-    from pyspark.sql import types as T
 
     dest = dest.rstrip("/")
     meta, versions, files, _txns = _read_own_log(dest)
@@ -1610,8 +1563,7 @@ def checkpoint_export_v2_incremental(spark, dest: str) -> dict:
             f"{dest}: no commits after checkpoint version {prev_v}; "
             "nothing to advance"
         )
-    log_dir = os.path.join(dest, "_delta_log")
-    side_dir = os.path.join(log_dir, "_sidecars")
+    side_dir = os.path.join(dest, "_delta_log", "_sidecars")
 
     # previous sidecar layout: ordered names + each one's add rows as
     # comparable tuples
@@ -1657,39 +1609,7 @@ def checkpoint_export_v2_incremental(spark, dest: str) -> dict:
         else:
             fresh.append(p)
 
-    uid = hashlib.md5(f"{dest}@{head}".encode()).hexdigest()
-    uuid_str = f"{uid[:8]}-{uid[8:12]}-{uid[12:16]}-{uid[16:20]}-{uid[20:32]}"
-    add_struct = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("partitionValues", T.MapType(T.StringType(), T.StringType())),
-            T.StructField("size", T.LongType()),
-            T.StructField("modificationTime", T.LongType()),
-            T.StructField("dataChange", T.BooleanType()),
-        ]
-    )
-    sc_schema = T.StructType([T.StructField("add", add_struct)])
-
-    def write_sidecar(part: list[str], k: int) -> str:
-        rows = [
-            ((files[p]["path"], dict(files[p].get("partitionValues") or {}),
-              int(files[p].get("size") or 0),
-              int(files[p].get("modificationTime") or 0),
-              bool(files[p].get("dataChange", True))),)
-            for p in part
-        ]
-        name = f"{uuid_str}-{k:03d}.parquet"
-        tmp = os.path.join(dest, f"_sctmp{k}")
-        one_slice_df(spark, rows, sc_schema).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        pf = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.replace(os.path.join(tmp, pf), os.path.join(side_dir, name))
-        import shutil
-
-        shutil.rmtree(tmp)
-        return name
-
+    uuid_str = _v2_uuid(dest, head)
     reused: list[str] = []
     out_names: list[str] = []
     k = 0
@@ -1698,82 +1618,15 @@ def checkpoint_export_v2_incremental(spark, dest: str) -> dict:
             reused.append(old_name)
             out_names.append(old_name)
         elif part:  # dirty: rewrite with the surviving members
-            out_names.append(write_sidecar(part, k))
+            out_names.append(_write_sidecar(spark, dest, files, part, f"{uuid_str}-{k:03d}.parquet"))
             k += 1
         # else: every file the old sidecar owned is gone — drop it
     if fresh:
-        out_names.append(write_sidecar(fresh, k))
+        out_names.append(_write_sidecar(spark, dest, files, fresh, f"{uuid_str}-{k:03d}.parquet"))
 
     # manifest at the new head: protocol (already upgraded — enforced by
     # _read_own_log accepting it), metaData, one sidecar action per group
-    cfg = dict(meta.get("configuration") or {})
-    old_feats: list[str] = []
-    if cfg.get("delta.enableChangeDataFeed") == "true":
-        old_feats.append("changeDataFeed")
-    if any(k2.startswith("delta.constraints.") for k2 in cfg):
-        old_feats.append("checkConstraints")
-    if cfg.get("delta.enableInCommitTimestamps") == "true":
-        old_feats.append("inCommitTimestamp")
-    if _generation_exprs(meta):
-        old_feats.append("generatedColumns")
-    protocol = {
-        "minReaderVersion": 3,
-        "minWriterVersion": 7,
-        "readerFeatures": ["v2Checkpoint"],
-        "writerFeatures": sorted({"v2Checkpoint", *old_feats}),
-    }
-    manifest = os.path.join(log_dir, f"{head:020d}.checkpoint.{uuid_str}.json")
-    mtmp = manifest + ".tmp"
-    total_sidecar_bytes = 0
-    with open(mtmp, "w") as fh:
-        fh.write(json.dumps({"protocol": protocol}) + "\n")
-        fh.write(
-            json.dumps(
-                {
-                    "metaData": {
-                        "id": meta["id"],
-                        "format": meta.get("format")
-                        or {"provider": "parquet", "options": {}},
-                        "schemaString": meta["schemaString"],
-                        "partitionColumns": list(meta.get("partitionColumns") or []),
-                        "configuration": cfg,
-                    }
-                }
-            )
-            + "\n"
-        )
-        for name in out_names:
-            st = os.stat(os.path.join(side_dir, name))
-            total_sidecar_bytes += st.st_size
-            fh.write(
-                json.dumps(
-                    {
-                        "sidecar": {
-                            "path": name,
-                            "sizeInBytes": st.st_size,
-                            "modificationTime": int(st.st_mtime * 1000),
-                        }
-                    }
-                )
-                + "\n"
-            )
-    os.rename(mtmp, manifest)
-    lc = os.path.join(log_dir, "_last_checkpoint")
-    lc_tmp = lc + ".tmp"
-    with open(lc_tmp, "w") as fh:
-        fh.write(
-            json.dumps(
-                {
-                    "version": head,
-                    "size": len(ordered) + 2,
-                    "sizeInBytes": total_sidecar_bytes + os.stat(manifest).st_size,
-                    "numOfAddFiles": len(ordered),
-                    "checkpointSchema": None,
-                    "tags": None,
-                }
-            )
-        )
-    os.rename(lc_tmp, lc)
+    _write_v2_manifest(dest, head, uuid_str, meta, out_names, len(ordered))
     return {
         "version": head,
         "reused": reused,
@@ -1817,9 +1670,7 @@ def export_delta_evolve_add_column(
     )
     new_meta = dict(meta)
     new_meta["schemaString"] = json.dumps(sch)
-    version = versions[-1] + 1
-    _write_commit(dest, version, [{"metaData": new_meta}])
-    return version
+    return _publish(dest, versions[-1] + 1, [{"metaData": new_meta}], _rebase(dest, ()))
 
 
 # ---------------------------------------------------------------------------
@@ -1896,7 +1747,6 @@ def convert_iceberg_to_delta(spark, iceberg_dir: str, delta_dir: str) -> dict:
             add["stats"] = stats
         adds.append({"add": add})
         total += st.st_size
-    os.makedirs(log_dir)
     actions = [
         {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
         {
@@ -1911,5 +1761,5 @@ def convert_iceberg_to_delta(spark, iceberg_dir: str, delta_dir: str) -> dict:
         },
         *adds,
     ]
-    _write_commit(dest, 0, actions)
+    _publish(dest, 0, actions)
     return {"n_files": len(adds), "bytes": total}

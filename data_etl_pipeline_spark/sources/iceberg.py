@@ -128,6 +128,7 @@ from pyspark.sql import functions as F
 
 from data_etl_pipeline_spark.tables import one_slice_df
 
+from data_etl_pipeline_spark.sources import commit
 from data_etl_pipeline_spark.sources.avro_ocf import (
     read_ocf,
     read_ocf_full,
@@ -699,20 +700,10 @@ def _with_field_ids(df: DataFrame, schema: dict) -> DataFrame:
     )
 
 
-def _write_data_files(
-    df: DataFrame, table_dir: str, snapshot_n: int, n_files: int, range_by: str | None
-) -> list[str]:
-    out_dir = os.path.join(table_dir, "data", f"snap{snapshot_n}")
-    shaped = (
-        df.repartitionByRange(n_files, range_by)
-        if range_by and n_files > 1
-        else df.coalesce(1) if n_files == 1 else df.repartition(n_files)
-    )
-    shaped.write.mode("overwrite").parquet(out_dir)
-    files = sorted(glob.glob(os.path.join(out_dir, "*.parquet")))
-    if not files:
-        raise IcebergError("data write produced no parquet files")
-    return files
+def _data_dir(table_dir: str, att: commit.Attempt) -> str:
+    """Where an attempt's data files land: named by its token, so two
+    writers at the same head never share a directory."""
+    return os.path.join(table_dir, "data", att.token)
 
 
 def export_iceberg(
@@ -821,63 +812,67 @@ class _CommitCtx:
         self.meta_dir = os.path.join(table_dir, "metadata")
         self.branch = branch
         os.makedirs(self.meta_dir, exist_ok=True)
-        if first:
-            if branch is not None:
-                raise IcebergError("a first export cannot target a branch")
-            self.prev = None
-            self.version = 1
-            self.snapshot_id = 1
-            self.seq = 1
-            self.parent_id = None
-            self.schema = _iceberg_schema(df_for_schema)
-            self.schemas_out = [self.schema]
-            self.current_schema_id = 0
-            self.table_uuid = str(uuid.uuid4())
-            self.prior_manifests: list[dict] = []
-            self.snapshots: list[dict] = []
-            self.partition_specs = [{"spec-id": 0, "fields": []}]
-            self.default_spec_id = 0
-            self.last_partition_id = 999
-        else:
-            prev = _load_table_metadata(table_dir)
-            self.prev = prev
-            self.version = prev["_version"] + 1
-            self.schema = _schema_by_id(prev)
-            self.current_schema_id = self.schema.get("schema-id", 0)
-            # carry ALL prior schemas forward; v1 tables with a bare
-            # ``schema`` get it wrapped under its own id
-            self.schemas_out = prev.get("schemas") or [self.schema]
-            self.table_uuid = prev["table-uuid"]
-            # the commit's parent: the targeted branch's head (a branch
-            # not yet in refs forks from the main head), else main
-            parent_id = prev["current-snapshot-id"]
-            if branch is not None:
-                ref = (prev.get("refs") or {}).get(branch)
-                if ref is not None:
-                    if ref.get("type") != "branch":
-                        raise IcebergError(
-                            f"ref {branch!r} is a {ref.get('type')!r}, not a "
-                            "branch — tags are immutable"
-                        )
-                    parent_id = ref["snapshot-id"]
-            self.parent_id = parent_id
-            cur = next(
-                s
-                for s in prev["snapshots"]
-                if s["snapshot-id"] == parent_id
-            )
-            self.prior_manifests, _ = read_ocf(_local(cur["manifest-list"], table_dir))
-            self.snapshots = prev["snapshots"]
-            self.snapshot_id = max(s["snapshot-id"] for s in self.snapshots) + 1
-            self.seq = (
-                prev.get("last-sequence-number")
-                or max(s.get("sequence-number", 0) for s in self.snapshots)
-            ) + 1
-            self.default_spec_id = prev.get("default-spec-id", 0)
-            self.partition_specs = prev.get("partition-specs") or [
-                {"spec-id": 0, "fields": prev.get("partition-spec", [])}
-            ]
-            self.last_partition_id = prev.get("last-partition-id", 999)
+        if not first:
+            self._load()
+            return
+        if branch is not None:
+            raise IcebergError("a first export cannot target a branch")
+        self.prev = None
+        # exporting over an existing table replaces it as the next version
+        self.version = (_head_version(self.meta_dir) or 0) + 1
+        self.snapshot_id = 1
+        self.seq = 1
+        self.parent_id = None
+        self.schema = _iceberg_schema(df_for_schema)
+        self.schemas_out = [self.schema]
+        self.current_schema_id = 0
+        self.table_uuid = str(uuid.uuid4())
+        self.prior_manifests: list[dict] = []
+        self.snapshots: list[dict] = []
+        self.partition_specs = [{"spec-id": 0, "fields": []}]
+        self.default_spec_id = 0
+        self.last_partition_id = 999
+
+    def _load(self) -> None:
+        prev = _load_table_metadata(self.table_dir)
+        self.prev = prev
+        self.version = prev["_version"] + 1
+        self.schema = _schema_by_id(prev)
+        self.current_schema_id = self.schema.get("schema-id", 0)
+        # carry ALL prior schemas forward; v1 tables with a bare
+        # ``schema`` get it wrapped under its own id
+        self.schemas_out = prev.get("schemas") or [self.schema]
+        self.table_uuid = prev["table-uuid"]
+        # the commit's parent: the targeted branch's head (a branch
+        # not yet in refs forks from the main head), else main
+        parent_id = prev["current-snapshot-id"]
+        if self.branch is not None:
+            ref = (prev.get("refs") or {}).get(self.branch)
+            if ref is not None:
+                if ref.get("type") != "branch":
+                    raise IcebergError(
+                        f"ref {self.branch!r} is a {ref.get('type')!r}, not a "
+                        "branch — tags are immutable"
+                    )
+                parent_id = ref["snapshot-id"]
+        self.parent_id = parent_id
+        cur = next(
+            s
+            for s in prev["snapshots"]
+            if s["snapshot-id"] == parent_id
+        )
+        self.prior_manifests, _ = read_ocf(_local(cur["manifest-list"], self.table_dir))
+        self.snapshots = prev["snapshots"]
+        self.snapshot_id = max(s["snapshot-id"] for s in self.snapshots) + 1
+        self.seq = (
+            prev.get("last-sequence-number")
+            or max(s.get("sequence-number", 0) for s in self.snapshots)
+        ) + 1
+        self.default_spec_id = prev.get("default-spec-id", 0)
+        self.partition_specs = prev.get("partition-specs") or [
+            {"spec-id": 0, "fields": prev.get("partition-spec", [])}
+        ]
+        self.last_partition_id = prev.get("last-partition-id", 999)
 
     def spec_fields(self) -> list[dict]:
         spec = next(
@@ -898,12 +893,35 @@ class _CommitCtx:
             "format-version": b"2",
         }
 
-    def publish(self, list_entries: list[dict], operation: str, added_rows: int,
-                extra_summary: dict | None = None) -> int:
-        """Write the manifest list, the next vN.metadata.json carrying
-        it, and the version hint; returns the new snapshot id."""
-        list_path = os.path.join(self.meta_dir, f"snap-{self.snapshot_id}.avro")
-        write_ocf(list_path, list_entries, MANIFEST_LIST_SCHEMA)
+    def publish(self, att: commit.Attempt, manifests, operation: str,
+                added_rows: int, extra_summary: dict | None = None,
+                retry: bool = False) -> int:
+        """Write the manifest list ``manifests()`` returns (it writes this
+        attempt's manifests for the current snapshot id) and claim the
+        next vN.metadata.json; returns the new snapshot id. With ``retry``
+        (appends) a lost claim reloads the table and retries as the next
+        snapshot, unless the winner changed the schema or partition spec."""
+        list_path = att.own(os.path.join(self.meta_dir, f"snap-{att.token}.avro"))
+
+        def render(_version: int) -> dict:
+            write_ocf(list_path, manifests(), MANIFEST_LIST_SCHEMA)
+            return self._metadata(list_path, operation, added_rows, extra_summary)
+
+        def rebase(_lost: int) -> int:
+            layout = (self.schema, self.spec_fields())
+            self._load()
+            if (self.schema, self.spec_fields()) != layout:
+                raise commit.ConcurrentCommitError(
+                    f"{self.table_dir}: a concurrent commit changed the schema "
+                    "or partition spec this append was written under"
+                )
+            return self.version
+
+        _commit_metadata(self.meta_dir, self.version, render, rebase if retry else None)
+        return self.snapshot_id
+
+    def _metadata(self, list_path: str, operation: str, added_rows: int,
+                  extra_summary: dict | None) -> dict:
         now_ms = int(time.time() * 1000)
         summary = {"operation": operation, "added-records": str(added_rows)}
         summary.update(extra_summary or {})
@@ -941,7 +959,7 @@ class _CommitCtx:
                 "type": "branch",
             }
             log = prev_log  # the main timeline did not move
-        meta = {
+        return {
             "format-version": 2,
             "table-uuid": self.table_uuid,
             "location": self.table_dir,
@@ -961,8 +979,6 @@ class _CommitCtx:
             "snapshot-log": log,
             "metadata-log": [],
         }
-        _write_metadata(self.meta_dir, self.version, meta)
-        return self.snapshot_id
 
 
 def _data_entry(path: str, part_tuple: dict, snapshot_id: int,
@@ -988,30 +1004,10 @@ def _data_entry(path: str, part_tuple: dict, snapshot_id: int,
     }, n_rows
 
 
-def _manifest_list_entry(manifest_path: str, ctx: _CommitCtx, content: int,
-                         n_files: int, n_rows: int,
-                         spec_id: int | None = None) -> dict:
-    return {
-        "manifest_path": manifest_path,
-        "manifest_length": os.path.getsize(manifest_path),
-        "partition_spec_id": ctx.default_spec_id if spec_id is None else spec_id,
-        "content": content,
-        "sequence_number": ctx.seq,
-        "min_sequence_number": ctx.seq,
-        "added_snapshot_id": ctx.snapshot_id,
-        "added_files_count": n_files,
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": n_rows,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-
-
 def _write_partitioned_files(
+    att: commit.Attempt,
     df: DataFrame,
     table_dir: str,
-    version: int,
     part_transforms: list[tuple[str, str, int | None, str]],
     ice_types: dict[str, str],
 ) -> list[tuple[str, dict]]:
@@ -1069,23 +1065,15 @@ def _write_partitioned_files(
         [(v, i) for i, v in enumerate(values)],
         df.select(texpr.alias("__p")).withColumn("__pi", F.lit(0)).schema,
     )
-    out_dir = os.path.join(table_dir, "data", f"snap{version}")
-    if os.path.exists(out_dir):
-        # mode("overwrite") below would clobber anything already placed
-        # under this snapshot dir (r12 ADVICE); each commit must get a
-        # fresh snapshot number
-        raise IcebergError(
-            f"snapshot data dir already exists: {out_dir}; refusing to "
-            "overwrite an existing snapshot's files"
-        )
-    (
+    out_dir = _data_dir(table_dir, att)
+    att.stage_into(
         df.withColumn("__p", texpr)
         .join(F.broadcast(idx_df), "__p")
         .select(*df.columns, "__pi")
         .repartition(F.col("__pi"))
         .write.partitionBy("__pi")
-        .mode("overwrite")
-        .parquet(out_dir)
+        .parquet,
+        out_dir,
     )
     files_with_parts: list[tuple[str, dict]] = []
     for i, v in enumerate(values):
@@ -1160,41 +1148,77 @@ def _commit_snapshot(
             )
 
     df = _with_field_ids(df, schema)
-    spec_fields = ctx.spec_fields()
-    id_by_name = {f["name"]: f["id"] for f in schema["fields"]}
-    ice_types = {f["name"]: f["type"] for f in schema["fields"]}
-    part_avro, part_transforms = _part_transforms_of(schema, spec_fields)
+    with commit.Attempt(table_dir) as att:
+        entries, added_rows, part_avro = _write_data(att, ctx, df, n_files, range_by)
 
-    if spec_fields:
-        files_with_parts = _write_partitioned_files(
-            df, table_dir, ctx.version, part_transforms, ice_types
+        def manifests() -> list[dict]:
+            # rewritten per claim attempt: a retried append becomes the
+            # next snapshot id over the winner's manifests
+            for e in entries:
+                e["snapshot_id"] = ctx.snapshot_id
+            return [
+                _write_manifest(att, ctx, "", entries, part_avro, 0, added_rows)
+            ] + ctx.prior_manifests
+
+        return ctx.publish(
+            att, manifests, "append", added_rows, extra_summary, retry=not first
         )
-    else:
-        files_with_parts = [
-            (p, {})
-            for p in _write_data_files(df, table_dir, ctx.version, n_files, range_by)
-        ]
 
-    entries = []
-    added_rows = 0
-    for p, part_tuple in files_with_parts:
-        e, n_rows = _data_entry(p, part_tuple, ctx.snapshot_id, id_by_name, ice_types)
-        added_rows += n_rows
-        entries.append(e)
-    manifest_path = os.path.join(ctx.meta_dir, f"m{ctx.version}.avro")
-    write_ocf(
-        manifest_path,
-        entries,
-        _manifest_entry_schema(part_avro),
-        extra_meta=ctx.manifest_meta(),
-    )
-    new_manifest = _manifest_list_entry(
-        manifest_path, ctx, 0, len(files_with_parts), added_rows
-    )
-    return ctx.publish(
-        [new_manifest] + ctx.prior_manifests, "append", added_rows,
-        extra_summary,
-    )
+
+def _write_data(att: commit.Attempt, ctx: _CommitCtx, df: DataFrame,
+                n_files: int, range_by: str | None):
+    """Write ``df`` as this attempt's data files under the table's default
+    spec; returns (manifest entries, row count, avro partition types)."""
+    ice_types = {f["name"]: f["type"] for f in ctx.schema["fields"]}
+    part_avro, part_transforms = _part_transforms_of(ctx.schema, ctx.spec_fields())
+    if part_transforms:
+        files = _write_partitioned_files(att, df, ctx.table_dir, part_transforms, ice_types)
+    else:
+        shaped = (
+            df.repartitionByRange(n_files, range_by)
+            if range_by and n_files > 1
+            else df.coalesce(1) if n_files == 1 else df.repartition(n_files)
+        )
+        files = [(p, {}) for p in att.stage_into(shaped.write.parquet, _data_dir(ctx.table_dir, att))]
+        if not files:
+            raise IcebergError("data write produced no parquet files")
+    return (*_data_entries(ctx, files), part_avro)
+
+
+def _data_entries(ctx: _CommitCtx, files_with_parts) -> tuple[list[dict], int]:
+    """ADDED manifest entries (footer stats) for ``(path, partition)``
+    pairs, and their total row count."""
+    id_by_name = {f["name"]: f["id"] for f in ctx.schema["fields"]}
+    ice_types = {f["name"]: f["type"] for f in ctx.schema["fields"]}
+    pairs = [
+        _data_entry(p, part, ctx.snapshot_id, id_by_name, ice_types)
+        for p, part in files_with_parts
+    ]
+    return [e for e, _ in pairs], sum(n for _, n in pairs)
+
+
+def _write_manifest(att: commit.Attempt, ctx: _CommitCtx, suffix: str,
+                    entries: list[dict], part_avro, content: int, n_rows: int,
+                    spec_id: int | None = None) -> dict:
+    """Write this attempt's manifest ``m-<token><suffix>.avro`` under the
+    table schema; returns its manifest-list entry."""
+    path = att.own(os.path.join(ctx.meta_dir, f"m-{att.token}{suffix}.avro"))
+    write_ocf(path, entries, _manifest_entry_schema(part_avro), extra_meta=ctx.manifest_meta())
+    return {
+        "manifest_path": path,
+        "manifest_length": os.path.getsize(path),
+        "partition_spec_id": ctx.default_spec_id if spec_id is None else spec_id,
+        "content": content,
+        "sequence_number": ctx.seq,
+        "min_sequence_number": ctx.seq,
+        "added_snapshot_id": ctx.snapshot_id,
+        "added_files_count": len(entries),
+        "existing_files_count": 0,
+        "deleted_files_count": 0,
+        "added_rows_count": n_rows,
+        "existing_rows_count": 0,
+        "deleted_rows_count": 0,
+    }
 
 
 def delete_rows_iceberg(
@@ -1251,7 +1275,6 @@ def delete_rows_iceberg(
     # schema evolution keep old physical names, so the scan resolves by
     # field id exactly like a read (carrying the path/row-index meta)
     base, _ = table._scan_resolved(data, with_meta=True)
-    out_dir = os.path.join(table_dir, "data", f"snap{ctx.version}-deletes")
     equality_ids = None
     if equality_by is None:
         map_df = F.broadcast(
@@ -1279,56 +1302,48 @@ def delete_rows_iceberg(
             .coalesce(1)
         )
         content = 2
-    rows.write.mode("overwrite").parquet(out_dir)
-    dfiles = sorted(glob.glob(os.path.join(out_dir, "*.parquet")))
-    if not dfiles:
-        raise IcebergError("delete write produced no parquet files")
-    entries = []
-    n_deleted = 0
-    for p in dfiles:
-        n_rows, size = footer_stats(p)[0], os.path.getsize(p)
-        n_deleted += n_rows
-        entries.append(
-            {
-                "status": 1,
-                "snapshot_id": ctx.snapshot_id,
-                "sequence_number": None,
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": content,  # 1=position deletes, 2=equality
-                    "file_path": p,
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": n_rows,
-                    "file_size_in_bytes": size,
-                    "value_counts": None,
-                    "null_value_counts": None,
-                    "lower_bounds": None,
-                    "upper_bounds": None,
-                    "equality_ids": equality_ids,
-                },
-            }
-        )
-    if n_deleted == 0:
-        raise IcebergError(
-            f"predicate {predicate!r} matched no rows — refusing an empty "
-            "delete commit"
-        )
-    manifest_path = os.path.join(ctx.meta_dir, f"m{ctx.version}-deletes.avro")
-    write_ocf(
-        manifest_path, entries, _manifest_entry_schema([]),
-        extra_meta=ctx.manifest_meta(),
-    )
-    delete_manifest = _manifest_list_entry(
-        manifest_path, ctx, 1, len(dfiles), 0, spec_id=delete_spec_id
-    )
-    delete_manifest["deleted_rows_count"] = n_deleted
-    return ctx.publish(
-        [delete_manifest] + ctx.prior_manifests,
-        "delete",
-        0,
-        {"deleted-records": str(n_deleted)},
-    )
+    with commit.Attempt(table_dir) as att:
+        dfiles = att.stage_into(rows.write.parquet, _data_dir(table_dir, att) + "-deletes")
+        if not dfiles:
+            raise IcebergError("delete write produced no parquet files")
+        entries = []
+        n_deleted = 0
+        for p in dfiles:
+            n_rows, size = footer_stats(p)[0], os.path.getsize(p)
+            n_deleted += n_rows
+            entries.append(
+                {
+                    "status": 1,
+                    "snapshot_id": ctx.snapshot_id,
+                    "sequence_number": None,
+                    "file_sequence_number": None,
+                    "data_file": {
+                        "content": content,  # 1=position deletes, 2=equality
+                        "file_path": p,
+                        "file_format": "PARQUET",
+                        "partition": {},
+                        "record_count": n_rows,
+                        "file_size_in_bytes": size,
+                        "value_counts": None,
+                        "null_value_counts": None,
+                        "lower_bounds": None,
+                        "upper_bounds": None,
+                        "equality_ids": equality_ids,
+                    },
+                }
+            )
+        if n_deleted == 0:
+            raise IcebergError(
+                f"predicate {predicate!r} matched no rows — refusing an empty "
+                "delete commit"
+            )
+
+        def manifests() -> list[dict]:
+            m = _write_manifest(att, ctx, "-deletes", entries, [], 1, 0, spec_id=delete_spec_id)
+            m["deleted_rows_count"] = n_deleted
+            return [m] + ctx.prior_manifests
+
+        return ctx.publish(att, manifests, "delete", 0, {"deleted-records": str(n_deleted)})
 
 
 def compact_iceberg(spark: SparkSession, table_dir: str, n_files: int = 1) -> int:
@@ -1345,40 +1360,17 @@ def compact_iceberg(spark: SparkSession, table_dir: str, n_files: int = 1) -> in
     machinery the partitioned write path uses (``n_files`` applies to
     unpartitioned tables only)."""
     ctx = _CommitCtx(table_dir, None, first=False)
-    spec_fields = ctx.spec_fields()
-    id_by_name = {f["name"]: f["id"] for f in ctx.schema["fields"]}
-    ice_types = {f["name"]: f["type"] for f in ctx.schema["fields"]}
     content = _with_field_ids(
         IcebergTable(spark, table_dir).read(), ctx.schema  # deletes applied
     )
-    if spec_fields:
-        part_avro, part_transforms = _part_transforms_of(ctx.schema, spec_fields)
-        files_with_parts = _write_partitioned_files(
-            content, table_dir, ctx.version, part_transforms, ice_types
+    with commit.Attempt(table_dir) as att:
+        entries, total_rows, part_avro = _write_data(att, ctx, content, n_files, None)
+        return ctx.publish(
+            att,
+            lambda: [_write_manifest(att, ctx, "", entries, part_avro, 0, total_rows)],
+            "replace",
+            total_rows,
         )
-    else:
-        part_avro = []
-        files_with_parts = [
-            (p, {})
-            for p in _write_data_files(content, table_dir, ctx.version, n_files, None)
-        ]
-    entries = []
-    total_rows = 0
-    for p, part_tuple in files_with_parts:
-        e, n_rows = _data_entry(p, part_tuple, ctx.snapshot_id, id_by_name, ice_types)
-        total_rows += n_rows
-        entries.append(e)
-    manifest_path = os.path.join(ctx.meta_dir, f"m{ctx.version}.avro")
-    write_ocf(
-        manifest_path,
-        entries,
-        _manifest_entry_schema(part_avro),
-        extra_meta=ctx.manifest_meta(),
-    )
-    new_manifest = _manifest_list_entry(
-        manifest_path, ctx, 0, len(files_with_parts), total_rows
-    )
-    return ctx.publish([new_manifest], "replace", total_rows)
 
 
 def rewrite_manifests_iceberg(table_dir: str) -> dict:
@@ -1437,45 +1429,46 @@ def rewrite_manifests_iceberg(table_dir: str) -> dict:
         return {"manifests_before": before, "manifests_after": before,
                 "snapshot_id": None}
 
-    spec_by_id = {sp["spec-id"]: sp["fields"] for sp in ctx.partition_specs}
-    list_entries = []
-    for i, (key, g) in enumerate(sorted(groups.items(), key=lambda kv: str(kv[0]))):
-        content, spec_id, raw_schema, raw_sid = key
-        schema = (
-            json.loads(raw_schema.decode("utf-8"))
-            if raw_schema is not None
-            else ctx.schema
+    with commit.Attempt(table_dir) as att:
+        spec_by_id = {sp["spec-id"]: sp["fields"] for sp in ctx.partition_specs}
+        list_entries = []
+        for i, (key, g) in enumerate(sorted(groups.items(), key=lambda kv: str(kv[0]))):
+            content, spec_id, raw_schema, raw_sid = key
+            schema = (
+                json.loads(raw_schema.decode("utf-8"))
+                if raw_schema is not None
+                else ctx.schema
+            )
+            spec_fields = spec_by_id.get(spec_id, [])
+            part_avro, _ = _part_transforms_of(schema, spec_fields)
+            mpath = att.own(os.path.join(ctx.meta_dir, f"m-{att.token}-rw{i}.avro"))
+            extra = {"format-version": b"2"}
+            if raw_schema is not None:
+                extra["schema"] = raw_schema
+            if raw_sid is not None:
+                extra["schema-id"] = raw_sid
+            write_ocf(mpath, g["entries"], _manifest_entry_schema(part_avro), extra_meta=extra)
+            list_entries.append(
+                {
+                    "manifest_path": mpath,
+                    "manifest_length": os.path.getsize(mpath),
+                    "partition_spec_id": spec_id,
+                    "content": content,
+                    "sequence_number": ctx.seq,
+                    "min_sequence_number": g["min_seq"] if g["min_seq"] is not None else ctx.seq,
+                    "added_snapshot_id": ctx.snapshot_id,
+                    "added_files_count": 0,
+                    "existing_files_count": len(g["entries"]),
+                    "deleted_files_count": 0,
+                    "added_rows_count": 0,
+                    "existing_rows_count": g["rows"],
+                    "deleted_rows_count": 0,
+                }
+            )
+        sid = ctx.publish(
+            att, lambda: list_entries, "replace", 0,
+            {"manifests-rewritten": str(before)},
         )
-        spec_fields = spec_by_id.get(spec_id, [])
-        part_avro, _ = _part_transforms_of(schema, spec_fields)
-        mpath = os.path.join(ctx.meta_dir, f"m{ctx.version}-rw{i}.avro")
-        extra = {"format-version": b"2"}
-        if raw_schema is not None:
-            extra["schema"] = raw_schema
-        if raw_sid is not None:
-            extra["schema-id"] = raw_sid
-        write_ocf(mpath, g["entries"], _manifest_entry_schema(part_avro), extra_meta=extra)
-        list_entries.append(
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": spec_id,
-                "content": content,
-                "sequence_number": ctx.seq,
-                "min_sequence_number": g["min_seq"] if g["min_seq"] is not None else ctx.seq,
-                "added_snapshot_id": ctx.snapshot_id,
-                "added_files_count": 0,
-                "existing_files_count": len(g["entries"]),
-                "deleted_files_count": 0,
-                "added_rows_count": 0,
-                "existing_rows_count": g["rows"],
-                "deleted_rows_count": 0,
-            }
-        )
-    sid = ctx.publish(
-        list_entries, "replace", 0,
-        {"manifests-rewritten": str(before)},
-    )
     return {"manifests_before": before, "manifests_after": len(list_entries),
             "snapshot_id": sid}
 
@@ -1547,6 +1540,15 @@ def expire_snapshots_iceberg(table_dir: str, keep_last: int = 1) -> dict:
 
     k_lists, k_manifests, k_files = _reach(kept)
     e_lists, e_manifests, e_files = _reach(expired)
+    # publish first: a lost claim then raises before a file is touched,
+    # and a crash after it leaves orphans, never dangling references
+    snapshot_log = [
+        {"snapshot-id": s["snapshot-id"], "timestamp-ms": s["timestamp-ms"]}
+        for s in kept
+    ]
+    _write_metadata_update(
+        table_dir, prev, {"snapshots": kept, "snapshot-log": snapshot_log}
+    )
     removed_files = removed_manifests = 0
     for p in sorted(e_files - k_files):
         if os.path.exists(p):
@@ -1556,14 +1558,6 @@ def expire_snapshots_iceberg(table_dir: str, keep_last: int = 1) -> dict:
         if os.path.exists(p):
             os.remove(p)
             removed_manifests += 1
-
-    snapshot_log = [
-        {"snapshot-id": s["snapshot-id"], "timestamp-ms": s["timestamp-ms"]}
-        for s in kept
-    ]
-    _write_metadata_update(
-        table_dir, prev, {"snapshots": kept, "snapshot-log": snapshot_log}
-    )
     return {
         "expired_snapshots": [s["snapshot-id"] for s in expired],
         "files_removed": removed_files,
@@ -1673,26 +1667,31 @@ def evolve_schema_iceberg(
     return new_sid
 
 
-def _write_metadata(meta_dir: str, version: int, meta: dict) -> None:
-    """Publish ``vN.metadata.json`` atomically (tmp write + rename), then
-    point ``version-hint.text`` at it. The shared tail of every commit."""
-    meta_path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    with open(meta_path + ".tmp", "w") as f:
-        json.dump(meta, f)
-    os.replace(meta_path + ".tmp", meta_path)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as f:
-        f.write(str(version))
+def _commit_metadata(meta_dir: str, version: int, render, rebase=None) -> int:
+    """Claim ``vN.metadata.json`` (``render(N)`` gives its content)
+    through the commit kernel, then point ``version-hint.text`` at the
+    claimed version — the shared tail of every commit. A hint written
+    late by a slower winner only lags: readers roll forward from it."""
+    version = commit.publish(
+        lambda v: os.path.join(meta_dir, f"v{v}.metadata.json"),
+        version,
+        lambda v: json.dumps(render(v)),
+        rebase,
+    )
+    commit.replace_atomic(os.path.join(meta_dir, "version-hint.text"), str(version))
+    return version
 
 
 def _write_metadata_update(table_dir: str, prev: dict, updates: dict) -> None:
     """Commit a metadata-only change: copy the previous metadata, replace
     the top-level ``updates``, bump the version, refresh the hint. (The
     shared tail of every snapshot-less commit: expiry, schema/spec
-    evolution, refs.)"""
+    evolution, refs.) A concurrent commit makes it raise
+    ConcurrentCommitError."""
     meta = {k: v for k, v in prev.items() if not k.startswith("_")}
     meta.update(updates)
     meta["last-updated-ms"] = int(time.time() * 1000)
-    _write_metadata(os.path.join(table_dir, "metadata"), prev["_version"] + 1, meta)
+    _commit_metadata(os.path.join(table_dir, "metadata"), prev["_version"] + 1, lambda _v: meta)
 
 
 def _move_main(prev: dict, snapshot_id: int) -> dict:
@@ -1941,24 +1940,20 @@ def convert_delta_to_iceberg(
     ctx = _CommitCtx(
         iceberg_dir, spark.createDataFrame([], spark_schema), first=True
     )
-    id_by_name = {f["name"]: f["id"] for f in ctx.schema["fields"]}
-    ice_types = {f["name"]: f["type"] for f in ctx.schema["fields"]}
-    entries = []
-    total_rows = 0
-    for a in sorted(adds, key=lambda a: a["path"]):
-        p = os.path.abspath(os.path.join(delta_dir, unquote(a["path"])))
-        e, n_rows = _data_entry(p, {}, ctx.snapshot_id, id_by_name, ice_types)
-        total_rows += n_rows
-        entries.append(e)
-    manifest_path = os.path.join(ctx.meta_dir, f"m{ctx.version}.avro")
-    write_ocf(
-        manifest_path, entries, _manifest_entry_schema([]),
-        extra_meta=ctx.manifest_meta(),
+    entries, total_rows = _data_entries(
+        ctx,
+        [
+            (os.path.abspath(os.path.join(delta_dir, unquote(a["path"]))), {})
+            for a in sorted(adds, key=lambda a: a["path"])
+        ],
     )
-    new_manifest = _manifest_list_entry(
-        manifest_path, ctx, 0, len(entries), total_rows
-    )
-    return ctx.publish([new_manifest], "append", total_rows)
+    with commit.Attempt(iceberg_dir) as att:
+        return ctx.publish(
+            att,
+            lambda: [_write_manifest(att, ctx, "", entries, [], 0, total_rows)],
+            "append",
+            total_rows,
+        )
 
 
 def _schema_by_id(meta: dict) -> dict:
@@ -2004,22 +1999,31 @@ def _local(path: str, table_dir: str) -> str:
     return path if os.path.isabs(path) else os.path.join(table_dir, path)
 
 
+def _head_version(meta_dir: str) -> int | None:
+    """The newest metadata version: the hint, rolled forward while
+    ``v{N+1}.metadata.json`` exists (what a Hadoop-catalog reader does —
+    the hint is written after the claim, so it can lag), or the highest
+    ``vN`` on disk without a hint; None for no table."""
+    hint = os.path.join(meta_dir, "version-hint.text")
+    if not os.path.exists(hint):
+        versions = [
+            int(os.path.basename(p)[1:].split(".")[0])
+            for p in glob.glob(os.path.join(meta_dir, "v*.metadata.json"))
+        ]
+        return max(versions) if versions else None
+    with open(hint) as f:
+        version = int(f.read().strip())
+    while os.path.exists(os.path.join(meta_dir, f"v{version + 1}.metadata.json")):
+        version += 1
+    return version
+
+
 def _load_table_metadata(table_dir: str) -> dict:
     meta_dir = os.path.join(table_dir, "metadata")
-    hint = os.path.join(meta_dir, "version-hint.text")
-    if os.path.exists(hint):
-        with open(hint) as f:
-            version = int(f.read().strip())
-        path = os.path.join(meta_dir, f"v{version}.metadata.json")
-    else:
-        cands = sorted(
-            glob.glob(os.path.join(meta_dir, "v*.metadata.json")),
-            key=lambda p: int(os.path.basename(p)[1:].split(".")[0]),
-        )
-        if not cands:
-            raise IcebergError(f"no Iceberg metadata under {meta_dir}")
-        path = cands[-1]
-        version = int(os.path.basename(path)[1:].split(".")[0])
+    version = _head_version(meta_dir)
+    if version is None:
+        raise IcebergError(f"no Iceberg metadata under {meta_dir}")
+    path = os.path.join(meta_dir, f"v{version}.metadata.json")
     with open(path) as f:
         meta = json.load(f)
     if meta.get("format-version") not in (1, 2):

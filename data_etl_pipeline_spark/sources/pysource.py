@@ -50,6 +50,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from data_etl_pipeline_spark.sources.commit import replace_atomic
+
 _SCHEMA = (
     "shard int, custom_id string, status string, n_tokens bigint, body string"
 )
@@ -470,10 +472,7 @@ class BatchResultsStreamWriter(DataSourceStreamWriter):
                     os.path.join(staging, name), os.path.join(self.path, final)
                 )
                 published.append(final)
-        tmp = ledger + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"files": published}, fh)
-        os.replace(tmp, ledger)
+        replace_atomic(ledger, json.dumps({"files": published}))
 
     def abort(self, messages, batchId: int) -> None:
         staging = os.path.join(self.path, "_staging")

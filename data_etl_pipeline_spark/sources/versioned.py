@@ -43,18 +43,10 @@ list per version (simpler to read back, same skipping behavior):
     counts and stays metadata-only; ``change_feed`` reads each side under
     its own DV state so DV deletes surface as row-level deletes.
 
-Concurrent writers use the optimistic log protocol Delta uses: the commit
-of version N is an EXCLUSIVE create of ``_log/v{N}.json`` (write-temp +
-``os.link``, which fails atomically if the name exists). A writer that
-loses the race re-reads the latest manifest, re-derives its change
-against it, and retries — so two interleaved MERGEs both land, neither
-lost (test_versioned.py::test_concurrent_writers_both_commit). Data files
-carry a per-attempt random token in their names, so racing writers can
-never collide on a data path; an abandoned attempt only leaves orphan
-files that the next ``vacuum()`` removes. MERGE sources are pinned with
-``localCheckpoint`` before the first read so the skip decision, the
-anti-join, and the union all see the SAME rows even if the source plan is
-nondeterministic (Delta imposes the same constraint on MERGE sources).
+Commits go through the commit kernel (``sources/commit.py``, which
+documents the concurrency contract): version N is an exclusive claim of
+``_log/v{N}.json``, and a writer that loses the race re-derives its
+change against the winner's manifest and retries.
 """
 
 from __future__ import annotations
@@ -69,6 +61,10 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from data_etl_pipeline_spark.sources import commit
+from data_etl_pipeline_spark.sources.commit import ConcurrentCommitError  # noqa: F401  (re-export)
+from data_etl_pipeline_spark.sources.footerprune import file_uri_path
 
 StatsPredicate = Callable[[dict], bool]
 
@@ -116,10 +112,6 @@ def _lossless_upcast(src: "T.DataType", dst: "T.DataType") -> bool:
     if ss in _INT_WIDTH and isinstance(dst, T.DecimalType):
         return dst.precision - dst.scale >= {"tinyint": 3, "smallint": 5, "int": 10, "bigint": 19}[ss]
     return False
-
-
-class ConcurrentCommitError(RuntimeError):
-    """A commit could not claim a version after repeated contention."""
 
 
 class ConstraintViolationError(RuntimeError):
@@ -235,80 +227,56 @@ class VersionedTable:
                      bloom_cols: list[str] | None = None) -> list[dict]:
         """Write ``df`` as immutable data files + per-file min/max stats.
 
-        One write job, then ONE stats job over the fresh files grouped by
-        input_file_name — per-file stats without a per-file pass. The same
-        stats Delta keeps in add-file actions; merge/delete skip with them.
-        File names carry a per-attempt random token so concurrent writers
-        targeting the same version number can never collide on a path.
+        One write job into the attempt's staging directory, then ONE stats
+        job over the staged files grouped by input_file_name — per-file
+        stats without a per-file pass. The same stats Delta keeps in
+        add-file actions; merge/delete skip with them. Final names carry
+        the attempt token, so concurrent writers targeting the same
+        version number can never collide on a path.
         """
-        from urllib.parse import unquote, urlparse
-
-        token = uuid.uuid4().hex[:8]
-        tmp = os.path.join(self.path, f"_tmp-{token}")
-        df.write.mode("overwrite").parquet(tmp)
-        back = self.spark.read.schema(df.schema).parquet(tmp)
-        bloom_cols = [c for c in (bloom_cols or []) if c in df.columns]
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for c in self._stat_cols(df.schema):
-            aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
-        # Bloom build: fold each row's two probe bits into 128 bit_or words
-        # per column — same single stats job, all codegen
-        for j, c in enumerate(bloom_cols):
-            back = back.withColumn(f"__bp_{j}_0", F.expr(self._bloom_pos_expr(f"`{c}`", _BLOOM_SEEDS[0])))
-            back = back.withColumn(f"__bp_{j}_1", F.expr(self._bloom_pos_expr(f"`{c}`", _BLOOM_SEEDS[1])))
-            for w in range(_BLOOM_WORDS):
-                terms = " | ".join(
-                    f"IF(__bp_{j}_{i} div 64 = {w}, "
-                    f"shiftleft(cast(1 as bigint), cast(__bp_{j}_{i} % 64 as int)), 0L)"
-                    for i in range(len(_BLOOM_SEEDS))
-                )
-                aggs.append(F.expr(f"bit_or({terms})").alias(f"__bloom_{j}_{w}"))
-        per_file = back.groupBy(F.input_file_name().alias("__file")).agg(*aggs).collect()
-        os.makedirs(self._data_dir, exist_ok=True)
-        entries: list[dict] = []
-        for i, row in enumerate(sorted(per_file, key=lambda r: r["__file"])):
-            if row["__n"] == 0:
-                continue
-            name = f"f-{version}-{token}-{i}.parquet"
-            src = row["__file"]
-            # input_file_name() is a URI: strip the scheme AND percent-decode
-            # (Hadoop encodes spaces/'%'/'#' in paths; a raw strip would
-            # os.rename a nonexistent encoded path)
-            src_path = unquote(urlparse(src).path) if "://" in src or src.startswith("file:") else src
-            os.rename(src_path, os.path.join(self._data_dir, name))
-            stats = {
-                c: [
-                    self._json_safe(row[f"__min_{c}"], widen=-1),
-                    self._json_safe(row[f"__max_{c}"], widen=1),
-                ]
-                for c in self._stat_cols(df.schema)
-            }
-            entry = {"path": f"data/{name}", "num_rows": row["__n"], "stats": stats}
-            if bloom_cols:
-                entry["bloom"] = {
-                    c: [int(row[f"__bloom_{j}_{w}"] or 0) for w in range(_BLOOM_WORDS)]
-                    for j, c in enumerate(bloom_cols)
+        with commit.Attempt(self.path) as att:
+            staged = att.stage(lambda d: df.write.parquet(d))
+            back = self.spark.read.schema(df.schema).parquet(staged)
+            bloom_cols = [c for c in (bloom_cols or []) if c in df.columns]
+            aggs = [F.count(F.lit(1)).alias("__n")]
+            for c in self._stat_cols(df.schema):
+                aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
+            # Bloom build: fold each row's two probe bits into 128 bit_or words
+            # per column — same single stats job, all codegen
+            for j, c in enumerate(bloom_cols):
+                back = back.withColumn(f"__bp_{j}_0", F.expr(self._bloom_pos_expr(f"`{c}`", _BLOOM_SEEDS[0])))
+                back = back.withColumn(f"__bp_{j}_1", F.expr(self._bloom_pos_expr(f"`{c}`", _BLOOM_SEEDS[1])))
+                for w in range(_BLOOM_WORDS):
+                    terms = " | ".join(
+                        f"IF(__bp_{j}_{i} div 64 = {w}, "
+                        f"shiftleft(cast(1 as bigint), cast(__bp_{j}_{i} % 64 as int)), 0L)"
+                        for i in range(len(_BLOOM_SEEDS))
+                    )
+                    aggs.append(F.expr(f"bit_or({terms})").alias(f"__bloom_{j}_{w}"))
+            per_file = back.groupBy(F.input_file_name().alias("__file")).agg(*aggs).collect()
+            entries: list[dict] = []
+            for i, row in enumerate(sorted(per_file, key=lambda r: r["__file"])):
+                if row["__n"] == 0:
+                    continue
+                name = f"f-{version}-{att.token}-{i}.parquet"
+                # input_file_name() is a percent-encoded URI (Hadoop encodes
+                # spaces/'%'/'#'); a raw strip would move a nonexistent path
+                att.place(file_uri_path(row["__file"]), os.path.join(self._data_dir, name))
+                stats = {
+                    c: [
+                        self._json_safe(row[f"__min_{c}"], widen=-1),
+                        self._json_safe(row[f"__max_{c}"], widen=1),
+                    ]
+                    for c in self._stat_cols(df.schema)
                 }
-            entries.append(entry)
-        shutil.rmtree(tmp, ignore_errors=True)
+                entry = {"path": f"data/{name}", "num_rows": row["__n"], "stats": stats}
+                if bloom_cols:
+                    entry["bloom"] = {
+                        c: [int(row[f"__bloom_{j}_{w}"] or 0) for w in range(_BLOOM_WORDS)]
+                        for j, c in enumerate(bloom_cols)
+                    }
+                entries.append(entry)
         return entries
-
-    def _try_claim(self, version: int, entry: dict) -> bool:
-        """Atomically claim ``v{version}.json``: write a temp file, then
-        ``os.link`` it to the final name — link fails with FileExistsError
-        iff another writer already committed that version. This is the
-        put-if-absent primitive Delta's log protocol needs from its store."""
-        os.makedirs(self._log_dir, exist_ok=True)
-        tmp = os.path.join(self._log_dir, f".tmp-{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as fh:
-            json.dump(entry, fh)
-        try:
-            os.link(tmp, os.path.join(self._log_dir, f"v{version}.json"))
-            return True
-        except FileExistsError:
-            return False
-        finally:
-            os.remove(tmp)
 
     def _validate_checks(self, df: DataFrame, checks: list[str]) -> None:
         """Delta CHECK semantics: a row passes when every constraint is
@@ -331,36 +299,17 @@ class VersionedTable:
                     f"row(s): {e!r}"
                 )
 
-    def _commit(self, new_df: DataFrame | None, carry: list[dict], op: str, detail: str,
-                schema_json: str | None = None, max_attempts: int = 10,
-                bloom_cols: list[str] | None = None,
-                checks: list[str] | None = None) -> int:
-        """Commit a change that does NOT depend on the prior manifest
-        (``write``'s full snapshot): the data files are written once and,
-        if the version claim is lost to a concurrent writer, re-claimed
-        under the next number — no re-derivation needed."""
-        schema_json = schema_json or (new_df.schema.json() if new_df is not None else None)
-        self._validate_checks(new_df, checks or [])
-        version = (self.latest_version() + 1) if self._versions() else 0
-        new_files = (
-            self._write_files(new_df, version, bloom_cols=bloom_cols)
-            if new_df is not None else []
-        )
-        for _ in range(max_attempts):
-            if self._claim_with_files(version, new_files, carry, op, detail, schema_json,
-                                      bloom_cols=bloom_cols, checks=checks):
-                return version
-            version = self.latest_version() + 1
-        self._drop_orphans(new_files)
-        raise ConcurrentCommitError(
-            f"gave up after {max_attempts} contended commit attempts at {self.path}"
-        )
+    def _entry_path(self, version: int) -> str:
+        return os.path.join(self._log_dir, f"v{version}.json")
 
-    def _claim_with_files(self, version: int, new_files: list[dict], carry: list[dict],
-                          op: str, detail: str, schema_json: str | None,
-                          bloom_cols: list[str] | None = None,
-                          dv_files: list[dict] | None = None,
-                          checks: list[str] | None = None) -> bool:
+    def _entry(self, version: int, new_files: list[dict], carry: list[dict],
+               op: str, detail: str, schema_json: str | None,
+               bloom_cols: list[str] | None = None,
+               dv_files: list[dict] | None = None,
+               checks: list[str] | None = None) -> str:
+        """The manifest of ``version``: the log entry IS the commit, claimed
+        after every data file exists, so readers never see half-written
+        data as latest."""
         files = carry + new_files
         entry = {
             "version": version,
@@ -385,63 +334,59 @@ class VersionedTable:
             entry["num_deleted"] = sum(
                 n for s in dv_files for n in s["counts"].values()
             )
-        # the log entry IS the commit: claimed last, so readers never see
-        # half-written data as latest
-        return self._try_claim(version, entry)
+        return json.dumps(entry)
 
-    def _drop_orphans(self, new_files: list[dict]) -> None:
-        for f in new_files:
-            p = os.path.join(self.path, f["path"])
-            if os.path.exists(p):
-                os.remove(p)
+    def _commit(self, build, op: str) -> int:
+        """The optimistic commit loop behind every operation.
 
-    def _commit_retry(self, build, op: str, max_attempts: int = 10) -> int:
-        """Optimistic-concurrency loop for manifest-derived commits.
+        ``build(man) -> (new_df, carry, detail, schema_json[, extra])``
+        derives the change from the CURRENT manifest (None before the
+        first commit); ``extra`` may set ``dv_files``, ``checks`` and
+        ``bloom_cols``, which otherwise persist from ``man``. After a lost
+        claim the change is re-derived against the winner's manifest and
+        its files rewritten — unless ``build`` returns the very frame it
+        returned before (``write``'s full snapshot), whose files are reused.
 
-        ``build(man) -> (new_df, carry, detail, schema_json)`` derives the
-        change from the CURRENT manifest; if the exclusive claim of the
-        next version number fails (a concurrent writer won), the attempt's
-        data files are dropped and the change is re-derived against the
-        fresh manifest — the retry semantics of Delta's commit protocol,
-        which is what makes two interleaved writers both land without
-        lost updates.
+        Whether supplied or inherited, DV sidecar entries are pruned to the
+        basenames that survive in the carried file list: a rewrite
+        (merge/compact/zorder/delete) replaces file basenames, which
+        implicitly purges their deletion vectors — enforced here in one
+        place so no operation can resurrect deleted rows or leak stale DV
+        bookkeeping."""
+        state: dict = {"df": None, "files": []}
 
-        ``build`` may return a fifth element — a dict of extra manifest
-        fields (today: ``dv_files`` for deletion-vector commits).  Whether
-        supplied or inherited from the current manifest, DV sidecar
-        entries are pruned to the basenames that survive in the carried
-        file list: a rewrite (merge/compact/zorder/delete) replaces file
-        basenames, which implicitly purges their deletion vectors — the
-        commit loop enforces that invariant in one place so no operation
-        can resurrect deleted rows or leak stale DV bookkeeping."""
-        for _ in range(max_attempts):
-            man = self._manifest()
-            version = man["version"] + 1
-            bloom_cols = man.get("bloom_cols")  # the index config persists
-            out = build(man)
-            new_df, carry, detail, schema_json = out[:4]
-            extra = out[4] if len(out) > 4 else {}
-            checks = extra.get("checks", man.get("checks"))
-            self._validate_checks(new_df, checks or [])
-            dv_files = extra.get("dv_files", man.get("dv_files", []))
+        def derive(_lost: int | None = None) -> int:
+            man = self._manifest() if self._versions() else None
+            version = man["version"] + 1 if man else 0
+            new_df, carry, detail, schema_json, *rest = build(man)
+            extra = {**(man or {}), **(rest[0] if rest else {})}
+            checks = extra.get("checks")
+            if new_df is not state["df"]:
+                commit.drop(os.path.join(self.path, f["path"]) for f in state["files"])
+                state["files"] = []
+                self._validate_checks(new_df, checks or [])
+                if new_df is not None:
+                    state["files"] = self._write_files(
+                        new_df, version, bloom_cols=extra.get("bloom_cols")
+                    )
+                state["df"] = new_df
             surviving = {self._basename(f["path"]) for f in carry}
             pruned = []
-            for s in dv_files:
+            for s in extra.get("dv_files", []):
                 counts = {bn: n for bn, n in s["counts"].items() if bn in surviving}
                 if counts:
                     pruned.append({"path": s["path"], "counts": counts})
-            new_files = (
-                self._write_files(new_df, version, bloom_cols=bloom_cols)
-                if new_df is not None else []
+            state["render"] = lambda v: self._entry(
+                v, state["files"], carry, op, detail, schema_json,
+                bloom_cols=extra.get("bloom_cols"), dv_files=pruned, checks=checks,
             )
-            if self._claim_with_files(version, new_files, carry, op, detail, schema_json,
-                                      bloom_cols=bloom_cols, dv_files=pruned,
-                                      checks=checks):
-                return version
-            self._drop_orphans(new_files)
-        raise ConcurrentCommitError(
-            f"gave up after {max_attempts} contended commit attempts at {self.path}"
-        )
+            return version
+
+        try:
+            return commit.publish(self._entry_path, derive(), lambda v: state["render"](v), derive)
+        except BaseException:
+            commit.drop(os.path.join(self.path, f["path"]) for f in state["files"])
+            raise
 
     @staticmethod
     def _basename(path: str) -> str:
@@ -526,8 +471,9 @@ class VersionedTable:
         # ``checks`` are Delta-style CHECK constraints (SQL boolean
         # expressions): validated against these rows now, persisted in the
         # log, and enforced on every future merge/replace batch
-        return self._commit(df, [], "write", "full snapshot", bloom_cols=bloom_cols,
-                            checks=checks)
+        extra = {"bloom_cols": bloom_cols, "checks": checks, "dv_files": []}
+        return self._commit(lambda _man: (df, [], "full snapshot", df.schema.json(), extra),
+                            "write")
 
     def read(self, version: int | None = None) -> DataFrame:
         """Latest snapshot, or time-travel to an older version."""
@@ -590,7 +536,7 @@ class VersionedTable:
                 {"dv_files": old.get("dv_files", [])},
             )
 
-        return self._commit_retry(build, "restore")
+        return self._commit(build, "restore")
 
     def clone(self, dest: str, deep: bool = True) -> "VersionedTable":
         """Delta CLONE parity: materialize the latest snapshot as a new
@@ -633,12 +579,12 @@ class VersionedTable:
                 for s in man.get("dv_files", [])
             ]
             detail = f"SHALLOW clone of {self.path}@v{man['version']} (source vacuum breaks it)"
-        ok = clone._claim_with_files(
+        entry = clone._entry(
             0, [], files, "clone", detail, man["schema"],
             bloom_cols=man.get("bloom_cols"), dv_files=dvs,
             checks=man.get("checks"),
         )
-        if not ok:
+        if not commit.claim(clone._entry_path(0), entry):
             raise ValueError(f"destination {dest} already has a version log")
         return clone
 
@@ -706,7 +652,7 @@ class VersionedTable:
                 {"checks": existing + [expr]},
             )
 
-        return self._commit_retry(build, "add_check")
+        return self._commit(build, "add_check")
 
     def change_feed(
         self, keys: list[str], from_version: int, to_version: int | None = None
@@ -1026,7 +972,7 @@ class VersionedTable:
             detail = f"keys={keys} files_skipped={len(carried)} files_rewritten={len(touched)}"
             return merged, carried, detail, schema_json
 
-        return self._commit_retry(build, "merge")
+        return self._commit(build, "merge")
 
     def delete_keys(self, tombstones: DataFrame, keys: list[str]) -> int:
         """Keyed DELETE: drop every row whose key tuple appears in
@@ -1063,7 +1009,7 @@ class VersionedTable:
             )
             return kept, carried, detail, man["schema"]
 
-        return self._commit_retry(build, "delete")
+        return self._commit(build, "delete")
 
     def delete_where(self, cond: Column | str, prune: StatsPredicate | None = None) -> int:
         """DELETE WHERE: drop matching rows (S13 prefix-delete shape).
@@ -1084,27 +1030,23 @@ class VersionedTable:
             detail = f"{cond} files_skipped={len(carried)} files_rewritten={len(touched)}"
             return kept, carried, detail, man["schema"]
 
-        return self._commit_retry(build, "delete")
+        return self._commit(build, "delete")
 
     def _write_dv_file(self, hits: DataFrame) -> dict | None:
         """Persist (_bn, _pos) deletion rows as one DV sidecar parquet;
         returns its manifest entry {"path", "counts": {basename: n}} or
         None if nothing matched.  A sidecar abandoned by a lost commit
         race is an orphan for ``vacuum``, same as a data file."""
-        token = uuid.uuid4().hex[:8]
-        tmp = os.path.join(self.path, f"_tmpdv-{token}")
-        hits.select("_bn", "_pos").coalesce(1).write.mode("overwrite").parquet(tmp)
-        back = self.spark.read.schema("_bn string, _pos long").parquet(tmp)
+        rel = f"dv/dv-{uuid.uuid4().hex[:8]}.parquet"
+        path = commit.write_single_parquet(
+            hits.select("_bn", "_pos"), os.path.join(self.path, rel)
+        )
+        back = self.spark.read.schema("_bn string, _pos long").parquet(path)
         counts = {r["_bn"]: r["n"] for r in back.groupBy("_bn").agg(F.count(F.lit(1)).alias("n")).collect()}
         if not counts:
-            shutil.rmtree(tmp, ignore_errors=True)
+            os.remove(path)
             return None
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.makedirs(os.path.join(self.path, "dv"), exist_ok=True)
-        name = f"dv-{token}.parquet"
-        os.rename(os.path.join(tmp, part), os.path.join(self.path, "dv", name))
-        shutil.rmtree(tmp, ignore_errors=True)
-        return {"path": f"dv/{name}", "counts": counts}
+        return {"path": rel, "counts": counts}
 
     def delete_where_dv(self, cond: Column | str, prune: StatsPredicate | None = None) -> int:
         """DELETE WHERE via DELETION VECTORS (Delta/Iceberg v2 merge-on-read
@@ -1140,7 +1082,7 @@ class VersionedTable:
             detail = f"dv {cond} rows_deleted={n} files_scanned={len(touched)}"
             return None, man["files"], detail, man["schema"], {"dv_files": dvs + [sidecar]}
 
-        return self._commit_retry(build, "delete_dv")
+        return self._commit(build, "delete_dv")
 
     def compact(self, target_rows: int = 1_000_000) -> int:
         """OPTIMIZE-style small-file compaction: rewrite groups of small
@@ -1163,7 +1105,7 @@ class VersionedTable:
                     f"files_compacted={len(small)} files_kept={len(carried)}",
                     man["schema"])
 
-        return self._commit_retry(build, "compact")
+        return self._commit(build, "compact")
 
     def optimize_zorder(self, cols: list[str], n_files: int | None = None,
                         bits: int = 8) -> int:
@@ -1218,7 +1160,7 @@ class VersionedTable:
             )
             return out, [], f"zorder_by={cols} files_rewritten={len(man['files'])}", man["schema"]
 
-        return self._commit_retry(build, "zorder")
+        return self._commit(build, "zorder")
 
     def count_rows(self, version: int | None = None) -> int:
         """``COUNT(*)`` answered from the manifest alone — the metadata-only
@@ -1317,4 +1259,4 @@ class VersionedTable:
             detail = f"{cond} files_skipped={len(carried)} files_rewritten={len(touched)}"
             return kept.unionByName(df.where(cond)), carried, detail, man["schema"]
 
-        return self._commit_retry(build, "replace_where")
+        return self._commit(build, "replace_where")

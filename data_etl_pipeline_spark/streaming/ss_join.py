@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_etl_pipeline_spark.session import conf_scope, scratch_dir
+from data_etl_pipeline_spark.sources.commit import write_single_parquet
 from data_etl_pipeline_spark.tables import load
 
 _SCHEMA = "event_id long, ts timestamp, user_id long, event_type string"
@@ -180,11 +181,7 @@ def append_flush_sentinel(
         [(-1, -1, "view"), (-2, -1, "purchase")],
         "event_id long, user_id long, event_type string",
     ).select("event_id", far.alias("ts"), "user_id", "event_type")
-    tmp = scratch_dir(spark, "ss_join_sentinel_")
-    sent.write.mode("overwrite").parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    dst = os.path.join(src, "zz_sentinel.parquet")
-    os.replace(os.path.join(tmp, part), dst)
+    dst = write_single_parquet(sent, os.path.join(src, "zz_sentinel.parquet"))
     os.utime(dst, (1_600_100_000, 1_600_100_000))  # after every real batch
 
 

@@ -30,9 +30,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from data_etl_pipeline_spark.session import conf_scope, scratch_dir
+from data_etl_pipeline_spark.session import scratch_dir
 from data_etl_pipeline_spark.streaming.windows import (
-    ROCKSDB_STATE_STORE,
     _align_ts_cols,
     _events_stream,
     drain_to_memory,
@@ -155,11 +154,9 @@ def _ts_ordered_batch_dir(
 
 
 # ---------------------------------------------------------------------------
-# Per-user profile on applyInPandasWithState — the SAME operator the
-# transformWithState variant below implements, on the arbitrary-stateful
-# API this container CAN execute (applyInPandasWithState predates the
-# protobuf StateMessage worker protocol that blocks transformWithState
-# here). Reference semantics: ST4's stateful progression
+# Per-user profile on applyInPandasWithState (the arbitrary-stateful API
+# that predates transformWithState's protobuf state protocol, so it runs
+# without a protobuf runtime). Reference semantics: ST4's stateful progression
 # (extraction_node.py:127-159) — a per-key profile that accretes across
 # arrivals. State per user is one tuple (n_events, distinct-type set
 # JSON-encoded, last_ts); every emitted field is monotone nondecreasing
@@ -170,14 +167,23 @@ def _ts_ordered_batch_dir(
 # Scale notes: state is one short tuple per user in the state store
 # (RocksDB-capable, see windows.py:288), bounded by (users x distinct
 # types), not stream length; each micro-batch touches only the keys it
-# contains. The HDFS heap provider suffices here — unlike
-# transformWithState there are no typed-state column families.
+# contains. The HDFS heap provider suffices here (no typed-state column
+# families).
 # ---------------------------------------------------------------------------
 
 PROFILE_STATE_SCHEMA = StructType(
     [
         StructField("n_events", LongType()),
         StructField("seen_types", StringType()),
+        StructField("last_ts", TimestampType()),
+    ]
+)
+
+PROFILE_OUTPUT_SCHEMA = StructType(
+    [
+        StructField("user_id", LongType()),
+        StructField("n_events", LongType()),
+        StructField("n_types", LongType()),
         StructField("last_ts", TimestampType()),
     ]
 )
@@ -220,7 +226,7 @@ def run_stream_user_profile_apws(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .applyInPandasWithState(
             _profile_accrete,
-            outputStructType=TW_OUTPUT_SCHEMA,
+            outputStructType=PROFILE_OUTPUT_SCHEMA,
             stateStructType=PROFILE_STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
@@ -230,125 +236,6 @@ def run_stream_user_profile_apws(spark: SparkSession, sf_dir: str) -> DataFrame:
     # actually ran as multiple micro-batches, not one collapsed batch
     drained = drain_to_memory(profiles, "update", "apws", min_batches=3)
     drained = drained.groupBy("user_id").agg(
-        F.max("n_events").alias("n_events"),
-        F.max("n_types").alias("n_types"),
-        F.max("last_ts").alias("last_ts"),
-    )
-    return _align_ts_cols(spark, sf_dir, drained, ["last_ts"])
-
-
-# ---------------------------------------------------------------------------
-# transformWithState (Spark 4): the successor API to applyInPandasWithState
-# above — typed state variables (ValueState / ListState / MapState, each
-# independently readable and TTL-able) instead of one opaque state tuple,
-# plus processing/event-time timers. This operator maintains a per-user
-# profile (event count, distinct event-type map, latest ts) across
-# micro-batches and emits the updated profile on every batch the user
-# appears in; each field is MONOTONE, so the drained max-per-user equals
-# the final state and the batch oracle can check it exactly.
-# ---------------------------------------------------------------------------
-
-TW_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("n_types", LongType()),
-        StructField("last_ts", TimestampType()),
-    ]
-)
-
-
-def _make_processor():
-    # StatefulProcessor subclass is resolved lazily: importing
-    # pyspark.sql.streaming.stateful_processor at module import time
-    # would make this module unimportable on Spark <4
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class UserProfileProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            # three INDEPENDENT typed state variables — the API's point:
-            # each is read/updated separately in the state store instead
-            # of round-tripping one monolithic tuple per key per batch
-            self._n = handle.getValueState("n_events", "n BIGINT")
-            self._types = handle.getMapState("types", "k STRING", "c BIGINT")
-            self._last = handle.getValueState("last_ts", "ts TIMESTAMP")
-
-        def handleInputRows(self, key, rows, timer_values):
-            batch = pd.concat(list(rows), ignore_index=True)
-            got = self._n.get()
-            n = (got[0] if got else 0) + len(batch)
-            self._n.update((n,))
-            # NULLs stay out of the distinct-type map (matches
-            # COUNT(DISTINCT) semantics); value_counts drops NaN
-            for t, c in batch["event_type"].value_counts().items():
-                prev = self._types.getValue((t,)) if self._types.containsKey((t,)) else None
-                self._types.updateValue((t,), (int(c) + (prev[0] if prev else 0),))
-            mx = batch["ts"].max().to_pydatetime()
-            got_last = self._last.get()
-            if got_last is None or got_last[0] < mx:
-                self._last.update((mx,))
-            n_types = sum(1 for _ in self._types.keys())
-            last = self._last.get()[0]
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "n_types": [n_types],
-                    "last_ts": [last],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return UserProfileProcessor()
-
-
-def run_stream_user_profile_twstate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user profile via ``transformWithStateInPandas`` over three
-    ts-ordered micro-batches. transformWithState REQUIRES the RocksDB
-    state store provider (typed state variables are column families —
-    the HDFS heap store has no such concept), so the provider conf is
-    scoped around the stream like E178's. Every emitted field is
-    monotone nondecreasing per user, so max-per-user over the drained
-    emissions reconstructs the final state exactly — which the oracle
-    checks as COUNT(*) / COUNT(DISTINCT event_type) / MAX(ts) per user.
-
-    ENVIRONMENT SEAM: the transformWithState Python worker deserializes
-    its state protocol with the `protobuf` runtime
-    (pyspark/sql/streaming/proto/StateMessage_pb2). This container does
-    not ship protobuf and installs are disallowed, so this operator is
-    exercised by a skip-gated test (tests/test_stateful_twstate.py)
-    rather than a declared driver query; on any standard cluster image
-    (protobuf is a pyspark[connect] dependency) it runs as-is.
-    """
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the protobuf runtime for its "
-            "state-protocol messages; not available in this environment"
-        ) from e
-    src = _ts_ordered_batch_dir(spark, sf_dir, n_batches=3, prefix="twstate_src_")
-    with conf_scope(spark, ROCKSDB_STATE_STORE):
-        profiles = (
-            spark.readStream.schema(
-                "user_id long, event_id long, ts timestamp, event_type string"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                statefulProcessor=_make_processor(),
-                outputStructType=TW_OUTPUT_SCHEMA,
-                outputMode="append",
-                timeMode="none",
-            )
-        )
-        emitted = drain_to_memory(profiles, "append", "twstate")
-    # the memory sink is already materialized in-session; the post-drain
-    # rollup is a plain batch plan needing no special confs
-    drained = emitted.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.max("n_types").alias("n_types"),
         F.max("last_ts").alias("last_ts"),

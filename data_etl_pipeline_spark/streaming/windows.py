@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_etl_pipeline_spark.session import conf_scope, scratch_dir
+from data_etl_pipeline_spark.sources.commit import write_single_parquet
 from data_etl_pipeline_spark.tables import load
 
 # The state-store provider is read at stream start, so a query scopes it
@@ -644,11 +645,7 @@ def run_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     sent = one_slice_df(
         spark, [(max_ts, 0.0)], "ts timestamp, value double"
     ).select((F.col("ts") + F.expr("interval 30 days")).alias("ts"), "value")
-    tmp = scratch_dir(spark, "psi_sentinel_")
-    sent.write.mode("overwrite").parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    dst = os.path.join(src, "zz_sentinel.parquet")
-    os.replace(os.path.join(tmp, part), dst)
+    dst = write_single_parquet(sent, os.path.join(src, "zz_sentinel.parquet"))
     os.utime(dst, (1_600_100_000, 1_600_100_000))  # after every real batch
     sentinel_day = (max_ts + datetime.timedelta(days=30)).date()
 

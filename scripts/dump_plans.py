@@ -193,7 +193,12 @@ def write_explains() -> None:
         # collected rows as a local frame (so the scoped plan assertion is
         # the one that ran): the dumped plan is a LocalTableScan by design;
         # the join plan itself is asserted inside the query on every run
-        _materialized = {"aqe_runtime_broadcast_join", "aqe_skew_join_split"}
+        _materialized = {
+            "aqe_runtime_broadcast_join",
+            "aqe_skew_join_split",
+            "dpp_partition_pruned_join",
+            "reused_exchange_self_join",
+        }
         if name in _checkpointed:
             note = (
                 "\n(lineage truncated by an eager localCheckpoint inside the "
@@ -202,11 +207,10 @@ def write_explains() -> None:
             )
         if name in _materialized:
             note = (
-                "\n(the query executes its join ONCE inside a scoped-conf "
+                "\n(the query executes its plan ONCE inside a scoped-conf "
                 "block and returns the collected rows as a local frame, so "
-                "this dumped plan is the result relation; the adaptive join "
-                "plan — SMJ start, broadcast/skew finish — is asserted "
-                "in-query on every run)\n"
+                "this dumped plan is the result relation; the plan shape "
+                "the query claims is asserted in-query on every run)\n"
             )
         out.append(f"\n## {name}\n\n```\n{tree}\n```\n{note}")
     with open(os.path.join(ROOT, "EXPLAINS.md"), "w") as f:

@@ -95,12 +95,12 @@ def test_cdc_files_never_become_table_adds(spark, sf_dir, fresh):
 def test_remove_only_commit_derives_deletes(spark, sf_dir, tmp_path):
     """A foreign remove-only commit (no cdc) yields the removed file's
     rows as deletes — and refuses if the pre-image file was vacuumed."""
-    from data_etl_pipeline_spark.plans.extensions import _write_single_parquet
+    from data_etl_pipeline_spark.sources.commit import write_single_parquet
 
     b = _base(spark, sf_dir).where(F.col("o_orderkey") <= 100)
     tbl = str(tmp_path)
     os.makedirs(os.path.join(tbl, "_delta_log"))
-    _write_single_parquet(b, tbl, "a.parquet")
+    write_single_parquet(b, os.path.join(tbl, "a.parquet"))
 
     def log(v, actions):
         with open(os.path.join(tbl, "_delta_log", f"{v:020d}.json"), "w") as fh:
@@ -247,3 +247,43 @@ class TestCheckConstraints:
         de.export_delta_delete(spark, dest, "o_orderkey % 2 = 0")
         ch = DeltaLogReader(spark, dest).table_changes(1, 1)
         assert ch.where(F.col("_change_type") == "delete").count() > 0
+
+
+def test_self_referential_merge_matches_materialized_source(spark, sf_dir, fresh):
+    """A MERGE source read from the destination itself is evaluated by
+    the concurrent insert and change-feed jobs; the table and the feed
+    must equal those a materialized copy of the same source produces."""
+    b = _base(spark, sf_dir).where(F.col("o_orderkey") <= 400)
+    results = []
+    for materialize in (False, True):
+        dest = fresh()
+        de.export_delta(b.repartition(4), dest, cdf=True)
+        src = (
+            DeltaLogReader(spark, dest)
+            .read()
+            .where(F.col("o_orderkey") % 3 == 0)
+            .select(
+                # even keys update in place, odd keys insert as new keys
+                (
+                    F.col("o_orderkey")
+                    + F.when(F.col("o_orderkey") % 2 == 0, 0).otherwise(10_000)
+                ).alias("o_orderkey"),
+                F.concat(F.col("o_orderstatus"), F.lit("z")).alias("o_orderstatus"),
+                "o_totalprice",
+            )
+        )
+        if materialize:
+            src = spark.createDataFrame(src.collect(), src.schema)
+        de.export_delta_merge(spark, src, dest, keys=["o_orderkey"])
+        r = DeltaLogReader(spark, dest)
+        results.append(
+            (
+                sorted(tuple(x) for x in r.read().collect()),
+                sorted(
+                    tuple(x)
+                    for x in r.table_changes(1).drop("_commit_timestamp").collect()
+                ),
+            )
+        )
+    assert results[0] == results[1]
+    assert results[0][1]  # the merge published change rows

@@ -1092,17 +1092,15 @@ class TestSchemaEvolution:
         assert r["max(k)"] == 49
 
     def test_old_files_keep_physical_names(self, spark, etable):
-        import glob as _glob
-
-        old = sorted(_glob.glob(os.path.join(etable, "data", "snap1", "*.parquet")))
+        old = sorted(f["path"] for f in IcebergTable(spark, etable).data_files(snapshot_id=1))
         assert old and spark.read.parquet(old[0]).columns == ["k", "v", "s"]
 
     def test_new_files_embed_parquet_field_ids(self, spark, etable):
-        import glob as _glob
-
         import pyarrow.parquet as pq
 
-        new = sorted(_glob.glob(os.path.join(etable, "data", "snap3", "*.parquet")))
+        t = IcebergTable(spark, etable)
+        old = {f["path"] for f in t.data_files(snapshot_id=1)}
+        new = sorted(f["path"] for f in t.data_files(snapshot_id=2) if f["path"] not in old)
         sch = pq.ParquetFile(new[0]).schema_arrow
         ids = {f.name: f.metadata.get(b"PARQUET:field_id") for f in sch}
         # val keeps id 2 (rename preserves identity); flag got a fresh id

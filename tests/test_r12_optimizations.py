@@ -62,7 +62,9 @@ class TestIcebergPartitionedWriteSinglePass:
         )
         dest = str(tmp_path / "tbl")
         export_iceberg(df, dest, partition_by="bucketed", transform="identity")
-        part_dirs = sorted(glob.glob(os.path.join(dest, "data", "snap1", "__pi=*")))
+        part_dirs = sorted(
+            {os.path.dirname(f["path"]) for f in IcebergTable(spark, dest).data_files()}
+        )
         assert len(part_dirs) == 5, part_dirs
         for d in part_dirs:
             files = [f for f in os.listdir(d) if f.endswith(".parquet")]

@@ -69,19 +69,17 @@ class TestIcebergPartitionedWriteGuards:
             export_iceberg(df, str(tmp_path / "t"), partition_by="k")
 
     def test_existing_snapshot_dir_refuses_overwrite(self, spark, tmp_path):
+        # every commit attempt's files are written by the commit kernel's
+        # stage step, which owns the directory Spark writes into
         import os
 
-        from data_etl_pipeline_spark.sources.iceberg import (
-            IcebergError,
-            _write_partitioned_files,
-        )
+        from data_etl_pipeline_spark.sources.commit import Attempt
 
         df = spark.createDataFrame([(1, "a")], "k long, v string")
         tbl = str(tmp_path / "t2")
-        os.makedirs(os.path.join(tbl, "data", "snap1"))
+        att = Attempt(tbl)
+        os.makedirs(os.path.join(tbl, f"_attempt-{att.token}", "0"))
         import pytest as _pytest
 
-        with _pytest.raises(IcebergError, match="already exists"):
-            _write_partitioned_files(
-                df, tbl, 1, [("k", "k", None, "identity")], {"k": "long"}
-            )
+        with _pytest.raises(FileExistsError, match="already exists"):
+            att.stage(df.write.parquet)
