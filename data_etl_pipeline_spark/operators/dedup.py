@@ -370,6 +370,10 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
     At production scale the equivalent vectorized pandas_udf computing all
     bits in one numpy pass is the faster path; this expression form is the
     oracle-checkable single-pass one (one row in, one row out, no shuffle).
+
+    NULL text has no words, so no bit's vote is positive: its simhash is
+    0, never NULL (the oracle SQL's value), and the row keeps its place
+    in ``simhash_pairs``.
     """
     # FULL 60-bit word hashes: reducing mod 2^31-1 (as the MinHash
     # permutation math must) would zero bits 31-59, collapsing the upper
@@ -399,9 +403,9 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
         "(v, j) -> v + IF((shiftright(h, j) & 1) = 1, 1, -1)))"
     )
     sim = (
-        f"aggregate(zip_with({votes}, sequence(0, {bits - 1}), "
+        f"coalesce(aggregate(zip_with({votes}, sequence(0, {bits - 1}), "
         "(v, j) -> IF(v > 0, shiftleft(cast(1 as bigint), j), cast(0 as bigint))), "
-        "cast(0 as bigint), (acc, b) -> acc + b)"
+        "cast(0 as bigint), (acc, b) -> acc + b), cast(0 as bigint))"
     )
     # spread(): the 60-bit interpreted vote fold is pure narrow compute —
     # on a single-split scan it would run on one core (guide §2.5)

@@ -37,9 +37,20 @@ their final names, so two writers never share a directory and a commit's
 adds are exactly the files its own attempt wrote — never a listing of the
 table, which would publish a concurrent writer's files or resurrect
 removed ones. An attempt that fails in-process removes every file it
-staged or placed. A killed process leaves unreferenced files behind:
-``VersionedTable.vacuum`` and ``export_delta_vacuum`` reclaim them,
-Iceberg's ``expire_snapshots_iceberg`` does not.
+staged or placed; a killed process leaves them for RECLAIM.
+
+RECLAIM. Files leave a table only through ``reclaim``, under one rule
+(the Delta Lake paper's VACUUM and the Iceberg spec's orphan-file
+removal): a file is garbage iff it lies under the table's root, is not
+one of the protocol's log entries, and no retained version references
+it. Each protocol says only which versions it retains and what they
+reference — ``VersionedTable.vacuum``, ``export_delta_vacuum``,
+``expire_snapshots_iceberg``. Files another table owns (a shallow
+clone's source, a converted Delta table) lie outside the root and are
+never touched; a killed writer's staged and placed files are
+unreferenced and go. Like Delta's VACUUM, reclaim must not run
+concurrently with a writer: an in-flight attempt's files are
+unreferenced until its claim.
 
 Files that are overwritten rather than claimed (``_last_checkpoint``, the
 Iceberg hint, checkpoint manifests, Avro files, single-file parquet) go
@@ -49,6 +60,7 @@ name, then a rename.
 
 from __future__ import annotations
 
+import fnmatch
 import itertools
 import os
 import shutil
@@ -126,6 +138,31 @@ def drop(paths) -> None:
     for p in paths:
         if os.path.exists(p):
             os.remove(p)
+
+
+def reclaim(root: str, live, log: tuple[str, ...]) -> dict[str, int]:
+    """Remove every file under ``root`` that no retained version
+    references: all but the paths in ``live`` (relative to ``root`` or
+    absolute) and the log entries matching a ``log`` glob (relative to
+    ``root``). Directories left empty go too, except ``root`` and its
+    layout directories (``data/``, ``metadata/``, ...); an attempt's
+    staging directory always goes. Returns {removed path relative to
+    ``root``: its size in bytes}."""
+    root = os.path.abspath(root)
+    keep = {os.path.normpath(os.path.join(root, p)) for p in live}
+    removed: dict[str, int] = {}
+    for d, _dirs, fs in os.walk(root, topdown=False):
+        for f in fs:
+            full = os.path.join(d, f)
+            rel = os.path.relpath(full, root).replace(os.sep, "/")
+            if full in keep or any(fnmatch.fnmatch(rel, g) for g in log):
+                continue
+            removed[rel] = os.path.getsize(full)
+            os.remove(full)
+        layout = os.path.dirname(d) == root and not os.path.basename(d).startswith("_attempt-")
+        if d != root and not layout and not os.listdir(d):
+            os.rmdir(d)
+    return dict(sorted(removed.items()))
 
 
 def parquet_files(d: str) -> list[str]:

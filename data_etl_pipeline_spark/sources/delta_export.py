@@ -1190,52 +1190,45 @@ def export_delta_optimize(spark, dest: str) -> dict:
     return {"version": version, "compacted_files": len(removed), "new_files": len(adds)}
 
 
-def _live_at(dest: str, upto: int) -> set[str]:
-    """Decoded relative paths of the data files LIVE at version ``upto``
-    (pure text-log replay; checkpointed logs refuse upstream)."""
-    files: set[str] = set()
-    for v in range(0, upto + 1):
-        for a in _log_actions(_log_path(dest, v)):
-            if "add" in a:
-                files.add(unquote(a["add"]["path"]))
-            elif "remove" in a:
-                files.discard(unquote(a["remove"]["path"]))
-    return files
-
-
 def export_delta_vacuum(dest: str, keep_versions: int = 1) -> dict:
-    """Physically delete data files no longer referenced by the newest
+    """Physically delete the files no longer referenced by the newest
     ``keep_versions`` snapshots — the storage-reclaim half of VACUUM for
     tables this exporter owns (CoW deletes and OPTIMIZE leave their
-    rewritten inputs on disk until this runs). Time travel to versions
-    older than the retention window fails loudly at scan time afterwards,
-    exactly like a vacuumed Delta table.
+    rewritten inputs on disk until this runs), through the commit
+    kernel's ``reclaim``. Retained: the data files live at any kept
+    version and the ``_change_data`` files of every commit in the log
+    (the change feed's retention); everything else under the table's
+    root but outside ``_delta_log`` goes, a killed writer's files
+    included. Time travel to versions older than the retention window
+    fails loudly at scan time afterwards, exactly like a vacuumed Delta
+    table. Must not run concurrently with a writer.
 
-    Driver cost is O(files x retained versions) text-log replay — never
-    rows. Returns {"removed_files", "reclaimed_bytes", "live_files"}.
+    Driver cost is one text-log replay, O(actions) — never rows.
+    Returns {"removed_files", "reclaimed_bytes", "live_files"}.
     """
     if keep_versions < 1:
         raise DeltaExportError("keep_versions must be >= 1")
     dest = dest.rstrip("/")
     _meta, versions, _files, _txns = _read_own_log(dest)
-    referenced: set[str] = set()
-    for v in versions[-keep_versions:]:
-        referenced |= _live_at(dest, v)
-    removed = 0
-    reclaimed = 0
-    # _change_data (CDC) files are never referenced by add actions but are
-    # part of the change feed's retention — vacuum must not touch them
-    for rel in commit.parquet_files(dest):
-        if rel.split("/")[0] in ("_delta_log", "_change_data") or rel in referenced:
-            continue
-        full = os.path.join(dest, rel)
-        reclaimed += os.path.getsize(full)
-        os.remove(full)
-        removed += 1
+    kept = set(versions[-keep_versions:])
+    live: set[str] = set()
+    adds: set[str] = set()
+    cdc: set[str] = set()
+    for v in versions:
+        for a in _log_actions(_log_path(dest, v)):
+            if "add" in a:
+                adds.add(unquote(a["add"]["path"]))
+            elif "remove" in a:
+                adds.discard(unquote(a["remove"]["path"]))
+            elif "cdc" in a:
+                cdc.add(unquote(a["cdc"]["path"]))
+        if v in kept:
+            live |= adds
+    removed = commit.reclaim(dest, live | cdc, ("_delta_log/*",))
     return {
-        "removed_files": removed,
-        "reclaimed_bytes": reclaimed,
-        "live_files": len(referenced),
+        "removed_files": len(removed),
+        "reclaimed_bytes": sum(removed.values()),
+        "live_files": len(live),
     }
 
 

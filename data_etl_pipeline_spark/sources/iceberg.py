@@ -1477,15 +1477,15 @@ def expire_snapshots_iceberg(table_dir: str, keep_last: int = 1) -> dict:
     """Snapshot expiry + orphan-file cleanup — the Iceberg lifecycle twin
     of the versioned table's VACUUM (and of Delta's retention cleanup):
     keep the newest ``keep_last`` snapshots, drop the rest from the
-    snapshot log, and physically remove every manifest list, manifest,
-    and data/delete file referenced ONLY by expired snapshots. Kept
-    snapshots keep working verbatim because appends carry prior
-    manifests by reference — a file still reachable from any kept
-    snapshot's manifest list is never touched.
+    snapshot log, then ``commit.reclaim`` every file under the table's
+    root that no kept snapshot's manifest list, manifests or data/delete
+    files name — a killed writer's files too, even when no snapshot
+    expires. Files outside the root (a converted Delta table's) are never
+    touched. Must not run concurrently with a writer.
 
-    Scale: pure metadata work, O(manifests + files) driver-side set
-    arithmetic; no data bytes are read. Returns
-    {"expired_snapshots", "files_removed", "manifests_removed"}.
+    Scale: pure metadata work, O(manifests + files) driver-side; no data
+    bytes are read. Returns {"expired_snapshots", "files_removed",
+    "manifests_removed"} (manifest lists count as manifests).
 
     Refuses keep_last < 1 (expiring the current snapshot would orphan
     the table)."""
@@ -1496,15 +1496,13 @@ def expire_snapshots_iceberg(table_dir: str, keep_last: int = 1) -> dict:
     # snapshots pinned by a ref (tag or branch head) are never expired,
     # whatever their age — dropping the ref makes them expirable again
     ref_ids = {r["snapshot-id"] for r in (prev.get("refs") or {}).values()}
-    if len(snaps) <= keep_last:
-        return {"expired_snapshots": [], "files_removed": 0, "manifests_removed": 0}
     # "newest keep_last" counts over the MAIN ANCESTRY: snapshots a
     # rollback abandoned (or branch commits whose ref was dropped) left
     # the time line and are expirable regardless of recency; snapshots
     # without parent tracking predate branches and are main-line
     by_id = {s["snapshot-id"]: s for s in prev["snapshots"]}
     ancestry: set[int] = set()
-    walk = prev["current-snapshot-id"]
+    walk = prev.get("current-snapshot-id")
     while walk is not None and walk in by_id and walk not in ancestry:
         ancestry.add(walk)
         walk = by_id[walk].get("parent-snapshot-id")
@@ -1512,56 +1510,48 @@ def expire_snapshots_iceberg(table_dir: str, keep_last: int = 1) -> dict:
         s for s in snaps
         if "parent-snapshot-id" not in s or s["snapshot-id"] in ancestry
     ]
-    kept_ids = {s["snapshot-id"] for s in main[-keep_last:]} | ref_ids
+    # a table of at most keep_last snapshots expires none
+    newest = main[-keep_last:] if len(snaps) > keep_last else snaps
+    kept_ids = {s["snapshot-id"] for s in newest} | ref_ids
     kept = [s for s in snaps if s["snapshot-id"] in kept_ids]
     kept_ids = {s["snapshot-id"] for s in kept}
     expired = [s for s in snaps if s["snapshot-id"] not in kept_ids]
-    if not expired:
-        return {"expired_snapshots": [], "files_removed": 0, "manifests_removed": 0}
-    if prev["current-snapshot-id"] not in kept_ids:
+    if expired and prev["current-snapshot-id"] not in kept_ids:
         raise IcebergError(
             "refusing to expire the current snapshot "
             f"({prev['current-snapshot-id']}) — it must be among the newest "
             f"{keep_last}"
         )
-
-    def _reach(snapshot_set):
-        lists, manifests, files = set(), set(), set()
-        for s in snapshot_set:
-            lp = _local(s["manifest-list"], table_dir)
-            lists.add(lp)
-            entries, _ = read_ocf(lp)
-            for m in entries:
-                mp = _local(m["manifest_path"], table_dir)
-                manifests.add(mp)
-                for e in read_ocf(mp)[0]:
-                    files.add(_local(e["data_file"]["file_path"], table_dir))
-        return lists, manifests, files
-
-    k_lists, k_manifests, k_files = _reach(kept)
-    e_lists, e_manifests, e_files = _reach(expired)
     # publish first: a lost claim then raises before a file is touched,
     # and a crash after it leaves orphans, never dangling references
     snapshot_log = [
         {"snapshot-id": s["snapshot-id"], "timestamp-ms": s["timestamp-ms"]}
         for s in kept
     ]
-    _write_metadata_update(
-        table_dir, prev, {"snapshots": kept, "snapshot-log": snapshot_log}
+    if expired:
+        _write_metadata_update(
+            table_dir, prev, {"snapshots": kept, "snapshot-log": snapshot_log}
+        )
+    live: set[str] = set()
+    for s in kept:
+        lp = _local(s["manifest-list"], table_dir)
+        live.add(lp)
+        for m in read_ocf(lp)[0]:
+            mp = _local(m["manifest_path"], table_dir)
+            if mp not in live:  # carried manifests are shared across snapshots
+                live.add(mp)
+                live.update(
+                    _local(e["data_file"]["file_path"], table_dir)
+                    for e in read_ocf(mp)[0]
+                )
+    removed = commit.reclaim(
+        table_dir, live, ("metadata/v*.metadata.json", "metadata/version-hint.text")
     )
-    removed_files = removed_manifests = 0
-    for p in sorted(e_files - k_files):
-        if os.path.exists(p):
-            os.remove(p)
-            removed_files += 1
-    for p in sorted((e_manifests - k_manifests) | (e_lists - k_lists)):
-        if os.path.exists(p):
-            os.remove(p)
-            removed_manifests += 1
+    manifests = sum(1 for r in removed if r.startswith("metadata/"))
     return {
         "expired_snapshots": [s["snapshot-id"] for s in expired],
-        "files_removed": removed_files,
-        "manifests_removed": removed_manifests,
+        "files_removed": len(removed) - manifests,
+        "manifests_removed": manifests,
     }
 
 
@@ -1897,7 +1887,10 @@ def convert_delta_to_iceberg(
     per file, O(files), exactly like an export's stats pass. Both
     formats store plain parquet, so the physical files serve both tables
     afterwards (the Delta log remains the Delta table's truth; the new
-    Iceberg table owns only its own metadata directory).
+    Iceberg table owns only its own metadata directory). The referenced
+    files lie outside the Iceberg table's root, so its expiry never
+    reclaims them, even once compaction leaves them unreferenced; only
+    the Delta table's own vacuum removes them.
 
     Honest refusals — conversions that would change data or lie:
     partitioned Delta tables (Hive-layout partition columns are NOT in

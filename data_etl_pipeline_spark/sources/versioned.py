@@ -1044,7 +1044,7 @@ class VersionedTable:
         back = self.spark.read.schema("_bn string, _pos long").parquet(path)
         counts = {r["_bn"]: r["n"] for r in back.groupBy("_bn").agg(F.count(F.lit(1)).alias("n")).collect()}
         if not counts:
-            os.remove(path)
+            commit.drop([path])
             return None
         return {"path": rel, "counts": counts}
 
@@ -1193,54 +1193,24 @@ class VersionedTable:
         return expired
 
     def vacuum(self, keep_versions: int = 1) -> list[str]:
-        """Retention cleanup: delete data files referenced ONLY by versions
-        older than the newest ``keep_versions`` manifests (Delta VACUUM
-        semantics with a version-count horizon instead of a wall-clock
-        one — deterministic in tests), plus orphan data files no manifest
-        references at all (the residue of commit attempts that lost an
-        optimistic-concurrency race). Returns the removed file paths.
-        Time travel to vacuumed versions stops working, as in Delta — and
+        """Retention cleanup through the commit kernel's ``reclaim``:
+        delete every file under the table's root that none of the newest
+        ``keep_versions`` manifests references — data and DV files only
+        older versions used (Delta VACUUM semantics with a version-count
+        horizon instead of a wall-clock one — deterministic in tests),
+        and the residue of commit attempts that lost a race or were
+        killed. Returns the removed paths, relative to the root. Time
+        travel to vacuumed versions stops working, as in Delta — and
         like Delta's VACUUM, this must not run concurrently with an
         in-flight writer (its pre-claim data files look like orphans)."""
         if keep_versions < 1:
             raise ValueError("keep_versions must be >= 1")
-        versions = self._versions()
-        keep = set(versions[-keep_versions:])
         live: set[str] = set()
-        for v in keep:
+        for v in self._versions()[-keep_versions:]:
             man = self._manifest(v)
             live.update(f["path"] for f in man["files"])
             live.update(s["path"] for s in man.get("dv_files", []))
-        referenced: set[str] = set()
-        removed: list[str] = []
-        for v in versions:
-            man = self._manifest(v)
-            ref = [f["path"] for f in man["files"]] + [
-                s["path"] for s in man.get("dv_files", [])
-            ]
-            referenced.update(ref)
-            if v in keep:
-                continue
-            for path in ref:
-                if path not in live and path not in removed:
-                    removed.append(path)
-        for sub in ("data", "dv"):
-            d = os.path.join(self.path, sub)
-            if os.path.isdir(d):
-                for name in sorted(os.listdir(d)):
-                    rel = f"{sub}/{name}"
-                    if rel not in referenced and rel not in removed:
-                        removed.append(rel)
-        # a shallow clone's manifest references its SOURCE's files by
-        # absolute path; os.path.join would pass those through and vacuum
-        # would delete another table's data — only paths under this
-        # table's root are ours to reclaim
-        removed = [r for r in removed if not os.path.isabs(r)]
-        for rel in removed:
-            p = os.path.join(self.path, rel)
-            if os.path.exists(p):
-                os.remove(p)
-        return removed
+        return list(commit.reclaim(self.path, live, ("_log/*",)))
 
     def replace_where(self, df: DataFrame, cond: Column | str,
                       prune: StatsPredicate | None = None) -> int:

@@ -10,7 +10,9 @@ Iceberg writer.
   that raised.
 * A claim that raises (a crash at the publish step) must leave the
   prior snapshot readable exactly, no staged file or ``_attempt-*``
-  directory behind, and a table the next call commits to.
+  directory behind, and a table the next call commits to. A killed
+  process runs no cleanup, so there the protocol's reclaim (vacuum or
+  expire, keeping one version) must remove every file it left.
 
 Ops per protocol (writer ``i`` touches only its own keys):
 append = insert new keys (VersionedTable: an insert-only merge);
@@ -146,9 +148,26 @@ def test_two_writers_from_one_head(spark, tmp_path, monkeypatch, proto, op):
     assert _read(proto, spark, path) == sorted(want.items())
 
 
-@pytest.mark.parametrize("op", OPS)
-@pytest.mark.parametrize("proto", PROTOCOLS)
-def test_crash_at_claim_leaves_prior_snapshot(spark, tmp_path, monkeypatch, proto, op):
+def _reclaim(proto: str, spark, path: str) -> None:
+    """The protocol's reclaim, keeping only the newest version."""
+    if proto == "versioned":
+        VersionedTable(spark, path).vacuum(keep_versions=1)
+    elif proto == "delta":
+        dx.export_delta_vacuum(path, keep_versions=1)
+    else:
+        ice.expire_snapshots_iceberg(path, keep_last=1)
+
+
+@pytest.mark.parametrize(
+    "proto, op, killed",
+    [
+        pytest.param(proto, op, killed, id=f"{proto}-{op}" + ("-killed" if killed else ""))
+        for killed in (False, True)
+        for proto in PROTOCOLS
+        for op in OPS
+    ],
+)
+def test_crash_at_claim_leaves_prior_snapshot(spark, tmp_path, monkeypatch, proto, op, killed):
     path = str(tmp_path / "t")
     _create(proto, spark, path)
     before = _files(path)
@@ -158,12 +177,24 @@ def test_crash_at_claim_leaves_prior_snapshot(spark, tmp_path, monkeypatch, prot
 
     with monkeypatch.context() as m:
         m.setattr(commit, "claim", crash)
+        if killed:
+            # a killed process cleans nothing up: its staging directory,
+            # placed data, change-data and manifest files all stay
+            m.setattr(commit.Attempt, "__exit__", lambda self, *exc: None)
+            m.setattr(commit, "drop", lambda paths: None)
         with pytest.raises(OSError, match="injected crash"):
             _run(proto, op, spark, path, 0)
 
+    if killed:
+        left = _files(path) - before
+        assert left
+        if proto == "delta" and op == "merge":
+            # a change-data file no commit references
+            assert any(f.startswith("_change_data") for f in left), left
+        _reclaim(proto, spark, path)
     assert _read(proto, spark, path) == sorted(BASE.items())
     assert glob.glob(os.path.join(path, "**", "_attempt-*"), recursive=True) == []
-    assert _files(path) == before  # the attempt removed every staged file
+    assert _files(path) == before  # nothing the attempt staged or placed is left
     _run(proto, op, spark, path, 0)
     assert _read(proto, spark, path) == sorted(_expected(op, [0]).items())
 

@@ -88,6 +88,26 @@ def test_simhash_close_for_similar_docs(spark):
     assert hamming <= 10  # near-identical word sets -> close simhash
 
 
+def test_simhash_of_null_text_is_zero_as_in_the_oracle(spark):
+    """NULL text has no words, so no bit's vote is positive: its simhash
+    is 0, as the doc_simhash oracle SQL computes, and such documents stay
+    in simhash_pairs instead of silently leaving it."""
+    import duckdb
+
+    from data_etl_pipeline_spark.plans.registry import all_oracle_sql
+
+    rows = [(1, None), (2, None), (3, "alpha beta gamma"), (4, "")]
+    got = {r["doc_id"]: r["simhash"] for r in dedup.simhash(_docs(spark, rows)).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = dict(con.execute(all_oracle_sql()["doc_simhash"]).fetchall())
+    assert got[1] == got[2] == 0
+    assert got == want
+    pairs = {(r["doc_a"], r["doc_b"], r["hamming"]) for r in dedup.simhash_pairs(_docs(spark, rows)).collect()}
+    assert (1, 2, 0) in pairs
+
+
 class TestDedupClusters:
     def test_known_graph_components(self, spark):
         from data_etl_pipeline_spark.operators import dedup

@@ -1294,6 +1294,36 @@ class TestDeltaToIcebergConversion:
         with pytest.raises(IcebergError, match="column mapping"):
             convert_delta_to_iceberg(spark, dd, str(tmp_path / "i"))
 
+    def test_expire_never_reclaims_the_delta_tables_files(self, spark, tmp_path):
+        """The converted table references the Delta table's files by
+        absolute path; once compaction leaves them unreferenced, expiry
+        must still leave them to the Delta table that owns them."""
+        from data_etl_pipeline_spark.sources.delta_export import export_delta
+        from data_etl_pipeline_spark.sources.delta_reader import DeltaLogReader
+        from data_etl_pipeline_spark.sources.iceberg import (
+            compact_iceberg,
+            convert_delta_to_iceberg,
+            expire_snapshots_iceberg,
+        )
+
+        dd = str(tmp_path / "delta")
+        src = spark.range(0, 60).selectExpr("id AS k", "id * 3 AS v")
+        export_delta(src.repartitionByRange(3, "k"), dd)
+        delta_files = [
+            os.path.join(dd, p) for p in DeltaLogReader(spark, dd).live_files()
+        ]
+        assert len(delta_files) == 3
+        ice = str(tmp_path / "ice")
+        convert_delta_to_iceberg(spark, dd, ice)
+        sid = compact_iceberg(spark, ice)
+        compacted = [f["path"] for f in IcebergTable(spark, ice).data_files(sid)]
+
+        expire_snapshots_iceberg(ice, keep_last=1)
+        assert all(os.path.exists(p) for p in delta_files)
+        assert sorted(r["k"] for r in DeltaLogReader(spark, dd).read().collect()) == list(range(60))
+        assert all(os.path.exists(p) for p in compacted)
+        assert IcebergTable(spark, ice).read().count() == 60
+
 
 class TestPartitionSpecEvolution:
     """evolve_partition_spec_iceberg: metadata-only re-layout; files keep
