@@ -4,7 +4,8 @@
 Runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS]; prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {"<name>": sec, ...}, "sf": <sf>}
+   "queries": {"<name>": sec, ...}, "sf": <sf>, "cpus": <defaultParallelism>,
+   "sf_dir": "<dir>"}
 """
 
 from __future__ import annotations
@@ -88,6 +89,8 @@ def main() -> None:
                 "queries_tier3_spread": spread3,
                 "repeats": repeats,
                 "sf": sf,
+                "cpus": spark.sparkContext.defaultParallelism,
+                "sf_dir": sf_dir,
             }
         )
     )

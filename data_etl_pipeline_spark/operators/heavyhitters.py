@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_etl_pipeline_spark.tables import local_frame
+
 
 def misra_gries_candidates(items: DataFrame, item_col: str, k: int) -> DataFrame:
     """Pass 1: per-partition Misra-Gries with ``k`` counters; returns the
@@ -99,13 +101,8 @@ def heavy_hitters(items: DataFrame, item_col: str, support: float) -> DataFrame:
         F.collect_set(F.col(item_col)).alias("cands"),  # NULL sentinels excluded
     ).first()
     total_val = int(agg["total"] or 0)
-    from pyspark.sql import types as T
-
-    item_field = items.select(item_col).schema.fields[0]
     spark = items.sparkSession
-    candidates = spark.createDataFrame(
-        [(c,) for c in agg["cands"]], schema=T.StructType([item_field])
-    )
+    candidates = local_frame(spark, [(c,) for c in agg["cands"]], items.select(item_col).schema)
     # exact threshold: cnt >= support * total decided in INTEGER
     # arithmetic — ceil() over a double product excludes exact-boundary
     # items when the product lands an ulp above the true value

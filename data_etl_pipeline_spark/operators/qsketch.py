@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_etl_pipeline_spark.tables import local_frame
+
 # (digits, lead2) -> [lo, lo+width) in cents. lo/width are built by
 # STRING concatenation (leading pair + zeros), not pow(): a libm pow
 # returning 10^n an ulp low would truncate to 99...9 under Spark's
@@ -99,7 +101,7 @@ def quantiles_from_sketch(sketch: DataFrame, qs: list[float]) -> DataFrame:
                 f"quantile {q!r} has more than 6 decimal places; it would "
                 "silently snap to a different percentile"
             )
-    qdf = sketch.sparkSession.createDataFrame([(q,) for q in qs], "q double")
+    qdf = local_frame(sketch.sparkSession, [(q,) for q in qs], "q double")
     # rank = ceil(q * total) in integer-safe form: smallest k with
     # 1e6*k >= q1e6*total (q validated to <= 6 decimals above)
     joined = cum.crossJoin(F.broadcast(qdf)).where(

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from data_etl_pipeline_spark.tables import local_frame
+
 _TOKENIZE = "filter(split(lower({col}), '[^a-z0-9]+'), x -> length(x) >= 2)"
 
 
@@ -83,7 +85,7 @@ def bm25_search(
     corpus = doc_stats.agg(F.sum("dl").alias("sum_dl")).crossJoin(
         F.broadcast(n_docs_df)
     )
-    qdf = spark.createDataFrame([(t.lower(),) for t in terms], "term string").distinct()
+    qdf = local_frame(spark, [(t.lower(),) for t in terms], "term string").distinct()
     # df per query term only — the broadcast join prunes the postings
     # aggregation to the query's terms before any wide work
     q_postings = postings.join(F.broadcast(qdf), "term")

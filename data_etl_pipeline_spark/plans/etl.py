@@ -19,7 +19,7 @@ from data_etl_pipeline_spark.operators import blocks, records
 from data_etl_pipeline_spark.operators.chunker import chunk_even_chars
 from data_etl_pipeline_spark.plans.registry import query
 from data_etl_pipeline_spark.session import scratch_dir
-from data_etl_pipeline_spark.tables import load
+from data_etl_pipeline_spark.tables import load, local_frame
 
 _HEADER = "NAV HOME ABOUT\nMENU\nSEARCH"
 
@@ -507,7 +507,7 @@ def batch_schedule_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     bundles = [KeyBundle(key_id=k, token_quota=q) for k, q in _SCHED_QUOTAS]
     plan = plan_tick(bundles, pending, now=0.0)
     rows = [(k, wid) for k, wids in plan.items() for wid in wids]
-    return spark.createDataFrame(rows, "key_id string, work_id string")
+    return local_frame(spark, rows, "key_id string, work_id string")
 
 
 # ---------------------------------------------------------------------------
@@ -673,7 +673,7 @@ def batch_schedule_two_ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
     remaining = [(wid, tok) for wid, tok in pending if wid not in assigned]
     plan2 = plan_tick(list(bundles.values()), remaining, now=800.0)
     rows += [(2, k, wid) for k, wids in sorted(plan2.items()) for wid in wids]
-    return spark.createDataFrame(rows, "tick int, key_id string, work_id string")
+    return local_frame(spark, rows, "tick int, key_id string, work_id string")
 
 
 def dataclasses_replace_in_flight(bundle, batch_id):
@@ -804,8 +804,8 @@ def jsonl_split_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         ls = ch.decode().rstrip("\n").split("\n")
         ids = [int(line.split(",")[0]) for line in ls]
         out.append((i, len(ch), len(ls), min(ids), max(ids)))
-    return spark.createDataFrame(
-        out, "chunk_no int, n_bytes long, n_lines long, first_id long, last_id long"
+    return local_frame(
+        spark, out, "chunk_no int, n_bytes long, n_lines long, first_id long, last_id long"
     )
 
 
@@ -935,7 +935,8 @@ def parquet_footer_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         scan["n_rows"], scan["n_values"], scan["min_key"], scan["max_key"],
     ), (stats, scan)
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(stats["n_rows"], stats["n_values"], int(stats["min"]), int(stats["max"]))],
         "n_rows bigint, n_values bigint, min_key bigint, max_key bigint",
     )

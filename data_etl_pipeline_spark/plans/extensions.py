@@ -15,7 +15,7 @@ from data_etl_pipeline_spark.operators import multimodal
 from data_etl_pipeline_spark.plans.registry import query
 from data_etl_pipeline_spark.session import conf_scope, scratch_dir
 from data_etl_pipeline_spark.sources.commit import write_single_parquet
-from data_etl_pipeline_spark.tables import load, one_slice_df
+from data_etl_pipeline_spark.tables import load, local_frame
 
 
 def _status_totals(df: DataFrame) -> DataFrame:
@@ -115,7 +115,7 @@ _V9_ARRAY_SQL = "[" + _V9_LIST + "]"
 )
 def mapping_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    vocab = spark.createDataFrame([(v,) for v in _VOCAB9], "label string")
+    vocab = local_frame(spark, [(v,) for v in _VOCAB9], "label string")
     words = docs.select(F.explode(F.split("text", " ")).alias("unknown")).distinct()
     unmatched = words.join(F.broadcast(vocab), words.unknown == vocab.label, "left_anti")
     h = _H60_SPARK.format(x="unknown")
@@ -1431,7 +1431,7 @@ def delta_interop_checkpoint_read(spark: SparkSession, sf_dir: str) -> DataFrame
         (None, None, (f"s{v}.parquet", {}, True)) for v in range(11)
     ]
     write_single_parquet(
-        one_slice_df(spark, cp_rows, cp_schema),
+        local_frame(spark, cp_rows, cp_schema),
         os.path.join(log_dir, f"{10:020d}.checkpoint.parquet"),
     )
     with open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
@@ -1899,7 +1899,7 @@ def delta_interop_v2_checkpoint_read(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
     def one_parquet(rows, schema, dest: str) -> None:
-        write_single_parquet(one_slice_df(spark, rows, schema), dest)
+        write_single_parquet(local_frame(spark, rows, schema), dest)
 
     # sidecar with the s1/s2 adds; s0's add rides inline in the manifest
     one_parquet(
@@ -3210,9 +3210,7 @@ def audio_header_info_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_pit_dimension_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select("user_id", "ts")
     span = ev.groupBy("user_id").agg(F.min("ts").alias("t0"))
-    tiers = spark.createDataFrame(
-        [(0, "bronze"), (1, "silver"), (2, "gold")], "n int, tier string"
-    )
+    tiers = local_frame(spark, [(0, "bronze"), (1, "silver"), (2, "gold")], "n int, tier string")
     dim = (
         span.crossJoin(F.broadcast(tiers))
         .select(
@@ -4295,7 +4293,7 @@ def _batch_results_summary(spark: SparkSession, path: str) -> DataFrame:
             )
         )
         out = agg.collect()
-    return spark.createDataFrame(out, agg.schema)
+    return local_frame(spark, out, agg.schema)
 
 
 # ---------------------------------------------------------------------------

@@ -29,7 +29,7 @@ from data_etl_pipeline_spark.operators import (
 )
 from data_etl_pipeline_spark.plans.registry import query
 from data_etl_pipeline_spark.session import scratch_dir
-from data_etl_pipeline_spark.tables import load
+from data_etl_pipeline_spark.tables import load, local_frame
 
 # ---------------------------------------------------------------------------
 # shared DuckDB SQL fragments (must mirror the Spark operators bit-for-bit)
@@ -1148,7 +1148,7 @@ _PHRASE_VALUES = ",".join(f"('{c}','{l}')" for c, l in _PHRASES)
 )
 def vocab_word_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    vocab = spark.createDataFrame(_VOCAB, "concept string, label string")
+    vocab = local_frame(spark, _VOCAB, "concept string, label string")
     words = docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
     return (
         words.join(F.broadcast(vocab), F.col("word") == F.col("label"))
@@ -1169,7 +1169,7 @@ def vocab_word_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def vocab_phrase_regex_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    vocab = spark.createDataFrame(_PHRASES, "concept string, label string")
+    vocab = local_frame(spark, _PHRASES, "concept string, label string")
     return (
         docs.crossJoin(F.broadcast(vocab))
         .where(F.expr("text rlike concat('\\\\b', label, '\\\\b')"))

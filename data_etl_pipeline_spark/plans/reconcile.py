@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from data_etl_pipeline_spark.operators import records
 from data_etl_pipeline_spark.plans.registry import query
-from data_etl_pipeline_spark.tables import load
+from data_etl_pipeline_spark.tables import load, local_frame
 
 _H60 = "(('0x' || substr(md5({x}), 1, 15))::BIGINT)"
 _H60_SPARK = "cast(conv(substr(md5({x}), 1, 15), 16, 10) as bigint)"
@@ -129,7 +129,7 @@ _V_ARR_SQL = "[" + _V_LIST + "]"
 )
 def two_phase_concept_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    vocab = spark.createDataFrame([(v,) for v in _V], "label string")
+    vocab = local_frame(spark, [(v,) for v in _V], "label string")
     h_search = _H60_SPARK.format(x="x || 'search'")
     cand = (
         docs.select(

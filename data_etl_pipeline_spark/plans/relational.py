@@ -29,7 +29,7 @@ from data_etl_pipeline_spark.plans.planassert import (
 )
 from data_etl_pipeline_spark.plans.registry import query
 from data_etl_pipeline_spark.session import conf_scope, scratch_dir
-from data_etl_pipeline_spark.tables import load
+from data_etl_pipeline_spark.tables import load, local_frame
 
 # ---------------------------------------------------------------------------
 # decimal-exact aggregation helpers (float determinism vs the DuckDB oracle)
@@ -1117,7 +1117,7 @@ def aqe_runtime_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assertion is valid); hand back its materialized result — a
     # status-grouped frame of at most a few rows — rather than
     # re-building and re-executing the aggregate.
-    return spark.createDataFrame(rows, df.schema)
+    return local_frame(spark, rows, df.schema)
 
 
 def _runtime_contract(
@@ -1149,7 +1149,7 @@ def _runtime_contract(
             ctl_plan = plan_of(ctl)
         assert marker not in ctl_plan, ctl_plan[:2000]
         assert sorted(map(tuple, rows)) == sorted(map(tuple, ctl_rows))
-    return spark.createDataFrame(rows, df.schema)
+    return local_frame(spark, rows, df.schema)
 
 
 # ---------------------------------------------------------------------------

@@ -44,7 +44,7 @@ from data_etl_pipeline_spark.sources.footerprune import (
     footer_stats,
     hive_partition_values,
 )
-from data_etl_pipeline_spark.tables import one_slice_df
+from data_etl_pipeline_spark.tables import local_frame
 
 
 class DeltaExportError(RuntimeError):
@@ -700,7 +700,7 @@ def checkpoint_export(spark, dest: str, trim: bool = False) -> int:
     rows += [(None, None, _add_row(files[p])) for p in sorted(files)]
     log_dir = os.path.join(dest, "_delta_log")
     commit.write_single_parquet(
-        one_slice_df(spark, rows, cp_schema),
+        local_frame(spark, rows, cp_schema),
         os.path.join(log_dir, f"{head:020d}.checkpoint.parquet"),
     )
     commit.replace_atomic(
@@ -1424,7 +1424,7 @@ def _write_sidecar(spark, dest: str, files: dict, part: list[str], name: str) ->
     from pyspark.sql import types as T
 
     commit.write_single_parquet(
-        one_slice_df(
+        local_frame(
             spark,
             [(_add_row(files[p]),) for p in part],
             T.StructType([T.StructField("add", _add_struct())]),

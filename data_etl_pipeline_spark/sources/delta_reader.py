@@ -67,6 +67,7 @@ from data_etl_pipeline_spark.sources.footerprune import (
     file_uri_path_col,
     hive_partition_values,
 )
+from data_etl_pipeline_spark.tables import local_frame
 
 
 class DeltaProtocolError(RuntimeError):
@@ -674,12 +675,10 @@ class DeltaLogReader:
                 c = ops[op](F.col(col), F.lit(v))
                 cond = c if cond is None else cond & c
         if not adds:
-            out = self.spark.createDataFrame(
-                [], T.StructType([f for f in schema.fields if f.name in set(out_names)])
-            )
             # empty frame: the filter can reference pruned-away columns,
             # and zero rows satisfy it vacuously — skip the where
-            return out
+            kept = [f for f in schema.fields if f.name in set(out_names)]
+            return local_frame(self.spark, [], T.StructType(kept))
         # group files by their partition assignment; each group reads with
         # the file schema and re-attaches the partition literals, cast
         # through the table schema (Delta stores them only in the log)
@@ -870,12 +869,8 @@ class DeltaLogReader:
                 batches.append((v, adds))
         schema, part_cols, phys, file_schema, rename, types = self._schema_plan(meta)
         if not batches:
-            return self.spark.createDataFrame(
-                [],
-                T.StructType(
-                    list(schema.fields) + [T.StructField("_commit_version", T.LongType())]
-                ),
-            )
+            cols = [*schema.fields, T.StructField("_commit_version", T.LongType())]
+            return local_frame(self.spark, [], T.StructType(cols))
         paths: list[str] = []
         map_rows: list[tuple] = []
         for v, adds in batches:
@@ -898,7 +893,7 @@ class DeltaLogReader:
             ]
             + [T.StructField(c, T.StringType()) for c in part_cols]
         )
-        fmap = F.broadcast(self._scan_spark.createDataFrame(map_rows, map_schema))
+        fmap = F.broadcast(local_frame(self._scan_spark, map_rows, map_schema))
         return df.join(fmap, "__cf").select(
             *rename,
             *[F.col(c).cast(types[c]).alias(c) for c in part_cols],
@@ -1069,7 +1064,7 @@ class DeltaLogReader:
                 + [T.StructField(c, T.StringType()) for c in part_cols]
             )
             map_rows = [(os.path.abspath(full), v, *pvs) for full, v, pvs in entries]
-            fmap = F.broadcast(self._scan_spark.createDataFrame(map_rows, map_schema))
+            fmap = F.broadcast(local_frame(self._scan_spark, map_rows, map_schema))
             return df.join(fmap, "__cf").select(
                 *rename,
                 *[F.col(c).cast(types[c]).alias(c) for c in part_cols],
@@ -1087,7 +1082,7 @@ class DeltaLogReader:
             if entries
         ]
         if not frames:
-            return self.spark.createDataFrame([], out_type)
+            return local_frame(self.spark, [], out_type)
         out = frames[0]
         for f in frames[1:]:
             out = out.unionByName(f)
@@ -1130,7 +1125,7 @@ class DeltaLogReader:
         del_rows = [
             (os.path.abspath(p), int(i)) for _, p, idxs in dv_reads for i in idxs
         ]
-        dv_del = spark.createDataFrame(del_rows, "__cf string, __ri bigint")
+        dv_del = local_frame(spark, del_rows, "__cf string, __ri bigint")
         # the combined key set is bounded by the snapshot's total DV
         # cardinality; hint broadcast only while it is clearly small and
         # let AQE pick the strategy beyond that
@@ -1143,7 +1138,7 @@ class DeltaLogReader:
                 [T.StructField("__cf", T.StringType())]
                 + [T.StructField(c, T.StringType()) for c in part_cols]
             )
-            dv_pv = spark.createDataFrame(pv_rows, pv_schema)
+            dv_pv = local_frame(spark, pv_rows, pv_schema)
             df = df.join(F.broadcast(dv_pv), "__cf", "inner")
             df = df.select(
                 *rename,

@@ -126,7 +126,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_etl_pipeline_spark.tables import one_slice_df
+from data_etl_pipeline_spark.tables import local_frame
 
 from data_etl_pipeline_spark.sources import commit
 from data_etl_pipeline_spark.sources.avro_ocf import (
@@ -1060,7 +1060,7 @@ def _write_partitioned_files(
             "writer's internal tag names; rename them before writing"
         )
     spark = df.sparkSession
-    idx_df = one_slice_df(
+    idx_df = local_frame(
         spark,
         [(v, i) for i, v in enumerate(values)],
         df.select(texpr.alias("__p")).withColumn("__pi", F.lit(0)).schema,
@@ -1278,7 +1278,7 @@ def delete_rows_iceberg(
     equality_ids = None
     if equality_by is None:
         map_df = F.broadcast(
-            spark.createDataFrame(mapping, "__cf string, file_path string")
+            local_frame(spark, mapping, "__cf string, file_path string")
         )
         rows = (
             base.where(F.expr(predicate))
@@ -1931,7 +1931,7 @@ def convert_delta_to_iceberg(
 
     spark_schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     ctx = _CommitCtx(
-        iceberg_dir, spark.createDataFrame([], spark_schema), first=True
+        iceberg_dir, local_frame(spark, [], spark_schema), first=True
     )
     entries, total_rows = _data_entries(
         ctx,
@@ -2050,8 +2050,9 @@ class IcebergTable:
             )
             for s in self.meta["snapshots"]
         ]
-        return self.spark.createDataFrame(
-            rows, "snapshot_id long, sequence_number long, timestamp_ms long, operation string"
+        return local_frame(
+            self.spark, rows,
+            "snapshot_id long, sequence_number long, timestamp_ms long, operation string",
         )
 
     def _current_schema(self) -> dict:
@@ -2074,8 +2075,8 @@ class IcebergTable:
             )
             for f in self.data_files(snapshot_id)
         ]
-        return self.spark.createDataFrame(
-            rows,
+        return local_frame(
+            self.spark, rows,
             "file_path string, spec_id int, sequence_number long, "
             "record_count long, file_size_in_bytes long, partition string",
         )
@@ -2101,9 +2102,8 @@ class IcebergTable:
             (sid, field, value, int(n), int(nf))
             for (sid, field, value), (n, nf) in sorted(agg.items())
         ]
-        return self.spark.createDataFrame(
-            rows,
-            "spec_id int, field string, value string, n_rows bigint, n_files int",
+        return local_frame(
+            self.spark, rows, "spec_id int, field string, value string, n_rows bigint, n_files int"
         )
 
     def snapshot_id_as_of(self, ts_ms: int) -> int:
@@ -2481,7 +2481,8 @@ class IcebergTable:
                 f"no snapshots after {after_snapshot_id} — nothing to tail"
             )
         paths = [_local(f["path"], self.table_dir) for _, f in pairs]
-        tag = self.spark.createDataFrame(
+        tag = local_frame(
+            self.spark,
             [(os.path.abspath(_local(f["path"], self.table_dir)), sid) for sid, f in pairs],
             "__cf string, _commit_snapshot long",
         )
@@ -2698,7 +2699,8 @@ class IcebergTable:
         if eq_dels:
             # per-file data sequence numbers ride a broadcast tag join
             seq_map = F.broadcast(
-                self.spark.createDataFrame(
+                local_frame(
+                    self.spark,
                     [
                         (os.path.abspath(_local(f["path"], self.table_dir)),
                          f.get("seq", 0))

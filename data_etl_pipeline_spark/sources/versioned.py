@@ -65,6 +65,7 @@ from pyspark.sql import types as T
 from data_etl_pipeline_spark.sources import commit
 from data_etl_pipeline_spark.sources.commit import ConcurrentCommitError  # noqa: F401  (re-export)
 from data_etl_pipeline_spark.sources.footerprune import file_uri_path
+from data_etl_pipeline_spark.tables import local_frame
 
 StatsPredicate = Callable[[dict], bool]
 
@@ -407,7 +408,7 @@ class VersionedTable:
         broadcasts — the same plan Delta's DV read path produces."""
         schema = T.StructType.fromJson(json.loads(schema_json))
         if not files:
-            df = self.spark.createDataFrame([], schema)
+            df = local_frame(self.spark, [], schema)
             return df.withColumn("_bn", F.lit(None).cast("string")).withColumn(
                 "_pos", F.lit(None).cast("long")
             )
@@ -433,7 +434,7 @@ class VersionedTable:
     ) -> DataFrame:
         schema = T.StructType.fromJson(json.loads(schema_json))
         if not files:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         bns = {self._basename(f["path"]) for f in files}
         relevant = [
             s for s in (dv_files or []) if any(bn in bns for bn in s["counts"])
@@ -608,8 +609,8 @@ class VersionedTable:
             )
             for f in man["files"]
         ]
-        return self.spark.createDataFrame(
-            rows, "path string, num_rows long, num_deleted long, stats_json string"
+        return local_frame(
+            self.spark, rows, "path string, num_rows long, num_deleted long, stats_json string"
         )
 
     def history_df(self) -> DataFrame:
@@ -626,8 +627,8 @@ class VersionedTable:
             )
             for h in self.history()
         ]
-        return self.spark.createDataFrame(
-            rows,
+        return local_frame(
+            self.spark, rows,
             "version long, op string, n_files long, n_rows long, "
             "files_written long, files_carried long",
         )

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from data_etl_pipeline_spark.session import conf_scope, scratch_dir
 from data_etl_pipeline_spark.sources.commit import write_single_parquet
-from data_etl_pipeline_spark.tables import load
+from data_etl_pipeline_spark.tables import load, local_frame
 
 _SCHEMA = "event_id long, ts timestamp, user_id long, event_type string"
 
@@ -174,9 +174,7 @@ def append_flush_sentinel(
     far = F.expr(
         f"timestamp'{max(hi for _, hi in bounds)}' + interval {horizon_days} days"
     )
-    from data_etl_pipeline_spark.tables import one_slice_df
-
-    sent = one_slice_df(
+    sent = local_frame(
         spark,
         [(-1, -1, "view"), (-2, -1, "purchase")],
         "event_id long, user_id long, event_type string",

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from data_etl_pipeline_spark.session import conf_scope, scratch_dir
 from data_etl_pipeline_spark.sources.commit import write_single_parquet
-from data_etl_pipeline_spark.tables import load
+from data_etl_pipeline_spark.tables import load, local_frame
 
 # The state-store provider is read at stream start, so a query scopes it
 # around the start with conf_scope(spark, ROCKSDB_STATE_STORE).
@@ -246,7 +246,7 @@ def run_stream_update_merge_windows(
     )
     tbl = VersionedTable(spark, table_path or scratch_dir(spark, "win_merge_tbl_"))
     if tbl.latest_version() is None:
-        tbl.write(spark.createDataFrame([], "window_start timestamp, event_type string, n long"))
+        tbl.write(local_frame(spark, [], "window_start timestamp, event_type string, n long"))
 
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
         tbl.merge(batch_df, keys=["window_start", "event_type"])
@@ -451,9 +451,9 @@ def run_stream_merge_versioned(
 
     tbl = VersionedTable(spark, table_path or scratch_dir(spark, "stream_merge_tbl_"))
     if tbl.latest_version() is None:
-        tbl.write(spark.createDataFrame(
-            [], "epoch long, c_mktsegment string, event_type string, n long"
-        ))
+        tbl.write(
+            local_frame(spark, [], "epoch long, c_mktsegment string, event_type string, n long")
+        )
 
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
         counts = (
@@ -640,9 +640,7 @@ def run_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i, (_, p) in enumerate(sorted(parts)):
         os.utime(p, (1_600_000_000 + i * 10, 1_600_000_000 + i * 10))
     max_ts = mon_batch.agg(F.max("ts")).first()[0]
-    from data_etl_pipeline_spark.tables import one_slice_df
-
-    sent = one_slice_df(
+    sent = local_frame(
         spark, [(max_ts, 0.0)], "ts timestamp, value double"
     ).select((F.col("ts") + F.expr("interval 30 days")).alias("ts"), "value")
     dst = write_single_parquet(sent, os.path.join(src, "zz_sentinel.parquet"))

@@ -2,11 +2,18 @@
 
 Tables (TESTDATA.md): region nation customer supplier part orders lineitem
 events documents embeddings — one parquet file each under a sf dir.
+Every frame the engine builds from driver-side rows (file maps, metadata
+tables, sentinels, vocabularies, collected results) comes from
+``local_frame``.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 TABLES = [
     "region",
@@ -59,26 +66,23 @@ def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
     return df.repartition(target)
 
 
-def one_slice_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """Single-partition DataFrame from a small driver-side row list.
-
-    ``createDataFrame(rows)`` parallelizes into defaultParallelism pickled
-    slices; a later ``coalesce(1)`` (the usual next step for tiny metadata
-    /sentinel writes) then drains ALL of them sequentially through one
-    task's Python-worker round-trips (~150 ms each — measured ~5 s per
-    tiny checkpoint/sidecar/sentinel write at 32 cores). Parallelizing
-    into ONE slice up front is one worker round-trip: same rows, same
-    single output file, ~12x faster. Only for driver-built frames that
-    are bounded by file/sentinel count, never data rows."""
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """One-partition DataFrame of rows the driver holds (tuples or ``Row``s;
+    ``schema``: DDL string or ``StructType``; naive datetimes read as UTC).
+    The rows travel as one Arrow table into a ``LocalRelation``: running it
+    starts no Python worker, and the planner sees its real size. The
+    coalesce keeps one partition (one file when written); a bare
+    ``LocalTableScan`` splits into min(rows, cores) partitions."""
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    batch = pa.RecordBatch.from_struct_array(pa.array(rows, pa.struct(arrow)))
+    return spark.createDataFrame(pa.Table.from_batches([batch], arrow), schema).coalesce(1)
 
 
 def _ts_is_nanos(path: str) -> bool:
     """Whether the parquet footer types the file's ``ts`` column as
     TIMESTAMP(NANOS)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     schema = pq.read_schema(path)
     if "ts" not in schema.names:
         return False

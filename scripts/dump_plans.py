@@ -152,8 +152,8 @@ def write_explains() -> None:
         # runtime_bloom_filter_join is deliberately NOT here: its fn
         # returns collected rows (the might_contain claim only exists in
         # the OPTIMIZED LOGICAL plan, asserted in-query with an off-knob
-        # control), so a formatted_plan dump would print one ExistingRDD
-        # line while paying the full two-run contract query
+        # control), so a formatted_plan dump would print one
+        # LocalTableScan line while paying the full two-run contract query
         "statestore_reader_audit",    # checkpoint state as a batch scan
         "udtf_partitioned_sessions",  # hash(user) exchange + per-key sort
         "nation_top_customer_roster",  # top-k prune before listagg merge
@@ -184,14 +184,15 @@ def write_explains() -> None:
         tree = plan.split("\n\n")[0]
         note = ""
         # queries that pin state with an eager localCheckpoint (lineage is
-        # genuinely truncated); createDataFrame literals also show
-        # ExistingRDD, so an explicit list, not a heuristic. Empty since
+        # genuinely truncated), an explicit list because the plan of a
+        # checkpointed frame is a bare ExistingRDD scan. Empty since
         # the round-6 global_rank rewrite (literal range boundaries — no
         # localCheckpoint left on any dumped query's path).
         _checkpointed: set[str] = set()
         # queries that execute inside a scoped-conf block and RETURN the
         # collected rows as a local frame (so the scoped plan assertion is
-        # the one that ran): the dumped plan is a LocalTableScan by design;
+        # the one that ran): the dumped plan is tables.local_frame's
+        # one-partition LocalTableScan by design;
         # the join plan itself is asserted inside the query on every run
         _materialized = {
             "aqe_runtime_broadcast_join",

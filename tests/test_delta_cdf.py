@@ -14,6 +14,7 @@ from data_etl_pipeline_spark.sources.delta_reader import (
     DeltaLogReader,
     DeltaProtocolError,
 )
+from data_etl_pipeline_spark.plans.planassert import formatted_plan
 from data_etl_pipeline_spark.tables import load
 
 
@@ -39,6 +40,17 @@ def test_non_cdf_rewrite_refuses_changes(spark, sf_dir, fresh):
         r.table_changes(0).collect()
     # the creation commit alone is still derivable
     assert r.table_changes(0, 0).count() == b.where(F.col("o_orderkey") <= 300).count()
+
+
+def test_change_feed_tags_files_from_a_local_relation(spark, sf_dir, fresh):
+    # the file -> commit-version map is literal rows: no RDD scan, so no
+    # Python worker runs when the feed executes
+    dest = fresh()
+    de.export_delta(_base(spark, sf_dir).where(F.col("o_orderkey") <= 300), dest, cdf=True)
+    de.export_delta_delete(spark, dest, "o_orderkey % 5 = 0")
+    plan = formatted_plan(DeltaLogReader(spark, dest).table_changes(1), "extended")
+    assert "LocalRelation" in plan and "LocalTableScan" in plan, plan
+    assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan
 
 
 def test_optimize_commit_contributes_nothing(spark, sf_dir, fresh):

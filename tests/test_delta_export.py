@@ -669,11 +669,11 @@ class TestFooterStatsCompleteness:
             )
         else:
             # parquet-mr writes no min/max for the row group holding LONG
-            from data_etl_pipeline_spark.tables import one_slice_df
+            from data_etl_pipeline_spark.tables import local_frame
 
             rows = [("s%05d" % i,) for i in range(3000)]
             rows.insert(1500, (self.LONG,))
-            one_slice_df(request.getfixturevalue("spark"), rows, "s string").write.option(
+            local_frame(request.getfixturevalue("spark"), rows, "s string").write.option(
                 "parquet.block.size", 8192
             ).parquet(str(d))
         (path,) = glob.glob(str(d / "*.parquet"))

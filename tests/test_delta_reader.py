@@ -13,7 +13,7 @@ from data_etl_pipeline_spark.sources.delta_reader import (
     DeltaLogReader,
     DeltaProtocolError,
 )
-from data_etl_pipeline_spark.tables import one_slice_df
+from data_etl_pipeline_spark.tables import local_frame
 
 SCHEMA = T.StructType(
     [
@@ -24,11 +24,8 @@ SCHEMA = T.StructType(
 
 
 def _write_part(spark, tbl, name, rows):
-    # one_slice_df: createDataFrame(pylist) parallelizes into one slice per
-    # core and coalesce(1) drains them SERIALLY through Python-worker
-    # round-trips (~1 s per tiny fixture write; r12 finding) — the suite
-    # writes dozens of these fixture files
-    df = one_slice_df(spark, rows, SCHEMA)
+    # one partition, so the write leaves exactly one part file to move
+    df = local_frame(spark, rows, SCHEMA)
     tmp = os.path.join(tbl, "_tmp")
     df.write.mode("overwrite").parquet(tmp)
     part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
@@ -252,7 +249,7 @@ class TestColumnMapping:
         tbl = str(tmp_path / "dlcm")
         os.makedirs(tbl)
         # physical column names on disk
-        df = one_slice_df(spark, [(1, "a"), (2, "b")], "`col-11` long, `col-22` string")
+        df = local_frame(spark, [(1, "a"), (2, "b")], "`col-11` long, `col-22` string")
         tmp = os.path.join(tbl, "_tmp")
         df.write.mode("overwrite").parquet(tmp)
         part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
@@ -275,7 +272,7 @@ class TestColumnMapping:
     def test_name_mode_partition_values_use_physical_keys(self, spark, tmp_path):
         tbl = str(tmp_path / "dlcmp")
         os.makedirs(tbl)
-        df = one_slice_df(spark, [(1, "a")], "`col-11` long, `col-22` string")
+        df = local_frame(spark, [(1, "a")], "`col-11` long, `col-22` string")
         tmp = os.path.join(tbl, "_tmp")
         df.write.mode("overwrite").parquet(tmp)
         part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
@@ -307,7 +304,7 @@ class TestColumnMapping:
                 T.StructField("col-22", T.StringType(), True, {"parquet.field.id": 2}),
             ]
         )
-        df = one_slice_df(spark, [(1, "a"), (2, "b")], file_schema)
+        df = local_frame(spark, [(1, "a"), (2, "b")], file_schema)
         tmp = os.path.join(tbl, "_tmp")
         df.write.mode("overwrite").parquet(tmp)
         part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
@@ -395,7 +392,7 @@ def _write_checkpoint(spark, tbl, version, meta_action, add_paths):
             ),
         ]
     )
-    df = one_slice_df(
+    df = local_frame(
         spark,
         [
             (
@@ -704,7 +701,7 @@ def test_multipart_checkpoint_reads_all_parts(spark, tmp_path):
                 ),
             ]
         )
-        df = one_slice_df(spark, rows, schema)
+        df = local_frame(spark, rows, schema)
         tmp = os.path.join(tbl, "_cptmp")
         df.write.mode("overwrite").parquet(tmp)
         part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
@@ -949,7 +946,7 @@ def test_id_mode_read_does_not_leak_field_id_conf(spark, tmp_path):
             T.StructField("col-22", T.StringType(), True, {"parquet.field.id": 2}),
         ]
     )
-    df = one_slice_df(spark, [(7, "z")], file_schema)
+    df = local_frame(spark, [(7, "z")], file_schema)
     tmp = os.path.join(tbl, "_tmp")
     df.write.mode("overwrite").parquet(tmp)
     part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
@@ -1038,7 +1035,7 @@ class TestColumnPruning:
 
         tbl = str(tmp_path / "prunecm")
         os.makedirs(tbl)
-        df = one_slice_df(spark, [(1, "a"), (2, "b")], "`col-11` long, `col-22` string")
+        df = local_frame(spark, [(1, "a"), (2, "b")], "`col-11` long, `col-22` string")
         tmp = os.path.join(tbl, "_tmp")
         df.write.mode("overwrite").parquet(tmp)
         part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))

@@ -13,6 +13,7 @@ import zlib
 import pytest
 from pyspark.sql import functions as F
 
+from data_etl_pipeline_spark.plans.planassert import formatted_plan
 from data_etl_pipeline_spark.sources.avro_ocf import (
     AvroError,
     MAGIC,
@@ -956,6 +957,13 @@ class TestEqualityDeletes:
     def test_time_travel_pre_delete(self, spark, etable):
         t = IcebergTable(spark, etable)
         assert t.read(snapshot_id=1).count() == 80
+
+    def test_read_tags_sequence_numbers_from_a_local_relation(self, spark, etable):
+        # the per-file sequence-number map is literal rows: no RDD scan, so
+        # no Python worker runs when the merge-on-read executes
+        plan = formatted_plan(IcebergTable(spark, etable).read(), "extended")
+        assert "LocalRelation" in plan and "LocalTableScan" in plan, plan
+        assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan
 
     def test_delete_files_carry_ids(self, spark, etable):
         t = IcebergTable(spark, etable)

@@ -4,7 +4,7 @@ Each test locks the behavior an optimization changed: the one-checkpoint
 connected-components round still converges in O(log diameter) on a deep
 chain; the single-pass Iceberg partitioned write keeps the one-file-per-
 partition-VALUE invariant with values scattered across input partitions;
-one_slice_df really is one partition; the repetition gate's sorted-run
+local_frame really is one partition; the repetition gate's sorted-run
 top-frequency handles ties and short docs exactly; the table-diff drill
 join actually plans ShuffledHashJoin (the strategy the A/B measured).
 """
@@ -79,19 +79,19 @@ class TestIcebergPartitionedWriteSinglePass:
         assert back.agg(F.sum("k")).first()[0] == sum(range(120))
 
 
-class TestOneSliceDf:
+class TestLocalFrame:
     def test_single_partition_and_rows(self, spark):
-        from data_etl_pipeline_spark.tables import one_slice_df
+        from data_etl_pipeline_spark.tables import local_frame
 
         rows = [(i, f"v{i}") for i in range(5)]
-        df = one_slice_df(spark, rows, "k int, v string")
+        df = local_frame(spark, rows, "k int, v string")
         assert df.rdd.getNumPartitions() == 1
         assert sorted(map(tuple, df.collect())) == rows
 
     def test_empty_rows(self, spark):
-        from data_etl_pipeline_spark.tables import one_slice_df
+        from data_etl_pipeline_spark.tables import local_frame
 
-        df = one_slice_df(spark, [], "k int")
+        df = local_frame(spark, [], "k int")
         assert df.count() == 0
 
 

@@ -16,9 +16,9 @@ from pyspark.sql import functions as F
 
 def test_statestore_batchid_time_travel(spark, tmp_path_factory):
     ids = list(range(100))
-    from data_etl_pipeline_spark.tables import one_slice_df
+    from data_etl_pipeline_spark.tables import local_frame
 
-    df = one_slice_df(spark, [(i,) for i in ids], "k long")
+    df = local_frame(spark, [(i,) for i in ids], "k long")
     src = str(tmp_path_factory.mktemp("ss_tt_src"))
     seen: set[str] = set()
     for m in range(3):  # three disjoint slices -> three micro-batches

@@ -34,9 +34,9 @@ def test_cross_batch_pairs_survive_state(spark, tmp_path):
     ]
     os.makedirs(src)
     for i, rows in enumerate(rows_per_file):
-        from data_etl_pipeline_spark.tables import one_slice_df
+        from data_etl_pipeline_spark.tables import local_frame
 
-        df = one_slice_df(
+        df = local_frame(
             spark,
             [(e, __import__("datetime").datetime.fromisoformat(t), u, k) for e, t, u, k in rows],
             "event_id long, ts timestamp, user_id long, event_type string",

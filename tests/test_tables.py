@@ -1,14 +1,24 @@
 """``tables.load``: the nanosecond ``events.ts`` branch is taken only when
 the parquet footer says TIMESTAMP(NANOS), and only then touches the
-session conf."""
+session conf. ``tables.local_frame``: the same rows and schema as
+``createDataFrame(rows, schema)`` for every type a driver-built frame
+carries, as one partition of a ``LocalRelation``."""
 
 from __future__ import annotations
 
+import ast
+import datetime
+import decimal
+from pathlib import Path
+
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from data_etl_pipeline_spark.tables import load
+from data_etl_pipeline_spark.tables import load, local_frame
 
 NANOS_FLAG = "spark.sql.legacy.parquet.nanosAsLong"
 TS_NS = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999, 5]
@@ -37,3 +47,98 @@ def test_micros_footer_leaves_the_conf_alone(spark, tmp_path):
     child = spark.newSession()
     assert _micros(load(child, str(tmp_path), "events")) == sorted(v // 1000 for v in TS_NS)
     assert child.conf.get(NANOS_FLAG, None) is None
+
+
+# --- local_frame: a driver-side row list as a one-partition LocalRelation ---
+
+ADD_STRUCT = T.StructType(
+    [
+        T.StructField("path", T.StringType()),
+        T.StructField("partitionValues", T.MapType(T.StringType(), T.StringType())),
+        T.StructField("size", T.LongType()),
+        T.StructField("modificationTime", T.LongType()),
+        T.StructField("dataChange", T.BooleanType()),
+    ]
+)
+TS = datetime.datetime(2024, 2, 29, 23, 59, 58, 123456)
+SCALARS = (
+    "i long, n int, x double, s string, b boolean, ts timestamp, "
+    "ntz timestamp_ntz, d date, dec decimal(12,3)"
+)
+SCALAR_ROWS = [
+    (1, 2, 0.5, "a", True, TS, TS, datetime.date(2024, 2, 29), decimal.Decimal("123456789.125")),
+    (None, None, None, None, None, None, None, None, None),
+    Row(i=-3, n=0, x=-1e300, s="", b=False, ts=datetime.datetime(1970, 1, 1), ntz=None,
+        d=datetime.date(1, 1, 1), dec=decimal.Decimal("-0.001")),
+]
+NESTED = T.StructType(
+    [
+        T.StructField("tags", T.ArrayType(T.StringType())),
+        T.StructField("add", ADD_STRUCT),
+        T.StructField("meta", T.StructType([T.StructField("id", T.StringType()),
+                                            T.StructField("cols", T.ArrayType(T.LongType()))])),
+    ]
+)
+NESTED_ROWS = [
+    (["p", None], ("f0.parquet", {"k": "v", "e": None}, 10, 1_700_000_000_000, True), ("m", [1, 2])),
+    ([], ("f1.parquet", {}, 0, 0, False), (None, None)),
+    (None, None, None),
+]
+CASES = {
+    "scalars-ddl": (SCALAR_ROWS, SCALARS),
+    "scalars-empty": ([], SCALARS),
+    "nested-structtype": (NESTED_ROWS, NESTED),
+    "nested-empty": ([], NESTED),
+    "checkpoint-add": ([(None,), (("s.parquet", {"d": "2024"}, 3, 4, True),)],
+                       T.StructType([T.StructField("add", ADD_STRUCT)])),
+    "one-column-ddl": ([("x",), ("y",)], "label string"),
+}
+
+
+@pytest.mark.parametrize("rows,schema", CASES.values(), ids=CASES.keys())
+def test_local_frame_matches_create_dataframe(spark, rows, schema):
+    ref = spark.createDataFrame(rows, schema)
+    got = local_frame(spark, rows, schema)
+    assert got.schema == ref.schema
+    assert got.collect() == ref.collect()
+
+
+@pytest.mark.parametrize("rows,schema", CASES.values(), ids=CASES.keys())
+def test_local_frame_is_one_partition_of_a_local_relation(spark, rows, schema):
+    df = local_frame(spark, rows, schema)
+    assert df.rdd.getNumPartitions() == 1
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    # at most the one-partition coalesce above the literal rows; no RDD scan
+    assert plan.splitlines()[-1].lstrip("+- ").startswith("LocalRelation"), plan
+    assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan
+
+
+def test_local_frame_keeps_field_metadata(spark):
+    schema = T.StructType([T.StructField("k", T.LongType(), True, {"parquet.field.id": 7})])
+    assert local_frame(spark, [(1,)], schema).schema == schema
+
+
+def _frame_calls(tree: ast.AST) -> list[ast.Call]:
+    return [
+        n
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr in ("createDataFrame", "parallelize")
+    ]
+
+
+def test_driver_built_frames_go_through_local_frame():
+    # any other createDataFrame(rows) / parallelize builds an RDD scan that
+    # runs a Python worker per slice every time the frame executes
+    pkg = Path(__file__).resolve().parent.parent / "data_etl_pipeline_spark"
+    stray = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if path == pkg / "tables.py":
+            (fn,) = [n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "local_frame"]
+            allowed = {id(c) for c in _frame_calls(fn)}
+            assert len(allowed) == 1
+        stray += [f"{path.relative_to(pkg)}:{c.lineno}" for c in _frame_calls(tree) if id(c) not in allowed]
+    assert stray == []
