@@ -7,17 +7,18 @@ near-duplicate detection; this module provides the standard ladder:
 
   exact_dedup          - hash-groupBy, first occurrence wins
   shingles             - word n-gram set per document (UDTF-shaped explode)
-  ngram_jaccard_pairs  - inverted-index self-join, exact Jaccard
+  ngram_jaccard_pairs  - posting self-join on the shingle, exact Jaccard
   minhash_signatures   - k-permutation MinHash over the shingle set
-  lsh_candidate_pairs  - banded LSH bucket join over the signatures
+  lsh_candidate_pairs  - posting self-join on the LSH band key
 
 All hash arithmetic uses the md5-derived portable hash
 (functions/hashing.py) so the DuckDB oracle reproduces results bit-for-bit.
 
 Scale design: every step is an explode + hash-partitioned groupBy/join —
-no driver-side state, no cross join. The LSH band join touches only
-bucket-colliding pairs, which is what makes MinHash viable at 100 TB where
-the exact pairwise join is O(n^2).
+no driver-side state, no cross join. Pairs are mined by ``pairs_sharing``,
+one shuffled equi self-join of a posting list on its key, so only
+key-sharing pairs are ever formed, which is what makes MinHash viable at
+100 TB where the exact pairwise join is O(n^2).
 """
 
 from __future__ import annotations
@@ -72,6 +73,12 @@ def _docs_with_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> Da
     +65% on the jaccard/minhash headliners). A sub-n-word row evaluates
     to one bogus short shingle that the real size predicate then drops;
     rows that survive the filter are untouched by the clamp.
+
+    The inferred filter also crosses ``spread()``'s exchange: predicate
+    pushdown substitutes ``sh`` and moves the whole shingle expression
+    below the round-robin repartition, so every document is shingled
+    twice, first on the scan's one task. Callers therefore explode ``sh``
+    through ``_postings`` (``explode_outer``), which infers nothing.
     """
     # spread() first: shingling (split + transform + array_distinct) is the
     # most compute-heavy narrow stage in the engine, and on a single-split
@@ -93,23 +100,52 @@ def _docs_with_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> Da
     )
 
 
+def _postings(docs: DataFrame, *cols) -> DataFrame:
+    """(doc_id, *cols, shingle) rows, one per shingle of each document of
+    ``_docs_with_shingles``. Its ``size(w) >= n`` filter leaves every
+    ``sh`` non-empty, so ``explode_outer`` emits the same rows as
+    ``explode`` (never a NULL shingle), and unlike ``explode`` it lets
+    the optimizer infer no ``size(sh) > 0`` filter to push below
+    ``spread()``."""
+    return docs.select("doc_id", *cols, F.explode_outer("sh").alias("shingle"))
+
+
 def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document: (id, shingle) rows.
 
     UDTF-shaped one-row-to-many explode (SURVEY U3). Stays entirely in
     whole-stage codegen: split / transform / explode are JVM built-ins.
     """
-    return _docs_with_shingles(df, text_col, id_col, n).select(
-        "doc_id", F.explode("sh").alias("shingle")
+    return _postings(_docs_with_shingles(df, text_col, id_col, n))
+
+
+def pairs_sharing(postings: DataFrame, keys: list[str], *payload: str) -> DataFrame:
+    """(doc_a, doc_b, <payload>_a, <payload>_b) with doc_a < doc_b: one row
+    per pair of ``postings`` rows (``doc_id``, ``keys``, ``payload``) with
+    equal ``keys``, so a pair sharing k keys comes back k times.
+
+    One equi self-join, planned as a shuffled hash join: both sides are
+    the same posting plan, so they share one exchange (ReusedExchange)
+    and the postings are built once, and the small-data plan has the
+    shape of the 100 TB one. Left to the size estimate, the planner would
+    broadcast the postings and build them a second time for the build
+    side. A key shared by k rows still yields k*(k-1)/2 pairs: boilerplate
+    keys are the skew risk at scale, which AQE's skew-join split bounds.
+    """
+    p = postings.select("doc_id", *keys, *payload)
+    return (
+        p.alias("a")
+        .join(
+            p.alias("b").hint("shuffle_hash"),
+            [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+            + [F.col("a.doc_id") < F.col("b.doc_id")],
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in payload for s in "ab"],
+        )
     )
-
-
-# Generate ordered (x, y) combinations from a doc list sorted by id; used to
-# turn an inverted-index posting list into candidate pairs without a self-join.
-_COMBOS = (
-    "flatten(transform(ds, (x, i) -> "
-    "transform(slice(ds, i + 2, size(ds)), y -> struct(x, y))))"
-)
 
 
 def ngram_jaccard_pairs(
@@ -122,41 +158,28 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact Jaccard near-dup pairs via an inverted index — ONE corpus scan.
 
-    Shape: doc -> (shingle, doc_size) postings -> groupBy shingle ->
-    pair combinations within each posting list -> count per pair. No
-    self-join, so the text is scanned and shingled once; the two shuffles
-    carry only (shingle, id, size) postings and (pair) counts.
+    Shape: doc -> (shingle, doc_size) postings -> self-join on the
+    shingle (``pairs_sharing``) -> count per pair, as the oracle SQL
+    does. The two join sides share one exchange, so the text is scanned
+    and shingled once; the shuffles carry only (shingle, id, size)
+    postings and (pair) counts.
 
     Scale note: a shingle shared by k docs yields k*(k-1)/2 pairs — boiler-
     plate shingles are the skew risk at 100 TB. Standard mitigation (as in
     large-corpus dedup pipelines) is dropping ultra-frequent shingles:
-    pass ``max_postings`` to cap posting-list size right after the groupBy
-    (pairs then undercount n_common on boilerplate — the deliberate
-    trade; the capped variant is declared as its own oracle-checked
-    query so the approximation is visible, not silent).
+    pass ``max_postings`` to drop shingles with more postings than that
+    before pairing (pairs then undercount n_common on boilerplate — the
+    deliberate trade; the capped variant is declared as its own
+    oracle-checked query so the approximation is visible, not silent).
     """
-    docs = _docs_with_shingles(df, text_col, id_col, n)
-    postings = docs.select(
-        "doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("shingle")
-    )
-    grouped = postings.groupBy("shingle").agg(
-        F.array_sort(F.collect_list(F.struct("doc_id", "n_sh"))).alias("ds")
-    )
+    postings = _postings(_docs_with_shingles(df, text_col, id_col, n), F.size("sh").alias("n_sh"))
     if max_postings is not None:
-        grouped = grouped.where(F.size("ds") <= max_postings)
-    pair_rows = (
-        grouped.where(F.size("ds") > 1)
-        .select(F.explode(F.expr(_COMBOS)).alias("p"))
-        .select(
-            F.col("p.x.doc_id").alias("doc_a"),
-            F.col("p.y.doc_id").alias("doc_b"),
-            F.col("p.x.n_sh").alias("size_a"),
-            F.col("p.y.n_sh").alias("size_b"),
-        )
-    )
+        over_cap = postings.groupBy("shingle").count().where(F.col("count") > max_postings)
+        postings = postings.join(over_cap, "shingle", "left_anti")
     jacc = F.col("n_common") / (F.col("size_a") + F.col("size_b") - F.col("n_common"))
     return (
-        pair_rows.groupBy("doc_a", "doc_b", "size_a", "size_b")
+        pairs_sharing(postings, ["shingle"], "n_sh")
+        .groupBy("doc_a", "doc_b", F.col("n_sh_a").alias("size_a"), F.col("n_sh_b").alias("size_b"))
         .agg(F.count(F.lit(1)).alias("n_common"))
         .withColumn("jaccard", F.round(jacc, 6))
         .where(F.col("jaccard") >= threshold)
@@ -320,23 +343,12 @@ def lsh_candidate_pairs(
     """Banded-LSH near-dup candidates + estimated similarity.
 
     Signatures are cut into ``bands`` bands; documents sharing any band
-    become candidates (join on the band hash — a plain shuffle join on a
-    high-cardinality key, the scalable core of MinHash dedup). Estimated
-    similarity = fraction of equal signature positions.
+    become candidates (``pairs_sharing`` on (band, band hash) — a plain
+    shuffle join on a high-cardinality key, the scalable core of MinHash
+    dedup). Estimated similarity = fraction of equal signature positions.
     """
     banded = minhash_band_index(df, text_col, id_col, n, bands)
-    cand = (
-        banded.groupBy("band", "band_key")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "signature"))).alias("ds"))
-        .where(F.size("ds") > 1)
-        .select(F.explode(F.expr(_COMBOS)).alias("p"))
-        .select(
-            F.col("p.x.doc_id").alias("doc_a"),
-            F.col("p.y.doc_id").alias("doc_b"),
-            F.col("p.x.signature").alias("sig_a"),
-            F.col("p.y.signature").alias("sig_b"),
-        )
-    )
+    cand = pairs_sharing(banded, ["band", "band_key"], "signature")
     # est_similarity is ROUND(CAST(matches AS DOUBLE)/N, 6) in BOTH engines:
     # Spark's int / decimal-literal division would yield DECIMAL while DuckDB's
     # len()/16.0 path differs — the driver's value hash is type-sensitive.
@@ -350,7 +362,7 @@ def lsh_candidate_pairs(
     # with a partial-aggregating HashAggregate over three scalar columns
     # (guide §2.3 "project before the exchange" / §2.4: the sort
     # disappears, the exchange narrows from 2x16 longs to one double).
-    est = F.expr(_EST_SIM.format(a="sig_a", b="sig_b", n=NUM_MINHASH))
+    est = F.expr(_EST_SIM.format(a="signature_a", b="signature_b", n=NUM_MINHASH))
     return (
         cand.withColumn("est_similarity", est)
         .where(F.col("est_similarity") >= min_est)
@@ -432,15 +444,11 @@ def benchmark_contamination(
     shuffle of corpus text. Documents shorter than ``n`` words carry no
     n-grams and are excluded (mirrored in the oracle).
     """
-    ev = (
-        _docs_with_shingles(eval_df, text_col, id_col, n)
-        .select(F.explode("sh").alias("gram"))
-        .distinct()
-    )
+    ev = _postings(_docs_with_shingles(eval_df, text_col, id_col, n)).select("shingle").distinct()
     docs = _docs_with_shingles(corpus, text_col, id_col, n)
     hits = (
-        docs.select("doc_id", F.explode("sh").alias("gram"))
-        .join(F.broadcast(ev), "gram")
+        _postings(docs)
+        .join(F.broadcast(ev), "shingle")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
@@ -470,9 +478,9 @@ def simhash_pairs(
     is the standard fuzzy extension at corpus scale).
 
     Shape mirrors MinHash-LSH: the 60-bit signature splits into ``bands``
-    15-bit band keys; documents sharing any band key become candidates via
-    posting-list combinations (NO signature self-join), then candidates are
-    kept when the full-signature hamming distance <= ``max_hamming``.
+    15-bit band keys; documents sharing any band key become candidates
+    (``pairs_sharing`` on (band, key)), then candidates are kept when the
+    full-signature hamming distance <= ``max_hamming``.
 
     A pair within hamming distance d differs in at most d bit positions, so
     with bands > d at least one band matches exactly — banding with
@@ -493,25 +501,14 @@ def simhash_pairs(
             )
         ).alias("bk"),
     ).select("doc_id", "simhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    cand = (
-        postings.groupBy("band", "key")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "simhash"))).alias("ds"))
-        .where(F.size("ds") > 1)
-        .select(F.explode(F.expr(_COMBOS)).alias("p"))
-        .select(
-            F.col("p.x.doc_id").alias("doc_a"),
-            F.col("p.y.doc_id").alias("doc_b"),
-            F.col("p.x.simhash").alias("sim_a"),
-            F.col("p.y.simhash").alias("sim_b"),
-        )
-    )
+    cand = pairs_sharing(postings, ["band", "key"], "simhash")
     # hamming is a per-pair constant across band collisions, so verify
     # FIRST, filter, and dedup on (doc_a, doc_b, min(hamming)) — the
     # selective distance filter then runs before the dedup exchange
     # instead of after it (same reordering as lsh_candidate_pairs /
     # lsh_near_dup_pairs; guide §2.3).
     return (
-        cand.withColumn("hamming", F.expr("bit_count(sim_a ^ sim_b)").cast("int"))
+        cand.withColumn("hamming", F.expr("bit_count(simhash_a ^ simhash_b)").cast("int"))
         .where(F.col("hamming") <= max_hamming)
         .groupBy("doc_a", "doc_b")
         .agg(F.min("hamming").alias("hamming"))

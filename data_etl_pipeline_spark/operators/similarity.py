@@ -430,9 +430,10 @@ def lsh_near_dup_pairs(
     """ALL embedding near-dup pairs above ``threshold`` — the scale path
     that replaces the O(n^2) ``cosine_pairs`` baseline for production
     dedup: candidates are posting-list combinations within each
-    (table_id, code) bucket (the same single-scan inverted-index shape as
-    the MinHash/SimHash pair miners — never a corpus self-join), deduped
-    across tables, then exact-verified with the sequential-fold cosine.
+    (table_id, code) bucket (a single-scan inverted index — never a
+    corpus self-join, and not the posting self-join of the MinHash/SimHash
+    pair miners, ``dedup.pairs_sharing``), deduped across tables, then
+    exact-verified with the sequential-fold cosine.
 
     Candidate recall at the defaults is the multi-table sign-LSH
     collision probability 1-(1-p^n_bits)^n_tables with p = 1 - theta/pi

@@ -208,8 +208,8 @@ def doc_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # SimHash band-key equality across 4x15-bit bands; oracle mirrors the banding
-# with a plain self-join (oracle clarity; the Spark plan is the posting-list
-# inverted index with no self-join).
+# with a self-join of the signatures on the OR of the band matches (oracle
+# clarity; the Spark plan equi-joins the (band, key) postings).
 _SIMHASH_BAND_MATCH = " OR ".join(
     f"((a.simhash >> {b * 15}) & 32767) = ((b.simhash >> {b * 15}) & 32767)" for b in range(4)
 )

@@ -50,6 +50,14 @@ def spread(df: DataFrame, parts: int | None = None) -> DataFrame:
     exchange clearly exceeds one row-serialization (the repartition's own
     shuffle write is paid by the single scan task either way); byte-heavy /
     compute-light paths keep the plain scan.
+
+    The fan-out only holds while the heavy expressions stay above the
+    exchange. An ``explode`` lets the optimizer infer a ``size(arr) > 0``
+    filter and push it, expression and all, below the exchange, where it
+    runs on the scan's task (explode arrays that are non-empty by
+    construction with ``explode_outer``). ``test_query_matches_oracle``
+    pins this for every query: no Filter holding a lambda function sits
+    below a round-robin exchange.
     """
     sc = df.sparkSession.sparkContext
     target = parts or sc.defaultParallelism

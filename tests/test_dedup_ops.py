@@ -4,6 +4,7 @@ dedup test suite, scraper_app/tests/test_dedup_util.py)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_etl_pipeline_spark.operators import dedup
@@ -106,6 +107,74 @@ def test_simhash_of_null_text_is_zero_as_in_the_oracle(spark):
     assert got == want
     pairs = {(r["doc_a"], r["doc_b"], r["hamming"]) for r in dedup.simhash_pairs(_docs(spark, rows)).collect()}
     assert (1, 2, 0) in pairs
+
+
+# NULL, empty and short text; a double space; exact duplicates (which
+# collide in every band and share every shingle); near duplicates of
+# them; 14 docs sharing three shingles, more than the cap of 12.
+_WORDS = " ".join(f"w{i}" for i in range(20))
+_PAIR_EDGE_ROWS = [
+    (1, None),
+    (2, ""),
+    (3, "a b"),
+    (4, "one  two three four five"),
+    (5, "one  two three four five"),
+    (6, _WORDS),
+    (7, _WORDS),
+    (8, _WORDS.replace("w19", "other")),
+] + [(9 + i, f"shared boiler plate text here x{i}") for i in range(14)]
+
+
+def _pairs_and_oracle(spark, name, pairs):
+    """Rows of ``pairs`` over _PAIR_EDGE_ROWS and of the registered
+    oracle SQL ``name`` over the same documents in DuckDB, each sorted."""
+    import duckdb
+
+    from data_etl_pipeline_spark.oracle import _canon
+    from data_etl_pipeline_spark.plans.registry import all_oracle_sql
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", _PAIR_EDGE_ROWS)
+    rel = con.sql(all_oracle_sql()[name])
+    cols = [c.lower() for c in rel.columns]
+    want = _canon(rel.fetchall(), cols)
+    got = pairs(_docs(spark, _PAIR_EDGE_ROWS)).select(*cols).collect()
+    return _canon([tuple(r) for r in got], cols), want
+
+
+@pytest.mark.parametrize(
+    "name, pairs",
+    [
+        ("doc_ngram_jaccard_pairs", lambda df: dedup.ngram_jaccard_pairs(df, threshold=0.8)),
+        (
+            "doc_ngram_jaccard_capped",
+            lambda df: dedup.ngram_jaccard_pairs(df, threshold=0.6, max_postings=12),
+        ),
+        ("doc_minhash_lsh_pairs", lambda df: dedup.lsh_candidate_pairs(df, bands=4, min_est=0.5)),
+        ("doc_simhash_pairs", lambda df: dedup.simhash_pairs(df, bands=4, max_hamming=3)),
+    ],
+)
+def test_pair_miners_match_their_oracle_on_edge_rows(spark, name, pairs):
+    """Every pair once, as the oracle SQL's self-join gives it: no pair
+    from a NULL-shingle posting of a NULL, empty or short text, no
+    duplicate of a pair that shares several shingles or bands, and no
+    pair through a shingle over the posting cap."""
+    got, want = _pairs_and_oracle(spark, name, pairs)
+    assert got and len(got) == len(set(got))
+    assert got == want
+
+
+def test_posting_cap_drops_the_shared_shingles(spark):
+    # uncapped at 0.6, the 14 boilerplate docs pair up through their three
+    # shared shingles; under the cap of 12 those shingles carry no pair
+    def ids(df):
+        return {(r["doc_a"], r["doc_b"]) for r in df.collect()}
+
+    docs = _docs(spark, _PAIR_EDGE_ROWS)
+    boiler = {(a, b) for a in range(9, 23) for b in range(a + 1, 23)}
+    assert boiler <= ids(dedup.ngram_jaccard_pairs(docs, threshold=0.6))
+    assert not boiler & ids(dedup.ngram_jaccard_pairs(docs, threshold=0.6, max_postings=12))
 
 
 class TestDedupClusters:

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import dataclasses
 import tempfile
 
 import pytest
@@ -17,6 +18,34 @@ def con(sf_dir):
     c = duckdb_connection(sf_dir)
     yield c
     c.close()
+
+
+def _nodes(tree):
+    """A JVM plan or expression tree, node by node (pre-order)."""
+    yield tree
+    children = tree.children()
+    for i in range(children.size()):
+        yield from _nodes(children.apply(i))
+
+
+def _lambda_filters_below_round_robin(df) -> list[str]:
+    """The conditions of every Filter holding a lambda function that sits
+    below a round-robin exchange of the physical plan. ``spread()``'s
+    exchange exists to fan the heavy per-row work out: a lambda (a
+    shingle, a hash transform) filtered below it runs on the scan's one
+    task, and again above it."""
+    found = []
+    for node in _nodes(df._jdf.queryExecution().sparkPlan()):
+        if node.nodeName() != "Exchange" or (
+            node.outputPartitioning().getClass().getSimpleName() != "RoundRobinPartitioning"
+        ):
+            continue
+        for below in _nodes(node):
+            if below.nodeName() == "Filter" and any(
+                e.getClass().getSimpleName() == "LambdaFunction" for e in _nodes(below.condition())
+            ):
+                found.append(below.condition().toString())
+    return found
 
 
 def _catalog_tables(spark) -> set[str]:
@@ -38,8 +67,18 @@ def test_query_matches_oracle(spark, con, sf_dir, name, tmp_path, monkeypatch):
     # memory sink it registers is dropped again.
     conf_before = dict(spark.conf.getAll)
     tables_before = _catalog_tables(spark)
+    spec = QUERIES[name]
+    built = []
+
+    def build(spark, sf_dir):
+        built.append(spec.fn(spark, sf_dir))
+        return built[0]
+
+    monkeypatch.setitem(QUERIES, name, dataclasses.replace(spec, fn=build))
     result = compare_query(spark, con, name, sf_dir)
     assert result["ok"], result
+    # spread()'s contract: no lambda is filtered below its exchange
+    assert not _lambda_filters_below_round_robin(built[0])
     assert not any(tmp_root.iterdir()), sorted(p.name for p in tmp_root.iterdir())
     conf_after = dict(spark.conf.getAll)
     assert conf_after == conf_before, {

@@ -5,6 +5,8 @@ no accidental cartesian products."""
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
+
 from data_etl_pipeline_spark.plans.registry import QUERIES, _ensure_loaded
 from data_etl_pipeline_spark.plans.planassert import (
     executed_plan,
@@ -12,6 +14,7 @@ from data_etl_pipeline_spark.plans.planassert import (
     optimized_plan,
 )
 from data_etl_pipeline_spark.session import conf_scope
+from data_etl_pipeline_spark.tables import load
 
 _ensure_loaded()
 
@@ -61,11 +64,44 @@ def test_whole_stage_codegen_active(spark, sf_dir):
     assert "*(1)" in final and "*(2)" in final
 
 
+def _items(seq):
+    it = seq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def _input_records(store, stage_ids):
+    for s in stage_ids:
+        try:
+            yield store.lastStageAttempt(s).inputRecords()
+        except Py4JJavaError:  # the stage was never submitted
+            continue
+
+
 def test_dedup_single_scan(spark, sf_dir):
-    # the inverted-index jaccard reads the corpus exactly once
+    # the inverted-index jaccard reads and shingles the corpus exactly
+    # once: one stage reads all documents, and the posting self-join's
+    # second side reuses the first side's exchange. Checked at execution:
+    # AQE applies exchange reuse only as it plans the stages, so the
+    # pre-execution plan lists a scan under each join side.
+    n_docs = load(spark, sf_dir, "documents").count()
+    sc = spark.sparkContext._jsc.sc()
+    store = sc.statusStore()
+    sc.listenerBus().waitUntilEmpty()
+    before = {j.jobId() for j in _items(store.jobsList(None))}
     df = QUERIES["doc_ngram_jaccard_pairs"].fn(spark, sf_dir)
-    simple = formatted_plan(df, "simple")
-    assert simple.count("FileScan parquet") == 1
+    df.collect()
+    sc.listenerBus().waitUntilEmpty()
+    stages = {
+        s
+        for j in _items(store.jobsList(None))
+        if j.jobId() not in before
+        for s in _items(j.stageIds())
+    }
+    assert [r for r in _input_records(store, stages) if r] == [n_docs]
+    final = executed_plan(df).split("== Initial Plan ==")[0]
+    assert final.count("FileScan parquet") == 1
+    assert "ReusedExchange" in final.split("ShuffledHashJoin", 1)[1]
 
 
 def test_ann_broadcasts_queries(spark, sf_dir):
