@@ -3,9 +3,8 @@ semantics: one record row fans out to ~N (subject, predicate, object)
 triples; publication overwrites the subject-prefix partition).
 
 Spark-first: the graph is a ``triples`` table; generation is a UDTF-shaped
-explode of per-column struct arrays; SPARQL-style scoped replacement is a
-partition overwrite keyed by subject prefix. Validation (URI syntax,
-duplicate labels) is a DataFrame integrity job.
+explode of per-column struct arrays. SPARQL-style scoped replacement by
+subject prefix is ``VersionedTable.delete_where`` with ``prefix_prune``.
 """
 
 from __future__ import annotations
@@ -42,20 +41,3 @@ def project_triples(records: DataFrame, subject_col: str, predicates: dict[str, 
         .where(F.col("object").isNotNull())
         .withColumn("is_literal", ~F.col("object").startswith(PREFIX))
     )
-
-
-def validate_triples(triples: DataFrame) -> DataFrame:
-    """Integrity job: malformed subjects, empty objects, duplicate
-    (subject, predicate) pairs for functional predicates. Returns a table
-    of violations (empty = valid)."""
-    bad_subject = triples.where(~F.col("subject").startswith(PREFIX)).withColumn("violation", F.lit("bad_subject"))
-    empty_object = triples.where(F.length("object") == 0).withColumn("violation", F.lit("empty_object"))
-    return bad_subject.unionByName(empty_object)
-
-
-def replace_subject_prefix(existing: DataFrame, fresh: DataFrame, prefix: str) -> DataFrame:
-    """S13: scoped DELETE-WHERE-STRSTARTS + INSERT as a DataFrame swap —
-    with a partitioned triples table this is a partition overwrite
-    (replaceWhere), no full rewrite."""
-    kept = existing.where(~F.col("subject").startswith(prefix))
-    return kept.unionByName(fresh.where(F.col("subject").startswith(prefix)))

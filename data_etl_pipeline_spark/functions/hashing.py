@@ -47,16 +47,6 @@ def md5_int60(col: str) -> Column:
     return F.expr(f"cast(conv(substr(md5({col}), 1, 15), 16, 10) as bigint)")
 
 
-def md5_int60_sql(expr: str) -> str:
-    """DuckDB SQL fragment computing the identical 60-bit integer."""
-    return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
-
-
 def h32(col: str) -> str:
     """Spark SQL fragment: hash folded into [0, 2^31) for permutation math."""
     return f"(cast(conv(substr(md5({col}), 1, 15), 16, 10) as bigint) % {MERSENNE_31})"
-
-
-def h32_sql(expr: str) -> str:
-    """DuckDB fragment matching :func:`h32`."""
-    return f"((('0x' || substr(md5({expr}), 1, 15))::BIGINT) % {MERSENNE_31})"

@@ -78,11 +78,3 @@ def cms_estimate(
         "c", F.coalesce(F.col("c"), F.lit(0))
     )
     return hit.groupBy(*keys.columns).agg(F.min("c").cast("bigint").alias("n_est"))
-
-
-def duckdb_pos_sql(key_expr: str, i_expr: str, w: int) -> str:
-    """DuckDB twin of _pos (verified identical to Spark's conv path)."""
-    return (
-        f"(('0x' || substr(md5(CAST({key_expr} AS VARCHAR) || '#' || "
-        f"CAST({i_expr} AS VARCHAR)), 1, 12))::BIGINT % {w})"
-    )

@@ -491,16 +491,17 @@ def simhash_pairs(
     band_bits = bits // bands
     mask = (1 << band_bits) - 1
     sig = simhash(df, text_col, id_col, bits)
-    postings = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {bands - 1}), "
-                f"b -> named_struct('band', b, 'key', shiftright(simhash, b * {band_bits}) & {mask}))"
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    # one literal struct per band, no lambda: a higher-order function
+    # would keep the Generate out of whole-stage codegen
+    band_keys = F.array(
+        *[
+            F.expr(f"named_struct('band', {b}, 'key', shiftright(simhash, {b * band_bits}) & {mask})")
+            for b in range(bands)
+        ]
+    )
+    postings = sig.select("doc_id", "simhash", F.explode(band_keys).alias("bk")).select(
+        "doc_id", "simhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    )
     cand = pairs_sharing(postings, ["band", "key"], "simhash")
     # hamming is a per-pair constant across band collisions, so verify
     # FIRST, filter, and dedup on (doc_a, doc_b, min(hamming)) — the

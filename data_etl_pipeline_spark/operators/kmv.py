@@ -102,10 +102,3 @@ def kmv_estimate(
         F.expr(f"cast({num}L div greatest(__vk, 1L) as bigint)")
     )
     return agg.select(*group_cols, est.alias("est_distinct"))
-
-
-def duckdb_hex12_sql(expr: str) -> str:
-    """DuckDB translation of _hex12_to_long (no conv() there):
-    ``('0x' || first-12-hex)::BIGINT`` — exact at 48 bits, identical to
-    Spark's conv (verified: md5('7') -> 157319893602026 in both)."""
-    return f"(('0x' || substr({expr}, 1, 12))::BIGINT)"

@@ -1,11 +1,13 @@
 """The on-disk parquet layout, read in ONE place for every table format.
 
 ``footer_stats`` is the only reader of parquet footer statistics in the
-engine: Delta export stats (``delta_export._file_stats``), Iceberg
-manifest bounds (``iceberg._file_stats``), the Iceberg delete-file row
-count, and the two raw-directory consumers below all call it and keep
-only their own encoding. The footer IS the metadata — but only when it
-is complete, so the reader applies one rule:
+engine: the versioned table's per-file stats
+(``VersionedTable._write_files``), Delta export stats
+(``delta_export._file_stats``), Iceberg manifest bounds
+(``iceberg._file_stats``), the Iceberg delete-file row count, and the two
+raw-directory consumers below all call it and keep only their own
+encoding. The footer IS the metadata — but only when it is complete, so
+the reader applies one rule:
 
     a top-level column keeps bounds (or a null count) only when EVERY
     row group reports them usable; otherwise that part is dropped.
@@ -20,6 +22,19 @@ row groups for a long string (over ~4 KiB):
   ``has_min_max=True, max=''``. A byte-array chunk with an empty max
   therefore counts as lacking bounds — always safe, since it can only
   keep a file that pruning would otherwise drop.
+
+Two more gaps come from the encoding, not the value:
+
+* a decimal of precision <= 18 is stored by Spark as INT32/INT64, and
+  pyarrow cannot convert those bounds; the reader scales the raw
+  integers by the column's scale instead;
+* an INT96 timestamp (Spark's default ``outputTimestampType``) carries
+  no statistics at all, so a writer that wants bounded timestamps writes
+  them as INT64 micros (the versioned table does).
+
+Bounds merge across row groups in Spark's order, where NaN sorts above
+every number: pyarrow reports ``max=nan`` for a chunk holding a NaN, and
+a plain ``<``/``>`` merge would keep a finite max (or a NaN min).
 
 ``plan_parquet_files`` prunes a RAW parquet directory (no Delta/Iceberg
 manifest, no Hive partition dirs) at PLAN time from those bounds: Spark's
@@ -38,8 +53,10 @@ table format joins on, and ``hive_partition_values`` decodes the
 from __future__ import annotations
 
 import glob
+import math
 import os
 import re
+from decimal import Decimal
 from urllib.parse import unquote
 
 _FILE_SCHEME = "^file:/*"
@@ -52,7 +69,9 @@ def footer_stats(path: str) -> tuple[int, dict[str, tuple]]:
     alone. ``min``/``max`` are None unless every row group reports
     usable bounds; ``null_count`` is None unless every row group reports
     one (see the module docstring). Values are pyarrow's logical-type
-    conversions (str for UTF-8, bytes for binary, datetime, ...)."""
+    conversions (str for UTF-8, bytes for binary, datetime, Decimal, ...);
+    bounds merge across row groups in Spark's order, where NaN is the
+    largest value."""
     import pyarrow.parquet as pq
 
     md = pq.read_metadata(path)
@@ -72,20 +91,36 @@ def footer_stats(path: str) -> tuple[int, dict[str, tuple]]:
                 nulls[name] += st.null_count
             if name in no_bounds:
                 continue
-            if (
-                st is None
-                or not st.has_min_max
-                or (isinstance(st.max, (bytes, str)) and not st.max)
-            ):
+            bounds = _chunk_bounds(st, md.schema.column(ci))
+            if bounds is None:
                 no_bounds.add(name)
                 lo.pop(name, None)
                 hi.pop(name, None)
                 continue
-            if name not in lo or st.min < lo[name]:
-                lo[name] = st.min
-            if name not in hi or st.max > hi[name]:
-                hi[name] = st.max
+            if name not in lo or _spark_order(bounds[0]) < _spark_order(lo[name]):
+                lo[name] = bounds[0]
+            if name not in hi or _spark_order(bounds[1]) > _spark_order(hi[name]):
+                hi[name] = bounds[1]
     return md.num_rows, {n: (lo.get(n), hi.get(n), nulls[n]) for n in top}
+
+
+def _chunk_bounds(st, col) -> tuple | None:
+    """(min, max) of one column chunk, or None when it has no usable
+    bounds. pyarrow cannot convert the bounds of a decimal stored as
+    INT32/INT64 (Spark's layout up to precision 18), so those are the
+    raw unscaled integers, scaled here."""
+    if st is None or not st.has_min_max:
+        return None
+    if col.logical_type.type == "DECIMAL" and col.physical_type in ("INT32", "INT64"):
+        return tuple(Decimal(v).scaleb(-col.scale) for v in (st.min_raw, st.max_raw))
+    if isinstance(st.max, (bytes, str)) and not st.max:
+        return None
+    return st.min, st.max
+
+
+def _spark_order(v) -> tuple:
+    """Sort key of a bound in Spark's order: NaN above every number."""
+    return (isinstance(v, float) and math.isnan(v), v)
 
 
 def file_uri_path(uri: str) -> str:
@@ -136,7 +171,9 @@ def plan_parquet_files(
     selected = []
     for path in files:
         mn, mx, _ = footer_stats(path)[1].get(column, (None, None, None))
-        if mn is None or (mx >= lo and mn <= hi):
+        if mn is None or (
+            _spark_order(mx) >= _spark_order(lo) and _spark_order(mn) <= _spark_order(hi)
+        ):
             selected.append(path)
     return selected, len(files)
 
@@ -180,8 +217,8 @@ def agg_from_footers(data_dir: str, column: str) -> dict:
                 f"{column!r} — footer-only aggregate would be a guess"
             )
         n_nulls += f_nulls
-        mn = f_mn if mn is None or f_mn < mn else mn
-        mx = f_mx if mx is None or f_mx > mx else mx
+        mn = f_mn if mn is None or _spark_order(f_mn) < _spark_order(mn) else mn
+        mx = f_mx if mx is None or _spark_order(f_mx) > _spark_order(mx) else mx
     if column is None:
         return {"n_rows": n_rows, "n_values": None, "min": None,
                 "max": None, "n_files": len(files)}

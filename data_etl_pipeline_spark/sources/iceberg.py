@@ -27,7 +27,9 @@ VersionedTable manifest and Delta stats, expressed in Iceberg's format).
 
 Scale: every metadata file is bounded by FILE COUNT, not row count — the
 driver-side work is O(files); data bytes move only through the
-distributed parquet scan of the selected files.
+distributed parquet scan of the selected files. Every data and delete
+file is read under the schema the table metadata records for it
+(``IcebergTable._read_schema``), so no read runs a schema-inference job.
 
 Reference parity: the reference ships no lakehouse writer (its storage
 is an operational document DB); this extends the engine's export surface
@@ -117,14 +119,17 @@ from __future__ import annotations
 
 import glob
 import json
+import math
 import os
 import re
 import struct
 import time
 import uuid
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_etl_pipeline_spark.tables import local_frame
 
@@ -161,19 +166,26 @@ _SPARK_TO_ICEBERG = {
     "timestamp_ntz": "timestamp",
 }
 
-# inverse: Iceberg primitive -> Spark SQL type string (what added-column
-# null literals and int->long / float->double promotion casts need)
+# inverse: Iceberg primitive -> Spark type (declared read schemas,
+# added-column null literals, int->long / float->double promotion casts)
 _ICEBERG_TO_SPARK = {
-    "long": "long",
-    "int": "int",
-    "double": "double",
-    "float": "float",
-    "string": "string",
-    "boolean": "boolean",
-    "date": "date",
-    "timestamptz": "timestamp",
-    "timestamp": "timestamp_ntz",
+    "long": T.LongType(),
+    "int": T.IntegerType(),
+    "double": T.DoubleType(),
+    "float": T.FloatType(),
+    "string": T.StringType(),
+    "boolean": T.BooleanType(),
+    "date": T.DateType(),
+    "timestamptz": T.TimestampType(),
+    "timestamp": T.TimestampNTZType(),
 }
+_DECIMAL_RE = re.compile(r"^decimal\((\d+),\s*(\d+)\)$")
+
+# what a position-delete file holds (spec: file_path, pos; the optional
+# ``row`` column is never read)
+_POS_DELETE_SCHEMA = T.StructType(
+    [T.StructField("file_path", T.StringType()), T.StructField("pos", T.LongType())]
+)
 
 # the spec's allowed primitive type promotions (old -> new); anything
 # else across a schema evolution refuses on read
@@ -186,9 +198,7 @@ def _iceberg_schema(df: DataFrame) -> dict:
     immediately) — the same fresh-id discipline Iceberg's own
     SchemaParser applies. Nested structs, lists (element-id), and maps
     (key-id/value-id) all carry spec-correct ids (round 12; primitives
-    only was the r11 refusal)."""
-    from pyspark.sql import types as T
-
+    only was the r11 refusal). ``_spark_type`` is its inverse."""
     counter = {"next": 1}
 
     def take() -> int:
@@ -251,6 +261,30 @@ def _iceberg_schema(df: DataFrame) -> dict:
     return {"type": "struct", "schema-id": 0, "fields": fields}
 
 
+def _spark_type(ice_type) -> T.DataType:
+    """Inverse of ``_iceberg_schema``'s converter: the Spark type a
+    parquet read infers for a column of Iceberg type ``ice_type``, nested
+    types included. Every level is nullable, as Spark reads files."""
+    if isinstance(ice_type, str):
+        m = _DECIMAL_RE.match(ice_type)
+        if m:
+            return T.DecimalType(int(m[1]), int(m[2]))
+        if ice_type in _ICEBERG_TO_SPARK:
+            return _ICEBERG_TO_SPARK[ice_type]
+    elif ice_type.get("type") == "struct":
+        return _spark_schema(ice_type["fields"])
+    elif ice_type.get("type") == "list":
+        return T.ArrayType(_spark_type(ice_type["element"]))
+    elif ice_type.get("type") == "map":
+        return T.MapType(_spark_type(ice_type["key"]), _spark_type(ice_type["value"]))
+    raise IcebergError(f"unsupported Iceberg type {ice_type!r}")
+
+
+def _spark_schema(fields: list[dict]) -> T.StructType:
+    """Spark schema of an Iceberg field list (names as written)."""
+    return T.StructType([T.StructField(f["name"], _spark_type(f["type"])) for f in fields])
+
+
 def _max_field_id(node) -> int:
     """Highest field id anywhere in an Iceberg schema JSON tree (struct
     field ids, list element-ids, map key/value-ids)."""
@@ -286,7 +320,12 @@ def _encode_bound(value, ice_type: str) -> bytes | None:
         return value.encode("utf-8") if isinstance(value, str) else bytes(value)
     if ice_type == "boolean":
         return b"\x01" if value else b"\x00"
-    return None  # decimals etc.: bounds omitted, never wrong
+    m = _DECIMAL_RE.match(ice_type)
+    if m:
+        # unscaled value, two's-complement big-endian, fewest bytes
+        n = int(Decimal(value).scaleb(int(m[2])))
+        return n.to_bytes(((n if n >= 0 else ~n).bit_length() + 8) // 8, "big", signed=True)
+    return None  # other types: bounds omitted, never wrong
 
 
 def _decode_bound(raw: bytes | None, ice_type: str):
@@ -304,6 +343,9 @@ def _decode_bound(raw: bytes | None, ice_type: str):
         return raw.decode("utf-8", errors="replace")
     if ice_type == "boolean":
         return raw == b"\x01"
+    m = _DECIMAL_RE.match(ice_type)
+    if m:
+        return Decimal(int.from_bytes(raw, "big", signed=True)).scaleb(-int(m[2]))
     return None
 
 
@@ -483,6 +525,8 @@ def _file_stats(local_path: str, id_by_name: dict[str, int], ice_types: dict):
         mn, mx, _ = cols.get(name, (None, None, None))
         if not isinstance(t, str) or mn is None:
             continue
+        if any(isinstance(v, float) and math.isnan(v) for v in (mn, mx)):
+            continue  # the spec keeps NaN out of bounds
         if t in ("timestamp", "timestamptz"):
             mn, mx = _us(mn), _us(mx)
         elif t == "date":
@@ -1927,8 +1971,6 @@ def convert_delta_to_iceberg(
     if not adds:
         raise IcebergError("Delta table has no live data files")
 
-    from pyspark.sql import types as T
-
     spark_schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     ctx = _CommitCtx(
         iceberg_dir, local_frame(spark, [], spark_schema), first=True
@@ -2486,7 +2528,10 @@ class IcebergTable:
             [(os.path.abspath(_local(f["path"], self.table_dir)), sid) for sid, f in pairs],
             "__cf string, _commit_snapshot long",
         )
-        df = self.spark.read.parquet(*paths)
+        # the tailed range never crosses a schema evolution, so every
+        # added file was written under the current schema
+        schema = self._read_schema(pairs[0][1], self._current_schema()["fields"])
+        df = self.spark.read.schema(schema).parquet(*paths)
         cols = df.columns
         return (
             df.select(
@@ -2549,7 +2594,7 @@ class IcebergTable:
         out_names: list[str] | None = None
         for key in sorted(groups, key=lambda k: (k is not None, k or "")):
             grp = groups[key]
-            sdf = self.spark.read.parquet(
+            sdf = self.spark.read.schema(self._read_schema(grp[0], cur_fields)).parquet(
                 *[_local(f["path"], self.table_dir) for f in grp]
             )
             if key is None:
@@ -2570,6 +2615,23 @@ class IcebergTable:
         for extra in frames[1:]:
             df = df.unionByName(extra)
         return df, out_names
+
+    @staticmethod
+    def _read_schema(f: dict, cur_fields: list[dict]) -> T.StructType:
+        """The schema a decoded data or delete file ``f`` was written
+        with, from table metadata alone: what ``spark.read.parquet`` would
+        infer from its footer, without the inference job. Data files
+        carry their manifest's write schema (``cur_fields`` when it has
+        none, the single-schema case); an equality delete holds its key
+        columns in ``equality_ids`` order; a position delete holds
+        (file_path, pos)."""
+        if f.get("content") == 1:
+            return _POS_DELETE_SCHEMA
+        fields = f.get("write_fields") or cur_fields
+        if f.get("content") == 2:
+            by_id = {fld["id"]: fld for fld in fields}
+            fields = [by_id[i] for i in f["equality_ids"] if i in by_id]
+        return _spark_schema(fields)
 
     @staticmethod
     def _resolve_columns(write_fields: list[dict], cur_fields: list[dict]):
@@ -2685,7 +2747,7 @@ class IcebergTable:
         pos_dels = [d for d in deletes if d["content"] == 1]
         eq_dels = [d for d in deletes if d["content"] == 2]
         if pos_dels:
-            dels = self.spark.read.parquet(
+            dels = self.spark.read.schema(_POS_DELETE_SCHEMA).parquet(
                 *[_local(d["path"], self.table_dir) for d in pos_dels]
             ).select(
                 file_uri_path_col(F.col("file_path")).alias("__cf"),
@@ -2723,7 +2785,8 @@ class IcebergTable:
                         )
                     names.append(by_id[i][0])
                 per_file = [
-                    self.spark.read.parquet(_local(d["path"], self.table_dir))
+                    self.spark.read.schema(self._read_schema(d, read_fields))
+                    .parquet(_local(d["path"], self.table_dir))
                     .select(*self._delete_key_cols(d, ids, by_id))
                     .withColumn("__dseq", F.lit(d["seq"]).cast("long"))
                     for d in dfiles_group

@@ -18,7 +18,7 @@ import os
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 PACK_SCHEMA = "custom_id string, file_id string"
@@ -110,11 +110,6 @@ def write_request_files(
     )
     blobs.write.mode("overwrite").partitionBy("file_id").text(out_dir)
     return packed
-
-
-def read_result_files(spark: SparkSession, path: str, schema: str = "custom_id string, response string") -> DataFrame:
-    """S10: parse result JSONL -> rows keyed by custom_id."""
-    return spark.read.schema(schema).json(path)
 
 
 def missing_ids(requested: DataFrame, results: DataFrame) -> DataFrame:

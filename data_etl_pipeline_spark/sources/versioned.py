@@ -51,9 +51,11 @@ change against the winner's manifest and retries.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 from collections.abc import Callable
@@ -62,9 +64,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_etl_pipeline_spark.session import conf_scope
 from data_etl_pipeline_spark.sources import commit
 from data_etl_pipeline_spark.sources.commit import ConcurrentCommitError  # noqa: F401  (re-export)
-from data_etl_pipeline_spark.sources.footerprune import file_uri_path
+from data_etl_pipeline_spark.sources.footerprune import file_uri_path, footer_stats
 from data_etl_pipeline_spark.tables import local_frame
 
 StatsPredicate = Callable[[dict], bool]
@@ -78,6 +81,22 @@ StatsPredicate = Callable[[dict], bool]
 _BLOOM_BITS = 8192
 _BLOOM_WORDS = _BLOOM_BITS // 64
 _BLOOM_SEEDS = (0x9E3779B1, 0x85EBCA77)
+
+
+# Staged data files store timestamps as INT64 micros, whose footers carry
+# min/max (INT96 chunks carry none). The output type is a session conf, so
+# the writes that scope it take turns.
+_MICROS_WRITE = threading.Lock()
+
+
+def _as_collected(dtype: "T.DataType", v):
+    """A footer bound as ``collect()`` returns a value of ``dtype``:
+    timestamps become the naive datetimes Spark's Python conversion
+    gives (local time for TIMESTAMP, wall time for TIMESTAMP_NTZ)."""
+    if isinstance(v, datetime.datetime) and isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+        epoch = datetime.datetime(1970, 1, 1, tzinfo=v.tzinfo)
+        return dtype.fromInternal((v - epoch) // datetime.timedelta(microseconds=1))
+    return v
 
 
 _INT_WIDTH = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}
@@ -228,56 +247,72 @@ class VersionedTable:
                      bloom_cols: list[str] | None = None) -> list[dict]:
         """Write ``df`` as immutable data files + per-file min/max stats.
 
-        One write job into the attempt's staging directory, then ONE stats
-        job over the staged files grouped by input_file_name — per-file
-        stats without a per-file pass. The same stats Delta keeps in
-        add-file actions; merge/delete skip with them. Final names carry
-        the attempt token, so concurrent writers targeting the same
+        One write job into the attempt's staging directory. Row count, min
+        and max of each file come from its parquet footer
+        (``footerprune.footer_stats``), so the stats cost no Spark job; they
+        are the same stats Delta keeps in add-file actions, and merge/delete
+        skip with them. A column the footer cannot bound (a string over
+        ~4 KiB) is stored as ``[None, None]``: stats-less, never skipped.
+        Timestamps are written as INT64 micros, because INT96 (Spark's
+        default) carries no footer statistics. Only a Bloom index
+        (``bloom_cols``) runs a job: one aggregation over the staged files
+        grouped by input_file_name. Zero-row files are dropped. Final names
+        carry the attempt token, so concurrent writers targeting the same
         version number can never collide on a path.
         """
+        types = {f.name: f.dataType for f in df.schema.fields}
         with commit.Attempt(self.path) as att:
-            staged = att.stage(lambda d: df.write.parquet(d))
-            back = self.spark.read.schema(df.schema).parquet(staged)
+            micros = {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
+            with _MICROS_WRITE, conf_scope(self.spark, micros):
+                staged = att.stage(lambda d: df.write.parquet(d))
+            files = [os.path.join(staged, rel) for rel in commit.parquet_files(staged)]
+            footers = [(p, *footer_stats(p)) for p in files]
             bloom_cols = [c for c in (bloom_cols or []) if c in df.columns]
-            aggs = [F.count(F.lit(1)).alias("__n")]
-            for c in self._stat_cols(df.schema):
-                aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
-            # Bloom build: fold each row's two probe bits into 128 bit_or words
-            # per column — same single stats job, all codegen
-            for j, c in enumerate(bloom_cols):
-                back = back.withColumn(f"__bp_{j}_0", F.expr(self._bloom_pos_expr(f"`{c}`", _BLOOM_SEEDS[0])))
-                back = back.withColumn(f"__bp_{j}_1", F.expr(self._bloom_pos_expr(f"`{c}`", _BLOOM_SEEDS[1])))
-                for w in range(_BLOOM_WORDS):
-                    terms = " | ".join(
-                        f"IF(__bp_{j}_{i} div 64 = {w}, "
-                        f"shiftleft(cast(1 as bigint), cast(__bp_{j}_{i} % 64 as int)), 0L)"
-                        for i in range(len(_BLOOM_SEEDS))
-                    )
-                    aggs.append(F.expr(f"bit_or({terms})").alias(f"__bloom_{j}_{w}"))
-            per_file = back.groupBy(F.input_file_name().alias("__file")).agg(*aggs).collect()
+            blooms = self._bloom_words(staged, df.schema, bloom_cols) if bloom_cols else {}
             entries: list[dict] = []
-            for i, row in enumerate(sorted(per_file, key=lambda r: r["__file"])):
-                if row["__n"] == 0:
-                    continue
+            for i, (path, n_rows, cols) in enumerate(f for f in footers if f[1] > 0):
                 name = f"f-{version}-{att.token}-{i}.parquet"
-                # input_file_name() is a percent-encoded URI (Hadoop encodes
-                # spaces/'%'/'#'); a raw strip would move a nonexistent path
-                att.place(file_uri_path(row["__file"]), os.path.join(self._data_dir, name))
-                stats = {
-                    c: [
-                        self._json_safe(row[f"__min_{c}"], widen=-1),
-                        self._json_safe(row[f"__max_{c}"], widen=1),
+                att.place(path, os.path.join(self._data_dir, name))
+                stats = {}
+                for c in self._stat_cols(df.schema):
+                    lo, hi, _ = cols.get(c, (None, None, None))
+                    stats[c] = [
+                        self._json_safe(_as_collected(types[c], lo), widen=-1),
+                        self._json_safe(_as_collected(types[c], hi), widen=1),
                     ]
-                    for c in self._stat_cols(df.schema)
-                }
-                entry = {"path": f"data/{name}", "num_rows": row["__n"], "stats": stats}
+                entry = {"path": f"data/{name}", "num_rows": n_rows, "stats": stats}
                 if bloom_cols:
-                    entry["bloom"] = {
-                        c: [int(row[f"__bloom_{j}_{w}"] or 0) for w in range(_BLOOM_WORDS)]
-                        for j, c in enumerate(bloom_cols)
-                    }
+                    entry["bloom"] = blooms[os.path.basename(path)]
                 entries.append(entry)
         return entries
+
+    def _bloom_words(self, staged: str, schema: T.StructType,
+                     bloom_cols: list[str]) -> dict[str, dict]:
+        """{staged file name: {column: 128 Bloom words}} for every
+        non-empty file under ``staged``: each row's two probe bits folded
+        into ``bit_or`` words, in one codegen aggregation job."""
+        back = self.spark.read.schema(schema).parquet(staged)
+        aggs = []
+        for j, c in enumerate(bloom_cols):
+            back = back.withColumn(f"__bp_{j}_0", F.expr(self._bloom_pos_expr(f"`{c}`", _BLOOM_SEEDS[0])))
+            back = back.withColumn(f"__bp_{j}_1", F.expr(self._bloom_pos_expr(f"`{c}`", _BLOOM_SEEDS[1])))
+            for w in range(_BLOOM_WORDS):
+                terms = " | ".join(
+                    f"IF(__bp_{j}_{i} div 64 = {w}, "
+                    f"shiftleft(cast(1 as bigint), cast(__bp_{j}_{i} % 64 as int)), 0L)"
+                    for i in range(len(_BLOOM_SEEDS))
+                )
+                aggs.append(F.expr(f"bit_or({terms})").alias(f"__bloom_{j}_{w}"))
+        per_file = back.groupBy(F.input_file_name().alias("__file")).agg(*aggs).collect()
+        # input_file_name() is a percent-encoded URI (Hadoop encodes
+        # spaces/'%'/'#'); file_uri_path decodes it
+        return {
+            os.path.basename(file_uri_path(row["__file"])): {
+                c: [int(row[f"__bloom_{j}_{w}"] or 0) for w in range(_BLOOM_WORDS)]
+                for j, c in enumerate(bloom_cols)
+            }
+            for row in per_file
+        }
 
     def _validate_checks(self, df: DataFrame, checks: list[str]) -> None:
         """Delta CHECK semantics: a row passes when every constraint is

@@ -9,6 +9,9 @@ tables, sentinels, vocabularies, collected results) comes from
 
 from __future__ import annotations
 
+import os
+import weakref
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -99,6 +102,13 @@ def _ts_is_nanos(path: str) -> bool:
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table ``name`` of the fixture under ``sf_dir``.
+
+    The schema Spark infers for a table file costs one Spark job, so it
+    is memoized per session: a metadata-only cache, holding schemas and
+    never rows. Its key is the file's (path, size, mtime_ns) plus the
+    session's parquet-inference confs (``_INFER_CONFS``), so a file
+    rewritten in place, or a changed conf, is inferred again."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = f"{sf_dir}/{name}.parquet"
@@ -112,9 +122,36 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql import functions as F
 
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
+
+
+# the confs that change what Spark infers from a parquet footer
+_INFER_CONFS = (
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema of a file only
+    the first time this session reads it under these confs (see
+    ``load``). A directory is inferred on every call: its mtime does
+    not move when a file inside it is rewritten."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    key = (path, st.st_size, st.st_mtime_ns, *(spark.conf.get(k, None) for k in _INFER_CONFS))
+    seen = _SCHEMAS.setdefault(spark, {})
+    if key in seen:
+        return spark.read.schema(seen[key]).parquet(path)
+    df = spark.read.parquet(path)
+    seen[key] = df.schema
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -165,6 +165,20 @@ def test_pair_miners_match_their_oracle_on_edge_rows(spark, name, pairs):
     assert got == want
 
 
+def test_simhash_band_postings_stay_in_codegen(spark, sf_dir):
+    # the band postings are one literal array of structs: no lambda keeps
+    # their Generate out of whole-stage codegen
+    from data_etl_pipeline_spark.plans.registry import QUERIES, _ensure_loaded
+
+    _ensure_loaded()
+    df = QUERIES["doc_simhash_pairs"].fn(spark, sf_dir)
+    df.collect()
+    final = executed_plan(df).split("+- == Initial Plan ==")[0]
+    generates = [ln for ln in final.splitlines() if "Generate " in ln]
+    assert generates
+    assert all(ln.lstrip(" :+-").startswith("*(") for ln in generates), generates
+
+
 def test_posting_cap_drops_the_shared_shingles(spark):
     # uncapped at 0.6, the 14 boilerplate docs pair up through their three
     # shared shingles; under the cap of 12 those shingles carry no pair

@@ -698,6 +698,62 @@ class TestFooterStatsCompleteness:
         with pytest.raises(ValueError, match="lacks full statistics"):
             agg_from_footers(d, "s")
 
+    DECIMALS = ("CAST(v AS DECIMAL(5,2)) AS d5", "CAST(v AS DECIMAL(15,2)) AS d15", "CAST(v AS DECIMAL(25,2)) AS d25")
+
+    def _spark_file(self, spark, d, df, **options):
+        import glob
+
+        df.coalesce(1).write.options(**options).parquet(str(d))
+        (path,) = glob.glob(str(d / "*.parquet"))
+        return path
+
+    def test_int_backed_decimal_bounds_decode(self, spark, tmp_path):
+        # Spark stores decimal(p<=18) as INT32/INT64, whose bounds pyarrow
+        # cannot convert; the footer reader scales the raw integers
+        from decimal import Decimal
+
+        from data_etl_pipeline_spark.sources.footerprune import footer_stats
+
+        df = spark.sql("SELECT * FROM VALUES (1.25), (-3.5), (0.07) AS t(v)").selectExpr(*self.DECIMALS)
+        _n, cols = footer_stats(self._spark_file(spark, tmp_path / "dec", df))
+        for c in ("d5", "d15", "d25"):
+            assert cols[c][:2] == (Decimal("-3.50"), Decimal("1.25")), c
+
+    def test_decimal_column_keeps_the_other_columns_stats(self, spark, tmp_path):
+        # one int-backed decimal column used to make the whole file stats-less
+        from data_etl_pipeline_spark.sources.delta_export import _file_stats
+
+        df = spark.range(3).selectExpr("id AS k", "CONCAT('s', id) AS s", "CAST(id AS DECIMAL(15,2)) AS d")
+        stats = json.loads(_file_stats(self._spark_file(spark, tmp_path / "mixed", df)))
+        assert stats["numRecords"] == 3
+        assert stats["minValues"] == {"k": 0, "s": "s0"}
+        assert stats["maxValues"] == {"k": 2, "s": "s2"}
+
+    def test_nan_orders_last_across_row_groups(self, spark, tmp_path):
+        # one row per row group; pyarrow reports (nan, nan) for a NaN-only
+        # chunk, and a plain </> merge kept a NaN min and a finite max
+        import math
+
+        import pyarrow.parquet as pq
+
+        from data_etl_pipeline_spark.sources.footerprune import agg_from_footers, footer_stats
+        from data_etl_pipeline_spark.tables import local_frame
+
+        df = local_frame(spark, [(math.nan,), (5.0,), (math.nan,), (1.0,)], "x double")
+        one_row_groups = {
+            "parquet.block.size": 1,
+            "parquet.page.size.row.check.min": 1,
+            "parquet.page.size.row.check.max": 1,
+            "parquet.page.size.check.estimate": "false",
+        }
+        path = self._spark_file(spark, tmp_path / "nan", df, **one_row_groups)
+        assert pq.read_metadata(path).num_row_groups == 4
+        want = df.selectExpr("min(x)", "max(x)").first()
+        lo, hi, _ = footer_stats(path)[1]["x"]
+        assert lo == want[0] == 1.0
+        assert math.isnan(hi) and math.isnan(want[1])
+        assert math.isnan(agg_from_footers(str(tmp_path / "nan"), "x")["max"])
+
 
 class TestMergeUpsert:
     """export_delta_merge: keyed CoW MERGE — matched keys replaced, new

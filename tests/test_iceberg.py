@@ -339,6 +339,40 @@ def test_iceberg_date_column_bounds(spark, tmp_path):
     assert t.read(files=sel).where("d <= DATE '2024-01-05'").count() == 5
 
 
+def test_iceberg_decimal_bounds_roundtrip(spark, tmp_path):
+    """decimal(5,2) and (15,2) are int-backed in Spark's parquet, (25,2)
+    a fixed-length byte array: all three export, carry spec-encoded
+    bounds (unscaled big-endian) and decode back to the exact values."""
+    from decimal import Decimal
+
+    src = spark.sql("SELECT * FROM VALUES (0, 1.25), (1, -3.5), (2, 0.07) AS t(k, v)").selectExpr(
+        "k", "CAST(v AS DECIMAL(5,2)) AS d5", "CAST(v AS DECIMAL(15,2)) AS d15",
+        "CAST(v AS DECIMAL(25,2)) AS d25",
+    )
+    d = str(tmp_path / "t")
+    export_iceberg(src, d)
+    t = IcebergTable(spark, d)
+    (f,) = t.data_files()
+    for c in ("d5", "d15", "d25"):
+        assert (f["lower"][c], f["upper"][c]) == (Decimal("-3.50"), Decimal("1.25")), c
+    assert sorted(t.read().collect()) == sorted(src.collect())
+    sel, total = t.plan_files("d15", Decimal("2"), Decimal("3"))
+    assert (len(sel), total) == (0, 1)
+
+
+def test_iceberg_nan_double_exports_no_bounds(spark, tmp_path):
+    # pyarrow reports max=NaN for a chunk holding NaN; a NaN upper bound
+    # fails every comparison, so pruning would drop the file
+    src = spark.sql("SELECT * FROM VALUES (0, CAST('NaN' AS DOUBLE)), (1, 2.0) AS t(k, x)")
+    d = str(tmp_path / "t")
+    export_iceberg(src, d)
+    t = IcebergTable(spark, d)
+    (f,) = t.data_files()
+    assert "x" not in f["lower"] and "x" not in f["upper"]
+    assert f["lower"]["k"] == 0
+    assert t.plan_files("x", 1.0, 3.0)[0] == [f]
+
+
 class TestIdentityPartitioning:
     """Identity-partitioned export: typed partition tuples in manifests
     (the r102 record is per-table), the spec inherited by appends,
@@ -1863,3 +1897,127 @@ class TestRollback:
         assert t.read(snapshot_id=1).count() == 10  # kept ancestor intact
         with pytest.raises(IcebergError, match="not in table"):
             t.read(snapshot_id=2)
+
+
+# ---------------------------------------------------------------------------
+# Declared read schemas: data and delete files are read under the schema
+# the table metadata records, never under a Spark inference job.
+# ---------------------------------------------------------------------------
+def _unschemaed_parquet_reads(tree) -> list[int]:
+    """Lines of ``<x>.read[...].parquet(...)`` calls with no ``.schema(``
+    between ``read`` and ``parquet``."""
+    import ast
+
+    bad = []
+    for n in ast.walk(tree):
+        if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and n.func.attr == "parquet"):
+            continue
+        node, declared = n.func.value, False
+        while isinstance(node, (ast.Call, ast.Attribute)):
+            if isinstance(node, ast.Call):
+                declared |= isinstance(node.func, ast.Attribute) and node.func.attr == "schema"
+                node = node.func
+            elif node.attr == "read":
+                if not declared:
+                    bad.append(n.lineno)
+                break
+            else:
+                node = node.value
+    return bad
+
+
+def test_table_formats_declare_their_parquet_read_schemas():
+    # an undeclared read runs one schema-inference job per call
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "data_etl_pipeline_spark" / "sources"
+    assert _unschemaed_parquet_reads(ast.parse("spark.read.parquet(p)")) == [1]
+    assert _unschemaed_parquet_reads(ast.parse("spark.read.schema(s).parquet(p)")) == []
+    stray = [
+        f"{name}:{line}"
+        for name in ("iceberg.py", "versioned.py")
+        for line in _unschemaed_parquet_reads(ast.parse((pkg / name).read_text()))
+    ]
+    assert stray == []
+
+
+def _iceberg_tables(spark, root) -> dict[str, str]:
+    """One table of each shape, each with position and equality deletes
+    where the format allows: nested types, an evolved schema, a table
+    converted from Delta, and a partitioned table."""
+    import datetime
+
+    from data_etl_pipeline_spark.sources.delta_export import export_delta
+    from data_etl_pipeline_spark.sources.iceberg import (
+        convert_delta_to_iceberg,
+        delete_rows_iceberg,
+        evolve_schema_iceberg,
+    )
+
+    tables = {k: str(root / k) for k in ("nested", "evolved", "converted", "partitioned")}
+    nested = spark.range(0, 20).selectExpr(
+        "id AS k",
+        "named_struct('a', id, 'b', named_struct('c', CAST(id AS DECIMAL(15,2)))) AS s",
+        "array(named_struct('x', id)) AS arr",
+        "map(CAST(id AS STRING), array(CAST(id AS FLOAT))) AS m",
+        "TIMESTAMP '2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts",
+        "CAST(TIMESTAMP '2024-01-01 00:00:00' AS TIMESTAMP_NTZ) AS ntz",
+        "DATE '2024-01-01' AS d",
+        "CAST(id AS DECIMAL(25,3)) AS dec",
+        "id % 2 = 0 AS flag",
+    )
+    export_iceberg(nested, tables["nested"], n_files=2, range_by="k")
+
+    src = spark.range(0, 50).selectExpr("id AS k", "CAST(id * 2 AS INT) AS v", "CONCAT('s', id) AS s")
+    export_iceberg(src.where("k < 20"), tables["evolved"], n_files=2, range_by="k")
+    evolve_schema_iceberg(tables["evolved"], renames={"v": "val"}, adds=[("flag", "string")], drops=["s"])
+    append_iceberg(
+        spark.range(20, 50).selectExpr("id AS k", "CAST(id * 2 AS INT) AS val", "'x' AS flag"),
+        tables["evolved"],
+    )
+
+    export_delta(spark.range(0, 30).selectExpr("id AS k", "id * 3 AS v").repartitionByRange(3, "k"),
+                 str(root / "delta"))
+    convert_delta_to_iceberg(spark, str(root / "delta"), tables["converted"])
+
+    rows = [(i, "AB"[i % 2], datetime.date(1994 + i % 4, 3, 1)) for i in range(40)]
+    export_iceberg(spark.createDataFrame(rows, "k long, status string, d date"),
+                   tables["partitioned"], partition_by="status")
+
+    for name, d in tables.items():
+        delete_rows_iceberg(spark, d, "k = 3")
+        key = "val" if name == "evolved" else "k"
+        delete_rows_iceberg(spark, d, "k IN (4, 7)", equality_by=[key])
+    return tables
+
+
+@pytest.fixture(scope="module")
+def shaped_tables(spark, tmp_path_factory):
+    return _iceberg_tables(spark, tmp_path_factory.mktemp("ice_shapes"))
+
+
+@pytest.mark.parametrize("shape", ["nested", "evolved", "converted", "partitioned"])
+def test_declared_schema_is_the_inferred_schema(spark, shaped_tables, shape):
+    # names, types and nullability as Spark infers them from each file's
+    # footer; field metadata (the top-level parquet.field.id a footer can
+    # carry) is left out of the declared schema
+    from pyspark.sql import types as T
+
+    def bare(dt):
+        if isinstance(dt, T.StructType):
+            return T.StructType([T.StructField(f.name, bare(f.dataType), f.nullable) for f in dt.fields])
+        if isinstance(dt, T.ArrayType):
+            return T.ArrayType(bare(dt.elementType), dt.containsNull)
+        if isinstance(dt, T.MapType):
+            return T.MapType(bare(dt.keyType), bare(dt.valueType), dt.valueContainsNull)
+        return dt
+
+    t = IcebergTable(spark, shaped_tables[shape])
+    data, deletes = t._manifest_entries()
+    cur = t._current_schema()["fields"]
+    assert data and {d["content"] for d in deletes} == {1, 2}
+    for f in data + deletes:
+        declared = IcebergTable._read_schema(f, cur)
+        assert declared == bare(spark.read.parquet(f["path"]).schema), f["path"]
+    assert t.read().count() == {"nested": 17, "evolved": 47, "converted": 27, "partitioned": 37}[shape]

@@ -1,6 +1,7 @@
 """``tables.load``: the nanosecond ``events.ts`` branch is taken only when
 the parquet footer says TIMESTAMP(NANOS), and only then touches the
-session conf. ``tables.local_frame``: the same rows and schema as
+session conf; a file's schema is inferred once per session until the
+file or an inference conf changes. ``tables.local_frame``: the same rows and schema as
 ``createDataFrame(rows, schema)`` for every type a driver-built frame
 carries, as one partition of a ``LocalRelation``."""
 
@@ -47,6 +48,55 @@ def test_micros_footer_leaves_the_conf_alone(spark, tmp_path):
     child = spark.newSession()
     assert _micros(load(child, str(tmp_path), "events")) == sorted(v // 1000 for v in TS_NS)
     assert child.conf.get(NANOS_FLAG, None) is None
+
+
+# --- load: the inferred schema is memoized per session, keyed by file ---
+
+
+def _jobs_run(spark, fn):
+    """(``fn()``, the number of Spark jobs submitted while it ran)."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first = dag.nextJobId()
+    out = fn()
+    return out, dag.nextJobId() - first
+
+
+def test_load_infers_a_file_once_until_it_changes(spark, tmp_path):
+    import os
+
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": pa.array([1, 2], pa.int64())}), path)
+    child = spark.newSession()  # a fresh memo, kept off the suite's session
+
+    def columns():
+        return load(child, str(tmp_path), "region").columns
+
+    assert _jobs_run(child, columns) == (["r_regionkey"], 1)
+    assert _jobs_run(child, columns) == (["r_regionkey"], 0)
+    # rewritten in place with a new size: inferred again
+    pq.write_table(pa.table({"r_regionkey": pa.array([1], pa.int64()), "r_name": ["x"]}), path)
+    assert _jobs_run(child, columns) == (["r_regionkey", "r_name"], 1)
+    # same size, new mtime: inferred again
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert _jobs_run(child, columns) == (["r_regionkey", "r_name"], 1)
+    assert _jobs_run(child, columns) == (["r_regionkey", "r_name"], 0)
+
+
+def test_load_infers_again_under_a_changed_inference_conf(spark, tmp_path):
+    from data_etl_pipeline_spark.session import conf_scope
+
+    pq.write_table(pa.table({"n_name": pa.array([b"x"], pa.binary())}), tmp_path / "nation.parquet")
+    child = spark.newSession()
+
+    def name_type():
+        return load(child, str(tmp_path), "nation").schema["n_name"].dataType
+
+    assert _jobs_run(child, name_type) == (T.BinaryType(), 1)
+    with conf_scope(child, {"spark.sql.parquet.binaryAsString": "true"}):
+        assert _jobs_run(child, name_type) == (T.StringType(), 1)
+        assert _jobs_run(child, name_type) == (T.StringType(), 0)
+    assert _jobs_run(child, name_type) == (T.BinaryType(), 0)
 
 
 # --- local_frame: a driver-side row list as a one-partition LocalRelation ---

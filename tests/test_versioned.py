@@ -971,3 +971,106 @@ def test_merge_wide_decimal_to_double_refuses(spark, tmp_path):
     )
     t.merge(narrow, keys=["k"])  # provably lossless -> accepted
     assert t.read().where(F.col("v") == 7.25).count() == 5
+
+
+# ---- per-file stats from the staged files' parquet footers ---------------
+
+LONG = "z" * 5000  # over 4 KiB: parquet-mr writes no bounds for its chunk
+
+
+def _stats_frame(spark):
+    """Every stats type across four range-clustered files: NaN doubles,
+    an all-NULL column, a string column one file of which holds a value
+    over 4 KiB, decimals of each parquet layout (INT32, INT64, fixed
+    bytes), dates and both timestamp types."""
+    return spark.range(0, 40).selectExpr(
+        "id AS k",
+        "CASE WHEN id % 7 = 3 THEN CAST('NaN' AS DOUBLE) ELSE id / 4 END AS x",
+        "CAST(id AS FLOAT) AS f",
+        "CAST(id % 5 AS SMALLINT) AS small",
+        "CAST(NULL AS INT) AS nothing",
+        "CAST(id / 8 - 2 AS DECIMAL(5,2)) AS d5",
+        "CAST(id * 1000.125 AS DECIMAL(15,3)) AS d15",
+        "CAST(id - 20 AS DECIMAL(25,2)) AS d25",
+        "DATE '2024-02-27' + CAST(id AS INT) AS d",
+        "TIMESTAMP '2024-03-30 23:59:59.5' + make_interval(0, 0, 0, 0, CAST(id AS INT), 0, 0) AS ts",
+        "CAST(TIMESTAMP '2024-03-30 23:00:00.25' AS TIMESTAMP_NTZ)"
+        " + make_interval(0, 0, 0, CAST(id AS INT), 0, 0, 0) AS ntz",
+    ).withColumn("s", F.when(F.col("k") == 35, F.lit(LONG)).otherwise(F.concat(F.lit("s"), "k")))
+
+
+def _aggregated(spark, t, schema) -> dict:
+    """{file: (num_rows, stats)} as one Spark aggregation over the
+    table's files computes them, with the decimal widening of
+    ``_json_safe``: the reference the footer stats must equal."""
+    import os
+
+    cols = VersionedTable._stat_cols(schema)
+    files = [f["path"] for f in t._manifest()["files"]]
+    aggs = [F.count(F.lit(1)).alias("__n")]
+    for c in cols:
+        aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
+    rows = (
+        spark.read.schema(schema).parquet(*[os.path.join(t.path, p) for p in files])
+        .groupBy(F.element_at(F.split(F.input_file_name(), "/"), -1).alias("bn"))
+        .agg(*aggs)
+        .collect()
+    )
+    safe = VersionedTable._json_safe
+    return {
+        f"data/{r['bn']}": (
+            r["__n"],
+            {c: [safe(r[f"__min_{c}"], widen=-1), safe(r[f"__max_{c}"], widen=1)] for c in cols},
+        )
+        for r in rows
+    }
+
+
+def test_footer_stats_equal_the_aggregated_stats(spark, tmp_path):
+    import json
+
+    df = _stats_frame(spark)
+    t = VersionedTable(spark, str(tmp_path / "tbl"))
+    t.write(df, cluster_by=["k"], n_files=4)
+    files = t._manifest()["files"]
+    want = _aggregated(spark, t, df.schema)
+    assert len(files) == len(want) == 4
+    unbounded = 0
+    for f in files:
+        n, stats = want[f["path"]]
+        if stats["s"][1] == LONG:
+            # the footer cannot bound it: stats-less, never skipped
+            stats["s"] = [None, None]
+            unbounded += 1
+        # JSON text compares NaN bounds too
+        assert json.dumps([f["num_rows"], f["stats"]], sort_keys=True) == json.dumps(
+            [n, stats], sort_keys=True
+        ), f["path"]
+    assert unbounded == 1
+    assert any(f["stats"]["ts"][0] is not None for f in files)  # INT96 carries none
+
+
+def test_footer_stats_skip_zero_row_files(spark, tmp_path):
+    t = VersionedTable(spark, str(tmp_path / "tbl"))
+    df = spark.range(0, 3).selectExpr("id AS k", "CAST(id AS STRING) AS s")
+    t.write(df.where("k < 0"))
+    assert t._manifest()["files"] == []
+    # eight partitions, five of them empty: three files, numbered densely
+    t.write(df.repartition(8))
+    files = t._manifest()["files"]
+    assert sorted(int(f["path"].rsplit("-", 1)[1].split(".")[0]) for f in files) == [0, 1, 2]
+    assert sum(f["num_rows"] for f in files) == 3
+
+
+@pytest.mark.parametrize("key", ["k", "d", "ts", "ntz", "d15", "s"])
+def test_merge_and_delete_keys_skip_on_footer_stats(spark, tmp_path, key):
+    df = _stats_frame(spark).where("k <> 35")  # the long string spans every key order
+    t = VersionedTable(spark, str(tmp_path / "tbl"))
+    t.write(df, cluster_by=[key], n_files=4)
+    assert len(t._manifest()["files"]) == 4
+    t.delete_keys(df.where("k = 13").select(key), keys=[key])
+    assert "files_skipped=3 files_rewritten=1" in t._manifest()["detail"]
+    n_files = len(t._manifest()["files"])
+    t.merge(df.where("k = 38"), keys=[key])
+    assert t._manifest()["files_carried"] == n_files - 1
+    assert t.read().count() == 38
