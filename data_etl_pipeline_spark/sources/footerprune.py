@@ -119,8 +119,10 @@ def _chunk_bounds(st, col) -> tuple | None:
 
 
 def _spark_order(v) -> tuple:
-    """Sort key of a bound in Spark's order: NaN above every number."""
-    return (isinstance(v, float) and math.isnan(v), v)
+    """Sort key of a bound in Spark's order: NaN above every number, and
+    every NaN equal to every other."""
+    nan = isinstance(v, float) and math.isnan(v)
+    return (nan, 0.0 if nan else v)
 
 
 def file_uri_path(uri: str) -> str:

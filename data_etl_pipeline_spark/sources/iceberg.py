@@ -125,7 +125,7 @@ import re
 import struct
 import time
 import uuid
-from decimal import Decimal
+from decimal import MAX_PREC, Context, Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -304,6 +304,11 @@ def _max_field_id(node) -> int:
 # Iceberg single-value binary serialization (spec appendix D) for the
 # bounds maps: little-endian fixed width numerics, UTF-8 strings.
 
+# Decimal scaling must be exact: ``scaleb`` rounds to the context's
+# precision (28 digits by default), and a decimal(38, s) bound rounded
+# inward would prune a file that holds matching rows.
+_EXACT = Context(prec=MAX_PREC)
+
 
 def _encode_bound(value, ice_type: str) -> bytes | None:
     if value is None:
@@ -323,7 +328,7 @@ def _encode_bound(value, ice_type: str) -> bytes | None:
     m = _DECIMAL_RE.match(ice_type)
     if m:
         # unscaled value, two's-complement big-endian, fewest bytes
-        n = int(Decimal(value).scaleb(int(m[2])))
+        n = int(Decimal(value).scaleb(int(m[2]), _EXACT))
         return n.to_bytes(((n if n >= 0 else ~n).bit_length() + 8) // 8, "big", signed=True)
     return None  # other types: bounds omitted, never wrong
 
@@ -345,7 +350,7 @@ def _decode_bound(raw: bytes | None, ice_type: str):
         return raw == b"\x01"
     m = _DECIMAL_RE.match(ice_type)
     if m:
-        return Decimal(int.from_bytes(raw, "big", signed=True)).scaleb(-int(m[2]))
+        return Decimal(int.from_bytes(raw, "big", signed=True)).scaleb(-int(m[2]), _EXACT)
     return None
 
 
@@ -2528,9 +2533,10 @@ class IcebergTable:
             [(os.path.abspath(_local(f["path"], self.table_dir)), sid) for sid, f in pairs],
             "__cf string, _commit_snapshot long",
         )
-        # the tailed range never crosses a schema evolution, so every
-        # added file was written under the current schema
-        schema = self._read_schema(pairs[0][1], self._current_schema()["fields"])
+        # the tailed range never crosses a schema evolution (added_files
+        # enforces this), so every added file was written under the
+        # current schema
+        schema = _spark_schema(self._current_schema()["fields"])
         df = self.spark.read.schema(schema).parquet(*paths)
         cols = df.columns
         return (

@@ -83,9 +83,10 @@ _BLOOM_WORDS = _BLOOM_BITS // 64
 _BLOOM_SEEDS = (0x9E3779B1, 0x85EBCA77)
 
 
-# Staged data files store timestamps as INT64 micros, whose footers carry
-# min/max (INT96 chunks carry none). The output type is a session conf, so
-# the writes that scope it take turns.
+# Staged data files store LTZ timestamps as INT64 micros, whose footers
+# carry min/max (INT96 chunks carry none; NTZ is always INT64). The output
+# type is a session conf, so the writes of frames with a top-level LTZ
+# column scope it and take turns; every other write takes neither.
 _MICROS_WRITE = threading.Lock()
 
 
@@ -253,7 +254,7 @@ class VersionedTable:
         are the same stats Delta keeps in add-file actions, and merge/delete
         skip with them. A column the footer cannot bound (a string over
         ~4 KiB) is stored as ``[None, None]``: stats-less, never skipped.
-        Timestamps are written as INT64 micros, because INT96 (Spark's
+        LTZ timestamps are written as INT64 micros, because INT96 (Spark's
         default) carries no footer statistics. Only a Bloom index
         (``bloom_cols``) runs a job: one aggregation over the staged files
         grouped by input_file_name. Zero-row files are dropped. Final names
@@ -262,8 +263,11 @@ class VersionedTable:
         """
         types = {f.name: f.dataType for f in df.schema.fields}
         with commit.Attempt(self.path) as att:
-            micros = {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
-            with _MICROS_WRITE, conf_scope(self.spark, micros):
+            if any(isinstance(t, T.TimestampType) for t in types.values()):
+                micros = {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
+                with _MICROS_WRITE, conf_scope(self.spark, micros):
+                    staged = att.stage(lambda d: df.write.parquet(d))
+            else:
                 staged = att.stage(lambda d: df.write.parquet(d))
             files = [os.path.join(staged, rel) for rel in commit.parquet_files(staged)]
             footers = [(p, *footer_stats(p)) for p in files]

@@ -754,6 +754,20 @@ class TestFooterStatsCompleteness:
         assert math.isnan(hi) and math.isnan(want[1])
         assert math.isnan(agg_from_footers(str(tmp_path / "nan"), "x")["max"])
 
+    def test_nan_only_file_matches_a_nan_bound(self, spark, tmp_path):
+        # in Spark's order every NaN equals every other: a file whose min
+        # is NaN holds rows with x <= NaN, so a NaN upper bound keeps it
+        import math
+
+        from data_etl_pipeline_spark.sources.footerprune import plan_parquet_files
+        from data_etl_pipeline_spark.tables import local_frame
+
+        df = local_frame(spark, [(math.nan,), (math.nan,)], "x double")
+        path = self._spark_file(spark, tmp_path / "nans", df)
+        assert plan_parquet_files(str(tmp_path / "nans"), "x", float("nan"), float("nan")) == ([path], 1)
+        assert plan_parquet_files(str(tmp_path / "nans"), "x", 0.0, float("nan")) == ([path], 1)
+        assert plan_parquet_files(str(tmp_path / "nans"), "x", 0.0, 1.0) == ([], 1)
+
 
 class TestMergeUpsert:
     """export_delta_merge: keyed CoW MERGE — matched keys replaced, new

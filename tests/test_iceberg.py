@@ -360,6 +360,29 @@ def test_iceberg_decimal_bounds_roundtrip(spark, tmp_path):
     assert (len(sel), total) == (0, 1)
 
 
+def test_iceberg_wide_decimal_bounds_are_exact(spark, tmp_path):
+    """decimal(38,2) values of 36+ digits exceed Python's default
+    28-digit decimal context: their bounds must encode and decode
+    without rounding, or a min rounded up (max rounded down) would
+    prune the file for ``x = min`` (``x = max``)."""
+    from decimal import Decimal
+
+    lo = Decimal("-123456789012345678901234567890123456.12")
+    hi = Decimal("987654321098765432109876543210987654.94")
+    src = spark.sql(
+        f"SELECT * FROM VALUES (0, '{lo}'), (1, '{hi}'), (2, '0.07') AS t(k, v)"
+    ).selectExpr("k", "CAST(v AS DECIMAL(38,2)) AS x")
+    d = str(tmp_path / "t")
+    export_iceberg(src, d)
+    t = IcebergTable(spark, d)
+    (f,) = t.data_files()
+    assert (f["lower"]["x"], f["upper"]["x"]) == (lo, hi)
+    for v in (lo, hi):
+        assert t.plan_files("x", v, v) == ([f], 1), v
+    above = Decimal("987654321098765432109876543210987654.95")
+    assert t.plan_files("x", above, above) == ([], 1)
+
+
 def test_iceberg_nan_double_exports_no_bounds(spark, tmp_path):
     # pyarrow reports max=NaN for a chunk holding NaN; a NaN upper bound
     # fails every comparison, so pruning would drop the file

@@ -1050,6 +1050,29 @@ def test_footer_stats_equal_the_aggregated_stats(spark, tmp_path):
     assert any(f["stats"]["ts"][0] is not None for f in files)  # INT96 carries none
 
 
+def test_only_ltz_writes_scope_the_timestamp_output_type(spark, tmp_path, monkeypatch):
+    # the output type is session-wide: a frame without an LTZ column
+    # neither takes the writers' lock nor changes the conf
+    from data_etl_pipeline_spark.sources import versioned
+
+    entered = []
+
+    class Recorder:
+        def __enter__(self):
+            entered.append(spark.conf.get("spark.sql.parquet.outputTimestampType"))
+
+        def __exit__(self, *exc):
+            return False
+
+    monkeypatch.setattr(versioned, "_MICROS_WRITE", Recorder())
+    t = VersionedTable(spark, str(tmp_path / "tbl"))
+    t.write(spark.range(3).selectExpr("id AS k", "CAST(TIMESTAMP '2024-01-01' AS TIMESTAMP_NTZ) AS ntz"))
+    assert entered == []
+    t.write(spark.range(3).selectExpr("id AS k", "TIMESTAMP '2024-01-01' AS ts"))
+    assert len(entered) == 1
+    assert all(f["stats"]["ts"][0] is not None for f in t._manifest()["files"])
+
+
 def test_footer_stats_skip_zero_row_files(spark, tmp_path):
     t = VersionedTable(spark, str(tmp_path / "tbl"))
     df = spark.range(0, 3).selectExpr("id AS k", "CAST(id AS STRING) AS s")
